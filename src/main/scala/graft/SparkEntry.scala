@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, SetSimilarity}
 import graft.events.Events
-import graft.io.{TableCatalog, TableIO}
+import graft.io.{Ref, TableCatalog, TableIO}
 import graft.pipeline.{Aggregations, Dimensions, Fact, Ingestion, Quality}
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
@@ -355,7 +355,7 @@ object SparkEntry {
       // reruns share the session warehouse: a leftover audit branch
       // would pin a stale fork — each run starts its audit fresh
       io.dropBranch(t, br)
-      val (_, nDel) = io.deleteWhereMOR(t, col("skey").isin(1L, 2L), branch = Some(br))
+      val (_, nDel) = io.deleteWhereMOR(t, col("skey").isin(1L, 2L), ref = Ref.Branch(br))
       require(nDel == 2, s"branch MOR delete matched $nDel rows, expected 2")
       val batch = Tables.supplier(s, dir).filter(col("s_suppkey").between(4, 8))
         .select(col("s_suppkey").cast("bigint").as("skey"),
@@ -366,7 +366,7 @@ object SparkEntry {
           .select((col("s_suppkey").cast("bigint") + 100).as("skey"),
             concat(lit("n_"), col("s_name")).as("s_name"),
             col("s_acctbal").cast("decimal(12,2)").as("bal"), lit("U").as("op")))
-      io.cdcApplyMOR(t, batch, Seq("skey"), "op", branch = Some(br))
+      io.cdcApplyMOR(t, batch, Seq("skey"), "op", ref = Ref.Branch(br))
       require(io.catalog.currentVersion(t).contains(vMain),
         "branch CDC leaked to main: version advanced")
       // pinned at the dirty branch head (analysis-time resolution)
@@ -1120,12 +1120,12 @@ object SparkEntry {
       io.catalog.tagSnapshot(t, "gold", 2)
       io.append(ord.filter(col("o_custkey") > 300 && col("o_custkey") <= 400), t) // v3
       io.createBranch(t, "audit") // branch v1 (fork at main v3 — pinned for life)
-      io.appendToBranch(ord.filter(col("o_custkey") > 400 && col("o_custkey") <= 425)
-        .coalesce(1), t, "audit") // branch v2 — the one that expires
-      io.appendToBranch(ord.filter(col("o_custkey") > 425 && col("o_custkey") <= 437)
-        .coalesce(1), t, "audit") // branch v3
-      io.appendToBranch(ord.filter(col("o_custkey") > 437 && col("o_custkey") <= 450)
-        .coalesce(1), t, "audit") // branch v4
+      io.append(ord.filter(col("o_custkey") > 400 && col("o_custkey") <= 425)
+        .coalesce(1), t, ref = Ref.Branch("audit")) // branch v2 — the one that expires
+      io.append(ord.filter(col("o_custkey") > 425 && col("o_custkey") <= 437)
+        .coalesce(1), t, ref = Ref.Branch("audit")) // branch v3
+      io.append(ord.filter(col("o_custkey") > 437 && col("o_custkey") <= 450)
+        .coalesce(1), t, ref = Ref.Branch("audit")) // branch v4
       io.append(ord.filter(col("o_custkey") > 400 && col("o_custkey") <= 500), t) // v4
       // aged crashed-write residue: a parquet file no manifest references
       val orphan = java.nio.file.Paths.get(io.catalog.dataPath(t),
@@ -1151,7 +1151,7 @@ object SparkEntry {
         ("orphan_files", report.count(_ == "orphan_file").toLong),
         ("rows_current", io.read(t).count()),
         ("rows_tag_gold", io.readVersion(t, 2).count()),
-        ("rows_branch", io.readBranch(t, "audit").count())
+        ("rows_branch", io.read(t, Ref.Branch("audit")).count())
       ).toDF("metric", "value")
     }),
 
@@ -1387,7 +1387,7 @@ object SparkEntry {
 
     // Branch CHANGELOG — the audit question itself: "what exactly will
     // fast_forward publish?" The branch accumulates an append and a
-    // COW DELETE (via the WAP session conf); readChangelogBranch diffs
+    // COW DELETE (via the WAP session conf); readChangelog on the branch diffs
     // the branch chain from the fork baseline and reports the NET
     // row-level changes — appended rows as INSERTs at branch v2,
     // predicate-matched rows (including just-appended ones) as DELETEs
@@ -1403,15 +1403,15 @@ object SparkEntry {
         col("s_name"), col("s_acctbal").cast("decimal(12,2)").as("bal")), t)
       io.dropBranch(t, "cdc") // reruns share the warehouse: fresh fork
       io.createBranch(t, "cdc") // branch v1 = fork record
-      io.appendToBranch(Tables.supplier(s, dir)
+      io.append(Tables.supplier(s, dir)
         .filter(col("s_suppkey").between(3, 7))
         .select((col("s_suppkey").cast("bigint") + 1000).as("skey"),
           concat(lit("x_"), col("s_name")).as("s_name"),
-          col("s_acctbal").cast("decimal(12,2)").as("bal")), t, "cdc") // v2
+          col("s_acctbal").cast("decimal(12,2)").as("bal")), t, ref = Ref.Branch("cdc")) // v2
       s.conf.set("spark.wap.branch", "cdc")
       try s.sql(s"DELETE FROM $cname.$t WHERE skey % 4 = 1") // v3: COW on the branch
       finally s.conf.unset("spark.wap.branch")
-      io.readChangelogBranch(t, "cdc")
+      io.readChangelog(t, Ref.Branch("cdc").origin, ref = Ref.Branch("cdc"))
         .select(col("_change_type"), col("_change_version"),
           // decimal-free final schema (driver-hash rule); exact for cents
           col("skey"), col("s_name"), col("bal").cast("double").as("bal"))
@@ -1440,12 +1440,12 @@ object SparkEntry {
         col("s_name"), col("s_acctbal").cast("decimal(12,2)").as("bal")), t)
       val vMain = io.catalog.currentVersion(t).get
       io.createBranch(t, "wap") // branch v1 = fork record
-      io.appendToBranch(Tables.supplier(s, dir)
+      io.append(Tables.supplier(s, dir)
         .filter(col("s_suppkey").between(3, 7))
         .select((col("s_suppkey").cast("bigint") + 1000).as("skey"),
           concat(lit("x_"), col("s_name")).as("s_name"),
-          col("s_acctbal").cast("decimal(12,2)").as("bal")), t, "wap") // branch v2
-      io.deleteWhereMOR(t, col("skey") % 4 === 1, branch = Some("wap")) // branch v3
+          col("s_acctbal").cast("decimal(12,2)").as("bal")), t, ref = Ref.Branch("wap")) // branch v2
+      io.deleteWhereMOR(t, col("skey") % 4 === 1, ref = Ref.Branch("wap")) // branch v3
       require(io.catalog.currentVersion(t).contains(vMain),
         "branch history leaked to main: version advanced")
       val drainIo = TableIO(s, tempDir("graft_bstd_"))
@@ -2806,14 +2806,14 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
       io.append(ords.filter(col("o_orderpriority") === "1-URGENT"), t)
       io.createBranch(t, "exp")
-      io.appendToBranch(ords.filter(col("o_orderpriority") === "2-HIGH"), t, "exp")
+      io.append(ords.filter(col("o_orderpriority") === "2-HIGH"), t, ref = Ref.Branch("exp"))
       val mainBefore = io.read(t).withColumn("stage", lit("main_before"))
-      io.appendToBranch(ords.filter(col("o_orderpriority") === "3-MEDIUM"), t, "exp")
-      val branchHead = io.readBranch(t, "exp").withColumn("stage", lit("branch_head"))
+      io.append(ords.filter(col("o_orderpriority") === "3-MEDIUM"), t, ref = Ref.Branch("exp"))
+      val branchRows = io.read(t, Ref.Branch("exp")).withColumn("stage", lit("branch_head"))
       io.fastForward(t, "exp")
       val mainAfter = io.read(t).withColumn("stage", lit("main_after"))
       // deterministic output: union row order is scheduling-dependent
-      mainBefore.unionAll(branchHead).unionAll(mainAfter)
+      mainBefore.unionAll(branchRows).unionAll(mainAfter)
         .orderBy(col("stage"), col("o_orderkey"))
     }),
 
@@ -2857,9 +2857,9 @@ object SparkEntry {
       io.append(Tables.events(s, dir).filter(col("event_id") % 2 === 0), t)
       io.createBranch(t, "ingest")
       withStreamShuffle(s) {
-        graft.streaming.TableSink.branchAppendStream(
+        graft.streaming.TableSink.appendStream(
           eventsFileStream(s, dir).filter(col("event_id") % 2 === 1),
-          io, t, "ingest", tempDir("graft_ckpt_"), availableNow = true)
+          io, t, tempDir("graft_ckpt_"), availableNow = true, ref = Ref.Branch("ingest"))
           .awaitTermination()
       }
       val before = rollup(io.read(t), "main_before")
@@ -2883,9 +2883,9 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_totalprice")), t) // v1
       io.catalog.tagSnapshot(t, "audited", 1)
       io.createBranch(t, "exp") // branch v1 at fork v1
-      io.appendToBranch(Tables.orders(s, dir)
+      io.append(Tables.orders(s, dir)
         .filter(col("o_custkey") > 100 && col("o_custkey") <= 120)
-        .select(col("o_orderkey"), col("o_totalprice")), t, "exp") // branch v2
+        .select(col("o_orderkey"), col("o_totalprice")), t, ref = Ref.Branch("exp")) // branch v2
       io.createBranch(t, "idle") // branch v1
       s.sql(s"SELECT ref_name, ref_type, version FROM $cname.$t.refs")
     }),
@@ -3177,10 +3177,10 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderpriority"))
       io.append(ords.filter(col("o_orderpriority") === "1-URGENT"), t)
       io.createBranch(t, "maint")
-      io.appendToBranch(ords.filter(col("o_orderpriority") === "2-HIGH"), t, "maint")
+      io.append(ords.filter(col("o_orderpriority") === "2-HIGH"), t, ref = Ref.Branch("maint"))
       io.fastForward(t, "maint") // first cycle integrates HIGH
-      io.appendToBranch(ords.filter(col("o_orderpriority") === "3-MEDIUM"), t, "maint")
-      io.compactBranch(t, "maint", targetFiles = 1)
+      io.append(ords.filter(col("o_orderpriority") === "3-MEDIUM"), t, ref = Ref.Branch("maint"))
+      io.compact(t, targetFiles = 1, ref = Ref.Branch("maint"))
       io.fastForward(t, "maint") // second cycle: compacted files integrate
       io.read(t)
     }),

@@ -114,37 +114,33 @@ private[io] class ChangelogTable(
                       s"changelog read of $tableName: options $v and $ts are " +
                         "mutually exclusive")
                 }
-              val io2 = new TableIO(ctx.sparkSession, cat)
-              val df = Option(options.get("branch")) match {
-                case Some(b) =>
-                  Seq("fromTimestamp", "toTimestamp").foreach { k =>
-                    if (options.get(k) != null) throw new IllegalArgumentException(
-                      s"changelog read of $tableName: option $k is main-only " +
-                        "(branch commits have no main-timeline instants) — bound " +
-                        "branch ranges with fromVersion/toVersion")
-                  }
-                  // branch default fromVersion = 1 (the fork record):
-                  // "the branch's own changes", matching the reader API
-                  io2.readChangelogBranch(tableName, b,
-                    intOpt("fromVersion").getOrElse(1), intOpt("toVersion"))
-                case None =>
-                  val fromV = intOpt("fromVersion")
-                    .orElse(tsOpt("fromTimestamp").map(ts =>
-                      cat.versionAsOf(tableName, ts - 1).getOrElse(0)))
-                    .getOrElse(0)
-                  val toV = intOpt("toVersion")
-                    .orElse(tsOpt("toTimestamp").map(ts =>
-                      // no commit at or before the instant = zero changes
-                      cat.versionAsOf(tableName, ts).getOrElse(0)))
-                  if (toV.contains(0))
-                    // the version-0 "table" has no manifest to derive a
-                    // frame from — serve the scan schema's empty set
-                    return ctx.sparkSession.sparkContext
-                      .emptyRDD[org.apache.spark.sql.Row]
-                  io2.readChangelog(tableName, fromV, toV)
+              val ref = ChangelogStream.refOf(options)
+              // timestamps resolve on main's timeline only: branch
+              // commits have no main-timeline instants
+              if (ref != Ref.Main) Seq("fromTimestamp", "toTimestamp").foreach { k =>
+                if (options.get(k) != null) throw new IllegalArgumentException(
+                  s"changelog read of $tableName: option $k is main-only " +
+                    "(branch commits have no main-timeline instants) — bound " +
+                    "branch ranges with fromVersion/toVersion")
               }
-              df.select(read.fields.toSeq
-                .map(f => org.apache.spark.sql.functions.col(f.name)): _*).rdd
+              // default fromVersion = the ref's origin: main's full
+              // history, or "the branch's own changes" since its fork
+              val fromV = intOpt("fromVersion")
+                .orElse(tsOpt("fromTimestamp").map(ts =>
+                  cat.versionAsOf(tableName, ts - 1).getOrElse(0)))
+                .getOrElse(ref.origin)
+              val toV = intOpt("toVersion")
+                .orElse(tsOpt("toTimestamp").map(ts =>
+                  // no commit at or before the instant = zero changes
+                  cat.versionAsOf(tableName, ts).getOrElse(0)))
+              if (toV.contains(0))
+                // the version-0 "table" has no manifest to derive a
+                // frame from — serve the scan schema's empty set
+                return ctx.sparkSession.sparkContext
+                  .emptyRDD[org.apache.spark.sql.Row]
+              new TableIO(ctx.sparkSession, cat).readChangelog(tableName, fromV, toV, ref)
+                .select(read.fields.toSeq
+                  .map(f => org.apache.spark.sql.functions.col(f.name)): _*).rdd
             }
           }.asInstanceOf[T]
 
@@ -161,31 +157,24 @@ private[io] class ChangelogTable(
           // at createBranch, so a drop+re-create under the same name
           // invalidates the checkpoint loudly instead of serving the
           // new fork's restarted version numbers against stale state
-          val branch = Option(options.get("branch"))
-          branch.foreach { b =>
-            if (cat.branchHead(tableName, b).isEmpty)
-              throw new IllegalArgumentException(
-                s"$tableName.changelog: branch $b does not exist")
-          }
+          val ref = ChangelogStream.refOf(options)
+          if (ref != Ref.Main && cat.currentVersion(tableName, ref).isEmpty)
+            throw new IllegalArgumentException(s"$tableName.changelog: ${ref.missing(tableName)}")
           val meta = cat.readMeta(tableName)
           if (meta.renames.nonEmpty) throw new UnsupportedOperationException(
             s"$tableName.changelog: renamed-column tables are batch-only changelog " +
               "sources (per-batch file reads run under physical names; use " +
               "readChangelog, or compact() to rewrite files under current names)")
           val dataRoot = Paths.get(cat.dataPath(tableName)).toAbsolutePath.normalize
-          val headFiles = branch match {
-            case Some(b) => cat.branchHead(tableName, b).toSeq
-              .flatMap(v => cat.branchManifest(tableName, b, v))
-            case None => cat.currentVersion(tableName).toSeq
-              .flatMap(v => cat.manifest(tableName, v))
-          }
+          val headFiles = cat.currentVersion(tableName, ref).toSeq
+            .flatMap(v => cat.manifest(tableName, v, ref))
           if (headFiles.exists(StreamShape.hiveDirFile(dataRoot, _)))
             throw new UnsupportedOperationException(
               s"$tableName.changelog: Hive-dir-partitioned tables are batch-only " +
                 "changelog sources (directory values cannot ride the fixed streaming " +
                 "row shape; hidden-layout gp_* tables stream fine)")
           new ChangelogMicroBatchStream(tableName, cat, dataSchema, read,
-            options, checkpointLocation, branch)
+            options, checkpointLocation, ref)
         }
       }
     }
@@ -208,21 +197,23 @@ private[io] class ChangelogMicroBatchStream(
     streamSchema: StructType,
     options: CaseInsensitiveStringMap,
     checkpointLocation: String,
-    branch: Option[String] = None
+    ref: Ref = Ref.Main
 ) extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  private val label = branch.fold(tableName)(b => s"$tableName@$b")
+  private val label = ref.describe(tableName)
 
   // Branch version numbering RESTARTS per fork, so a checkpointed
   // branch offset is only meaningful against the fork it came from:
   // offsets embed the fork id minted at createBranch (fork records
   // predating the id get a stable placeholder — a later re-fork still
   // mints a real id, so the mismatch refusal keeps working).
-  private val forkId: Option[String] = branch.map { b =>
-    try cat.branchProps(tableName, b, 1)
-      .getOrElse(TableCatalog.BranchForkIdProp, "legacy-fork")
-    catch { case _: java.nio.file.NoSuchFileException => "expired-fork" }
+  private val forkId: Option[String] = ref match {
+    case Ref.Main => None
+    case b: Ref.Branch =>
+      try Some(cat.manifestProps(tableName, 1, b)
+        .getOrElse(TableCatalog.BranchForkIdProp, "legacy-fork"))
+      catch { case _: java.nio.file.NoSuchFileException => Some("expired-fork") }
   }
 
   private case class V(v: Int) extends Offset {
@@ -248,21 +239,20 @@ private[io] class ChangelogMicroBatchStream(
       v
   }
 
-  private def headVersion: Int = branch match {
-    case Some(b) => cat.branchHead(tableName, b).getOrElse(
-      throw new IllegalStateException(
-        s"changelog stream over $label: the branch was dropped mid-stream"))
-    case None => cat.currentVersion(tableName).getOrElse(0)
+  private def headVersion: Int = cat.currentVersion(tableName, ref).getOrElse {
+    if (ref != Ref.Main) throw new IllegalStateException(
+      s"changelog stream over $label: the branch was dropped mid-stream")
+    0
   }
 
-  private val startV: Int = branch match {
-    case None =>
+  private val startV: Int = ref match {
+    case Ref.Main =>
       StreamShape.startingVersion("changelog stream", tableName, cat, options)
-    case Some(b) =>
+    case b: Ref.Branch =>
       if (options.get("startingTimestamp") != null) throw new IllegalArgumentException(
         s"changelog stream over $label: startingTimestamp is main-only (branch " +
           "commits have no main-timeline instants) — use startingVersion")
-      val head = cat.branchHead(tableName, b).getOrElse(0)
+      val head = cat.currentVersion(tableName, b).getOrElse(0)
       Option(options.get("startingVersion")).map { raw =>
         val v = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
           s"changelog stream over $label: option startingVersion must be a " +
@@ -271,7 +261,7 @@ private[io] class ChangelogMicroBatchStream(
           s"changelog stream over $label: option startingVersion = $v is outside " +
             s"the branch's history [0, $head]")
         v
-      }.getOrElse(1) // fork record: "the branch's own changes", the batch default
+      }.getOrElse(b.origin) // fork record: "the branch's own changes", the batch default
   }
 
   // admission control (Delta CDF's rate limiting): a CDC consumer
@@ -312,11 +302,7 @@ private[io] class ChangelogMicroBatchStream(
       // admits — the batch planner raises the loud refusal.
       try {
         def manifestAt(v: Int): Set[String] =
-          if (v == 0) Set.empty
-          else (branch match {
-            case Some(b) => cat.branchManifest(tableName, b, v)
-            case None => cat.manifest(tableName, v)
-          }).toSet
+          if (v == 0) Set.empty else cat.manifest(tableName, v, ref).toSet
         var prev = manifestAt(s)
         var bytes = 0L
         var chosen = s
@@ -375,7 +361,7 @@ private[io] class ChangelogMicroBatchStream(
           s.iterator().asScala
             .filter(p => p.getFileName.toString.stripPrefix("v").toIntOption.exists(_ <= e))
             .toSeq
-        }.foreach(GraftCatalog.sweepDir)
+        }.foreach(TableIO.sweepDir)
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -394,14 +380,10 @@ private[io] class ChangelogMicroBatchStream(
     val s = versionOf(start)
     val e = versionOf(end)
     if (e <= s) { batchFactory = ChangelogStream.EmptyFactory; return Array.empty }
-    def manifestAt(v: Int): Seq[String] = branch match {
-      case Some(b) => cat.branchManifest(tableName, b, v)
-      case None => cat.manifest(tableName, v)
-    }
     def manifestOrReject(v: Int): Seq[String] =
       if (v == 0) Seq.empty
       else
-        try manifestAt(v)
+        try cat.manifest(tableName, v, ref)
         catch {
           case _: java.nio.file.NoSuchFileException => throw new IllegalStateException(
             s"changelog stream over $label: snapshot $v in range [$s, $e] is " +
@@ -417,18 +399,10 @@ private[io] class ChangelogMicroBatchStream(
     // treating a MOR commit as clean (the batch core is equally loud,
     // keeping the spec-pinned streamed == batch equivalence)
     def pendingOrEmpty(v: Int): Seq[TableCatalog.DeleteEntry] =
-      if (v == 0) Seq.empty
-      else branch match {
-        case Some(b) => cat.branchPendingDeletes(tableName, b, v)
-        case None => cat.pendingDeletes(tableName, v)
-      }
+      if (v == 0) Seq.empty else cat.pendingDeletes(tableName, v, ref)
     def opOf(v: Int): Option[String] =
-      try {
-        branch match {
-          case Some(b) => cat.branchProps(tableName, b, v).get(TableCatalog.OpProp)
-          case None => cat.manifestProps(tableName, v).get(TableCatalog.OpProp)
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+      try cat.manifestProps(tableName, v, ref).get(TableCatalog.OpProp)
+      catch { case scala.util.control.NonFatal(_) => None }
     var prev = manifestOrReject(s).toSet
     var prevPending = pendingOrEmpty(s)
     ((s + 1) to e).foreach { v =>
@@ -461,11 +435,7 @@ private[io] class ChangelogMicroBatchStream(
           // splits the step frame into _change_type=INSERT/DELETE
           // subdirs in a single pass instead of recomputing the
           // exceptAll/kill diff once per type
-          val step = branch match {
-            case Some(b) => io.readChangelogBranch(tableName, b, v - 1, Some(v))
-            case None => io.readChangelog(tableName, v - 1, Some(v))
-          }
-          step.drop("_change_version")
+          io.readChangelog(tableName, v - 1, Some(v), ref).drop("_change_version")
             .write.mode("overwrite").partitionBy("_change_type")
             .parquet(vdir.toString)
         }
@@ -534,6 +504,10 @@ private[io] class ChangelogMicroBatchStream(
 
 private[io] object ChangelogStream {
   val ChangeCols: Set[String] = Set("_change_type", "_change_version")
+
+  /** The chain a changelog scan reads: the `branch` option, else main. */
+  def refOf(options: CaseInsensitiveStringMap): Ref =
+    Option(options.get("branch")).fold[Ref](Ref.Main)(Ref.Branch)
 
   object EmptyFactory extends PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] =

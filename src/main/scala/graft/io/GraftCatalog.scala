@@ -97,28 +97,23 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     * `VERSION AS OF` / `TIMESTAMP AS OF` stay literal (time travel
     * outranks the session default), as do metadata tables.
     */
-  private def wapBranch(): Option[String] =
+  private def wapRef(): Option[Ref] =
     SparkSession.active.conf.getOption("spark.wap.branch")
-      .map(_.trim).filter(_.nonEmpty)
+      .map(_.trim).filter(_.nonEmpty).map(Ref.Branch)
 
   override def loadTable(ident: Identifier): Table = {
     val name = qualified(ident)
-    val wap = wapBranch().filter(_ => catalog.tableExists(name))
-    wap.flatMap(b => catalog.branchHead(name, b).map(b -> _)) match {
-      case Some((b, head)) =>
-        // WAP session + branch exists: the branch head IS the table
-        try loadSnapshot(ident, s"branch-$b@v$head",
-          catalog.branchManifest(name, b, head),
-          try catalog.branchStats(name, b, head)
-          catch { case scala.util.control.NonFatal(_) =>
-            Map.empty[String, Map[String, FileStats.ColStats]] },
-          writeBranch = Some(b))
-        catch { case _: java.nio.file.NoSuchFileException =>
-          throw new NoSuchTableException(ident) }
+    val wap = wapRef().filter(_ => catalog.tableExists(name))
+    wap.flatMap(r => catalog.currentVersion(name, r).map(r -> _)) match {
+      case Some((r, head)) =>
+        // WAP session + branch exists: the branch head IS the table.
+        // Served as a clean snapshot: raw consumers of a dirty head
+        // (the row-level rewrite, V1 DELETE) refuse at planning
+        loadVersion(ident, head, r, writeRef = r, mergeDirty = false)
       case None =>
         catalog.currentVersion(name) match {
           // wap set but branch not yet created: read main, write forks
-          case Some(v) => loadVersion(ident, v, writeBranch = wap)
+          case Some(v) => loadVersion(ident, v, writeRef = wap.getOrElse(Ref.Main))
           case None =>
             // Iceberg-style metadata tables: <ns>.<table>.snapshots etc.
             // parse as namespace [ns, table] + name "snapshots"
@@ -144,25 +139,12 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
         if (!catalog.versions(name).contains(v)) throw new NoSuchTableException(ident)
         loadVersion(ident, v)
       case None =>
-        catalog.branchHead(name, version) match {
-          case Some(head) =>
-            // a branch head with pending MOR deletes (branch CDC
-            // writes) is served deletes-MERGED like a dirty main
-            // snapshot — a raw scan would resurrect its deleted rows
-            val dirty =
-              try catalog.branchPendingDeletes(name, version, head).nonEmpty
-              catch { case scala.util.control.NonFatal(_) => false }
-            // a branch dropped between the head listing and the
-            // manifest read reports not-found, same as readBranch
-            try loadSnapshot(ident, s"branch-$version@v$head",
-              catalog.branchManifest(name, version, head),
-              try catalog.branchStats(name, version, head)
-              catch { case scala.util.control.NonFatal(_) =>
-                Map.empty[String, Map[String, FileStats.ColStats]] },
-              morVersion = if (dirty) Some(head) else None,
-              morBranch = if (dirty) Some(version) else None)
-            catch { case _: java.nio.file.NoSuchFileException =>
-              throw new NoSuchTableException(ident) }
+        // a branch head with pending MOR deletes (branch CDC writes) is
+        // served deletes-MERGED like a dirty main snapshot — a raw scan
+        // would resurrect its deleted rows
+        val ref = Ref.Branch(version)
+        catalog.currentVersion(name, ref) match {
+          case Some(head) => loadVersion(ident, head, ref)
           case None => throw new NoSuchTableException(ident)
         }
     }
@@ -180,37 +162,29 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     loadVersion(ident, v)
   }
 
-  private def loadVersion(ident: Identifier, version: Int,
-                          writeBranch: Option[String] = None): Table = {
-    val name = qualified(ident)
-    // a snapshot with PENDING merge-on-read position deletes cannot be
-    // served as a raw parquet scan — every read must anti-join the
-    // delete positions (TableIO.mergeDeletes); applyDeletes restores
-    // the pure-scan table
-    val morVersion =
-      try if (catalog.pendingDeletes(name, version).nonEmpty) Some(version) else None
-      catch { case scala.util.control.NonFatal(_) => None }
-    loadSnapshot(ident, s"v$version", catalog.manifest(name, version),
-      try catalog.manifestStats(name, version)
-      catch { case scala.util.control.NonFatal(_) =>
-        Map.empty[String, Map[String, FileStats.ColStats]] },
-      writeBranch, morVersion)
-  }
-
-  /** Materialize ANY manifest's file list (a main version or a branch
-    * head) as a readable table — the shared back half of version, tag,
-    * and branch resolution.
+  /** Materialize snapshot `version` of `ref` (a main version or a
+    * branch head) as a readable table — the shared back half of
+    * version, tag, and branch resolution; writes land on `writeRef`. A
+    * snapshot with PENDING merge-on-read position deletes cannot be
+    * served as a raw parquet scan — every read must anti-join the
+    * delete positions (TableIO.mergeDeletes); applyDeletes restores
+    * the pure-scan table. A branch dropped between the head listing
+    * and the manifest read reports not-found.
     */
-  private def loadSnapshot(ident: Identifier, label: String, files: Seq[String],
-                           stats: Map[String, Map[String, FileStats.ColStats]],
-                           writeBranch: Option[String] = None,
-                           morVersion: Option[Int] = None,
-                           morBranch: Option[String] = None): Table = {
+  private def loadVersion(ident: Identifier, version: Int, ref: Ref = Ref.Main,
+                          writeRef: Ref = Ref.Main, mergeDirty: Boolean = true): Table = {
     val name = qualified(ident)
+    val dirty = mergeDirty &&
+      (try catalog.pendingDeletes(name, version, ref).nonEmpty
+       catch { case scala.util.control.NonFatal(_) => false })
+    val files =
+      try catalog.manifest(name, version, ref)
+      catch { case _: java.nio.file.NoSuchFileException => throw new NoSuchTableException(ident) }
+    val label = ref.snapshotLabel(version)
     // seed the stats cache from the manifest so plan-time file
     // skipping (StatsPruningScanBuilder, DML scoping) never opens a
     // footer — stats were persisted with the commit
-    try FileStats.prime(stats)
+    try FileStats.prime(catalog.statsOrEmpty(name, version, ref))
     catch { case scala.util.control.NonFatal(_) => () }
     // A declared schema (CTAS or ALTER TABLE) wins when present —
     // that's what lets ADD COLUMN surface a column the existing data
@@ -269,24 +243,21 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     // uniform and partition discovery keeps working (q162; see
     // GraftRowOpsTable doc).
     val pspec = catalog.readMeta(name).partitionSpec.map(PartitionTransforms.parse)
-    morVersion match {
-      case Some(mv) =>
-        // dirty snapshot: reads go through the V1 bridge computing the
-        // deletes-merged frame. Unpartitioned MAIN snapshots also get
-        // the row-level ops (merged COW rewrite); a dirty BRANCH
-        // snapshot (VERSION AS OF '<branch>') is a read surface.
-        if (pcols.isEmpty && morBranch.isEmpty)
-          new GraftMorRowOpsTable(name, catalog, delegate, declared, renames,
-            writeBranch, mv)
-        else new GraftMorTable(name, catalog, delegate, pcols, declared, renames, pspec,
-          writeBranch, mv, morBranch)
-      case None =>
-        // clean snapshots carry the row-level ops regardless of
-        // layout (r19): partitioned replacements take the layout hop
-        // in the commit (see GraftRowOpsTable doc)
-        new GraftRowOpsTable(name, catalog, delegate, declared, renames, writeBranch,
-          pcols, pspec)
-    }
+    if (dirty) {
+      // dirty snapshot: reads go through the V1 bridge computing the
+      // deletes-merged frame. Unpartitioned MAIN snapshots also get
+      // the row-level ops (merged COW rewrite); a dirty BRANCH
+      // snapshot (VERSION AS OF '<branch>') is a read surface.
+      if (pcols.isEmpty && ref == Ref.Main)
+        new GraftMorRowOpsTable(name, catalog, delegate, declared, renames, writeRef, version)
+      else new GraftMorTable(name, catalog, delegate, pcols, declared, renames, pspec,
+        writeRef, version, ref)
+    } else
+      // clean snapshots carry the row-level ops regardless of
+      // layout (r19): partitioned replacements take the layout hop
+      // in the commit (see GraftRowOpsTable doc)
+      new GraftRowOpsTable(name, catalog, delegate, declared, renames, writeRef,
+        pcols, pspec)
   }
 
   /** Hive-style partition columns inferred from a manifest's file
@@ -563,16 +534,12 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
         // spec-pinned); DROP must materialize first.
         locally {
           val phys = physOf(colName)
-          val eqKeyed =
-            catalog.currentVersion(name).toSeq
-              .flatMap(v => catalog.pendingDeletes(name, v)) ++
-              catalog.listBranches(name).flatMap(b =>
-                catalog.branchHead(name, b).toSeq
-                  .flatMap(h => catalog.branchPendingDeletes(name, b, h)))
+          val eqKeyed = catalog.refs(name).flatMap(ref =>
+            catalog.currentVersion(name, ref).toSeq
+              .flatMap(v => catalog.pendingDeletes(name, v, ref)))
           require(!eqKeyed.exists(_.eqKeyCols.contains(phys)),
             s"cannot drop column '$colName': pending merge-on-read equality-delete " +
-              "entries key on it — run applyDeletes (and applyDeletesBranch for dirty " +
-              "branches) first")
+              "entries key on it — run applyDeletes (on main and every dirty branch) first")
         }
         requireNotChecked(colName, "drop")
         dropped += physOf(colName)
@@ -908,9 +875,9 @@ private[io] class GraftTable(
     declaredSchema: Option[StructType],
     renames: Map[String, String],
     pspec: Seq[PartitionTransform] = Seq.empty,
-    // session WAP branch (`spark.wap.branch`): writes commit branch
-    // snapshots instead of main versions; None = normal main writes
-    writeBranch: Option[String] = None
+    // the chain writes commit to: the session WAP branch
+    // (`spark.wap.branch`) or main
+    writeRef: Ref = Ref.Main
 ) extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   // hidden layout columns (pspec-derived) — stripped from the visible
@@ -1053,15 +1020,17 @@ private[io] class GraftTable(
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val spark = SparkSession.active
     val io = new TableIO(spark, cat)
-    // under a WAP session the delete's base snapshot is the BRANCH
-    // head (creating the branch at main's current snapshot on first
-    // write); otherwise main's current version
-    val branchHead = writeBranch.map(b => b -> io.ensureBranch(tableName, b))
-    val baseVersion = cat.currentVersion(tableName)
-    val all = branchHead match {
-      case Some((b, h)) => cat.branchManifest(tableName, b, h)
-      case None => baseVersion.map(cat.manifest(tableName, _)).getOrElse(Seq.empty)
+    // the delete's base snapshot is the write ref's head — under a WAP
+    // session the BRANCH, forked at main's current snapshot on first
+    // write. The rewrite below reads candidates RAW: over pending MOR
+    // deletes that resurrects, so a dirty base refuses with the
+    // recovery step, like every raw-manifest consumer
+    val baseVersion = cat.locked(tableName) {
+      cat.forkLocked(tableName, writeRef)
+      cat.currentVersion(tableName, writeRef)
     }
+    baseVersion.foreach(v => GraftTable.requireClean(cat, tableName, v, writeRef, "DELETE"))
+    val all = baseVersion.map(cat.manifest(tableName, _, writeRef)).getOrElse(Seq.empty)
     val toLogicalName = renames.map(_.swap)
     def logicalStats(f: String, conf: org.apache.hadoop.conf.Configuration) =
       FileStats.cached(f, conf).map { case (k, v) => toLogicalName.getOrElse(k, k) -> v }
@@ -1088,34 +1057,26 @@ private[io] class GraftTable(
       } catch { case scala.util.control.NonFatal(_) => true }
     val cond = filters.flatMap(GraftTable.toCondition)
       .reduceOption(_ && _).getOrElse(lit(true))
-    branchHead match {
-      case Some((b, h)) =>
-        // branch deletes keep the rewrite path (fork-base props rebase)
-        val remaining = io.readFiles(tableName, touched)
-          .filter(not(coalesce(cond, lit(false))))
-        io.commitBranchReplacement(remaining, tableName, b, kept, partitionCols, baseHead = h)
-        ()
-      case None =>
-        // METADATA-ONLY tier (Iceberg's metadata delete): a file whose
-        // stats PROVE the predicate selects every row simply drops
-        // from the manifest — no read, no rewrite. A partition-aligned
-        // DELETE (drop a day, drop a bucket) touches zero data bytes
-        // at any table size; only predicate-boundary files rewrite.
-        val (dropped, candidates) =
-          try {
-            val conf = spark.sessionState.newHadoopConf()
-            touched.partition(f => FileStats.mustMatchAll(logicalStats(f, conf), filters.toSeq))
-          } catch { case scala.util.control.NonFatal(_) => (Seq.empty, touched) }
-        if (candidates.isEmpty)
-          io.commitMetadataDelete(tableName, kept, baseVersion.getOrElse(0),
-            Some(newcomerConflicts))
-        else {
-          val remaining = io.readFiles(tableName, candidates)
-            .filter(not(coalesce(cond, lit(false))))
-          io.commitReplacement(remaining, tableName, kept, partitionCols,
-            baseVersion = baseVersion.getOrElse(0),
-            newcomerConflicts = Some(newcomerConflicts))
-        }
+    // METADATA-ONLY tier (Iceberg's metadata delete): a file whose
+    // stats PROVE the predicate selects every row simply drops from
+    // the manifest — no read, no rewrite. A partition-aligned DELETE
+    // (drop a day, drop a bucket) touches zero data bytes at any table
+    // size; only predicate-boundary files rewrite.
+    val (_, candidates) =
+      try {
+        val conf = spark.sessionState.newHadoopConf()
+        touched.partition(f => FileStats.mustMatchAll(logicalStats(f, conf), filters.toSeq))
+      } catch { case scala.util.control.NonFatal(_) => (Seq.empty, touched) }
+    if (candidates.isEmpty)
+      io.commitMetadataDelete(tableName, kept, baseVersion.getOrElse(0),
+        Some(newcomerConflicts), writeRef)
+    else {
+      val remaining = io.readFiles(tableName, candidates)
+        .filter(not(coalesce(cond, lit(false))))
+      io.commitReplacement(remaining, tableName, kept, partitionCols,
+        baseVersion = baseVersion.getOrElse(0),
+        newcomerConflicts = Some(newcomerConflicts), ref = writeRef)
+      ()
     }
   }
 
@@ -1128,17 +1089,14 @@ private[io] class GraftTable(
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
               val io = new TableIO(data.sparkSession, cat)
-              writeBranch match {
-                case Some(b) =>
-                  // WAP session: the write lands on the branch,
-                  // forking it at main's current snapshot when absent
-                  if (replace || overwrite) io.overwriteBranch(data, tableName, b, partitionCols)
-                  else { io.ensureBranch(tableName, b); io.appendToBranch(data, tableName, b, partitionCols) }
-                  ()
-                case None =>
-                  if (replace || overwrite) io.overwrite(data, tableName, partitionCols)
-                  else io.append(data, tableName, partitionCols)
+              // a WAP session's write lands on the branch, forking it
+              // at main's current snapshot when absent
+              if (replace || overwrite) io.overwrite(data, tableName, partitionCols, ref = writeRef)
+              else {
+                cat.locked(tableName)(cat.forkLocked(tableName, writeRef))
+                io.append(data, tableName, partitionCols, ref = writeRef)
               }
+              ()
             }
           }
       }
@@ -1179,11 +1137,11 @@ private[io] class GraftRowOpsTable(
     delegate: ParquetTable,
     declaredSchema: Option[StructType],
     renames: Map[String, String],
-    writeBranch: Option[String] = None,
+    writeRef: Ref = Ref.Main,
     partitionCols: Seq[String] = Seq.empty,
     pspec: Seq[PartitionTransform] = Seq.empty
 ) extends GraftTable(tableName, cat, delegate, partitionCols, declaredSchema, renames,
-    pspec, writeBranch = writeBranch)
+    pspec, writeRef)
   with SupportsRowLevelOperations {
 
   /** Layout-aware might-match for the rewrite's file scoping: hidden
@@ -1206,17 +1164,16 @@ private[io] class GraftRowOpsTable(
         // excluded from the rewrite scan AND carried into the new
         // manifest unchanged (file-scoped copy-on-write)
         @volatile private var carriedOver: Seq[String] = Seq.empty
-        // the snapshot version the rewrite's file partition was computed
-        // against — validated at commit so a commit that landed in
+        // the write ref's head the rewrite's file partition was computed
+        // against — the commit pins at it, so a commit that landed in
         // between (same-JVM before the lock, or another process any
-        // time) surfaces as ConcurrentCommitException instead of the
-        // rewrite silently dropping that commit's files (lost update)
+        // time) surfaces as a conflict (or, on main, a validated
+        // rebase) instead of the rewrite silently dropping that
+        // commit's files (lost update). None = no head yet: an empty
+        // table, or a WAP branch that forks at commit
         @volatile private var baseVersion: Option[Int] = None
-        // WAP-session bookkeeping: the branch head the scan planned
-        // against (None = branch not created yet — it forks at commit)
-        // and the planned file set (the conflict check for the
-        // fork-at-commit case, where no branch version existed to pin)
-        @volatile private var branchHeadAtScan: Option[Int] = None
+        // the planned file set: the conflict check for the
+        // fork-at-commit case, where no branch version existed to pin
         @volatile private var plannedFiles: Seq[String] = Seq.empty
         // the command's pushed (translatable) condition — the rebase's
         // conflict-detection filter (Iceberg's serializable check): a
@@ -1241,25 +1198,18 @@ private[io] class GraftRowOpsTable(
         // the files that key can live in, not the table.
         override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
           new ScanBuilder with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-            private val baseV = cat.currentVersion(tableName)
-            locally { baseVersion = baseV } // one read: files + version from the same snapshot
-            // under a WAP session the rewrite's base snapshot is the
-            // BRANCH head when it exists; otherwise main's current
-            // manifest (the branch forks from it at commit time)
-            private val branchHeadNow: Option[Int] =
-              writeBranch.flatMap(b => cat.branchHead(tableName, b))
-            locally { branchHeadAtScan = branchHeadNow }
-            private val allFiles = (writeBranch, branchHeadNow) match {
-              case (Some(b), Some(h)) =>
-                // the rewrite scans candidate files RAW: a branch head
-                // carrying pending MOR deletes would resurrect them
-                // into the replacement files — refuse with the
-                // recovery step (same rule as every raw consumer)
-                require(cat.branchPendingDeletes(tableName, b, h).isEmpty,
-                  s"$tableName branch $b has pending merge-on-read deletes — " +
-                    s"run compactBranch before row-level ${info.command()} on the branch")
-                cat.branchManifest(tableName, b, h)
-              case _ => baseV.map(cat.manifest(tableName, _)).getOrElse(Seq.empty)
+            // one read: files + version from the same snapshot. Under a
+            // WAP session the base is the BRANCH head when it exists;
+            // otherwise main's current manifest (the branch forks from
+            // it at commit time)
+            private val baseV = cat.currentVersion(tableName, writeRef)
+            locally { baseVersion = baseV }
+            private val allFiles = baseV match {
+              case Some(v) =>
+                GraftTable.requireClean(cat, tableName, v, writeRef, info.command().toString)
+                cat.manifest(tableName, v, writeRef)
+              case None => cat.currentVersion(tableName).map(cat.manifest(tableName, _))
+                .getOrElse(Seq.empty)
             }
             locally { plannedFiles = allFiles }
             private var chosen: Seq[String] = allFiles
@@ -1353,9 +1303,7 @@ private[io] class GraftRowOpsTable(
               // captured HALF-moved, permanently recording a torn append
               // in this snapshot (or phantom rows, if that writer then
               // crashed before committing).
-              val tableRoot = java.nio.file.Paths.get(cat.pathOf(tableName))
-              java.nio.file.Files.createDirectories(tableRoot)
-              val staging = java.nio.file.Files.createTempDirectory(tableRoot, ".stage-")
+              val staging = TableIO.newStagingDir(cat.pathOf(tableName))
               val writeTable = ParquetTable(
                 s"${delegate.name}#rewrite",
                 SparkSession.active,
@@ -1363,31 +1311,16 @@ private[io] class GraftRowOpsTable(
                 Seq(staging.toString),
                 userSpecifiedSchema = Some(physInfo.schema()),
                 fallbackFileFormat = classOf[ParquetFileFormat])
-              def sweepStaging(): Unit =
-                try {
-                  val s = java.nio.file.Files.walk(staging)
-                  try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                    .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-                  finally s.close()
-                } catch { case scala.util.control.NonFatal(_) => () }
+              def sweepStaging(): Unit = TableIO.sweepDir(staging)
               // The per-table mutex serializes same-JVM writers over the
               // write->commit span (held from here through commit/abort;
               // Semaphore: the callbacks need not share a thread).
-              val lock = TableIO.writeLock(cat.pathOf(tableName))
-              lock.acquire()
-              // Everything between acquire() and handing the lock to the
+              // Everything between acquire and handing the lock to the
               // BatchWrite's commit/abort callbacks must release on
               // throw — a leaked Semaphore permit (non-reentrant, no
               // owner) would block every later write to this table for
-              // the life of the JVM. Release must also be IDEMPOTENT:
-              // when commit() throws (e.g. the version-conflict check),
-              // Spark's V2 write exec catches and calls abort(), so both
-              // callbacks' finally blocks run — a second release() on a
-              // Semaphore(1) would mint an extra permit and two writers
-              // could then hold the "mutex" concurrently forever.
-              val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-              def releaseOnce(): Unit =
-                if (released.compareAndSet(false, true)) lock.release()
+              // the life of the JVM.
+              val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
               val dBatch =
                 try writeTable.newWriteBuilder(physInfo).build().toBatch
                 catch { case e: Throwable => releaseOnce(); sweepStaging(); throw e }
@@ -1402,46 +1335,21 @@ private[io] class GraftRowOpsTable(
                   dBatch.onDataWriterCommit(m)
                 override def commit(messages: Array[WriterCommitMessage]): Unit =
                   try {
-                    // Fail fast if ANY commit landed after the rewrite's
-                    // file partition was computed: carriedOver came from
-                    // the base snapshot's manifest, so committing over a
-                    // newer snapshot would silently drop that snapshot's
-                    // files. (The lock serializes same-JVM writers from
-                    // toBatch on, but the scan planned BEFORE the lock,
-                    // and other processes are never held by it.)
-                    // WAP session: the base snapshot is the BRANCH head
-                    // (or, when the branch forks at this commit, the
-                    // main manifest the scan planned against — checked
-                    // by file-set equality since no branch version
-                    // existed yet to pin).
-                    // the validated base head for a branch commit —
-                    // pinned through to commitBranchSnapshot below so a
-                    // racer landing after this check loses the
-                    // exclusive-create race instead of being stacked on
-                    val branchCommitHead: Option[Int] = writeBranch match {
-                      case Some(b) =>
-                        val io = new TableIO(SparkSession.active, cat)
-                        // the per-table lock is HELD here (acquired at
-                        // toBatch) and is non-reentrant — fork via the
-                        // lock-assumed flavor, never ensureBranch
-                        val head = io.ensureBranchLocked(tableName, b)
-                        val stale = branchHeadAtScan match {
-                          case Some(h) => head != h
-                          case None =>
-                            cat.branchManifest(tableName, b, head).toSet != plannedFiles.toSet
-                        }
-                        if (stale)
-                          throw new ConcurrentCommitException(
-                            s"concurrent commit to $tableName branch $b during row-level " +
-                              s"${info.command()}: planned against " +
-                              s"${branchHeadAtScan.map(h => s"branch head $h").getOrElse("the fork snapshot")} " +
-                              s"but the branch moved; re-run the command")
-                        Some(head)
-                      case None =>
-                        // main-path conflicts are handled at the commit
-                        // loop below (optimistic rebase); nothing to
-                        // validate before the data write lands
-                        None
+                    // the per-table lock is HELD here (acquired at
+                    // toBatch) and is non-reentrant — fork via the
+                    // lock-assumed helper. A branch forked at THIS commit
+                    // planned against main's manifest: no branch version
+                    // existed to pin, so its fork must be of that same
+                    // file set
+                    cat.forkLocked(tableName, writeRef)
+                    val base = baseVersion.getOrElse {
+                      val h = cat.currentVersion(tableName, writeRef).getOrElse(0)
+                      if (h > 0 && cat.manifest(tableName, h, writeRef).toSet != plannedFiles.toSet)
+                        throw new ConcurrentCommitException(
+                          s"concurrent commit to ${writeRef.describe(tableName)} during " +
+                            s"row-level ${info.command()}: planned against the fork snapshot " +
+                            "but it moved; re-run the command")
+                      h
                     }
                     dBatch.commit(messages)
                     // new table = files the scan proved untouchable
@@ -1478,118 +1386,30 @@ private[io] class GraftRowOpsTable(
                           io2.stageReplacement(df, tableName, partitionCols)
                         }
                       }
-                    // stats ride along (carried forward for untouched
-                    // files, footer-read for replacements) so a DML
-                    // commit keeps plan-time pruning O(manifest) —
-                    // without them the next loadTable silently degrades
-                    // to per-file footer reads for the whole table.
-                    // Committing AT base+1 (not "current+1") makes the
-                    // conflict atomic with version-file creation:
-                    // a cross-process commit sneaking in between the
-                    // check above and here loses the hard-link race and
-                    // surfaces as ConcurrentCommitException instead of
-                    // being silently overwritten. The branch flavor
-                    // commits a BRANCH snapshot the same pinned way
-                    // (exclusive branch-manifest create), carrying the
-                    // fork-base prop so fast_forward's divergence check
-                    // keeps working after on-branch DML.
+                    // Pinned commit at the planned base with OPTIMISTIC
+                    // REBASE on a cross-process conflict on main
+                    // (Iceberg's retry for row-level commits,
+                    // serializable flavor) — TableIO's replacement loop:
+                    // a rebase is sound iff every file this rewrite
+                    // REPLACED still exists on the fresh head, no
+                    // pending MOR entry scopes one (our replacement rows
+                    // came from the pre-delete scan), and no NEW file
+                    // might hold rows matching the command's condition
+                    // (stats vs the pushed filters — Iceberg's conflict
+                    // detection filter; untranslatable predicates make
+                    // every new file a conflict). Stats ride along
+                    // (carried forward for untouched files, footer-read
+                    // for replacements) so a DML commit keeps plan-time
+                    // pruning O(manifest).
                     val conf = SparkSession.active.sessionState.newHadoopConf()
-                    writeBranch match {
-                      case Some(b) =>
-                        val head = branchCommitHead.getOrElse(0)
-                        val carriedStats =
-                          try cat.branchStats(tableName, b, head)
-                            .view.filterKeys(carriedOver.toSet).toMap
-                          catch { case scala.util.control.NonFatal(_) =>
-                            Map.empty[String, Map[String, FileStats.ColStats]] }
-                        val forkBase =
-                          try cat.branchProps(tableName, b, head)
-                            .getOrElse(TableCatalog.BranchBaseProp, "0")
-                          catch { case scala.util.control.NonFatal(_) => "0" }
-                        cat.commitBranchSnapshot(tableName, b, carriedOver ++ newFiles,
-                          head + 1,
-                          Map(TableCatalog.BranchBaseProp -> forkBase),
-                          carriedStats ++
-                            cat.statsForCommit(tableName, Seq.empty, newFiles, conf))
-                      case None =>
-                        // Pinned commit with OPTIMISTIC REBASE on a
-                        // cross-process conflict (Iceberg's retry for
-                        // row-level commits, serializable flavor). A
-                        // rebase is sound iff on the fresh head:
-                        //  (a) every file this rewrite REPLACED still
-                        //      exists — else another writer rewrote the
-                        //      rows we computed replacements from;
-                        //  (b) no pending MOR entry scopes a replaced
-                        //      file — our replacement rows came from the
-                        //      pre-delete scan and would resurrect them;
-                        //  (c) no NEW file might hold rows matching the
-                        //      command's condition (stats vs the pushed
-                        //      filters — Iceberg's conflict detection
-                        //      filter): else the racer's matching rows
-                        //      would silently dodge this DELETE/UPDATE/
-                        //      MERGE. Untranslatable predicates make
-                        //      every new file a conflict — conservative.
-                        // The rebased manifest = fresh head minus the
-                        // replaced files plus our replacements; the
-                        // fresh head's pending entries carry TRIMMED to
-                        // surviving files.
-                        def norm(p: String): String =
-                          java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-                        val replaced = plannedFiles.toSet -- carriedOver.toSet
-                        val replacedNorm = replaced.map(norm)
-                        val io = new TableIO(SparkSession.active, cat)
-                        var attempts = 0
-                        var done = false
-                        while (!done) {
-                          val cur = cat.currentVersion(tableName)
-                          val (keep, props) =
-                            if (cur == baseVersion) (carriedOver, Map.empty[String, String])
-                            else {
-                              val freshManifest = cur.map(cat.manifest(tableName, _))
-                                .getOrElse(Seq.empty)
-                              if (!replacedNorm.subsetOf(freshManifest.map(norm).toSet))
-                                throw new ConcurrentCommitException(
-                                  s"concurrent commit to $tableName during row-level " +
-                                    s"${info.command()}: another writer rewrote or removed " +
-                                    "candidate file(s) this command replaced; re-run the command")
-                              val freshPending = cur.map(cat.pendingDeletes(tableName, _))
-                                .getOrElse(Seq.empty)
-                              if (freshPending.exists(_.dirtyFiles.exists(f => replacedNorm(norm(f)))))
-                                throw new ConcurrentCommitException(
-                                  s"concurrent commit to $tableName during row-level " +
-                                    s"${info.command()}: a merge-on-read delete landed on " +
-                                    "candidate file(s) this command replaced (the rewrite " +
-                                    "would resurrect its rows); re-run the command")
-                              val newcomers = freshManifest.filterNot(plannedFiles.toSet)
-                              val toLogical = renames.map(_.swap)
-                              val conflicting = newcomers.exists { f =>
-                                try FileStats.mightMatch(
-                                  FileStats.cached(f, conf)
-                                    .map { case (k, v) => toLogical.getOrElse(k, k) -> v },
-                                  commandFilters)
-                                catch { case scala.util.control.NonFatal(_) => true }
-                              }
-                              if (conflicting)
-                                throw new ConcurrentCommitException(
-                                  s"concurrent commit to $tableName during row-level " +
-                                    s"${info.command()}: a concurrent commit added file(s) " +
-                                    "that may hold rows matching the command's condition " +
-                                    "(serializable check); re-run the command")
-                              val kept = freshManifest.filterNot(f => replacedNorm(norm(f)))
-                              (kept, io.trimDeletesForRewrite(tableName, freshPending, kept))
-                            }
-                          try {
-                            cat.commitSnapshotAt(tableName, keep ++ newFiles,
-                              cur.getOrElse(0) + 1, props,
-                              stats = cat.statsForCommit(tableName, keep, newFiles, conf))
-                            done = true
-                          } catch {
-                            case e: ConcurrentCommitException =>
-                              attempts += 1
-                              if (attempts >= 5) throw e
-                          }
-                        }
-                    }
+                    val toLogical = renames.map(_.swap)
+                    val conflicts: String => Boolean = f =>
+                      try FileStats.mightMatch(
+                        FileStats.cached(f, conf).map { case (k, v) => toLogical.getOrElse(k, k) -> v },
+                        commandFilters)
+                      catch { case scala.util.control.NonFatal(_) => true }
+                    new TableIO(SparkSession.active, cat).commitReplacementFiles(tableName,
+                      carriedOver, newFiles, base, Map.empty, Some(conflicts), writeRef)
                     ()
                   } finally { releaseOnce(); sweepStaging() }
                 override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1629,13 +1449,13 @@ private[io] class GraftMorTable(
     declaredSchema: Option[StructType],
     renames: Map[String, String],
     pspec: Seq[PartitionTransform],
-    writeBranch: Option[String],
+    writeRef: Ref,
     version: Int,
-    // Some(b) = this dirty snapshot is BRANCH b's head at `version`;
-    // the merged read resolves against the branch chain's props
-    morBranch: Option[String] = None
+    // the chain this dirty snapshot belongs to; the merged read
+    // resolves against that chain's props
+    morRef: Ref = Ref.Main
 ) extends GraftTable(tableName, cat, delegate, partitionCols, declaredSchema, renames,
-    pspec, writeBranch) {
+    pspec, writeRef) {
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
@@ -1648,7 +1468,7 @@ private[io] class GraftMorTable(
         private val full = schema()
         private val read = required.getOrElse(full)
         override def morStreamSource: Option[(TableCatalog, StructType, CaseInsensitiveStringMap)] =
-          if (renames.isEmpty && morBranch.isEmpty &&
+          if (renames.isEmpty && morRef == Ref.Main &&
               partitionCols.forall(_.startsWith(PartitionTransforms.Prefix)))
             // the PRUNED read schema, like the clean path: a
             // column-pruned stream must serve rows in its scan's own
@@ -1665,11 +1485,7 @@ private[io] class GraftMorTable(
             override def schema: StructType = read
             override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
               val spark = ctx.sparkSession
-              val io = new TableIO(spark, cat)
-              val df = morBranch match {
-                case Some(b) => io.readBranchVersion(tableName, b, version)
-                case None => io.readVersion(tableName, version)
-              }
+              val df = new TableIO(spark, cat).readVersion(tableName, version, morRef)
               // empty required schema = count(*)-style scan: rows, no
               // columns (select() keeps the row count)
               df.select(read.fields.toSeq
@@ -1758,27 +1574,26 @@ private[io] class GraftMorRowOpsTable(
     delegate: ParquetTable,
     declaredSchema: Option[StructType],
     renames: Map[String, String],
-    writeBranch: Option[String],
+    writeRef: Ref,
     version: Int
 ) extends GraftMorTable(tableName, cat, delegate, Seq.empty, declaredSchema, renames,
-    Seq.empty, writeBranch, version)
+    Seq.empty, writeRef, version)
   with SupportsRowLevelOperations {
 
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     false // route DELETE to the merged rewrite below, not the raw-COW path
 
   override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder = {
-    if (writeBranch.isDefined)
+    if (writeRef != Ref.Main)
       throw new UnsupportedOperationException(
         s"$tableName has pending merge-on-read deletes and the session writes to WAP " +
-          s"branch '${writeBranch.get}': branch ${info.command()} over a dirty snapshot " +
+          s"${writeRef.describe(tableName)}: ${info.command()} over a dirty snapshot " +
           "is not supported — run applyDeletes first, or clear spark.wap.branch")
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = new RowLevelOperation {
         // manifest + pending entries of the PINNED dirty snapshot —
         // one consistent pair; the commit re-validates the pin
         private val pending = cat.pendingDeletes(tableName, version)
-        private val tableRoot = java.nio.file.Paths.get(cat.pathOf(tableName))
         private def norm(p: String): String =
           java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
         @volatile private var carriedOver: Seq[String] = Seq.empty
@@ -1830,15 +1645,14 @@ private[io] class GraftMorRowOpsTable(
                   // merged rows (PHYSICAL column names, like every
                   // data file) into a private staging dir
                   val io = new TableIO(spark, cat)
-                  val merged = io.readFilesMerged(tableName, dirtyChosen, pending)
+                  val merged = io.mergeDeletes(tableName, dirtyChosen, pending)
                   val physical = renames.foldLeft(merged) { case (df, (l, p)) =>
                     df.withColumnRenamed(l, p)
                   }
-                  java.nio.file.Files.createDirectories(tableRoot)
                   // a REPLAN re-stages: reclaim the superseded dir now
                   // instead of waiting out the age-guarded orphan GC
-                  scanStaging.foreach(GraftCatalog.sweepDir)
-                  val stage = java.nio.file.Files.createTempDirectory(tableRoot, ".stage-")
+                  scanStaging.foreach(TableIO.sweepDir)
+                  val stage = TableIO.newStagingDir(cat.pathOf(tableName))
                   scanStaging = Some(stage)
                   val out = stage.resolve("merged")
                   // a failed materialization must not leak its dir —
@@ -1858,7 +1672,7 @@ private[io] class GraftMorRowOpsTable(
                       }
                     } catch {
                       case e: Throwable =>
-                        GraftCatalog.sweepDir(stage)
+                        TableIO.sweepDir(stage)
                         scanStaging = None
                         throw e
                     }
@@ -1904,8 +1718,7 @@ private[io] class GraftMorRowOpsTable(
               }
               // private per-write staging, claimed by explicit move —
               // same protocol (and same reasons) as the clean twin
-              java.nio.file.Files.createDirectories(tableRoot)
-              val staging = java.nio.file.Files.createTempDirectory(tableRoot, ".stage-")
+              val staging = TableIO.newStagingDir(cat.pathOf(tableName))
               val writeTable = ParquetTable(
                 s"${delegate.name}#morrewrite",
                 SparkSession.active,
@@ -1913,19 +1726,8 @@ private[io] class GraftMorRowOpsTable(
                 Seq(staging.toString),
                 userSpecifiedSchema = Some(physInfo.schema()),
                 fallbackFileFormat = classOf[ParquetFileFormat])
-              def sweep(dir: java.nio.file.Path): Unit =
-                try {
-                  val s = java.nio.file.Files.walk(dir)
-                  try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                    .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-                  finally s.close()
-                } catch { case scala.util.control.NonFatal(_) => () }
-              def sweepAll(): Unit = { sweep(staging); scanStaging.foreach(sweep) }
-              val lock = TableIO.writeLock(cat.pathOf(tableName))
-              lock.acquire()
-              val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-              def releaseOnce(): Unit =
-                if (released.compareAndSet(false, true)) lock.release()
+              def sweepAll(): Unit = { TableIO.sweepDir(staging); scanStaging.foreach(TableIO.sweepDir) }
+              val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
               val dBatch =
                 try writeTable.newWriteBuilder(physInfo).build().toBatch
                 catch { case e: Throwable => releaseOnce(); sweepAll(); throw e }
@@ -2390,6 +2192,16 @@ private[io] object GraftTable {
   import org.apache.spark.sql.functions.{col, lit}
   import org.apache.spark.sql.sources._
 
+  /** The copy-on-write rewrites read their candidate files RAW: over a
+    * base with pending merge-on-read deletes that resurrects the
+    * deleted rows — refuse, naming the recovery step (every raw-
+    * manifest consumer's rule).
+    */
+  def requireClean(cat: TableCatalog, table: String, v: Int, ref: Ref, command: String): Unit =
+    require(cat.pendingDeletes(table, v, ref).isEmpty,
+      s"${ref.describe(table)} has pending merge-on-read deletes at v$v — run compact " +
+        s"or applyDeletes on it before row-level $command")
+
   /** v1 `Filter` -> `Column` for copy-on-write DELETE. Conjunctions of
     * comparisons/IN/null-tests/string-matches cover the DELETE
     * predicates SQL can push through the v2 -> v1 bridge; anything
@@ -2460,13 +2272,4 @@ private[io] object GraftCatalog {
       case _ => false
     }
   }
-
-  /** Best-effort recursive delete of a private staging dir. */
-  def sweepDir(dir: java.nio.file.Path): Unit =
-    try {
-      val s = java.nio.file.Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
 }

@@ -100,11 +100,11 @@ private[io] object GraftProcedures {
             (in: InternalRow) => {
               val t = in.getUTF8String(0).toString
               val pred = in.getUTF8String(1).toString
-              val br = if (withBranch && !in.isNullAt(2))
-                Some(in.getUTF8String(2).toString) else None
+              val ref = if (withBranch && !in.isNullAt(2))
+                Ref.Branch(in.getUTF8String(2).toString) else Ref.Main
               val io = new TableIO(SparkSession.active, cat)
               val (v, n) = io.deleteWhereMOR(t,
-                org.apache.spark.sql.functions.expr(pred), br)
+                org.apache.spark.sql.functions.expr(pred), ref)
               Seq(new GenericInternalRow(Array[Any](v, n)))
             })
         }
@@ -136,7 +136,7 @@ private[io] object GraftProcedures {
           val b = in.getUTF8String(1).toString
           val io = new TableIO(SparkSession.active, cat)
           val pcols = cat.tablePartitionCols(t).getOrElse(Seq.empty)
-          val (v, n) = io.applyDeletesBranch(t, b, pcols)
+          val (v, n) = io.applyDeletes(t, pcols, Ref.Branch(b))
           Seq(new GenericInternalRow(Array[Any](v, n)))
         }))
     case "compact" =>
@@ -288,7 +288,7 @@ private[io] object GraftProcedures {
           // the fork point is whatever createBranch RECORDED under its
           // lock — re-deriving currentVersion here could disagree with
           // the manifest prop if an append landed in between
-          val fork = cat.branchProps(t, b, bv)
+          val fork = cat.manifestProps(t, bv, Ref.Branch(b))
             .get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption).getOrElse(0)
           Seq(new GenericInternalRow(Array[Any](UTF8String.fromString(b), bv, fork)))
         }))
@@ -313,7 +313,7 @@ private[io] object GraftProcedures {
         new StructType().add("expired_version", IntegerType, nullable = false),
         (in: InternalRow) => {
           val (t, b, k) = (in.getUTF8String(0).toString, in.getUTF8String(1).toString, in.getInt(2))
-          cat.expireBranchSnapshots(t, b, k)
+          cat.expireSnapshots(t, k, ref = Ref.Branch(b))
             .map(v => new GenericInternalRow(Array[Any](v)))
         }))
     case "drop_branch" =>
@@ -389,8 +389,8 @@ private[io] object GraftProcedures {
                   UTF8String.fromString(action), UTF8String.fromString(ref), bytes))
               val expired = cat.expireSnapshots(t, keep)
                 .map(v => row("expired_snapshot", s"v$v", 0L))
-              val branchExpired = cat.listBranches(t).sorted.flatMap { b =>
-                cat.expireBranchSnapshots(t, b, keep)
+              val branchExpired = cat.listBranches(t).flatMap { b =>
+                cat.expireSnapshots(t, keep, ref = Ref.Branch(b))
                   .map(v => row("expired_branch_snapshot", s"$b@v$v", 0L))
               }
               val orphans = cat.removeOrphanFiles(t, age).sorted.map { f =>

@@ -49,7 +49,7 @@ private[io] object MetadataTables {
           val files = cat.manifest(table, v)
           val bytes = files.map(f => sizeCache.getOrElseUpdate(f, sizeOf(f))).sum
           val mtimeMicros = Files.getLastModifiedTime(
-            cat.metaPath(table).resolve(s"v$v.json")).toMillis * 1000L
+            cat.manifestFile(table, v)).toMillis * 1000L
           Some(new GenericInternalRow(Array[Any](v, mtimeMicros, files.size, bytes)): InternalRow)
         } catch { case _: java.nio.file.NoSuchFileException => None }
       }
@@ -82,11 +82,7 @@ private[io] object MetadataTables {
       // snapshot (a concurrent commit between two currentVersion
       // calls would pair one snapshot's files with another's stats)
       val ver = cat.currentVersion(table)
-      val stats = ver
-        .map(v => try cat.manifestStats(table, v)
-                  catch { case scala.util.control.NonFatal(_) =>
-                    Map.empty[String, Map[String, FileStats.ColStats]] })
-        .getOrElse(Map.empty)
+      val stats = ver.map(cat.statsOrEmpty(table, _)).getOrElse(Map.empty)
       val dataRoot = Paths.get(cat.dataPath(table)).toAbsolutePath.normalize
       def partitionOf(f: String): String = {
         val p = Paths.get(f).toAbsolutePath.normalize
@@ -129,11 +125,7 @@ private[io] object MetadataTables {
       // from the same snapshot
       val cver = cat.currentVersion(table)
       val curFiles = cver.toSeq.flatMap(v => cat.manifest(table, v))
-      val allStats = cver
-        .map(v => try cat.manifestStats(table, v)
-                  catch { case scala.util.control.NonFatal(_) =>
-                    Map.empty[String, Map[String, FileStats.ColStats]] })
-        .getOrElse(Map.empty)
+      val allStats = cver.map(cat.statsOrEmpty(table, _)).getOrElse(Map.empty)
       def numeric(v: Any): Option[Double] = v match {
         case null => None
         // manifest decode yields Long/Double/BigDecimal; the extra
@@ -208,7 +200,7 @@ private[io] object MetadataTables {
         new GenericInternalRow(Array[Any](str(tg), str("tag"), v)): InternalRow
       }
       val branchRows = cat.listBranches(table).flatMap { b =>
-        cat.branchHead(table, b).map(h =>
+        cat.currentVersion(table, Ref.Branch(b)).map(h =>
           new GenericInternalRow(Array[Any](str(b), str("branch"), h)): InternalRow)
       }
       local(s"$table.refs", schema, tagRows ++ branchRows)
@@ -224,22 +216,23 @@ private[io] object MetadataTables {
         .add("n_files", IntegerType, nullable = false)
         .add("total_bytes", LongType, nullable = false)
         // branch-MOR health: non-zero = the head serves merged reads
-        // and needs applyDeletesBranch/compactBranch before raw
+        // and needs applyDeletes/compact on the branch before raw
         // consumers (WAP COW DML) can run
         .add("pending_delete_entries", IntegerType, nullable = false)
       val rows = cat.listBranches(table).flatMap { b =>
         try {
-          cat.branchHead(table, b).map { head =>
-            val files = cat.branchManifest(table, b, head)
-            val fork = cat.branchProps(table, b, head)
+          val ref = Ref.Branch(b)
+          cat.currentVersion(table, ref).map { head =>
+            val files = cat.manifest(table, head, ref)
+            val fork = cat.manifestProps(table, head, ref)
               .get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption)
             val mtimeMicros = Files.getLastModifiedTime(
-              cat.branchFile(table, b, head)).toMillis * 1000L
+              cat.manifestFile(table, head, ref)).toMillis * 1000L
             new GenericInternalRow(Array[Any](
               org.apache.spark.unsafe.types.UTF8String.fromString(b),
               head, fork.map(Int.box).orNull, mtimeMicros,
               files.size, files.map(sizeOf).sum,
-              cat.branchPendingDeletes(table, b, head).size)): InternalRow
+              cat.pendingDeletes(table, head, ref).size)): InternalRow
           }
         } catch { case _: java.nio.file.NoSuchFileException => None }
       }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.io.{TableCatalog, TableIO}
+import graft.io.{Ref, TableCatalog, TableIO}
 
 /** Streaming sink into the graft snapshot table layer with
   * exactly-once batch commits — the `writeStream.format("iceberg")`
@@ -25,12 +25,14 @@ import graft.io.{TableCatalog, TableIO}
   */
 object TableSink {
 
-  /** Commit one micro-batch: one snapshot carrying both the rows and
-    * the batch-id mark, skipping batch ids at or below the current
-    * mark. Returns whether a snapshot was committed — factored out of
-    * the stream wiring so the replay guard is directly testable.
-    */
-  /** `sinkId` scopes the mark to one query lineage (appendStream
+  /** Commit one micro-batch onto `ref`: one snapshot carrying both the
+    * rows and the batch-id mark, skipping batch ids at or below the
+    * mark on that chain (on a branch the mark rides the BRANCH
+    * manifests — main may not have fast-forwarded yet when a replay
+    * arrives). Returns whether a snapshot was committed — factored out
+    * of the stream wiring so the replay guard is directly testable.
+    *
+    * `sinkId` scopes the mark to one query lineage (appendStream
     * derives it from the checkpoint path): batch ids restart at 0
     * when a query runs with a FRESH checkpoint, and comparing those
     * against another incarnation's high-water mark would silently
@@ -40,13 +42,12 @@ object TableSink {
     */
   def commitStreamBatch(io: TableIO, table: String, batchId: Long, batch: DataFrame,
                         partitionCols: Seq[String] = Seq.empty,
-                        sinkId: Option[String] = None): Boolean = {
+                        sinkId: Option[String] = None,
+                        ref: Ref = Ref.Main): Boolean = {
     val propKey = TableCatalog.streamBatchProp(sinkId)
-    val mark = io.catalog.streamBatchMark(table, propKey)
-    if (mark.exists(_ >= batchId)) false
+    if (io.catalog.streamBatchMark(table, propKey, ref).exists(_ >= batchId)) false
     else {
-      io.append(batch, table, partitionCols,
-        props = Map(propKey -> batchId.toString))
+      io.append(batch, table, partitionCols, props = Map(propKey -> batchId.toString), ref = ref)
       true
     }
   }
@@ -127,13 +128,20 @@ object TableSink {
     * snapshot commit, replays are no-ops. `availableNow = true` runs
     * the bounded catch-up variant (process everything currently
     * available, then stop) — the batch-backfill mode of the same sink.
+    * On a branch `ref` this is the WAP-branch pattern for streams:
+    * micro-batches land on the branch chain, main stays byte-identical
+    * until an audit passes and `fastForward` integrates the whole run
+    * in one metadata-only commit. Where the main sink publishes every
+    * batch immediately and WAP stages ONE batch, this stages an
+    * unbounded stream behind a named ref.
     */
   def appendStream(stream: DataFrame, io: TableIO, table: String, checkpoint: String,
                    partitionCols: Seq[String] = Seq.empty,
-                   availableNow: Boolean = false): StreamingQuery = {
+                   availableNow: Boolean = false,
+                   ref: Ref = Ref.Main): StreamingQuery = {
     val sid = Some(sinkIdOf(checkpoint))
     startForeachBatch(stream, checkpoint, availableNow) { (batch, id) =>
-      commitStreamBatch(io, table, id, batch, partitionCols, sid); ()
+      commitStreamBatch(io, table, id, batch, partitionCols, sid, ref); ()
     }
   }
 
@@ -211,25 +219,21 @@ object TableSink {
                            keyCols: Seq[String], orderCols: Seq[String],
                            partitionCols: Seq[String] = Seq.empty,
                            sinkId: Option[String] = None,
-                           branch: Option[String] = None): Boolean = {
+                           ref: Ref = Ref.Main): Boolean = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
     val propKey = TableCatalog.streamBatchProp(sinkId)
-    // branch mode: the mark rides BRANCH manifests, so the replay
-    // guard must read the branch chain (a main-side mark would let a
-    // recovered query double-commit the batch onto the branch)
-    val mark = branch match {
-      case Some(b) => io.catalog.branchStreamBatchMark(table, b, propKey)
-      case None => io.catalog.streamBatchMark(table, propKey)
-    }
-    if (mark.exists(_ >= batchId)) false
+    // the mark rides `ref`'s manifests, so the replay guard reads that
+    // chain (a main-side mark would let a recovered query double-commit
+    // the batch onto a branch)
+    if (io.catalog.streamBatchMark(table, propKey, ref).exists(_ >= batchId)) false
     else {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(col(_).desc): _*)
       val winners = batch.withColumn("__graft_rn", row_number().over(w))
         .filter(col("__graft_rn") === 1).drop("__graft_rn")
       io.upsertMOR(table, winners, keyCols, partitionCols,
-        props = Map(propKey -> batchId.toString), branch = branch)
+        props = Map(propKey -> batchId.toString), ref = ref)
       true
     }
   }
@@ -244,11 +248,11 @@ object TableSink {
                       keyCols: Seq[String], orderCols: Seq[String],
                       partitionCols: Seq[String] = Seq.empty,
                       availableNow: Boolean = false,
-                      branch: Option[String] = None): StreamingQuery = {
+                      ref: Ref = Ref.Main): StreamingQuery = {
     val sid = Some(sinkIdOf(checkpoint))
     startForeachBatch(stream, checkpoint, availableNow) { (batch, id) =>
       commitUpsertMORBatch(io, table, id, batch, keyCols, orderCols, partitionCols,
-        sid, branch); ()
+        sid, ref); ()
     }
   }
 
@@ -264,22 +268,18 @@ object TableSink {
                         opCol: String, deleteOp: String = "D",
                         partitionCols: Seq[String] = Seq.empty,
                         sinkId: Option[String] = None,
-                        branch: Option[String] = None): Boolean = {
+                        ref: Ref = Ref.Main): Boolean = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
     val propKey = TableCatalog.streamBatchProp(sinkId)
-    val mark = branch match {
-      case Some(b) => io.catalog.branchStreamBatchMark(table, b, propKey)
-      case None => io.catalog.streamBatchMark(table, propKey)
-    }
-    if (mark.exists(_ >= batchId)) false
+    if (io.catalog.streamBatchMark(table, propKey, ref).exists(_ >= batchId)) false
     else {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(col(_).desc): _*)
       val winners = batch.withColumn("__graft_rn", row_number().over(w))
         .filter(col("__graft_rn") === 1).drop("__graft_rn")
       io.cdcApplyMOR(table, winners, keyCols, opCol, deleteOp, partitionCols,
-        props = Map(propKey -> batchId.toString), branch = branch)
+        props = Map(propKey -> batchId.toString), ref = ref)
       true
     }
   }
@@ -295,11 +295,11 @@ object TableSink {
                    opCol: String, deleteOp: String = "D",
                    partitionCols: Seq[String] = Seq.empty,
                    availableNow: Boolean = false,
-                   branch: Option[String] = None): StreamingQuery = {
+                   ref: Ref = Ref.Main): StreamingQuery = {
     val sid = Some(sinkIdOf(checkpoint))
     startForeachBatch(stream, checkpoint, availableNow) { (batch, id) =>
       commitCdcMORBatch(io, table, id, batch, keyCols, orderCols, opCol, deleteOp,
-        partitionCols, sid, branch); ()
+        partitionCols, sid, ref); ()
     }
   }
 
@@ -326,39 +326,6 @@ object TableSink {
       mergeSketch(io, table, toSketch(batch), keyCols, stateCol,
         org.apache.spark.sql.functions.max, Map.empty)
     }
-
-  /** One branch-append micro-batch commit: append the batch to the
-    * BRANCH chain unless its mark says this batch already landed —
-    * the branch-scoped twin of the main-chain append guard (the mark
-    * rides the branch manifest, since main may not have fast-forwarded
-    * yet when a replay arrives).
-    */
-  def commitBranchAppendBatch(io: TableIO, table: String, branch: String,
-                              batchId: Long, batch: DataFrame,
-                              propKey: String): Boolean = {
-    if (io.catalog.branchStreamBatchMark(table, branch, propKey).exists(_ >= batchId)) false
-    else {
-      io.appendToBranch(batch, table, branch, props = Map(propKey -> batchId.toString))
-      true
-    }
-  }
-
-  /** Streaming ingest ONTO A BRANCH — the WAP-branch pattern for
-    * streams: micro-batches land on the branch chain (exactly-once via
-    * the branch-manifest mark), main stays byte-identical until an
-    * audit passes and `fastForward` integrates the whole run in one
-    * metadata-only commit. Where `appendStream` publishes every batch
-    * immediately and WAP stages ONE batch, this stages an unbounded
-    * stream behind a named ref.
-    */
-  def branchAppendStream(stream: DataFrame, io: TableIO, table: String, branch: String,
-                         checkpoint: String,
-                         availableNow: Boolean = false): StreamingQuery = {
-    val propKey = TableCatalog.streamBatchProp(Some(sinkIdOf(checkpoint)))
-    startForeachBatch(stream, checkpoint, availableNow) { (batch, id) =>
-      commitBranchAppendBatch(io, table, branch, id, batch, propKey); ()
-    }
-  }
 
   /** One additive micro-batch commit: sum-merge the batch's sketch
     * into the table unless the mark says this batch already merged.

@@ -22,13 +22,17 @@ import org.apache.spark.util.SerializableConfiguration
   * exactly as before: nothing is live until the manifest commit
   * references the file.
   *
-  * Retry/speculation safety: the task writes a dot-prefixed
-  * in-progress file (invisible to every lister) and renames it to the
-  * visible name only on success, so a failed attempt can never leak a
-  * partial file into the caller's directory listing. The visible name
-  * embeds the attempt number, and the caller-side guard refuses the
-  * fast path when speculation is on (two successful attempts of the
-  * same task could otherwise both publish). Lives in
+  * Retry/speculation safety: each task attempt writes its own
+  * dot-prefixed in-progress file (invisible to every lister, named
+  * with the attempt number) and renames it to the ONE visible name
+  * only on success, so a failed attempt can never leak a partial file
+  * into the caller's directory listing. The publish is
+  * rename-if-absent: a retried attempt that finds the visible file
+  * already there (an earlier attempt completed it and died after the
+  * atomic rename) drops its own copy and succeeds — the same rows,
+  * published once. The caller-side guard refuses the fast path when
+  * speculation is on (two attempts running at once could otherwise
+  * both pass the absence check). Lives in
   * `org.apache.spark.sql` for access to the `private[sql]` parquet
   * writer factory — public Spark source, no behavior forked.
   */
@@ -42,7 +46,7 @@ object GraftSingleFileWrite {
 
   /** Write `df` (expected tiny — callers gate on the shard bound) as
     * ONE parquet file inside `dir`, in one task, bypassing the commit
-    * protocol. Returns the written file's absolute path.
+    * protocol. Returns the written file's fully qualified path.
     * `compression` None = the session's parquet codec (what
     * `df.write.parquet` with no option uses).
     */
@@ -88,10 +92,23 @@ object GraftSingleFileWrite {
         try w.close()
         finally if (!ok) { fs.delete(tmp, false); () }
       }
-      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, fileName)))
-        throw new java.io.IOException(
-          s"single-file write: rename of $tmp to $fileName failed")
+      publishIfAbsent(fs, tmp, new org.apache.hadoop.fs.Path(dir, fileName))
     }
-    new java.io.File(dir, fileName).getAbsolutePath
+    val out = new org.apache.hadoop.fs.Path(dir, fileName)
+    out.getFileSystem(job.getConfiguration).makeQualified(out).toString
   }
+
+  /** Rename a finished attempt's `tmp` file to `target` unless an
+    * earlier attempt of the same task already published it — then the
+    * earlier (complete, atomically renamed) file stands and `tmp` goes.
+    */
+  private def publishIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+                              tmp: org.apache.hadoop.fs.Path,
+                              target: org.apache.hadoop.fs.Path): Unit =
+    if (fs.exists(target) || !fs.rename(tmp, target)) {
+      if (!fs.exists(target))
+        throw new java.io.IOException(s"single-file write: rename of $tmp to $target failed")
+      fs.delete(tmp, false)
+      ()
+    }
 }

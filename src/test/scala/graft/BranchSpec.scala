@@ -22,14 +22,14 @@ class BranchSpec extends graft.SparkSpec {
     val v1 = io.catalog.currentVersion(t).get
 
     assert(io.createBranch(t, "audit") === 1)
-    io.appendToBranch(rows(100, 130), t, "audit")
-    io.appendToBranch(rows(130, 150), t, "audit")
+    io.append(rows(100, 130), t, ref = Ref.Branch("audit"))
+    io.append(rows(130, 150), t, ref = Ref.Branch("audit"))
 
     // main untouched by two branch commits
     assert(io.read(t).count() === 100)
     assert(io.catalog.currentVersion(t).get === v1)
-    assert(io.readBranch(t, "audit").count() === 150)
-    assert(io.catalog.branchHead(t, "audit") === Some(3))
+    assert(io.read(t, Ref.Branch("audit")).count() === 150)
+    assert(io.catalog.currentVersion(t, Ref.Branch("audit")) === Some(3))
 
     val before = io.catalog.listDataFiles(t).size
     val ff = io.fastForward(t, "audit")
@@ -47,13 +47,13 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.div"
     io.append(rows(0, 10), t)
     io.createBranch(t, "exp")
-    io.appendToBranch(rows(10, 20), t, "exp")
+    io.append(rows(10, 20), t, ref = Ref.Branch("exp"))
     io.append(rows(20, 30), t) // main advances -> diverged
     val e = intercept[IllegalArgumentException](io.fastForward(t, "exp"))
     assert(e.getMessage.contains("diverged"))
     // both sides still readable, nothing lost
     assert(io.read(t).count() === 20)
-    assert(io.readBranch(t, "exp").count() === 20)
+    assert(io.read(t, Ref.Branch("exp")).count() === 20)
   }
 
   test("duplicate create and unknown-branch ops fail loudly; names are validated") {
@@ -62,8 +62,8 @@ class BranchSpec extends graft.SparkSpec {
     io.append(rows(0, 5), t)
     io.createBranch(t, "b1")
     intercept[IllegalArgumentException](io.createBranch(t, "b1"))
-    intercept[IllegalArgumentException](io.readBranch(t, "nope"))
-    intercept[IllegalArgumentException](io.appendToBranch(rows(5, 6), t, "nope"))
+    intercept[IllegalArgumentException](io.read(t, Ref.Branch("nope")))
+    intercept[IllegalArgumentException](io.append(rows(5, 6), t, ref = Ref.Branch("nope")))
     intercept[IllegalArgumentException](io.fastForward(t, "nope"))
     intercept[IllegalArgumentException](io.createBranch(t, "12345")) // numeric-ambiguous
     intercept[IllegalArgumentException](io.createBranch(t, "a/b"))   // not filename-safe
@@ -75,10 +75,10 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.tricky"
     io.append(rows(0, 5), t)
     io.createBranch(t, "exp-v2")
-    io.appendToBranch(rows(5, 8), t, "exp-v2")
+    io.append(rows(5, 8), t, ref = Ref.Branch("exp-v2"))
     assert(io.catalog.listBranches(t) === Seq("exp-v2"))
-    assert(io.catalog.branchHead(t, "exp-v2") === Some(2))
-    assert(io.readBranch(t, "exp-v2").count() === 8)
+    assert(io.catalog.currentVersion(t, Ref.Branch("exp-v2")) === Some(2))
+    assert(io.read(t, Ref.Branch("exp-v2")).count() === 8)
   }
 
   test("GC keeps branch-only files live; dropBranch releases them") {
@@ -86,11 +86,11 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.gc"
     io.append(rows(0, 10), t)
     io.createBranch(t, "tmp")
-    io.appendToBranch(rows(10, 25), t, "tmp")
+    io.append(rows(10, 25), t, ref = Ref.Branch("tmp"))
     // age guard 0: everything unreferenced is deletable NOW — branch
     // files must survive because the branch manifest holds them live
     assert(io.catalog.removeOrphanFiles(t, olderThanMs = 0) === Seq.empty)
-    assert(io.readBranch(t, "tmp").count() === 25)
+    assert(io.read(t, Ref.Branch("tmp")).count() === 25)
 
     assert(io.dropBranch(t, "tmp"))
     assert(!io.dropBranch(t, "tmp"))
@@ -108,7 +108,7 @@ class BranchSpec extends graft.SparkSpec {
       io.append(rows(0, 10), "default.t")
       val created = spark.sql("CALL gbr.system.create_branch('default.t', 'exp')").head()
       assert(created.getString(0) === "exp" && created.getInt(1) === 1 && created.getInt(2) === 1)
-      io.appendToBranch(rows(10, 20), "default.t", "exp")
+      io.append(rows(10, 20), "default.t", ref = Ref.Branch("exp"))
 
       val meta = spark.sql("SELECT branch, head_version, forked_at_version, n_files " +
         "FROM gbr.default.t.branches").head()
@@ -129,7 +129,7 @@ class BranchSpec extends graft.SparkSpec {
       // read the branch head by name BEFORE integration
       io.append(rows(100, 110), "default.t2")
       io.createBranch("default.t2", "exp2")
-      io.appendToBranch(rows(110, 140), "default.t2", "exp2")
+      io.append(rows(110, 140), "default.t2", ref = Ref.Branch("exp2"))
       assert(spark.sql("SELECT * FROM gbr.default.t2 VERSION AS OF 'exp2'").count() === 40)
       assert(spark.sql("SELECT * FROM gbr.default.t2").count() === 10) // main untouched
       // a tag shadowing the SAME name as the branch wins (documented
@@ -145,12 +145,12 @@ class BranchSpec extends graft.SparkSpec {
       // branch-chain expiry through SQL: head retained, old pruned —
       // except the FORK RECORD (v1), pinned for the branch's lifetime
       // (fork id = stream-checkpoint identity, changelog baseline)
-      io.appendToBranch(rows(140, 150), "default.t2", "exp2")
+      io.append(rows(140, 150), "default.t2", ref = Ref.Branch("exp2"))
       val bexp = spark.sql("CALL gbr.system.expire_branch_snapshots('default.t2', 'exp2', 1)")
         .collect().map(_.getInt(0)).toSeq
       assert(bexp.nonEmpty && !bexp.contains(1))
-      assert(io.catalog.branchVersions("default.t2", "exp2").headOption.contains(1))
-      assert(io.catalog.branchVersions("default.t2", "exp2").size === 2)
+      assert(io.catalog.versions("default.t2", Ref.Branch("exp2")).headOption.contains(1))
+      assert(io.catalog.versions("default.t2", Ref.Branch("exp2")).size === 2)
       assert(spark.sql("SELECT * FROM gbr.default.t2 VERSION AS OF 'exp2'").count() === 50)
     } finally {
       spark.conf.unset("spark.sql.catalog.gbr")
@@ -163,11 +163,11 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.cycle"
     io.append(rows(0, 10), t)
     io.createBranch(t, "ingest")
-    io.appendToBranch(rows(10, 20), t, "ingest")
+    io.append(rows(10, 20), t, ref = Ref.Branch("ingest"))
     io.fastForward(t, "ingest")
     assert(io.read(t).count() === 20)
     // the long-lived ingest branch keeps taking batches...
-    io.appendToBranch(rows(20, 30), t, "ingest")
+    io.append(rows(20, 30), t, ref = Ref.Branch("ingest"))
     // ...and the SECOND integration must succeed: main advanced, but
     // only via fast-forwarding this very branch (its files are a
     // subset of the branch head's — the no-lost-update condition)
@@ -175,7 +175,7 @@ class BranchSpec extends graft.SparkSpec {
     assert(io.read(t).select("id").as[Long].collect().sorted === (0L until 30L).toArray)
     // a genuinely diverging main append still refuses
     io.append(rows(100, 105), t)
-    io.appendToBranch(rows(30, 35), t, "ingest")
+    io.append(rows(30, 35), t, ref = Ref.Branch("ingest"))
     val e = intercept[IllegalArgumentException](io.fastForward(t, "ingest"))
     assert(e.getMessage.contains("diverged"))
   }
@@ -186,47 +186,62 @@ class BranchSpec extends graft.SparkSpec {
     val propKey = TableCatalog.streamBatchProp(Some("exp-test"))
     io.append(rows(0, 10), t)
     io.createBranch(t, "ingest")
-    // batch-marked appends (the branchAppendStream shape), then
+    // batch-marked appends (the branch appendStream shape), then
     // unmarked maintenance commits on top
-    io.appendToBranch(rows(10, 20), t, "ingest", props = Map(propKey -> "0"))
-    io.appendToBranch(rows(20, 30), t, "ingest", props = Map(propKey -> "1"))
-    io.compactBranch(t, "ingest", targetFiles = 1)
-    io.compactBranch(t, "ingest", targetFiles = 1)
-    assert(io.catalog.branchVersions(t, "ingest") === Seq(1, 2, 3, 4, 5))
+    io.append(rows(10, 20), t, props = Map(propKey -> "0"), ref = Ref.Branch("ingest"))
+    io.append(rows(20, 30), t, props = Map(propKey -> "1"), ref = Ref.Branch("ingest"))
+    io.compact(t, targetFiles = 1, ref = Ref.Branch("ingest"))
+    io.compact(t, targetFiles = 1, ref = Ref.Branch("ingest"))
+    assert(io.catalog.versions(t, Ref.Branch("ingest")) === Seq(1, 2, 3, 4, 5))
 
-    val expired = io.catalog.expireBranchSnapshots(t, "ingest", keepLast = 1)
+    val expired = io.catalog.expireSnapshots(t, keepLast = 1, ref = Ref.Branch("ingest"))
     // v3 carries mark batchId=1 (the newest marked) -> retained even
     // though older than the keep window; v1 is the FORK RECORD —
     // pinned for the branch's lifetime (fork id = stream-checkpoint
     // identity; changelog fork-baseline default); only v2, v4 go
     assert(expired === Seq(2, 4))
-    assert(io.catalog.branchVersions(t, "ingest") === Seq(1, 3, 5))
-    assert(io.catalog.branchStreamBatchMark(t, "ingest", propKey) === Some(1L),
+    assert(io.catalog.versions(t, Ref.Branch("ingest")) === Seq(1, 3, 5))
+    assert(io.catalog.streamBatchMark(t, propKey, Ref.Branch("ingest")) === Some(1L),
       "the replay guard must survive expiry")
     // the head still reads whole after GC reclaims the expired bytes
     io.catalog.removeOrphanFiles(t, olderThanMs = -1000)
-    assert(io.readBranch(t, "ingest").select("id").as[Long].collect().sorted ===
+    assert(io.read(t, Ref.Branch("ingest")).select("id").as[Long].collect().sorted ===
       (0L until 30L).toArray)
     assert(io.read(t).count() === 10) // main untouched throughout
   }
 
-  test("branch expiry retains the newest marked manifest PER SINK key") {
+  /** Expiry pins the newest marked manifest PER SINK key on every
+    * ref: dropping another sink's newest mark would forfeit that sink's
+    * exactly-once guard on its next crash replay.
+    */
+  private def perSinkExpiry(ref: Ref): Unit = {
     val io = freshIO()
     val t = "default.brexp2"
     val keyA = TableCatalog.streamBatchProp(Some("sinkA"))
     val keyB = TableCatalog.streamBatchProp(Some("sinkB"))
     io.append(rows(0, 5), t)
-    io.createBranch(t, "b")
-    io.appendToBranch(rows(5, 10), t, "b", props = Map(keyA -> "5"))  // v2: sink A's newest
-    io.appendToBranch(rows(10, 15), t, "b", props = Map(keyB -> "2")) // v3: sink B's newest
-    io.compactBranch(t, "b")                                          // v4
-    io.compactBranch(t, "b")                                          // v5 (head)
-    val expired = io.catalog.expireBranchSnapshots(t, "b", keepLast = 1)
-    // v2 AND v3 are pinned (each the newest mark of its sink), v1 is
-    // the pinned fork record; only v4 may go
-    assert(expired === Seq(4))
-    assert(io.catalog.branchStreamBatchMark(t, "b", keyA) === Some(5L))
-    assert(io.catalog.branchStreamBatchMark(t, "b", keyB) === Some(2L))
+    ref match {
+      case Ref.Branch(b) => io.createBranch(t, b) // v1: the fork record
+      case Ref.Main => ()                         // v1: the first append
+    }
+    io.append(rows(5, 10), t, props = Map(keyA -> "5"), ref = ref)  // v2: sink A's newest
+    io.append(rows(10, 15), t, props = Map(keyB -> "2"), ref = ref) // v3: sink B's newest
+    io.compact(t, ref = ref)                                          // v4
+    io.compact(t, ref = ref)                                          // v5 (head)
+    val expired = io.catalog.expireSnapshots(t, keepLast = 1, ref = ref)
+    // v2 AND v3 are pinned (each the newest mark of its sink); a
+    // branch's v1 is the pinned fork record, main's v1 is plain history
+    assert(expired === (if (ref == Ref.Main) Seq(1, 4) else Seq(4)))
+    assert(io.catalog.streamBatchMark(t, keyA, ref) === Some(5L))
+    assert(io.catalog.streamBatchMark(t, keyB, ref) === Some(2L))
+  }
+
+  test("branch expiry retains the newest marked manifest PER SINK key") {
+    perSinkExpiry(Ref.Branch("b"))
+  }
+
+  test("main expiry retains the newest marked manifest PER SINK key") {
+    perSinkExpiry(Ref.Main)
   }
 
   test("fast-forward refuses after a main rollback even though the file set shrank") {
@@ -235,7 +250,7 @@ class BranchSpec extends graft.SparkSpec {
     io.append(rows(0, 10), t)  // v1
     io.append(rows(10, 20), t) // v2
     io.createBranch(t, "b")    // forked at v2
-    io.appendToBranch(rows(20, 30), t, "b")
+    io.append(rows(20, 30), t, ref = Ref.Branch("b"))
     // operator purges v2's rows: main v3 = v1's files — a SUBSET of
     // the branch head's files, but NOT a fast-forward of this branch;
     // integrating would resurrect the purged rows
@@ -252,15 +267,15 @@ class BranchSpec extends graft.SparkSpec {
       (from until until).map(i => (i.toLong, s"r$i", i % 3)).toDF("id", "v", "p")
     io.append(part(0, 12), t, Seq("p"))
     io.createBranch(t, "m")
-    io.appendToBranch(part(12, 24), t, "m", partitionCols = Seq("p"))
-    io.appendToBranch(part(24, 36), t, "m", partitionCols = Seq("p"))
-    io.compactBranch(t, "m")
+    io.append(part(12, 24), t, partitionCols = Seq("p"), ref = Ref.Branch("m"))
+    io.append(part(24, 36), t, partitionCols = Seq("p"), ref = Ref.Branch("m"))
+    io.compact(t, ref = Ref.Branch("m"))
     // rewritten files keep the p=... layout: every file sits under a
     // partition dir, and the partition column reads back intact
-    val head = io.catalog.branchHead(t, "m").get
-    val files = io.catalog.branchManifest(t, "m", head)
+    val head = io.catalog.currentVersion(t, Ref.Branch("m")).get
+    val files = io.catalog.manifest(t, head, Ref.Branch("m"))
     assert(files.forall(_.contains("p=")), s"compacted files lost the layout: $files")
-    assert(io.readBranch(t, "m").groupBy("p").count().count() === 3)
+    assert(io.read(t, Ref.Branch("m")).groupBy("p").count().count() === 3)
     io.fastForward(t, "m")
     assert(io.read(t).select("id").as[Long].collect().sorted === (0L until 36L).toArray)
     // and main-side compact still sees ONE layout (no mixed-state)
@@ -274,20 +289,20 @@ class BranchSpec extends graft.SparkSpec {
     io.append(rows(0, 10), t)
     io.createBranch(t, "m")
     // several small appends -> several file sets on the branch
-    (1 to 4).foreach(i => io.appendToBranch(rows(i * 10, i * 10 + 10), t, "m"))
-    val before = io.catalog.branchManifest(t, "m", io.catalog.branchHead(t, "m").get).size
-    io.compactBranch(t, "m", targetFiles = 1)
-    val headAfter = io.catalog.branchHead(t, "m").get
-    val after = io.catalog.branchManifest(t, "m", headAfter).size
+    (1 to 4).foreach(i => io.append(rows(i * 10, i * 10 + 10), t, ref = Ref.Branch("m")))
+    val before = io.catalog.manifest(t, io.catalog.currentVersion(t, Ref.Branch("m")).get, Ref.Branch("m")).size
+    io.compact(t, targetFiles = 1, ref = Ref.Branch("m"))
+    val headAfter = io.catalog.currentVersion(t, Ref.Branch("m")).get
+    val after = io.catalog.manifest(t, headAfter, Ref.Branch("m")).size
     assert(after === 1 && after < before, s"expected 1 file after compaction, had $before -> $after")
-    assert(io.readBranch(t, "m").select("id").as[Long].collect().sorted === (0L until 50L).toArray)
+    assert(io.read(t, Ref.Branch("m")).select("id").as[Long].collect().sorted === (0L until 50L).toArray)
     // integration of the compacted branch works, and the rows survive
     io.fastForward(t, "m")
     assert(io.read(t).select("id").as[Long].collect().sorted === (0L until 50L).toArray)
     // second cycle: append + compact AFTER an integration — the rebase
     // record makes the fork check pass even though files were rewritten
-    io.appendToBranch(rows(50, 60), t, "m")
-    io.compactBranch(t, "m", targetFiles = 1)
+    io.append(rows(50, 60), t, ref = Ref.Branch("m"))
+    io.compact(t, targetFiles = 1, ref = Ref.Branch("m"))
     io.fastForward(t, "m")
     assert(io.read(t).select("id").as[Long].collect().sorted === (0L until 60L).toArray)
     // prior main versions still read their original (uncompacted) files
@@ -299,15 +314,15 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.race"
     io.append(rows(0, 5), t)
     io.createBranch(t, "b")
-    val head = io.catalog.branchHead(t, "b").get
-    val files = io.catalog.branchManifest(t, "b", head)
+    val head = io.catalog.currentVersion(t, Ref.Branch("b")).get
+    val files = io.catalog.manifest(t, head, Ref.Branch("b"))
     // two racers computing the same next version: exactly one wins the
     // hard-link-exclusive create, the other gets the typed conflict
-    io.catalog.commitBranchSnapshot(t, "b", files, head + 1)
+    io.catalog.commitSnapshotAt(t, files, head + 1, ref = Ref.Branch("b"))
     val e = intercept[ConcurrentCommitException](
-      io.catalog.commitBranchSnapshot(t, "b", files, head + 1))
+      io.catalog.commitSnapshotAt(t, files, head + 1, ref = Ref.Branch("b")))
     assert(e.getMessage.contains("branch b"))
-    assert(io.catalog.branchHead(t, "b") === Some(head + 1))
+    assert(io.catalog.currentVersion(t, Ref.Branch("b")) === Some(head + 1))
   }
 
   test("fast-forwarded content is GC-safe after the branch is dropped") {
@@ -315,7 +330,7 @@ class BranchSpec extends graft.SparkSpec {
     val t = "default.ffgc"
     io.append(rows(0, 10), t)
     io.createBranch(t, "b")
-    io.appendToBranch(rows(10, 30), t, "b")
+    io.append(rows(10, 30), t, ref = Ref.Branch("b"))
     io.fastForward(t, "b")
     io.dropBranch(t, "b")
     // integrated files are referenced by the new main manifest

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.io.{GraftCatalog, TableIO}
+import graft.io.{GraftCatalog, Ref, TableIO}
 
 /** The `<table>.changelog` metadata table: batch CDC reads through SQL
   * and the streaming change-data-feed source — INSERT/DELETE rows per
@@ -121,7 +121,7 @@ class ChangelogStreamSpec extends SparkSpec {
       val t = "default.brsrc"
       io.append(Seq((1L, "a")).toDF("id", "s").coalesce(1), t)
       io.createBranch(t, "exp")
-      io.appendToBranch(Seq((2L, "b")).toDF("id", "s").coalesce(1), t, "exp")
+      io.append(Seq((2L, "b")).toDF("id", "s").coalesce(1), t, ref = Ref.Branch("exp"))
       // fork-baseline default: only the branch's own change
       val got = spark.read.option("branch", "exp").table(s"gcdfr.$t.changelog")
         .select("_change_type", "id", "s").as[(String, Long, String)].collect().toSet
@@ -140,14 +140,14 @@ class ChangelogStreamSpec extends SparkSpec {
       val t = "default.brstream"
       io.append(Seq((1L, "a")).toDF("id", "s").coalesce(1), t)
       io.createBranch(t, "wap") // branch v1 = fork record
-      io.appendToBranch(Seq((2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1), t, "wap") // v2
+      io.append(Seq((2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1), t, ref = Ref.Branch("wap")) // v2
       val ckpt = Files.createTempDirectory("graft_cdbs_").toString
       // first drain: the branch's own changes (fork-baseline default)
       assert(drain(s"gcdbs.$t.changelog", ckpt, Map("branch" -> "wap")).toSet ===
         Set(("INSERT", 2, 2L, "b"), ("INSERT", 2, 3L, "c")))
       assert(drain(s"gcdbs.$t.changelog", ckpt, Map("branch" -> "wap")).isEmpty)
       // a branch MOR delete: MOR-aware step, kill reported at its version
-      io.deleteWhereMOR(t, col("id") === 3L, branch = Some("wap")) // v3
+      io.deleteWhereMOR(t, col("id") === 3L, ref = Ref.Branch("wap")) // v3
       assert(drain(s"gcdbs.$t.changelog", ckpt, Map("branch" -> "wap")).toSet ===
         Set(("DELETE", 3, 3L, "c")))
       // fast_forward leaves a rebase record on the chain: nets zero
@@ -169,7 +169,7 @@ class ChangelogStreamSpec extends SparkSpec {
       val t = "default.refork"
       io.append(Seq((1L, "a")).toDF("id", "s").coalesce(1), t)
       io.createBranch(t, "audit")
-      io.appendToBranch(Seq((2L, "b")).toDF("id", "s").coalesce(1), t, "audit")
+      io.append(Seq((2L, "b")).toDF("id", "s").coalesce(1), t, ref = Ref.Branch("audit"))
       val ckpt = Files.createTempDirectory("graft_cdrf_").toString
       assert(drain(s"gcdrf.$t.changelog", ckpt, Map("branch" -> "audit")).toSet ===
         Set(("INSERT", 2, 2L, "b")))
@@ -177,7 +177,7 @@ class ChangelogStreamSpec extends SparkSpec {
       // offset (fork A, v2) must not resume against fork B's v2
       io.dropBranch(t, "audit")
       io.createBranch(t, "audit")
-      io.appendToBranch(Seq((9L, "z")).toDF("id", "s").coalesce(1), t, "audit")
+      io.append(Seq((9L, "z")).toDF("id", "s").coalesce(1), t, ref = Ref.Branch("audit"))
       val e = intercept[Exception] {
         drain(s"gcdrf.$t.changelog", ckpt, Map("branch" -> "audit"))
       }

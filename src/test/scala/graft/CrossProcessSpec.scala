@@ -89,6 +89,37 @@ object CrossProcessFlagAppendWorker {
   }
 }
 
+/** Worker `main` for the single-file publish retry: a `local[1,2]`
+  * session (one task retry allowed) writes one file through
+  * `GraftSingleFileWrite`, and a task-completion listener fails the
+  * FIRST attempt after its publish rename — the "task died after its
+  * output became visible" shape. The retry must find the visible file
+  * already published and succeed, not fail on the taken name.
+  */
+object SingleFileRetryWorker {
+  def main(args: Array[String]): Unit = {
+    val Array(dir) = args.take(1)
+    val spark = SparkSession.builder()
+      .master("local[1,2]")
+      .appName("graft-sfw-retry-worker")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      import spark.implicits._
+      val df = (1 to 10).toDS().mapPartitions { it =>
+        val tc = org.apache.spark.TaskContext.get()
+        System.err.println(s"graft-sfw-retry attempt ${tc.attemptNumber()}")
+        if (tc.attemptNumber() == 0)
+          tc.addTaskCompletionListener[Unit](_ =>
+            throw new IllegalStateException("injected failure after publish"))
+        it
+      }.toDF("id")
+      org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(df, dir, Some("zstd"))
+    } finally spark.stop()
+    sys.exit(0)
+  }
+}
+
 /** End-to-end proof that the commit protocol is safe ACROSS PROCESSES,
   * not just across threads: the in-JVM per-table write semaphore
   * cannot serialize two JVMs, so simultaneous appends from separate
@@ -498,5 +529,27 @@ class CrossProcessSpec extends graft.SparkSpec {
     val vs = io.versions(t)
     assert(vs == (vs.head to vs.last), s"version history has holes: $vs")
     vs.foreach(v => io.readVersion(t, v).count())
+  }
+
+  test("single-file write: a retried task attempt after an earlier attempt published succeeds once") {
+    val dir = Files.createTempDirectory("graft_sfw_retry_")
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val log = Files.createTempFile("graft_sfw_retry", ".log").toFile
+    val cmd = (Seq(javaBin) ++ jvmOpens ++ Seq(
+      "-Xmx1g", "-Dspark.ui.enabled=false",
+      "-cp", System.getProperty("java.class.path"), "graft.io.SingleFileRetryWorker",
+      dir.toString)).asJava
+    val p = new ProcessBuilder(cmd).redirectErrorStream(true).redirectOutput(log).start()
+    assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS), s"worker timed out; log: $log")
+    val lines = Files.readAllLines(log.toPath).asScala
+    val tail = lines.takeRight(30).mkString("\n")
+    assert(p.exitValue() == 0, s"retried write failed (exit ${p.exitValue()}); tail:\n$tail")
+    assert(lines.exists(_.contains("graft-sfw-retry attempt 1")),
+      s"the write never retried; tail:\n$tail")
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    val visible = names.filter(n => n.endsWith(".parquet") && !n.startsWith("."))
+    assert(visible.size == 1, s"expected exactly one published file, got $names")
+    assert(!names.exists(_.startsWith(".inprogress-")), s"an attempt left its temp file: $names")
+    assert(spark.read.parquet(dir.resolve(visible.head).toString).count() == 10L)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.io.Ref
 import graft.multimodal.Multimodal
 import graft.streaming.EventsStream
 
@@ -477,19 +478,18 @@ class SketchMergeStreamSpec extends SparkSpec {
   test("branch-append stream: replay refused by the branch mark; main untouched until fast-forward") {
     val io = TableIO(spark, tmp("graft_brs_wh_"))
     val t = "default.brs"
-    val propKey = graft.io.TableCatalog.streamBatchProp(Some("brs-test"))
     io.append((1 to 10).map(i => (i.toLong, s"r$i")).toDF("id", "v"), t)
     io.createBranch(t, "ingest")
     val b0 = (11 to 20).map(i => (i.toLong, s"r$i")).toDF("id", "v")
     val b1 = (21 to 25).map(i => (i.toLong, s"r$i")).toDF("id", "v")
     def commit(id: Long, b: org.apache.spark.sql.DataFrame) =
-      TableSink.commitBranchAppendBatch(io, t, "ingest", id, b, propKey)
+      TableSink.commitStreamBatch(io, t, id, b, sinkId = Some("brs-test"), ref = Ref.Branch("ingest"))
 
     assert(commit(0L, b0))
     assert(commit(1L, b1))
     // a crash-replay of batch 1 must not land twice on the branch
     assert(!commit(1L, b1), "replayed batch must be refused by the branch mark")
-    assert(io.readBranch(t, "ingest").count() === 25)
+    assert(io.read(t, Ref.Branch("ingest")).count() === 25)
     assert(io.read(t).count() === 10, "main must not see branch batches")
     io.fastForward(t, "ingest")
     assert(io.read(t).count() === 25)

@@ -8,7 +8,7 @@ import scala.util.Random
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.io.{GraftCatalog, TableIO}
+import graft.io.{GraftCatalog, Ref, TableIO}
 
 /** Randomized (seeded) history equivalence for the streaming sources:
   * arbitrary op sequences must keep the maintenance-tolerant stream
@@ -159,21 +159,21 @@ class StreamFuzzSpec extends SparkSpec {
         (0 until 8).foreach { _ =>
           rnd.nextInt(6) match {
             case 0 | 1 =>
-              io.appendToBranch(mkRows(1 + rnd.nextInt(2)).toDF("id", "s").coalesce(1), t, "b")
+              io.append(mkRows(1 + rnd.nextInt(2)).toDF("id", "s").coalesce(1), t, ref = Ref.Branch("b"))
             case 2 =>
               io.deleteWhereMOR(t, col("id") % (3 + rnd.nextInt(3)) === rnd.nextInt(3),
-                branch = Some("b"))
+                ref = Ref.Branch("b"))
               ()
             case 3 =>
               val upd = rnd.nextLong(math.max(1L, nextId))
               io.upsertMOR(t, (Seq((upd, s"m$upd")) ++ mkRows(1)).toDF("id", "s").coalesce(1),
-                Seq("id"), branch = Some("b"))
+                Seq("id"), ref = Ref.Branch("b"))
               ()
             case 4 =>
-              io.applyDeletesBranch(t, "b")
+              io.applyDeletes(t, ref = Ref.Branch("b"))
               ()
             case 5 =>
-              io.compactBranch(t, "b", targetFiles = 2)
+              io.compact(t, targetFiles = 2, ref = Ref.Branch("b"))
               ()
           }
         }
@@ -207,14 +207,14 @@ class StreamFuzzSpec extends SparkSpec {
           }
           .start()
         q.awaitTermination()
-        val batchReplay = io.readChangelogBranch(t, "b")
+        val batchReplay = io.readChangelog(t, 1, ref = Ref.Branch("b"))
           .select(col("_change_type"), col("_change_version"), col("id"), col("s"))
           .as[(String, Int, Long, String)].collect()
         assert(bag(buf.toSeq) === bag(batchReplay.toSeq), s"seed $seed: streamed != batch")
         // the branch's own changes replayed over the fork content
         // reconstruct the branch head (merged view)
         assert(replay(forkContent, buf.toSeq) ===
-          io.readBranch(t, "b").as[(Long, String)].collect().toSet,
+          io.read(t, Ref.Branch("b")).as[(Long, String)].collect().toSet,
           s"seed $seed: branch changelog replay != branch head")
 
         // publish the branch (possibly DIRTY: entries scoping

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.{ConcurrentCommitException, GraftCatalog, TableIO}
+import graft.io.{ConcurrentCommitException, GraftCatalog, Ref, TableIO}
 
 /** Session write-audit-publish branch (Iceberg's `spark.wap.branch`):
   * with the conf set, every plain-identifier read/write in a
@@ -41,7 +41,7 @@ class WapBranchSpec extends SparkSpec {
       withWap("audit") {
         // first write under the conf forks the branch at main's snapshot
         spark.sql("INSERT INTO gwap.default.accounts VALUES (4, 'd', 400)")
-        assert(io.catalog.branchHead(t, "audit") === Some(2)) // v1 fork + append
+        assert(io.catalog.currentVersion(t, Ref.Branch("audit")) === Some(2)) // v1 fork + append
         assert(spark.table("gwap.default.accounts").count() === 4)
 
         // row-level DML commits ride the branch chain
@@ -106,7 +106,7 @@ class WapBranchSpec extends SparkSpec {
           .as[Long].collect().sorted === Array(2L, 3L))
       }
       assert(io.read(t).count() === 2) // main: untouched
-      assert(io.readBranch(t, "fix").count() === 2)
+      assert(io.read(t, Ref.Branch("fix")).count() === 2)
       io.fastForward(t, "fix")
       assert(io.read(t).select("id").as[Long].collect().sorted === Array(2L, 3L))
     }
@@ -118,20 +118,20 @@ class WapBranchSpec extends SparkSpec {
     val t = "default.race"
     io.append(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), t)
     io.createBranch(t, "b")
-    val head = io.catalog.branchHead(t, "b").get
+    val head = io.catalog.currentVersion(t, Ref.Branch("b")).get
 
     // a replacement planned against `head`...
-    val planned = io.catalog.branchManifest(t, "b", head)
+    val planned = io.catalog.manifest(t, head, Ref.Branch("b"))
     // ...raced by an append that commits head+1 first
-    io.appendToBranch(Seq((3L, 30L)).toDF("id", "v"), t, "b")
+    io.append(Seq((3L, 30L)).toDF("id", "v"), t, ref = Ref.Branch("b"))
 
     val e = intercept[ConcurrentCommitException](
-      io.commitBranchReplacement(
-        Seq((1L, 11L)).toDF("id", "v"), t, "b",
-        keepFiles = Seq.empty, partitionCols = Seq.empty, baseHead = head))
+      io.commitReplacement(
+        Seq((1L, 11L)).toDF("id", "v"), t,
+        keepFiles = Seq.empty, partitionCols = Seq.empty, baseVersion = head, ref = Ref.Branch("b")))
     assert(e.getMessage.contains("branch b"))
     // the racer's rows survive — nothing lost
-    assert(io.readBranch(t, "b").count() === 3)
+    assert(io.read(t, Ref.Branch("b")).count() === 3)
   }
 
   test("fork-at-commit: a row-level op as the FIRST branch write forks without deadlock") {
@@ -146,10 +146,10 @@ class WapBranchSpec extends SparkSpec {
         // branch absent: the UPDATE plans against main's manifest and
         // forks the branch INSIDE the commit, where the per-table
         // lock is already held — this MUST go through the lock-assumed
-        // createBranchLocked path (a plain createBranch here parks
+        // forkLocked path (a plain createBranch here parks
         // forever on the non-reentrant semaphore)
         spark.sql("UPDATE gwapf.default.forkrow SET v = v + 1 WHERE id = 1")
-        assert(io.catalog.branchHead(t, "audit").isDefined)
+        assert(io.catalog.currentVersion(t, Ref.Branch("audit")).isDefined)
         assert(spark.table("gwapf.default.forkrow")
           .select("v").as[Long].collect().sorted === Array(11L, 20L))
       }
@@ -166,13 +166,13 @@ class WapBranchSpec extends SparkSpec {
     io.append(Seq((1L, "x")).toDF("id", "v"), t)
 
     // overwriteBranch on a nonexistent branch forks it first
-    io.overwriteBranch(Seq((9L, "z")).toDF("id", "v"), t, "scratch")
-    assert(io.readBranch(t, "scratch").select("id").as[Long].head() === 9L)
+    io.overwrite(Seq((9L, "z")).toDF("id", "v"), t, ref = Ref.Branch("scratch"))
+    assert(io.read(t, Ref.Branch("scratch")).select("id").as[Long].head() === 9L)
     assert(io.read(t).select("id").as[Long].head() === 1L)
 
     // second overwrite advances the same branch
-    io.overwriteBranch(Seq((8L, "y")).toDF("id", "v"), t, "scratch")
-    assert(io.catalog.branchHead(t, "scratch") === Some(3))
-    assert(io.readBranch(t, "scratch").select("id").as[Long].head() === 8L)
+    io.overwrite(Seq((8L, "y")).toDF("id", "v"), t, ref = Ref.Branch("scratch"))
+    assert(io.catalog.currentVersion(t, Ref.Branch("scratch")) === Some(3))
+    assert(io.read(t, Ref.Branch("scratch")).select("id").as[Long].head() === 8L)
   }
 }

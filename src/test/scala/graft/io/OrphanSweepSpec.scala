@@ -28,7 +28,7 @@ class OrphanSweepSpec extends SparkSpec {
     io.catalog.tagSnapshot(t, "gold", 1)
     io.append((10L until 20L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1), t) // v2
     io.createBranch(t, "audit")
-    io.appendToBranch(Seq((100L, "br")).toDF("id", "s"), t, "audit")
+    io.append(Seq((100L, "br")).toDF("id", "s"), t, ref = Ref.Branch("audit"))
     val stageId = io.appendStaged(Seq((200L, "wap")).toDF("id", "s"), t)
     val liveBefore = io.catalog.listDataFiles(t).toSet
 
@@ -71,7 +71,7 @@ class OrphanSweepSpec extends SparkSpec {
     assert(io.read(t).count() == 20)                        // current
     assert(io.readVersion(t, 1).count() == 10)              // older snapshot
     assert(io.readTag(t, "gold").count() == 10)             // tag
-    assert(io.readBranch(t, "audit").count() == 21)         // branch head
+    assert(io.read(t, Ref.Branch("audit")).count() == 21)         // branch head
     assert(io.readStaged(t, stageId).count() == 21)         // staged (current ∪ staged)
 
     // a YOUNG unreferenced file is NOT swept (commit-in-flight guard)

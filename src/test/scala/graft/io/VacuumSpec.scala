@@ -31,8 +31,8 @@ class VacuumSpec extends SparkSpec {
     io.catalog.tagSnapshot(t, "gold", 2)
     io.append((10L until 20L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1), t) // v3
     io.createBranch(t, "audit")
-    io.appendToBranch((100L until 105L).map(i => (i, s"br$i")).toDF("id", "s").coalesce(1),
-      t, "audit")
+    io.append((100L until 105L).map(i => (i, s"br$i")).toDF("id", "s").coalesce(1),
+      t, ref = Ref.Branch("audit"))
     io.append((20L until 25L).map(i => (i, s"c$i")).toDF("id", "s").coalesce(1), t) // v4
 
     // crashed-write orphan: a real parquet file no manifest references
@@ -72,7 +72,7 @@ class VacuumSpec extends SparkSpec {
     // every live surface still reads
     assert(io.read(t).count() == before)
     assert(io.readVersion(t, 2).count() == 10) // tagged snapshot intact
-    assert(io.readBranch(t, "audit").count() == 25) // branch head intact
+    assert(io.read(t, Ref.Branch("audit")).count() == 25) // branch head intact
     assert(spark.sql(s"SELECT count(*) FROM gvac.$t VERSION AS OF 'gold'").head().getLong(0) == 10)
 
     // idempotent: a second vacuum finds nothing new
