@@ -1495,7 +1495,7 @@ object SparkEntry {
       require(v1 == v0 + 1 && deleted > 0, s"MOR delete did not commit ($v1, $deleted)")
       require(io.catalog.manifest(t, v1) == files0,
         "MOR delete must be metadata-only: the data file list changed")
-      // resolved NOW against the dirty snapshot — GraftMorTable pins
+      // resolved NOW against the dirty snapshot — the merged scan pins
       // version v1, so this frame stays the pending-state read even
       // though it executes after applyDeletes below
       val pending = s.sql(

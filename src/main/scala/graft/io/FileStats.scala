@@ -363,3 +363,53 @@ object FileStats {
     case _ => None // double/decimal/date/timestamp: cast rendering differs
   }
 }
+
+/** THE file-scoping rule: might a data file hold rows `filters` select,
+  * and must EVERY row of it match? Answered from the two kinds of
+  * metadata a file carries — its column stats (manifest-primed, footer
+  * fallback, read under the table's LOGICAL names through `renames`)
+  * and its layout directory (`layout`: the hidden partition spec, or the
+  * identity transforms of a Hive-dir layout, whose dir value IS the
+  * column value; `schema` supplies the source types). Every consumer —
+  * copy-on-write DML scoping and its conflict filter, the SQL row-level
+  * scans, the read scan's pruning and exact-prune proof, runtime
+  * filtering — asks this one question, so their rules cannot drift.
+  *
+  * Total and conservative: an unreadable footer or unparseable dir
+  * answers "might match" and "not provably all" — a wasted read or
+  * rewrite, never a wrong row.
+  */
+private[io] final case class FileScope(layout: Seq[PartitionTransform],
+                                       schema: org.apache.spark.sql.types.StructType,
+                                       renames: Map[String, String] = Map.empty) {
+  private val toLogical = renames.map(_.swap)
+  @transient private lazy val conf =
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+
+  private def stats(file: String): Map[String, FileStats.ColStats] = {
+    val s = FileStats.cached(file, conf)
+    if (toLogical.isEmpty) s else s.map { case (k, v) => toLogical.getOrElse(k, k) -> v }
+  }
+
+  /** False only when the layout dir or the stats PROVE no row of
+    * `file` satisfies every filter.
+    */
+  def mightMatch(file: String, filters: Seq[Filter]): Boolean =
+    filters.isEmpty ||
+      (try
+        (layout.isEmpty || PartitionTransforms.fileMightMatch(file, filters, layout, schema)) &&
+          FileStats.mightMatch(stats(file), filters)
+      catch { case scala.util.control.NonFatal(_) => true })
+
+  /** True only when every filter is proven, per filter by the stats OR
+    * by the layout dir, to hold for every row of `file` — the licence
+    * for a metadata-only delete or a Filter-free exact scan.
+    */
+  def mustMatchAll(file: String, filters: Seq[Filter]): Boolean =
+    try {
+      lazy val s = stats(file)
+      filters.forall(f =>
+        (layout.nonEmpty && PartitionTransforms.fileMustMatchAll(file, Seq(f), layout, schema)) ||
+          FileStats.mustMatchAll(s, Seq(f)))
+    } catch { case scala.util.control.NonFatal(_) => false }
+}

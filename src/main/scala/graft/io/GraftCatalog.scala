@@ -233,31 +233,22 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     )
     val pcols = catalog.tablePartitionCols(name)
       .getOrElse(partitionColsFromPaths(name, files))
-    // Every clean snapshot exposes group-based (copy-on-write)
-    // row-level operations — SQL UPDATE / MERGE INTO (r19). The
-    // rewrite's DSv2 replacement write emits a FLAT staged layout, so
-    // partitioned tables take the LAYOUT HOP at commit: the staged
-    // replacement files re-stage through TableIO.stageReplacement,
-    // which re-partitions them into the table's Hive/hidden directory
-    // arithmetic before the manifest commit — directory depths stay
-    // uniform and partition discovery keeps working (q162; see
-    // GraftRowOpsTable doc).
+    // Row-level operations (SQL UPDATE / MERGE INTO / DELETE) run on
+    // every clean snapshot and, over a dirty one, only on the
+    // unpartitioned MAIN snapshot: its merged candidates stage flat for
+    // the rewrite scan (see GraftRowOpsTable). A dirty partitioned or
+    // BRANCH snapshot (VERSION AS OF '<branch>') is a read surface;
+    // its row-level commands refuse with the recovery step.
+    // Partitioned clean tables take the layout hop at commit: the
+    // staged replacement re-stages through TableIO.stageReplacement
+    // into the table's Hive/hidden directory arithmetic (q162).
     val pspec = catalog.readMeta(name).partitionSpec.map(PartitionTransforms.parse)
-    if (dirty) {
-      // dirty snapshot: reads go through the V1 bridge computing the
-      // deletes-merged frame. Unpartitioned MAIN snapshots also get
-      // the row-level ops (merged COW rewrite); a dirty BRANCH
-      // snapshot (VERSION AS OF '<branch>') is a read surface.
-      if (pcols.isEmpty && ref == Ref.Main)
-        new GraftMorRowOpsTable(name, catalog, delegate, declared, renames, writeRef, version)
-      else new GraftMorTable(name, catalog, delegate, pcols, declared, renames, pspec,
-        writeRef, version, ref)
-    } else
-      // clean snapshots carry the row-level ops regardless of
-      // layout (r19): partitioned replacements take the layout hop
-      // in the commit (see GraftRowOpsTable doc)
+    val merged = if (dirty) Some((version, ref)) else None
+    if (dirty && (pcols.nonEmpty || ref != Ref.Main))
+      new GraftTable(name, catalog, delegate, pcols, declared, renames, pspec, writeRef, merged)
+    else
       new GraftRowOpsTable(name, catalog, delegate, declared, renames, writeRef,
-        pcols, pspec)
+        pcols, pspec, merged)
   }
 
   /** Hive-style partition columns inferred from a manifest's file
@@ -866,6 +857,12 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
   * Filter pushdown is deliberately not forwarded for renamed tables —
   * filters still apply post-scan, correct but unpruned; `compact()`
   * rewrites files under current names and restores pushdown.
+  *
+  * A snapshot with PENDING merge-on-read deletes (`merged`: its version
+  * and chain) cannot be served as a raw parquet scan — its reads go
+  * through Spark's V1 read bridge instead ([[mergedScanBuilder]]).
+  * INSERT INTO carries the pending entries (TableIO.append); INSERT
+  * OVERWRITE replaces the file list, clearing them.
   */
 private[io] class GraftTable(
     tableName: String,
@@ -877,7 +874,8 @@ private[io] class GraftTable(
     pspec: Seq[PartitionTransform] = Seq.empty,
     // the chain writes commit to: the session WAP branch
     // (`spark.wap.branch`) or main
-    writeRef: Ref = Ref.Main
+    writeRef: Ref = Ref.Main,
+    merged: Option[(Int, Ref)] = None
 ) extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   // hidden layout columns (pspec-derived) — stripped from the visible
@@ -945,14 +943,14 @@ private[io] class GraftTable(
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (renames.isEmpty)
+    if (merged.isDefined) mergedScanBuilder(options)
+    else if (renames.isEmpty)
       // Hive-DIR layouts prune and prove like identity hidden specs:
-      // the dir value IS the column value, so fileMightMatch drops
+      // the dir value IS the column value, so the file scope drops
       // partition-skipped files from keptFiles (planner statistics
-      // then report the SURVIVING rows, not the table's) and
-      // fileMustMatchAll backs the exact-prune proof for
-      // partition-aligned predicates — the same arithmetic the
-      // row-ops rewrite scoping already trusts (layoutMightMatch).
+      // then report the SURVIVING rows, not the table's) and backs the
+      // exact-prune proof for partition-aligned predicates — the same
+      // arithmetic the row-level scoping trusts.
       new StatsPruningScanBuilder(delegate, options,
         if (pspec.nonEmpty) pspec
         else partitionCols.map(PartitionTransforms.Identity),
@@ -1002,14 +1000,67 @@ private[io] class GraftTable(
       }
     }
 
-  /** Copy-on-write `DELETE FROM`, file-scoped like UPDATE/MERGE: the
-    * predicate runs against footer stats first, files it provably
-    * cannot touch carry into the new manifest verbatim, and only the
-    * candidate files are read, filtered (keep the rows the predicate
-    * does NOT select — null-valued predicates keep the row, per SQL),
-    * and rewritten. No candidate files = a no-op, no snapshot. Deleted
-    * rows stay readable via `VERSION AS OF`. This is the row-level DML
-    * the reference inherits from Iceberg's SQL extensions (reference:
+  /** The dirty snapshot's read: Spark's V1 read bridge
+    * ([[org.apache.spark.sql.connector.read.V1Scan]], the fallback JDBC
+    * catalog tables use) materializes `TableIO.readVersion`'s
+    * deletes-merged frame — clean files on the codegen parquet path,
+    * only dirty files pay the broadcast anti-join — with required-column
+    * pruning applied to the frame. The TRANSIENT state between a MOR
+    * write and `applyDeletes`, which restores the pure-scan table.
+    */
+  private def mergedScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private val (version, morRef) = merged.get
+      private var required: Option[StructType] = None
+      override def pruneColumns(requiredSchema: StructType): Unit =
+        required = Some(requiredSchema)
+      override def build(): Scan = new org.apache.spark.sql.connector.read.V1Scan
+          with MorStreamRefusal {
+        override def morTableName: String = tableName
+        private val read = required.getOrElse(schema())
+        override def morStreamSource: Option[(TableCatalog, StructType, CaseInsensitiveStringMap)] =
+          if (renames.isEmpty && morRef == Ref.Main &&
+              partitionCols.forall(_.startsWith(PartitionTransforms.Prefix)))
+            // the PRUNED read schema, like the clean path: a
+            // column-pruned stream must serve rows in its scan's own
+            // shape, or ordinals misalign downstream
+            Some((cat, read, options))
+          else None
+        override def readSchema(): StructType = read
+        override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
+            with org.apache.spark.sql.sources.TableScan](
+            ctx: org.apache.spark.sql.SQLContext): T =
+          new org.apache.spark.sql.sources.BaseRelation
+            with org.apache.spark.sql.sources.TableScan {
+            override def sqlContext: org.apache.spark.sql.SQLContext = ctx
+            override def schema: StructType = read
+            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+              val df = new TableIO(ctx.sparkSession, cat).readVersion(tableName, version, morRef)
+              // empty required schema = count(*)-style scan: rows, no
+              // columns (select() keeps the row count)
+              df.select(read.fields.toSeq
+                .map(f => org.apache.spark.sql.functions.col(f.name)): _*).rdd
+            }
+          }.asInstanceOf[T]
+      }
+    }
+
+  /** Whether a row-level `command` may run over a base with pending
+    * merge-on-read deletes — the loadTable gate, overridden by
+    * [[GraftRowOpsTable]]. Here: never; such a base refuses, naming the
+    * recovery step (GraftTable.requireClean).
+    */
+  protected def dirtyDmlAllowed(command: String): Boolean = false
+
+  /** Copy-on-write `DELETE FROM`: the WAP fork and the filter → Column
+    * translation, then TableIO's one row-level executor
+    * (`rewriteWhere`) — files the pushed filters provably cannot touch
+    * carry verbatim, files they provably cover drop as metadata only,
+    * and only the boundary files are read (deletes-merged), filtered
+    * (null-valued predicates keep the row, per SQL) and rewritten.
+    * Nothing touched = a no-op, no snapshot. Deleted rows stay readable
+    * via `VERSION AS OF`. This is the row-level DML the reference
+    * inherits from Iceberg's SQL extensions (reference:
     * FactJob.scala:19); UPDATE/MERGE take the rewrite path in
     * GraftRowOpsTable.
     */
@@ -1018,66 +1069,19 @@ private[io] class GraftTable(
 
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val spark = SparkSession.active
-    val io = new TableIO(spark, cat)
+    val dirtyOk = dirtyDmlAllowed("DELETE")
     // the delete's base snapshot is the write ref's head — under a WAP
     // session the BRANCH, forked at main's current snapshot on first
-    // write. The rewrite below reads candidates RAW: over pending MOR
-    // deletes that resurrects, so a dirty base refuses with the
-    // recovery step, like every raw-manifest consumer
-    val baseVersion = cat.locked(tableName) {
+    // write
+    val v = cat.locked(tableName) {
       cat.forkLocked(tableName, writeRef)
-      cat.currentVersion(tableName, writeRef)
+      cat.head(tableName, writeRef)
     }
-    baseVersion.foreach(v => GraftTable.requireClean(cat, tableName, v, writeRef, "DELETE"))
-    val all = baseVersion.map(cat.manifest(tableName, _, writeRef)).getOrElse(Seq.empty)
-    val toLogicalName = renames.map(_.swap)
-    def logicalStats(f: String, conf: org.apache.hadoop.conf.Configuration) =
-      FileStats.cached(f, conf).map { case (k, v) => toLogicalName.getOrElse(k, k) -> v }
-    val (kept, touched) =
-      try {
-        val conf = spark.sessionState.newHadoopConf()
-        all.partition { f =>
-          !FileStats.mightMatch(logicalStats(f, conf), filters.toSeq) ||
-            (pspec.nonEmpty &&
-              !PartitionTransforms.fileMightMatch(f, filters.toSeq, pspec, schema()))
-        }
-      } catch { case scala.util.control.NonFatal(_) => (Seq.empty, all) }
-    if (touched.isEmpty) return // nothing can match: no new snapshot
-    // serializable conflict-detection filter for the optimistic-retry
-    // rebase: a racer-appended file that might hold predicate-matching
-    // rows refuses the rebase (the exact check the row-ops commit loop
-    // performs) instead of silently surviving this DELETE
-    val newcomerConflicts: String => Boolean = f =>
-      try {
-        val conf = spark.sessionState.newHadoopConf()
-        FileStats.mightMatch(logicalStats(f, conf), filters.toSeq) &&
-          (pspec.isEmpty ||
-            PartitionTransforms.fileMightMatch(f, filters.toSeq, pspec, schema()))
-      } catch { case scala.util.control.NonFatal(_) => true }
-    val cond = filters.flatMap(GraftTable.toCondition)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    // METADATA-ONLY tier (Iceberg's metadata delete): a file whose
-    // stats PROVE the predicate selects every row simply drops from
-    // the manifest — no read, no rewrite. A partition-aligned DELETE
-    // (drop a day, drop a bucket) touches zero data bytes at any table
-    // size; only predicate-boundary files rewrite.
-    val (_, candidates) =
-      try {
-        val conf = spark.sessionState.newHadoopConf()
-        touched.partition(f => FileStats.mustMatchAll(logicalStats(f, conf), filters.toSeq))
-      } catch { case scala.util.control.NonFatal(_) => (Seq.empty, touched) }
-    if (candidates.isEmpty)
-      io.commitMetadataDelete(tableName, kept, baseVersion.getOrElse(0),
-        Some(newcomerConflicts), writeRef)
-    else {
-      val remaining = io.readFiles(tableName, candidates)
-        .filter(not(coalesce(cond, lit(false))))
-      io.commitReplacement(remaining, tableName, kept, partitionCols,
-        baseVersion = baseVersion.getOrElse(0),
-        newcomerConflicts = Some(newcomerConflicts), ref = writeRef)
-      ()
-    }
+    if (!dirtyOk) GraftTable.requireClean(cat, tableName, v, writeRef, "DELETE")
+    val cond = filters.flatMap(GraftTable.toCondition).reduceOption(_ && _).getOrElse(lit(true))
+    new TableIO(SparkSession.active, cat).rewriteWhere(tableName, cond, writeRef, partitionCols,
+      dropCovered = true, filters = Some(filters.toSeq), baseVersion = Some(v))(
+      _.filter(not(coalesce(cond, lit(false)))))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -1103,19 +1107,17 @@ private[io] class GraftTable(
     }
 }
 
-/** Adds SQL UPDATE / MERGE INTO (and rewrite-based DELETE) via
-  * group-based copy-on-write row-level operations, FILE-scoped: the
-  * command's predicate is evaluated against parquet footer statistics
-  * driver-side (graft.io.FileStats), files it provably cannot touch
-  * are excluded from the rewrite scan and carried into the new
+/** Adds SQL UPDATE / MERGE INTO (and DELETE whose predicate the
+  * executor path can't take) via group-based copy-on-write row-level
+  * operations, FILE-scoped: the command's pushed predicate goes through
+  * the table's [[FileScope]] driver-side, files it provably cannot
+  * touch are excluded from the rewrite scan and carried into the new
   * manifest verbatim, and only the remaining files' rows flow through
   * Spark's rewrite plan into the replacement write (the delegate's
-  * distributed DSv2 parquet write); the driver-side commit snapshots
-  * carried-over + replacement files as a logical overwrite. Old files
+  * distributed DSv2 parquet write); the driver-side commit is TableIO's
+  * replacement commit over carried-over + replacement files. Old files
   * are never touched, so prior versions time-travel like every other
-  * commit. This is the copy-on-write half of Iceberg's row-level DML
-  * with footer stats standing in for manifest column stats (the
-  * merge-on-read delta path is deliberately out of scope).
+  * commit.
   *
   * PARTITIONED tables (r19): the replacement write takes a LAYOUT
   * HOP — the rewrite plan's DSv2 parquet write lands flat in the
@@ -1126,10 +1128,23 @@ private[io] class GraftTable(
   * manifest commit. Cost: the REPLACED bytes are written twice —
   * bounded by the file-scoped rewrite, never table-sized — in
   * exchange for UPDATE/MERGE on partitioned tables with rows free to
-  * MOVE between partitions. Scoping additionally prunes by layout
-  * directories (identity dirs and hidden-spec arithmetic,
-  * PartitionTransforms.fileMightMatch), so a partition-aligned
-  * UPDATE rewrites only the matching partition's files.
+  * MOVE between partitions. Layout dirs scope too, so a
+  * partition-aligned UPDATE rewrites only the matching partition's
+  * files.
+  *
+  * A DIRTY base (pending merge-on-read deletes) is the same operation
+  * with non-empty pending entries; loadTable admits one only on the
+  * unpartitioned main snapshot it serves merged (`merged`), and never
+  * from a WAP session. The rewrite scan cannot hand Spark raw parquet
+  * for dirty candidates — their deleted rows would flow into the
+  * replacement and resurrect — and the group-based rewrite planner
+  * builds its `DataSourceV2ScanRelation` directly (no `V1ScanWrapper`),
+  * so the V1 read bridge is unusable here. Instead the dirty
+  * candidates' deletes-merged rows STAGE into a private dir (one
+  * bounded write, O(dirty candidate bytes)) and scan with the clean
+  * candidates on the normal DSv2 path, keeping file-granularity group
+  * semantics. The commit consumes the rewritten files' entries and
+  * carries the others trimmed ([[TableIO.trimDeletesForRewrite]]).
   */
 private[io] class GraftRowOpsTable(
     tableName: String,
@@ -1139,25 +1154,30 @@ private[io] class GraftRowOpsTable(
     renames: Map[String, String],
     writeRef: Ref = Ref.Main,
     partitionCols: Seq[String] = Seq.empty,
-    pspec: Seq[PartitionTransform] = Seq.empty
+    pspec: Seq[PartitionTransform] = Seq.empty,
+    merged: Option[(Int, Ref)] = None
 ) extends GraftTable(tableName, cat, delegate, partitionCols, declaredSchema, renames,
-    pspec, writeRef)
+    pspec, writeRef, merged)
   with SupportsRowLevelOperations {
 
-  /** Layout-aware might-match for the rewrite's file scoping: hidden
-    * specs when declared, else the identity dirs of a Hive layout —
-    * `false` only when the DIRECTORY proves the predicate can't match
-    * (typed dir parsing; unparseable or absent dirs stay candidates).
-    */
-  private def layoutMightMatch(f: String,
-                               filters: Seq[org.apache.spark.sql.sources.Filter]): Boolean = {
-    val specs =
-      if (pspec.nonEmpty) pspec
-      else partitionCols.map(PartitionTransforms.Identity)
-    specs.isEmpty || PartitionTransforms.fileMightMatch(f, filters, specs, schema())
+  override protected def dirtyDmlAllowed(command: String): Boolean = merged.isDefined && {
+    if (writeRef != Ref.Main)
+      throw new UnsupportedOperationException(
+        s"$tableName has pending merge-on-read deletes and the session writes to WAP " +
+          s"${writeRef.describe(tableName)}: $command over a dirty snapshot " +
+          "is not supported — run applyDeletes first, or clear spark.wap.branch")
+    true
   }
 
-  override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder =
+  /** The table's file scope: hidden specs when declared, else the
+    * identity dirs of a Hive layout; stats under logical names.
+    */
+  private lazy val fileScope = FileScope(
+    if (pspec.nonEmpty) pspec else partitionCols.map(PartitionTransforms.Identity),
+    schema(), renames)
+
+  override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder = {
+    val dirtyOk = dirtyDmlAllowed(info.command().toString)
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = new RowLevelOperation {
         // files proven untouchable by the command's predicate: they are
@@ -1175,6 +1195,12 @@ private[io] class GraftRowOpsTable(
         // the planned file set: the conflict check for the
         // fork-at-commit case, where no branch version existed to pin
         @volatile private var plannedFiles: Seq[String] = Seq.empty
+        // the base's pending merge-on-read entries (empty when clean):
+        // consumed for rewritten files, trimmed for carried ones
+        @volatile private var pending: Seq[TableCatalog.DeleteEntry] = Seq.empty
+        // staging dir holding the dirty candidates' merged rows for the
+        // rewrite scan — swept with the write staging on commit/abort
+        @volatile private var scanStaging: Option[java.nio.file.Path] = None
         // the command's pushed (translatable) condition — the rebase's
         // conflict-detection filter (Iceberg's serializable check): a
         // racer's NEW file that MIGHT hold matching rows kills the
@@ -1191,7 +1217,7 @@ private[io] class GraftRowOpsTable(
         // (row-group pruning on footer stats could silently drop a
         // matched file's other row groups from the replacement: data
         // loss). Instead the condition is consumed HERE, driver-side:
-        // parquet footer stats conservatively partition the snapshot's
+        // the file scope conservatively partitions the snapshot's
         // files into can't-match (carried over verbatim) and
         // might-match (scanned WHOLLY — the delegate gets no filters,
         // so files are all-or-nothing). An UPDATE of one key rewrites
@@ -1206,7 +1232,9 @@ private[io] class GraftRowOpsTable(
             locally { baseVersion = baseV }
             private val allFiles = baseV match {
               case Some(v) =>
-                GraftTable.requireClean(cat, tableName, v, writeRef, info.command().toString)
+                if (!dirtyOk)
+                  GraftTable.requireClean(cat, tableName, v, writeRef, info.command().toString)
+                pending = cat.pendingDeletes(tableName, v, writeRef)
                 cat.manifest(tableName, v, writeRef)
               case None => cat.currentVersion(tableName).map(cat.manifest(tableName, _))
                 .getOrElse(Seq.empty)
@@ -1218,21 +1246,10 @@ private[io] class GraftRowOpsTable(
             override def pushFilters(
                 filters: Array[org.apache.spark.sql.sources.Filter]
             ): Array[org.apache.spark.sql.sources.Filter] = {
-              val (pruned, scanned) =
-                try {
-                  val conf = SparkSession.active.sessionState.newHadoopConf()
-                  allFiles.partition { f =>
-                    // stats carry physical names; filters logical
-                    // (cached = manifest-primed at loadTable, footer
-                    // fallback for pre-stats files); layout dirs prove
-                    // what footers can't — partition columns aren't IN
-                    // the footers of a partitioned write
-                    val stats = FileStats.cached(f, conf)
-                      .map { case (k, v) => toLogicalName.getOrElse(k, k) -> v }
-                    !FileStats.mightMatch(stats, filters.toSeq) ||
-                      !layoutMightMatch(f, filters.toSeq)
-                  }
-                } catch { case scala.util.control.NonFatal(_) => (Seq.empty, allFiles) } // unreadable: rewrite all
+              // for dirty files the stats describe RAW rows (deleted
+              // included) — a superset, so can't-match stays safe
+              val (scanned, pruned) = Timers.time("dml.pruneProbe")(
+                allFiles.partition(fileScope.mightMatch(_, filters.toSeq)))
               chosen = scanned
               carriedOver = pruned
               commandFilters = filters.toSeq
@@ -1242,16 +1259,29 @@ private[io] class GraftRowOpsTable(
               Array.empty
 
             override def build(): Scan = {
+              val spark = SparkSession.active
+              val dirtySet = pending.flatMap(_.dirtyFiles).map(norm).toSet
+              val (dirtyChosen, cleanChosen) = chosen.partition(f => dirtySet(norm(f)))
+              val scanFiles =
+                if (dirtyChosen.isEmpty) chosen
+                else cleanChosen ++ stageMerged(spark, dirtyChosen)
+              // staged files live OUTSIDE the data dir: the delegate's
+              // basePath option would reject them (the table is
+              // unpartitioned — no partition discovery to lose)
+              val scanOptions =
+                if (dirtyChosen.isEmpty) delegate.options
+                else new CaseInsensitiveStringMap(
+                  (delegate.options.asScala.toMap - "basepath").asJava)
               // a fully-pruned rewrite (predicate provably matches no
               // file) has no footers to infer from: carry the
               // delegate's already-inferred schema so the command
               // no-ops instead of dying with UNABLE_TO_INFER_SCHEMA
               val schemaForScoped = delegate.userSpecifiedSchema
-                .orElse(if (chosen.isEmpty) Some(delegate.schema) else None)
+                .orElse(if (scanFiles.isEmpty) Some(delegate.schema) else None)
               val scanTable =
-                if (chosen == allFiles) delegate
-                else ParquetTable(s"${delegate.name}#scoped", SparkSession.active,
-                  delegate.options, chosen, schemaForScoped,
+                if (scanFiles == allFiles) delegate
+                else ParquetTable(s"${delegate.name}#scoped", spark,
+                  scanOptions, scanFiles, schemaForScoped,
                   classOf[ParquetFileFormat])
               val builder = scanTable.newScanBuilder(options)
               // hidden LAYOUT columns (gp_* dirs a hidden spec derives)
@@ -1278,6 +1308,41 @@ private[io] class GraftRowOpsTable(
               }
             }
           }
+
+        private def norm(p: String): String =
+          java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+
+        /** One distributed write of the dirty candidates' merged rows
+          * (PHYSICAL column names, like every data file) into a private
+          * staging dir; returns the staged parquet files.
+          */
+        private def stageMerged(spark: SparkSession, dirty: Seq[String]): Seq[String] = {
+          val rows = new TableIO(spark, cat).mergeDeletes(tableName, dirty, pending)
+          val physical = renames.foldLeft(rows) { case (df, (l, p)) => df.withColumnRenamed(l, p) }
+          // a REPLAN re-stages: reclaim the superseded dir now instead
+          // of waiting out the age-guarded orphan GC
+          scanStaging.foreach(TableIO.sweepDir)
+          val stage = TableIO.newStagingDir(cat.pathOf(tableName))
+          scanStaging = Some(stage)
+          val out = stage.resolve("merged")
+          // a failed materialization must not leak its dir — the write
+          // side's sweep can never reach this planning-side window (the
+          // write is only constructed after planning succeeds). A plan
+          // abandoned between here and write construction is the one
+          // remaining leak shape; the age-guarded orphan GC reclaims it.
+          try {
+            physical.write.parquet(out.toString)
+            scala.util.Using.resource(java.nio.file.Files.list(out)) { s =>
+              s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+            }
+          } catch {
+            case e: Throwable =>
+              TableIO.sweepDir(stage)
+              scanStaging = None
+              throw e
+          }
+        }
+
         override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
           override def build(): Write = new Write {
             override def toBatch: BatchWrite = {
@@ -1311,7 +1376,7 @@ private[io] class GraftRowOpsTable(
                 Seq(staging.toString),
                 userSpecifiedSchema = Some(physInfo.schema()),
                 fallbackFileFormat = classOf[ParquetFileFormat])
-              def sweepStaging(): Unit = TableIO.sweepDir(staging)
+              def sweepAll(): Unit = { TableIO.sweepDir(staging); scanStaging.foreach(TableIO.sweepDir) }
               // The per-table mutex serializes same-JVM writers over the
               // write->commit span (held from here through commit/abort;
               // Semaphore: the callbacks need not share a thread).
@@ -1323,7 +1388,7 @@ private[io] class GraftRowOpsTable(
               val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
               val dBatch =
                 try writeTable.newWriteBuilder(physInfo).build().toBatch
-                catch { case e: Throwable => releaseOnce(); sweepStaging(); throw e }
+                catch { case e: Throwable => releaseOnce(); sweepAll(); throw e }
               new BatchWrite {
                 override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
                   // the rewrite plan prepends bookkeeping columns
@@ -1362,6 +1427,7 @@ private[io] class GraftRowOpsTable(
                     // partitioned staging so every replacement row
                     // lands under its Hive/hidden-layout directory —
                     // incl. rows an UPDATE moved between partitions.
+                    val io = new TableIO(SparkSession.active, cat)
                     val dataRoot = java.nio.file.Paths.get(cat.dataPath(tableName))
                     java.nio.file.Files.createDirectories(dataRoot)
                     val newFiles =
@@ -1376,135 +1442,41 @@ private[io] class GraftRowOpsTable(
                           finally s.close()
                         }
                         if (flat.isEmpty) Seq.empty
-                        else {
-                          val io2 = new TableIO(SparkSession.active, cat)
+                        else
                           // explicit schema: an all-deleted rewrite has
                           // nothing to infer from, and physical names
                           // are already what stageReplacement expects
-                          val df = SparkSession.active.read
-                            .schema(physInfo.schema()).parquet(flat: _*)
-                          io2.stageReplacement(df, tableName, partitionCols)
-                        }
+                          io.stageReplacement(SparkSession.active.read
+                            .schema(physInfo.schema()).parquet(flat: _*), tableName, partitionCols)
                       }
-                    // Pinned commit at the planned base with OPTIMISTIC
-                    // REBASE on a cross-process conflict on main
-                    // (Iceberg's retry for row-level commits,
-                    // serializable flavor) — TableIO's replacement loop:
-                    // a rebase is sound iff every file this rewrite
-                    // REPLACED still exists on the fresh head, no
-                    // pending MOR entry scopes one (our replacement rows
-                    // came from the pre-delete scan), and no NEW file
-                    // might hold rows matching the command's condition
-                    // (stats vs the pushed filters — Iceberg's conflict
-                    // detection filter; untranslatable predicates make
-                    // every new file a conflict). Stats ride along
-                    // (carried forward for untouched files, footer-read
-                    // for replacements) so a DML commit keeps plan-time
-                    // pruning O(manifest).
-                    val conf = SparkSession.active.sessionState.newHadoopConf()
-                    val toLogical = renames.map(_.swap)
-                    val conflicts: String => Boolean = f =>
-                      try FileStats.mightMatch(
-                        FileStats.cached(f, conf).map { case (k, v) => toLogical.getOrElse(k, k) -> v },
-                        commandFilters)
-                      catch { case scala.util.control.NonFatal(_) => true }
-                    new TableIO(SparkSession.active, cat).commitReplacementFiles(tableName,
-                      carriedOver, newFiles, base, Map.empty, Some(conflicts), writeRef)
+                    // Pinned commit at the planned base through TableIO's
+                    // replacement loop (Iceberg's retry for row-level
+                    // commits, serializable flavor): a rebase is sound iff
+                    // every file this rewrite REPLACED still exists on the
+                    // fresh head, no pending MOR entry scopes one (our
+                    // replacement rows came from the pre-delete scan),
+                    // and no NEW file might hold rows matching the
+                    // command's pushed filters. The rewritten files' MOR
+                    // entries are consumed HERE, in the same commit as
+                    // their replacement; carried dirty files keep theirs,
+                    // trimmed.
+                    val props =
+                      if (pending.isEmpty) Map.empty[String, String]
+                      else io.trimDeletesForRewrite(tableName, pending, carriedOver)
+                    io.commitReplacementFiles(tableName, carriedOver, newFiles, base, props,
+                      Some(fileScope.mightMatch(_, commandFilters)), writeRef)
                     ()
-                  } finally { releaseOnce(); sweepStaging() }
+                  } finally { releaseOnce(); sweepAll() }
                 override def abort(messages: Array[WriterCommitMessage]): Unit =
                   try dBatch.abort(messages)
-                  finally { releaseOnce(); sweepStaging() }
+                  finally { releaseOnce(); sweepAll() }
               }
             }
           }
         }
       }
     }
-}
-
-/** Snapshot with PENDING merge-on-read position deletes
-  * (TableIO.deleteWhereMOR): every read must anti-join the delete
-  * positions, which a DSv2 parquet scan cannot express — so reads go
-  * through Spark's V1 read bridge ([[org.apache.spark.sql.connector
-  * .read.V1Scan]], the same fallback JDBC catalog tables use): the
-  * scan materializes as `TableIO.readVersion`'s deletes-merged frame
-  * (clean files on the codegen parquet path, only dirty files pay the
-  * broadcast anti-join), with required-column pruning applied to the
-  * frame. This table is the TRANSIENT state between a MOR delete and
-  * `applyDeletes` — once the prop clears, loadTable serves the normal
-  * pure-scan GraftTable again.
-  *
-  * Writes: INSERT INTO appends through TableIO.append, which carries
-  * the pending-deletes prop (deleted rows stay deleted); INSERT
-  * OVERWRITE replaces the file list, clearing it. Copy-on-write
-  * row-level ops refuse loudly — their rewrite scans raw files and
-  * would resurrect deleted rows.
-  */
-private[io] class GraftMorTable(
-    tableName: String,
-    cat: TableCatalog,
-    delegate: ParquetTable,
-    partitionCols: Seq[String],
-    declaredSchema: Option[StructType],
-    renames: Map[String, String],
-    pspec: Seq[PartitionTransform],
-    writeRef: Ref,
-    version: Int,
-    // the chain this dirty snapshot belongs to; the merged read
-    // resolves against that chain's props
-    morRef: Ref = Ref.Main
-) extends GraftTable(tableName, cat, delegate, partitionCols, declaredSchema, renames,
-    pspec, writeRef) {
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: Option[StructType] = None
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = Some(requiredSchema)
-      override def build(): Scan = new org.apache.spark.sql.connector.read.V1Scan
-          with MorStreamRefusal {
-        override def morTableName: String = tableName
-        private val full = schema()
-        private val read = required.getOrElse(full)
-        override def morStreamSource: Option[(TableCatalog, StructType, CaseInsensitiveStringMap)] =
-          if (renames.isEmpty && morRef == Ref.Main &&
-              partitionCols.forall(_.startsWith(PartitionTransforms.Prefix)))
-            // the PRUNED read schema, like the clean path: a
-            // column-pruned stream must serve rows in its scan's own
-            // shape, or ordinals misalign downstream
-            Some((cat, read, options))
-          else None
-        override def readSchema(): StructType = read
-        override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-            with org.apache.spark.sql.sources.TableScan](
-            ctx: org.apache.spark.sql.SQLContext): T =
-          new org.apache.spark.sql.sources.BaseRelation
-            with org.apache.spark.sql.sources.TableScan {
-            override def sqlContext: org.apache.spark.sql.SQLContext = ctx
-            override def schema: StructType = read
-            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val spark = ctx.sparkSession
-              val df = new TableIO(spark, cat).readVersion(tableName, version, morRef)
-              // empty required schema = count(*)-style scan: rows, no
-              // columns (select() keeps the row count)
-              df.select(read.fields.toSeq
-                .map(f => org.apache.spark.sql.functions.col(f.name)): _*).rdd
-            }
-          }.asInstanceOf[T]
-      }
-    }
-
-  /** COW DELETE over pending position deletes would read raw files and
-    * resurrect rows — refuse with the recovery step. (`canDeleteWhere`
-    * stays permissive so the command reaches this message instead of a
-    * generic fallback error.)
-    */
-  override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
-    throw new UnsupportedOperationException(
-      s"$tableName has pending position deletes (merge-on-read): run " +
-        "CALL <catalog>.system.apply_deletes first, or use TableIO.deleteWhereMOR " +
-        "to stack another metadata-only delete")
+  }
 }
 
 /** Streaming refusal for a dirty snapshot's V1-bridge scan: the
@@ -1535,244 +1507,6 @@ private[io] trait MorStreamRefusal extends Scan {
     }
 }
 
-/** [[GraftMorTable]] for an UNPARTITIONED dirty snapshot: SQL UPDATE /
-  * MERGE / DELETE run as a file-scoped copy-on-write rewrite over the
-  * deletes-MERGED frame (Iceberg's COW-over-MOR behavior — a CDC user
-  * must not have to `apply_deletes` before row-level SQL DML).
-  * Structure mirrors the clean twin ([[GraftRowOpsTable]]) with three
-  * deliberate differences:
-  *
-  *  1. The rewrite scan cannot hand Spark raw parquet for DIRTY
-  *     candidate files — their MOR-deleted rows would flow into the
-  *     replacement write and resurrect. And the group-based rewrite
-  *     planner builds its `DataSourceV2ScanRelation` directly (no
-  *     `V1ScanWrapper`), so the SELECT path's V1 bridge is unusable
-  *     here. Instead, the scan MATERIALIZES the dirty candidates'
-  *     deletes-merged rows into a private staging dir (one bounded
-  *     distributed write — O(dirty candidate bytes), never O(table))
-  *     and scans clean candidates + staged files on the normal DSv2
-  *     parquet path, keeping file-granularity group semantics.
-  *  2. The commit CONSUMES the delete entries of rewritten files in
-  *     the same snapshot (their replacement rows are already merged)
-  *     and carries entries scoped to carried-over files, trimmed via
-  *     [[TableIO.trimDeletesForRewrite]]; all entries consumed =
-  *     the snapshot commits clean and loadTable serves the pure-scan
-  *     table again.
-  *  3. Everything pins the dirty snapshot `version` loadTable planned
-  *     against — manifest, pending entries, and the commit at
-  *     `version + 1` — so any concurrent commit surfaces as
-  *     [[ConcurrentCommitException]], never a lost update.
-  *
-  * `canDeleteWhere` answers false so SQL DELETE routes here (the
-  * group-based rewrite) instead of [[GraftMorTable]]'s raw-file COW
-  * refusal. A WAP branch session refuses loudly: branch manifests and
-  * main-snapshot delete props have no pinned pairing yet.
-  */
-private[io] class GraftMorRowOpsTable(
-    tableName: String,
-    cat: TableCatalog,
-    delegate: ParquetTable,
-    declaredSchema: Option[StructType],
-    renames: Map[String, String],
-    writeRef: Ref,
-    version: Int
-) extends GraftMorTable(tableName, cat, delegate, Seq.empty, declaredSchema, renames,
-    Seq.empty, writeRef, version)
-  with SupportsRowLevelOperations {
-
-  override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    false // route DELETE to the merged rewrite below, not the raw-COW path
-
-  override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder = {
-    if (writeRef != Ref.Main)
-      throw new UnsupportedOperationException(
-        s"$tableName has pending merge-on-read deletes and the session writes to WAP " +
-          s"${writeRef.describe(tableName)}: ${info.command()} over a dirty snapshot " +
-          "is not supported — run applyDeletes first, or clear spark.wap.branch")
-    new RowLevelOperationBuilder {
-      override def build(): RowLevelOperation = new RowLevelOperation {
-        // manifest + pending entries of the PINNED dirty snapshot —
-        // one consistent pair; the commit re-validates the pin
-        private val pending = cat.pendingDeletes(tableName, version)
-        private def norm(p: String): String =
-          java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-        @volatile private var carriedOver: Seq[String] = Seq.empty
-        // staging dir holding the dirty candidates' merged rows for the
-        // rewrite scan — swept with the write staging on commit/abort
-        @volatile private var scanStaging: Option[java.nio.file.Path] = None
-
-        override def command(): RowLevelOperation.Command = info.command()
-        override def description(): String =
-          s"graft merged copy-on-write ${info.command()} (pending MOR deletes)"
-
-        override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-          new ScanBuilder with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-            private val allFiles = cat.manifest(tableName, version)
-            private var chosen: Seq[String] = allFiles
-            private val toLogicalName = renames.map(_.swap)
-
-            override def pushFilters(
-                filters: Array[org.apache.spark.sql.sources.Filter]
-            ): Array[org.apache.spark.sql.sources.Filter] = {
-              // same conservative driver-side partition as the clean
-              // twin: stats can't-match → carried verbatim. For dirty
-              // files the stats describe RAW rows (deleted included) —
-              // a superset, so can't-match stays safe.
-              val (pruned, scanned) =
-                try {
-                  val conf = SparkSession.active.sessionState.newHadoopConf()
-                  allFiles.partition { f =>
-                    val stats = FileStats.cached(f, conf)
-                      .map { case (k, v) => toLogicalName.getOrElse(k, k) -> v }
-                    !FileStats.mightMatch(stats, filters.toSeq)
-                  }
-                } catch { case scala.util.control.NonFatal(_) => (Seq.empty, allFiles) }
-              chosen = scanned
-              carriedOver = pruned
-              filters // rows are filtered by the rewrite's projection, not the scan
-            }
-            override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-              Array.empty
-
-            override def build(): Scan = {
-              val spark = SparkSession.active
-              val dirtySet = pending.flatMap(_.dirtyFiles).map(norm).toSet
-              val (dirtyChosen, cleanChosen) = chosen.partition(f => dirtySet(norm(f)))
-              val scanFiles =
-                if (dirtyChosen.isEmpty) cleanChosen
-                else {
-                  // one distributed write of the dirty candidates'
-                  // merged rows (PHYSICAL column names, like every
-                  // data file) into a private staging dir
-                  val io = new TableIO(spark, cat)
-                  val merged = io.mergeDeletes(tableName, dirtyChosen, pending)
-                  val physical = renames.foldLeft(merged) { case (df, (l, p)) =>
-                    df.withColumnRenamed(l, p)
-                  }
-                  // a REPLAN re-stages: reclaim the superseded dir now
-                  // instead of waiting out the age-guarded orphan GC
-                  scanStaging.foreach(TableIO.sweepDir)
-                  val stage = TableIO.newStagingDir(cat.pathOf(tableName))
-                  scanStaging = Some(stage)
-                  val out = stage.resolve("merged")
-                  // a failed materialization must not leak its dir —
-                  // this is the planning-side failure window the
-                  // write-side sweepAll can never reach (the write is
-                  // only constructed after planning succeeds). A plan
-                  // abandoned between here and write construction is
-                  // the one remaining leak shape; the age-guarded
-                  // orphan GC reclaims it.
-                  val staged =
-                    try {
-                      physical.write.parquet(out.toString)
-                      scala.util.Using.resource(
-                        java.nio.file.Files.list(out)) { s =>
-                        s.iterator().asScala.map(_.toString)
-                          .filter(_.endsWith(".parquet")).toSeq.sorted
-                      }
-                    } catch {
-                      case e: Throwable =>
-                        TableIO.sweepDir(stage)
-                        scanStaging = None
-                        throw e
-                    }
-                  cleanChosen ++ staged
-                }
-              // staged files live OUTSIDE the data dir: the delegate's
-              // basePath option would reject them (and an unpartitioned
-              // table needs no partition discovery) — drop it
-              val scanOptions = new CaseInsensitiveStringMap(
-                (delegate.options.asScala.toMap - "basepath").asJava)
-              // fully-pruned: no footers to infer from (see the clean
-              // twin) — carry the delegate's schema
-              val schemaForScoped = delegate.userSpecifiedSchema
-                .orElse(if (scanFiles.isEmpty) Some(delegate.schema) else None)
-              val scanTable = ParquetTable(s"${delegate.name}#morscoped", spark,
-                scanOptions, scanFiles, schemaForScoped,
-                classOf[ParquetFileFormat])
-              val ds = scanTable.newScanBuilder(options).build()
-              new Scan {
-                override def readSchema(): StructType = {
-                  val s = ds.readSchema()
-                  StructType(s.fields.map(f =>
-                    toLogicalName.get(f.name).map(l => f.copy(name = l)).getOrElse(f)))
-                }
-                override def toBatch: Batch = ds.toBatch
-                override def description(): String = ds.description()
-              }
-            }
-          }
-
-        override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
-          override def build(): Write = new Write {
-            override def toBatch: BatchWrite = {
-              val physInfo: LogicalWriteInfo = new LogicalWriteInfo {
-                override def options(): CaseInsensitiveStringMap = winfo.options()
-                override def queryId(): String = winfo.queryId()
-                override def schema(): StructType = StructType(winfo.schema().fields.map(f =>
-                  renames.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
-                override def rowIdSchema(): java.util.Optional[StructType] =
-                  java.util.Optional.empty()
-                override def metadataSchema(): java.util.Optional[StructType] =
-                  java.util.Optional.empty()
-              }
-              // private per-write staging, claimed by explicit move —
-              // same protocol (and same reasons) as the clean twin
-              val staging = TableIO.newStagingDir(cat.pathOf(tableName))
-              val writeTable = ParquetTable(
-                s"${delegate.name}#morrewrite",
-                SparkSession.active,
-                winfo.options(),
-                Seq(staging.toString),
-                userSpecifiedSchema = Some(physInfo.schema()),
-                fallbackFileFormat = classOf[ParquetFileFormat])
-              def sweepAll(): Unit = { TableIO.sweepDir(staging); scanStaging.foreach(TableIO.sweepDir) }
-              val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
-              val dBatch =
-                try writeTable.newWriteBuilder(physInfo).build().toBatch
-                catch { case e: Throwable => releaseOnce(); sweepAll(); throw e }
-              new BatchWrite {
-                override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-                  new ProjectToDataColsFactory(
-                    dBatch.createBatchWriterFactory(p), physInfo.schema())
-                override def useCommitCoordinator(): Boolean = dBatch.useCommitCoordinator()
-                override def onDataWriterCommit(m: WriterCommitMessage): Unit =
-                  dBatch.onDataWriterCommit(m)
-                override def commit(messages: Array[WriterCommitMessage]): Unit =
-                  try {
-                    val cur = cat.currentVersion(tableName)
-                    if (cur != Some(version))
-                      throw new ConcurrentCommitException(
-                        s"concurrent commit to $tableName during row-level ${info.command()}: " +
-                          s"planned against dirty snapshot $version but current is $cur; " +
-                          "re-run the command")
-                    dBatch.commit(messages)
-                    val dataRoot = java.nio.file.Paths.get(cat.dataPath(tableName))
-                    java.nio.file.Files.createDirectories(dataRoot)
-                    val newFiles = TableIO.moveStagedFiles(staging, dataRoot)
-                    // consumed entries clear HERE, in the same commit
-                    // as the replacement files; carried dirty files
-                    // keep theirs (trimmed)
-                    val io = new TableIO(SparkSession.active, cat)
-                    val props = io.trimDeletesForRewrite(tableName, pending, carriedOver)
-                    val conf = SparkSession.active.sessionState.newHadoopConf()
-                    cat.commitSnapshotAt(tableName, carriedOver ++ newFiles, version + 1,
-                      props,
-                      stats = cat.statsForCommit(tableName, carriedOver, newFiles, conf))
-                    ()
-                  } finally { releaseOnce(); sweepAll() }
-                override def abort(messages: Array[WriterCommitMessage]): Unit =
-                  try dBatch.abort(messages)
-                  finally { releaseOnce(); sweepAll() }
-              }
-            }
-          }
-        }
-      }
-    }
-  }
-}
-
 /** Read-path metadata file skipping (the SELECT-side use of
   * graft.io.FileStats): query filters are checked against each data
   * file's footer statistics at plan time and files that provably
@@ -1798,6 +1532,7 @@ private[io] class StatsPruningScanBuilder(
   with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
+  private val scope = FileScope(pspec, delegate.schema)
   private var current: ScanBuilder = delegate.newScanBuilder(options)
   private var prunedColumns: Option[StructType] = None
   // the post-pruning file list — what a bucket-keyed scan keys over
@@ -1829,23 +1564,7 @@ private[io] class StatsPruningScanBuilder(
   ): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     anyFilter = anyFilter || filters.nonEmpty
     val v1 = filters.flatMap(toV1)
-    val keep =
-      if (v1.isEmpty) delegate.paths
-      else {
-        // hidden-partition pruning FIRST (pure path arithmetic — no
-        // I/O), so partition-skipped files never pay a footer read in
-        // the stats pass below
-        val partKept =
-          if (pspec.isEmpty) delegate.paths
-          else
-            try delegate.paths.filter(f =>
-              PartitionTransforms.fileMightMatch(f, v1, pspec, delegate.schema))
-            catch { case scala.util.control.NonFatal(_) => delegate.paths }
-        try {
-          val conf = SparkSession.active.sessionState.newHadoopConf()
-          partKept.filter(f => FileStats.mightMatch(FileStats.cached(f, conf), v1))
-        } catch { case scala.util.control.NonFatal(_) => partKept }
-      }
+    val keep = delegate.paths.filter(scope.mightMatch(_, v1))
     keptFiles = keep
     if (keep.size < delegate.paths.size) {
       // a fully-pruned scan has no footers left to infer from — carry
@@ -1866,23 +1585,16 @@ private[io] class StatsPruningScanBuilder(
     // translated (a weakened And-translation must not back a claim),
     // excluded files provably empty of matches (that is what `keep`
     // established), and every kept non-empty file provably matches ALL
-    // its rows — per filter, by footer stats (mustMatchAll) OR by
-    // hidden-layout path arithmetic (fileMustMatchAll — the
-    // day-aligned predicate over a days() layout). Zero-row part files
-    // carry no column stats and no rows: exempt, not refusals.
+    // its rows — per filter, by footer stats OR by layout path
+    // arithmetic (the day-aligned predicate over a days() layout).
+    // Zero-row part files carry no column stats and no rows: exempt,
+    // not refusals.
     val v1Strict = filters.map(e => FilterTranslation.toV1(e, strict = true))
     val provenExact = filters.isEmpty || (v1Strict.forall(_.isDefined) && {
-      try {
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        val strict = v1Strict.flatten
-        keep.forall { f =>
-          strict.forall { flt =>
-            FileStats.mustMatchAll(FileStats.cached(f, conf), Seq(flt)) ||
-              (pspec.nonEmpty &&
-                PartitionTransforms.fileMustMatchAll(f, Seq(flt), pspec, delegate.schema))
-          } || FileStats.rowCount(f, conf) == 0L
-        }
-      } catch { case scala.util.control.NonFatal(_) => false }
+      val strict = v1Strict.flatten
+      lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+      try keep.forall(f => scope.mustMatchAll(f, strict) || FileStats.rowCount(f, conf) == 0L)
+      catch { case scala.util.control.NonFatal(_) => false }
     })
     exactPrune = exactPrune && provenExact
     // Under the proof, pruning IS the filter: drop it from the plan
@@ -1939,8 +1651,8 @@ private[io] class StatsPruningScanBuilder(
   // unit this layer doesn't verify, so both refuse); float/double
   // columns containing NaN get NO footer stats from parquet-mr and
   // thus refuse. Dirty MOR snapshots never reach this builder
-  // (GraftMorTable overrides newScanBuilder), so pending deletes
-  // cannot skew a count.
+  // (GraftTable serves them through its merged scan), so pending
+  // deletes cannot skew a count.
   private def aggFromStats(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Array[org.apache.spark.sql.catalyst.InternalRow])] = {
@@ -2149,7 +1861,7 @@ private[io] class StatsPruningScanBuilder(
     // exact manifest-rowCount statistics reporting; an empty attrs
     // list advertises nothing, so no runtime filter ever arrives
     val attrs = (pspec.map(_.src) ++ bloomCols).distinct
-    Some(RuntimeFileSkip(keptFiles, pspec, delegate.schema, attrs))
+    Some(RuntimeFileSkip(keptFiles, scope, attrs))
   }
 }
 
@@ -2192,10 +1904,10 @@ private[io] object GraftTable {
   import org.apache.spark.sql.functions.{col, lit}
   import org.apache.spark.sql.sources._
 
-  /** The copy-on-write rewrites read their candidate files RAW: over a
-    * base with pending merge-on-read deletes that resurrects the
-    * deleted rows — refuse, naming the recovery step (every raw-
-    * manifest consumer's rule).
+  /** A SQL row-level command over a base with pending merge-on-read
+    * deletes that loadTable did not admit (a partitioned or branch
+    * snapshot, or one served as clean): refuse, naming the recovery
+    * step.
     */
   def requireClean(cat: TableCatalog, table: String, v: Int, ref: Ref, command: String): Unit =
     require(cat.pendingDeletes(table, v, ref).isEmpty,

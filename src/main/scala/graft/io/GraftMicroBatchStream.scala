@@ -402,8 +402,8 @@ private[io] trait GraftStreamableScan extends Scan {
 }
 
 /** What a scan needs to RUNTIME-skip whole files (DSv2 dynamic
-  * pruning): the planned file list, the hidden partition spec, the
-  * schema the transforms read, and the columns worth advertising —
+  * pruning): the planned file list, the table's file scope, and the
+  * columns worth advertising —
   * hidden-transform SOURCE columns (path arithmetic skips, no I/O)
   * and bloom-indexed columns (point-lookup skips range stats can't
   * make). Plain range stats on arbitrary columns are deliberately NOT
@@ -412,8 +412,7 @@ private[io] trait GraftStreamableScan extends Scan {
   */
 private[io] final case class RuntimeFileSkip(
     files: Seq[String],
-    pspec: Seq[PartitionTransform],
-    schema: StructType,
+    scope: FileScope,
     attrs: Seq[String])
 
 /** Observability for specs and plan audits: per-scan (kept, total)
@@ -525,19 +524,10 @@ private[io] class StreamableParquetScan(
 
   override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     runtime.foreach { r =>
-      try {
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        val keep = r.files.filter { f =>
-          FileStats.mightMatch(FileStats.cached(f, conf), filters.toSeq) &&
-            (r.pspec.isEmpty ||
-              PartitionTransforms.fileMightMatch(f, filters.toSeq, r.pspec, r.schema))
-        }
-        lastRuntimeSkip = Some((keep.size, r.files.size))
-        runtimeKeep = Some(keep.map(normalize).toSet)
-      } catch {
-        // a failed skip evaluation keeps every file — never wrong rows
-        case scala.util.control.NonFatal(_) => runtimeKeep = None
-      }
+      // the file scope is total: a failed skip evaluation keeps the file
+      val keep = r.files.filter(r.scope.mightMatch(_, filters.toSeq))
+      lastRuntimeSkip = Some((keep.size, r.files.size))
+      runtimeKeep = Some(keep.map(normalize).toSet)
     }
     inner match {
       case f: org.apache.spark.sql.connector.read.SupportsRuntimeFiltering => f.filter(filters)

@@ -521,6 +521,31 @@ private[io] object FilterTranslation {
       e: org.apache.spark.sql.catalyst.expressions.Expression
   ): Option[org.apache.spark.sql.sources.Filter] = toV1(e, strict = false)
 
+  /** A programmatic condition as v1 filters under `schema`'s (logical)
+    * names: resolved and constant-folded against an EMPTY probe of the
+    * schema — what a DSv2 pushdown would see, with no scan for the
+    * optimizer to push the predicate into. The first result keeps
+    * whatever translates (sound for might-match skipping); the second
+    * is defined only when the WHOLE condition translated strictly, the
+    * licence a must-match proof needs. A condition that fails to
+    * resolve translates to nothing.
+    */
+  def ofCondition(schema: StructType, cond: org.apache.spark.sql.Column)
+      : (Seq[org.apache.spark.sql.sources.Filter], Option[Seq[org.apache.spark.sql.sources.Filter]]) =
+    try {
+      val spark = org.apache.spark.sql.SparkSession.active
+      val probe = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).filter(cond)
+      val conds = probe.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
+      val strict = conds.map(toV1(_, strict = true))
+      // no Filter node left proves nothing: the optimizer drops a
+      // constant-false condition along with its Filter
+      (conds.flatMap(toV1(_)),
+        if (conds.nonEmpty && strict.forall(_.isDefined)) Some(strict.flatten) else None)
+    } catch { case scala.util.control.NonFatal(_) => (Seq.empty, None) }
+
   /** `strict = false` (pruning): a partially-translated conjunction
     * yields the translated side — a WEAKER constraint, sound for
     * might-match skipping. `strict = true` (exact-prune claims): any

@@ -1413,42 +1413,58 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     */
   def readWhere(name: String, cond: org.apache.spark.sql.Column): DataFrame = {
     val v = catalog.head(name)
-    val files = catalog.manifest(name, v)
-    val kept = pruneForCondition(name, files, cond, catalog.statsOrEmpty(name, v))
+    val kept = scopeFor(name, v, Ref.Main, cond).touched
     // pending position deletes apply to whatever survived pruning —
     // the merge is file-scoped, so a fully-pruned dirty file costs
     // nothing
     mergeDeletes(name, kept, catalog.pendingDeletes(name, v)).filter(cond)
   }
 
-  /** Plan-time file pruning for a programmatic predicate: resolve +
-    * constant-fold `cond` against a probe frame (so the translation
-    * sees exactly what a DSv2 pushdown would), translate to v1
-    * filters, and keep only files the hidden partition layout and the
-    * manifest column stats cannot rule out. Conservative everywhere —
-    * an untranslatable predicate keeps every file.
+  /** The table's [[FileScope]] over `files` under the logical read
+    * `schema`: its hidden spec, else the Hive identity dirs every file
+    * shares (a mixed layout proves nothing by directory).
     */
-  private def pruneForCondition(name: String, files: Seq[String],
-                                cond: org.apache.spark.sql.Column,
-                                stats: Map[String, Map[String, FileStats.ColStats]]): Seq[String] = {
-    if (files.isEmpty) return files
-    val probe = readFiles(name, files).filter(cond)
-    val v1 = Timers.time("dml.pruneProbe")(probe.queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.flatMap(FilterTranslation.toV1))
-    if (v1.isEmpty) files
-    else {
-      val specs = catalog.readMeta(name).partitionSpec.map(PartitionTransforms.parse)
-      val schema = probe.schema // logical schema for source types
-      val partKept =
-        if (specs.isEmpty) files
-        else files.filter(f =>
-          PartitionTransforms.fileMightMatch(f, v1, specs, schema))
-      lazy val conf = spark.sessionState.newHadoopConf()
-      try partKept.filter { f =>
-        val s = stats.getOrElse(f, FileStats.cached(f, conf))
-        FileStats.mightMatch(s, v1)
-      } catch { case scala.util.control.NonFatal(_) => partKept }
+  private def fileScopeOf(name: String, files: Seq[String],
+                          schema: org.apache.spark.sql.types.StructType): FileScope = {
+    val meta = catalog.readMeta(name)
+    val specs = meta.partitionSpec.map(PartitionTransforms.parse)
+    FileScope(
+      if (specs.nonEmpty) specs else sharedLayoutOf(name, files).map(PartitionTransforms.Identity),
+      schema, meta.renames)
+  }
+
+  /** A snapshot scoped for a predicate: every file split by
+    * [[FileScope]] into `carried` (provably no matching row), `covered`
+    * (provably every row matches; computed only on request) and the
+    * remaining `candidates`; `conflicts` asks a racer's new file the
+    * same might-match question.
+    */
+  private final class Scoped(val carried: Seq[String], val covered: Seq[String],
+                              val candidates: Seq[String], val conflicts: String => Boolean) {
+    def touched: Seq[String] = covered ++ candidates
+  }
+
+  /** Scope `ref`'s snapshot `v` for `cond` — translated once
+    * ([[FilterTranslation.ofCondition]]) unless the caller already holds
+    * the command's exact v1 `filters` (SQL DELETE's pushed filters).
+    * `prove` computes the covered tier (DELETE's metadata-only drop).
+    * Timed under `dml.pruneProbe`.
+    */
+  private def scopeFor(name: String, v: Int, ref: Ref, cond: org.apache.spark.sql.Column,
+                       filters: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
+                       prove: Boolean = false): Scoped = {
+    val files = catalog.manifest(name, v, ref)
+    if (files.isEmpty) return new Scoped(Seq.empty, Seq.empty, Seq.empty, _ => true)
+    Timers.time("dml.pruneProbe") {
+      FileStats.prime(catalog.statsOrEmpty(name, v, ref))
+      val schema = readFiles(name, files).schema
+      val (might, exact) = filters.fold(FilterTranslation.ofCondition(schema, cond))(fs => (fs, Some(fs)))
+      val scope = fileScopeOf(name, files, schema)
+      val (touched, carried) = files.partition(scope.mightMatch(_, might))
+      val (covered, candidates) =
+        if (prove) touched.partition(f => exact.exists(scope.mustMatchAll(f, _)))
+        else (Seq.empty, touched)
+      new Scoped(carried, covered, candidates, scope.mightMatch(_, might))
     }
   }
 
@@ -1499,15 +1515,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     mergeDeletes(name, catalog.manifest(name, version, ref),
       catalog.pendingDeletes(name, version, ref))
 
-  /** Deletes-merged read of `files`: files a pending delete entry
-    * covers are scanned WITH their position bookkeeping columns and
-    * anti-joined against the (broadcast) delete-position set; all
-    * other files scan on the plain path and union in. The delete set
-    * is small by design — it grows with rows DELETED since the last
-    * [[applyDeletes]], never with the table — so the broadcast is the
-    * right plan; a workload that accumulates huge pending deletes
-    * should applyDeletes, which restores the pure-scan plan entirely.
-    */
   /** Row bound above which a MOR delete/key write is SHARDED (shuffle
     * by dirty-file key / equality key) instead of coalesced into one
     * file. The one-file path is right for the designed regime — a
@@ -1545,34 +1552,19 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     }
     val trimmed = entries.flatMap { e =>
       val kept = e.dirtyFiles.filter(f => carriedSet(norm(f)))
-      if (kept.isEmpty) None
+      if (kept.isEmpty) Seq.empty
       else if (e.isEquality || kept.size == e.dirtyFiles.size)
-        Some(TableCatalog.DeleteEntry(rel(e.deleteFile), kept.map(rel), e.eqKeyCols))
+        Seq(TableCatalog.DeleteEntry(rel(e.deleteFile), kept.map(rel), e.eqKeyCols))
       else {
         val keptKeys = kept.map(f => TableIO.fileKeyOf(root, f))
-        val outDir = Paths.get(catalog.pathOf(name), "deletes",
-          java.util.UUID.randomUUID().toString.take(12))
-        spark.read.schema("gd_file STRING, gd_pos BIGINT").parquet(e.deleteFile)
+        val rows = spark.read.schema("gd_file STRING, gd_pos BIGINT").parquet(e.deleteFile)
           .filter(col("gd_file").isin(keptKeys: _*))
-          .coalesce(1).write.parquet(outDir.toString)
         // a SHARDED delete set lists every dirty file on every shard
         // entry, so a shard may hold zero positions for the carried
-        // files — drop the phantom entry (and its empty parquet)
-        // instead of carrying a no-op anti-join and a misleading
-        // .deletes row
-        val trimmedRows = spark.read.parquet(outDir.toString).count()
-        if (trimmedRows == 0) {
-          TableIO.sweepDir(outDir)
-          None
-        } else {
-          val delFile = Using.resource(Files.list(outDir)) { s =>
-            s.iterator().asScala.map(_.toString)
-              .filter(_.endsWith(".parquet")).toSeq.sorted.headOption
-              .getOrElse(throw new IllegalStateException(
-                s"trimmed delete write for $name produced no parquet under $outDir"))
-          }
-          Some(TableCatalog.DeleteEntry(rel(delFile), kept.map(rel)))
-        }
+        // files — drop the phantom entry instead of carrying a no-op
+        // anti-join and a misleading .deletes row
+        val n = rows.count()
+        if (n == 0) Seq.empty else writeDeleteSet(name, rows, n, "gd_file", kept.map(rel))
       }
     }
     if (trimmed.isEmpty) Map.empty
@@ -1580,9 +1572,14 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   }
 
   /** Deletes-merged read of an explicit file subset (no entries = a
-    * plain scan) — also the door for the DSv2 row-level rewrite over a
-    * dirty snapshot ([[GraftMorRowOpsTable]]): the rewrite scans
-    * exactly its candidate files, merged, so a COW UPDATE/MERGE can
+    * plain scan): files a pending delete entry covers are scanned WITH
+    * their position bookkeeping columns and anti-joined against the
+    * (broadcast) delete set; all other files scan on the plain path and
+    * union in. The delete set is small by design — it grows with rows
+    * DELETED since the last [[applyDeletes]], never with the table — so
+    * the broadcast is the right plan. Every copy-on-write rewrite reads
+    * its candidates through here (the programmatic/SQL DELETE executor
+    * and the SQL row-level scan over a dirty snapshot), so a rewrite can
     * never resurrect MOR-deleted rows.
     */
   private[io] def mergeDeletes(name: String, files: Seq[String],
@@ -2087,7 +2084,11 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * apply) — rebasing is order-equivalent, rebase freely.
     *
     * Only main rebases ([[Ref.rebases]]): a branch replacement that
-    * lost its pinned commit refuses with the conflict.
+    * lost its pinned commit refuses with the conflict. And a replacement
+    * whose `props` carry pending deletes (the trimmed entries of a
+    * rewrite over a dirty base) never rebases: its deletes prop was
+    * computed against the pinned base and would overwrite the racer's
+    * entries — it refuses, and the caller re-runs.
     */
   private[io] def commitReplacementFiles(name: String, keepFiles: Seq[String],
                                          newFiles: Seq[String], baseVersion: Int,
@@ -2115,7 +2116,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       } catch {
         case e: ConcurrentCommitException =>
           attempt += 1
-          if (attempt > 5 || !ref.rebases) throw e
+          if (attempt > 5 || !ref.rebases || props.contains(TableCatalog.DeletesProp)) throw e
           // replay guard (see writeLocked): the racer may BE this batch
           if (streamBatchId.exists(id =>
               catalog.streamBatchMark(name, streamMark.get._1, ref).exists(_ >= id)))
@@ -2143,7 +2144,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           // row-removing commands): a racer-ADDED file that might hold
           // predicate-matching rows must not ride the rebase
           newcomerConflicts.foreach { mayConflict =>
-            val conflicting = curFiles.filter(f => !baseSet(norm(f)) && mayConflict(f))
+            val conflicting = Timers.time("dml.conflictProbe")(
+              curFiles.filter(f => !baseSet(norm(f)) && mayConflict(f)))
             if (conflicting.nonEmpty)
               throw new ConcurrentCommitException(
                 s"concurrent commit to $name: a racing writer added ${conflicting.size} " +
@@ -2165,7 +2167,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * snapshot is the base manifest minus the dropped files — nothing
     * is read, nothing is written. Callers have already PROVEN every
     * row of every dropped file matches the predicate
-    * ([[FileStats.mustMatchAll]]); dropped files stay on disk for time
+    * ([[FileScope.mustMatchAll]]); dropped files stay on disk for time
     * travel until snapshot expiry + GC, like any logical overwrite.
     * No `graft.op` stamp: this removes DATA, so changelog/stream
     * consumers must treat it exactly like a COW delete commit.
@@ -2173,52 +2175,53 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   private[graft] def commitMetadataDelete(name: String, keepFiles: Seq[String],
                                           baseVersion: Int,
                                           newcomerConflicts: Option[String => Boolean] = None,
-                                          ref: Ref = Ref.Main): Unit =
+                                          ref: Ref = Ref.Main,
+                                          props: Map[String, String] = Map.empty): Unit =
     catalog.locked(name) {
-      commitReplacementFiles(name, keepFiles, Seq.empty, baseVersion, Map.empty,
+      commitReplacementFiles(name, keepFiles, Seq.empty, baseVersion, props,
         newcomerConflicts, ref)
       ()
     }
 
-  /** Conflict-detection predicate for [[commitReplacement]]'s rebase:
-    * "might this file hold rows `cond` selects?" — the command's
-    * condition translated ONCE to v1 filters (via an analyzed probe,
-    * like [[pruneForCondition]]) and evaluated per file against
-    * footer/manifest stats plus hidden-layout path arithmetic.
-    * Untranslatable conditions degrade to every-file-conflicts —
-    * conservative: a refused rebase re-runs, never wrong rows.
+  /** THE copy-on-write row-level executor, shared by [[deleteWhere]],
+    * [[updateWhere]] and SQL `DELETE FROM` (GraftTable.deleteWhere).
+    * Scoped by [[scopeFor]]: files the predicate provably cannot touch
+    * carry into the new manifest verbatim; with `dropCovered` (DELETE)
+    * files whose every row provably matches drop as METADATA ONLY —
+    * nothing read, nothing written (Iceberg's metadata delete); only the
+    * remaining candidates are read deletes-merged, passed through
+    * `rewrite` (plus the table's checks and write order) and committed
+    * as their replacement under the table's layout. Over a dirty base
+    * the replaced files' pending entries are consumed (their rows were
+    * read merged) and the carried files' entries ride the commit
+    * trimmed ([[trimDeletesForRewrite]]). Pinned at `baseVersion` (the
+    * head by default) with the command's conflict-detection filter — see
+    * [[commitReplacementFiles]]. Nothing touched = a no-op, no snapshot.
     */
-  private def conflictFnFor(name: String, cond: org.apache.spark.sql.Column)
-      : String => Boolean = {
-    // ANALYZED plan, not optimized: optimization can push the whole
-    // predicate into the DSv2 scan, leaving no Filter node to scrape —
-    // every concurrent append (even provably disjoint) would then
-    // refuse the rebase (r20 advice: a liveness regression under
-    // write-heavy concurrency). The analyzed tree always carries the
-    // Filter, translation is identical, and skipping the optimizer
-    // run makes the probe ~an analysis instead of a full optimize per
-    // row-removing DML.
-    val v1: Seq[org.apache.spark.sql.sources.Filter] =
-      try Timers.time("dml.conflictProbe") {
-        val probe = read(name).filter(cond)
-        def filtersOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-          p.collect {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-          }.flatMap(FilterTranslation.toV1)
-        val direct = filtersOf(probe.queryExecution.analyzed)
-        if (direct.nonEmpty) direct
-        else filtersOf(probe.queryExecution.optimizedPlan)
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    if (v1.isEmpty) (_: String) => true // unknown predicate: refuse every newcomer
+  private[io] def rewriteWhere(name: String, cond: org.apache.spark.sql.Column, ref: Ref,
+                               partitionCols: Seq[String], dropCovered: Boolean,
+                               filters: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
+                               baseVersion: Option[Int] = None)
+                              (rewrite: DataFrame => DataFrame): Unit = {
+    val v = baseVersion.getOrElse(catalog.head(name, ref))
+    val s = scopeFor(name, v, ref, cond, filters, prove = dropCovered)
+    if (s.touched.isEmpty) return
+    val pending = catalog.pendingDeletes(name, v, ref)
+    val props =
+      if (pending.isEmpty) Map.empty[String, String]
+      else trimDeletesForRewrite(name, pending, s.carried)
+    if (s.candidates.isEmpty)
+      commitMetadataDelete(name, s.carried, v, Some(s.conflicts), ref, props)
     else {
-      val specs = catalog.readMeta(name).partitionSpec.map(PartitionTransforms.parse)
-      lazy val schema = read(name).schema
-      (f: String) =>
-        try {
-          val conf = spark.sessionState.newHadoopConf()
-          FileStats.mightMatch(FileStats.cached(f, conf), v1) &&
-            (specs.isEmpty || PartitionTransforms.fileMightMatch(f, v1, specs, schema))
-        } catch { case scala.util.control.NonFatal(_) => true }
+      // replacements keep the table's layout: the hidden spec derives
+      // its own, a Hive layout its dir columns (a mixed one writes flat)
+      val pcols =
+        if (partitionCols.nonEmpty || catalog.readMeta(name).partitionSpec.nonEmpty) partitionCols
+        else sharedLayoutOf(name, s.carried ++ s.touched)
+      val out = rewrite(mergeDeletes(name, s.candidates, pending))
+      commitReplacement(applyWriteOrder(applyChecks(out, name), name), name, s.carried, pcols,
+        v, props, Some(s.conflicts), ref)
+      ()
     }
   }
 
@@ -2229,10 +2232,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     *
     * Scale shape — this is where the stats/bloom layer pays off for
     * writes: the batch's key set becomes an IN filter evaluated
-    * against each file's manifest stats (`FileStats.mightMatch`,
-    * min/max AND the optional per-file bloom from [[addBloomIndex]]),
-    * so only files that can possibly hold an affected key are read and
-    * rewritten — a 1000-key batch against a 100k-file table rewrites
+    * against the table's [[FileScope]] (manifest stats — min/max AND
+    * the optional per-file bloom from [[addBloomIndex]] — plus layout
+    * dirs), so only files that can possibly hold an affected key are
+    * read and rewritten — a 1000-key batch against a 100k-file table rewrites
     * a handful of files, not the table. Conservative everywhere: key
     * sets above `maxScopedKeys` (driver-collect bound) or stats-less
     * files degrade to rewriting more files, never to wrong rows.
@@ -2300,7 +2303,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         s"upsert into $name: snapshot $v has pending position deletes — " +
           "run applyDeletes first")
       val files = catalog.manifest(name, v)
-      val conf = spark.sessionState.newHadoopConf()
       val manifestStats = catalog.statsOrEmpty(name, v)
       FileStats.prime(manifestStats)
       // scoping (computed by the fused probe above) is by the FIRST
@@ -2321,8 +2323,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         case None => (Seq.empty[String], files) // unscoped: rewrite-all fallback
         case Some(vals) =>
           val filter = Seq(org.apache.spark.sql.sources.In(keyCols.head, vals))
-          try files.partition(f => !FileStats.mightMatch(FileStats.cached(f, conf), filter))
-          catch { case scala.util.control.NonFatal(_) => (Seq.empty[String], files) }
+          val scope = fileScopeOf(name, files, pinned.schema)
+          Timers.time("dml.pruneProbe")(files.partition(f => !scope.mightMatch(f, filter)))
       }
       // the cached batch's partition layout (e.g. 32 post-shuffle
       // partitions of a streaming micro-batch) bypasses AQE
@@ -2534,9 +2536,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * -> the duplicated-rows-after-overwritePartition hazard this
     * helper exists to prevent).
     */
-  private def layoutPartitionColsOf(name: String, files: Seq[String]): Seq[String] = {
-    val layouts = files.map(f => partitionKeyOf(name, f).map(_.takeWhile(_ != '='))).distinct
-    layouts match {
+  private def layoutPartitionColsOf(name: String, files: Seq[String]): Seq[String] =
+    layoutsOf(name, files) match {
       case Seq() => Seq.empty
       case Seq(one) => one
       case many => throw new IllegalStateException(
@@ -2544,7 +2545,19 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           s"(${many.map(l => if (l.isEmpty) "<flat>" else l.mkString("/")).mkString(", ")}); " +
           "pass partitionCols explicitly to choose the rewrite layout")
     }
-  }
+
+  /** The Hive layout every file of `files` shares — empty for a flat or
+    * a mixed set (a file scope then proves nothing by directory, and a
+    * row-level rewrite writes flat, as it always did).
+    */
+  private def sharedLayoutOf(name: String, files: Seq[String]): Seq[String] =
+    layoutsOf(name, files) match {
+      case Seq(one) => one
+      case _ => Seq.empty
+    }
+
+  private def layoutsOf(name: String, files: Seq[String]): Seq[Seq[String]] =
+    files.map(f => partitionKeyOf(name, f).map(_.takeWhile(_ != '='))).distinct
 
   /** Hive-style partition key of a data file: its `col=value` path
     * segments relative to the table's data dir (empty for
@@ -2705,10 +2718,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     require(catalog.pendingDeletes(name, v).isEmpty,
       s"compactWhere on $name: snapshot $v carries pending merge-on-read deletes — " +
         "run applyDeletes first (its rewrite already compacts the dirty files)")
-    val files = catalog.manifest(name, v)
-    val candidates = pruneForCondition(name, files, cond, catalog.statsOrEmpty(name, v))
+    val s = scopeFor(name, v, Ref.Main, cond)
+    val candidates = s.touched
     if (candidates.isEmpty) return 0
-    val kept = files.diff(candidates)
+    val kept = s.carried
     val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name)
     val out = clusterByLayout(readFiles(name, candidates), name, pcols, targetFiles)
     commitReplacement(out, name, kept, pcols, baseVersion = v,
@@ -2785,56 +2798,41 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       props = Map(TableCatalog.OpProp -> TableCatalog.OpRewrite))
   }
 
-  /** Copy-on-write row-level DELETE — the programmatic twin of SQL
-    * `DELETE FROM` through the DSv2 catalog: keep the rows the
-    * predicate does NOT select (a null-valued predicate keeps the row,
-    * per SQL) and commit the remainder as a logical overwrite. Deleted
-    * rows stay readable in prior snapshots.
+  /** Copy-on-write row-level DELETE — the same executor as SQL
+    * `DELETE FROM` ([[rewriteWhere]]): keep the rows the predicate does
+    * NOT select (a null-valued predicate keeps the row, per SQL) in
+    * the files it might touch, drop the files it provably covers, carry
+    * the rest. Deleted rows stay readable in prior snapshots. A racing
+    * append lands via rebase UNLESS its new files might hold matching
+    * rows — those must not silently survive a "successful" DELETE.
     */
   def deleteWhere(name: String, condition: org.apache.spark.sql.Column,
                   partitionCols: Seq[String] = Seq.empty, ref: Ref = Ref.Main): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    // PINNED at the scanned version with the serializable
-    // conflict-detection filter (r19 advice): a racing append lands
-    // via rebase UNLESS its new files might hold predicate-matching
-    // rows — those must not silently survive a "successful" DELETE.
-    // The blind-overwrite form would also drop a racer's files
-    // entirely (lost update); the pinned commit surfaces every
-    // overlap. Checks + write order ride along as on any write.
-    val v = catalog.head(name, ref)
-    val remaining = readVersion(name, v, ref).filter(not(coalesce(condition, lit(false))))
-    commitReplacement(applyWriteOrder(applyChecks(remaining, name), name),
-      name, Seq.empty, partitionCols, baseVersion = v,
-      newcomerConflicts = Some(conflictFnFor(name, condition)), ref = ref)
-    ()
+    rewriteWhere(name, condition, ref, partitionCols, dropCovered = true)(
+      _.filter(not(coalesce(condition, lit(false)))))
   }
 
   /** Copy-on-write row-level UPDATE: rows matching `condition` get the
     * `assignments` expressions applied (each may reference the row's
-    * current columns); all other rows pass through unchanged. One
-    * read-rewrite-commit like `deleteWhere`; MERGE INTO composes the
-    * same way with a join in front.
+    * current columns); all other rows pass through unchanged. Same
+    * executor as `deleteWhere`, minus the metadata-only tier: only the
+    * files the predicate might touch are read and rewritten.
     */
   def updateWhere(name: String, condition: org.apache.spark.sql.Column,
                   assignments: Map[String, org.apache.spark.sql.Column],
                   partitionCols: Seq[String] = Seq.empty, ref: Ref = Ref.Main): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    // pinned + conflict-checked like deleteWhere: a racer's appended
-    // rows matching the predicate must not dodge the UPDATE silently
-    val v = catalog.head(name, ref)
-    val cur = readVersion(name, v, ref)
-    assignments.keys.foreach(k =>
-      require(cur.columns.contains(k), s"no such column in $name: $k"))
     val cond = coalesce(condition, lit(false))
-    val updated = cur.select(cur.columns.toSeq.map { c =>
-      assignments.get(c)
-        .map(v => when(cond, v).otherwise(col(c)).as(c))
-        .getOrElse(col(c))
-    }: _*)
-    commitReplacement(applyWriteOrder(applyChecks(updated, name), name),
-      name, Seq.empty, partitionCols, baseVersion = v,
-      newcomerConflicts = Some(conflictFnFor(name, condition)), ref = ref)
-    ()
+    rewriteWhere(name, condition, ref, partitionCols, dropCovered = false) { cur =>
+      assignments.keys.foreach(k =>
+        require(cur.columns.contains(k), s"no such column in $name: $k"))
+      cur.select(cur.columns.toSeq.map { c =>
+        assignments.get(c)
+          .map(v => when(cond, v).otherwise(col(c)).as(c))
+          .getOrElse(col(c))
+      }: _*)
+    }
   }
 
   // ---- Merge-on-read position deletes (Iceberg's MOR DELETE).
@@ -2843,13 +2841,50 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   // per file. deleteWhereMOR instead writes a SMALL parquet of
   // (file key, row position) pairs and commits metadata-only: cost is
   // O(matched rows), data files are untouched byte-for-byte. Readers
-  // (readVersion/readWhere, and the SQL catalog via GraftMorTable)
+  // (readVersion/readWhere, and the SQL catalog's merged V1 scan)
   // anti-join the positions, file-scoped: only files with deletes pay
   // the merge. applyDeletes rewrites ONLY the dirty files —
   // O(dirty bytes), never O(table) — and restores the pure-scan plan.
   // Every raw-manifest consumer that can't merge refuses loudly
-  // instead of resurrecting rows: upsert, branch forks, the scoped
-  // COW rewrite (see their respective guards).
+  // instead of resurrecting rows: upsert, branch forks, compactWhere
+  // (see their respective guards); the copy-on-write DML executor reads
+  // its candidates merged.
+
+  /** Write one merge-on-read delete set — `(gd_file, gd_pos)` position
+    * pairs or equality key tuples (`eqKeyCols`, physical names) of `n`
+    * rows — under the table's `deletes/` dir, and return its entries:
+    * one per parquet file, each scoped to `dirty` (table-root-relative
+    * data-file keys). Small sets (the designed regime) write ONE file in
+    * one task through the single-file fast path (no commit protocol);
+    * above `spark.graft.mor.shardRows` the write repartitions by
+    * `shardCol` so a predicate matching millions of rows never
+    * serializes through a single task. Each file counts into the write
+    * audit ([[TableIO.filesWritten]]).
+    */
+  private def writeDeleteSet(name: String, rows: DataFrame, n: Long, shardCol: String,
+                             dirty: Seq[String],
+                             eqKeyCols: Seq[String] = Seq.empty): Seq[TableCatalog.DeleteEntry] = {
+    val dir = Paths.get(catalog.pathOf(name), "deletes",
+      java.util.UUID.randomUUID().toString.take(12))
+    if (n > morShardRows || !org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark))
+      (if (n > morShardRows) rows.repartition(col(shardCol)) else rows.coalesce(1))
+        .write.parquet(dir.toString)
+    else {
+      Files.createDirectories(dir)
+      org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
+        rows.coalesce(1), dir.toString, compression = None)
+    }
+    val files = Using.resource(Files.list(dir)) { s =>
+      s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+    }
+    require(files.nonEmpty, s"delete write for $name produced no parquet under $dir")
+    val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
+    files.map { f =>
+      TableIO.filesWritten.incrementAndGet()
+      TableIO.bytesWritten.addAndGet(try Files.size(f) catch { case _: java.io.IOException => 0L })
+      TableCatalog.DeleteEntry(TableIO.fileKeyOf(root, f.toString), dirty, eqKeyCols)
+    }
+  }
 
   /** Commit a merge-on-read write on top of `ref`'s head `head0` with
     * OPTIMISTIC CROSS-PROCESS REBASE (main and branch chains alike — a
@@ -2936,7 +2971,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     require(!schemaCols(TableIO.PosFileCol) && !schemaCols(TableIO.PosIdxCol),
       s"$name: columns ${TableIO.PosFileCol}/${TableIO.PosIdxCol} are reserved " +
         "for position-delete bookkeeping")
-    val candidates = pruneForCondition(name, files, condition, catalog.statsOrEmpty(name, v, ref))
+    val candidates = scopeFor(name, v, ref, condition).touched
     if (candidates.isEmpty) return (v, 0L)
     val prior = catalog.pendingDeletes(name, v, ref)
     // scan LIVE rows only: an already-deleted position must never be
@@ -2949,7 +2984,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     val hits = live.filter(coalesce(condition, lit(false)))
       .select(col(TableIO.PosFileCol).as("gd_file"), col(TableIO.PosIdxCol).as("gd_pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (n, dirtyKeys, delFiles, outDir) = try {
+    val (n, dirtyKeys, newEntries) = try {
       // count + dirty keys from the cached positions FIRST: the shard
       // decision keys on the ACTUAL hit count, not the candidate-row
       // upper bound — a selective predicate over millions of candidate
@@ -2960,36 +2995,9 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         collect_set(col("gd_file")).as("dirty")).head()
       val nHits = agg.getLong(0)
       if (nHits == 0) return (v, 0L) // nothing matched: nothing written
-      val id = java.util.UUID.randomUUID().toString.take(12)
-      val dir = Paths.get(catalog.pathOf(name), "deletes", id)
-      // small delete sets (the designed regime) write ONE file in one
-      // task — via the single-file fast path (no commit protocol);
-      // above the shard bound the write repartitions by dirty
-      // file key so a predicate matching millions of rows never
-      // serializes through a single task (multi-file delete sets are
-      // first-class: one entry per file, shared dirty list)
-      if (nHits > morShardRows
-          || !org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark)) {
-        (if (nHits > morShardRows) hits.repartition(col("gd_file"))
-         else hits.coalesce(1))
-          .write.parquet(dir.toString)
-      } else {
-        Files.createDirectories(dir)
-        org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
-          hits.coalesce(1), dir.toString, compression = None)
-        ()
-      }
-      val files = Using.resource(Files.list(dir)) { s =>
-        s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq.sorted
-      }
-      (nHits, agg.getSeq[String](1).sorted, files, dir)
+      val dirty = agg.getSeq[String](1).sorted
+      (nHits, dirty, writeDeleteSet(name, hits, nHits, "gd_file", dirty))
     } finally { hits.unpersist(); () }
-    require(delFiles.nonEmpty, s"delete write for $name produced no parquet under $outDir")
-    val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-    val newEntries = delFiles.map(df =>
-      TableCatalog.DeleteEntry(root.relativize(
-        Paths.get(df).toAbsolutePath.normalize).toString, dirtyKeys))
     // pinned at head+1; a cross-process racer rebases through
     // commitMorRebasing (prior entries carry in their RAW relative
     // prop form there, byte-stable across stacked MOR deletes)
@@ -3070,7 +3078,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         require(cols.contains(k), s"no such column in $name: $k"))
       require(!cols.contains(TableIO.PosFileCol) && !cols.contains(TableIO.PosIdxCol),
         s"$name: columns ${TableIO.PosFileCol}/${TableIO.PosIdxCol} are reserved")
-      val candidates = pruneForCondition(name, files, condition, catalog.statsOrEmpty(name, v, ref))
+      val candidates = scopeFor(name, v, ref, condition).touched
       if (candidates.isEmpty) return (v, 0L)
       val prior = catalog.pendingDeletes(name, v, ref)
       val scanned = readFiles(name, candidates, withPos = true)
@@ -3088,30 +3096,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
             org.apache.spark.sql.functions.collect_set(col("gd_file")).as("dirty")).head()
         val n = agg.getLong(0)
         if (n == 0) return (v, 0L)
-        val id = java.util.UUID.randomUUID().toString.take(12)
-        val outDir = Paths.get(catalog.pathOf(name), "deletes", id)
-        if (n > morShardRows
-            || !org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark)) {
-          (if (n > morShardRows) positions.repartition(col("gd_file"))
-           else positions.coalesce(1))
-            .write.parquet(outDir.toString)
-        } else {
-          // sub-shard position set: single-file fast path (no commit
-          // protocol — same rationale as deleteWhereMOR's write)
-          Files.createDirectories(outDir)
-          org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
-            positions.coalesce(1), outDir.toString, compression = None)
-          ()
-        }
         val dirtyKeys = agg.getSeq[String](1).sorted
-        val delFiles = Using.resource(Files.list(outDir)) { s =>
-          s.iterator().asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).toSeq.sorted
-        }
-        val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-        val newEntries = delFiles.map(df =>
-          TableCatalog.DeleteEntry(root.relativize(
-            Paths.get(df).toAbsolutePath.normalize).toString, dirtyKeys))
+        val newEntries = writeDeleteSet(name, positions, n, "gd_file", dirtyKeys)
         // the replacement rows: matched rows with assignments applied.
         // n is known (the shard-decision aggregate above): sub-shard
         // replacement sets take the single-file fast path
@@ -3245,8 +3231,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           return (v, 0L)
         }
         // scope the equality delete to files that might hold the keys
-        // (first-key manifest stats, like upsert's rewrite scoping)
-        val conf = spark.sessionState.newHadoopConf()
+        // (by the first key, like upsert's rewrite scoping)
         FileStats.prime(catalog.statsOrEmpty(name, v, ref))
         val keyVals: Option[Array[Any]] =
           try {
@@ -3257,8 +3242,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           case None => files
           case Some(vals) =>
             val filter = Seq(org.apache.spark.sql.sources.In(keyCols.head, vals))
-            try files.filter(f => FileStats.mightMatch(FileStats.cached(f, conf), filter))
-            catch { case scala.util.control.NonFatal(_) => files }
+            val scope = fileScopeOf(name, files, pinnedKeys.schema)
+            Timers.time("dml.pruneProbe")(files.filter(scope.mightMatch(_, filter)))
         }
         val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
         // a pure-delete batch appends nothing — no empty-file junk.
@@ -3282,37 +3267,17 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
             // equality keys ride under PHYSICAL column names (rename-proof)
             val renames = catalog.renames(name)
             val physKeys = keyCols.map(k => renames.getOrElse(k, k))
-            val id = java.util.UUID.randomUUID().toString.take(12)
-            val outDir = Paths.get(catalog.pathOf(name), "deletes", id)
             val keyRows = toPhysical(pinnedKeys.select(keyCols.map(col): _*).distinct(), name)
-            // a CDC batch is O(batch) by design; above the shard bound
-            // the key write parallelizes by key instead of one task —
-            // below it, the single-file fast path (no commit protocol)
-            if (n > morShardRows
-                || !org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark)) {
-              (if (n > morShardRows) keyRows.repartition(col(physKeys.head))
-               else keyRows.coalesce(1))
-                .write.parquet(outDir.toString)
-            } else {
-              Files.createDirectories(outDir)
-              org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
-                keyRows.coalesce(1), outDir.toString, compression = None)
-              ()
-            }
-            val delFiles = Using.resource(Files.list(outDir)) { s =>
-              s.iterator().asScala.map(_.toString)
-                .filter(_.endsWith(".parquet")).toSeq.sorted
-            }
             val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-            val rel = dirty.map(f => root.relativize(
-              Paths.get(f).toAbsolutePath.normalize).toString).sorted
-            val entries = delFiles.map(df =>
-              TableCatalog.DeleteEntry(root.relativize(
-                Paths.get(df).toAbsolutePath.normalize).toString, rel, physKeys))
+            val rel = dirty.map(f => TableIO.fileKeyOf(root, f)).sorted
+            // a CDC batch is O(batch) by design; above the shard bound
+            // the key write parallelizes by key instead of one task
+            val entries = writeDeleteSet(name, keyRows, n, physKeys.head, rel, physKeys)
             (Some(TableCatalog.encodeDeletes(entries)), rel)
           }
         val nv = commitMorRebasing(name, ref, v, newFiles, entriesRaw,
-          dirtyRel, catalog.statsForCommit(name, Seq.empty, newFiles, conf), props)
+          dirtyRel, catalog.statsForCommit(name, Seq.empty, newFiles,
+            spark.sessionState.newHadoopConf()), props)
         (nv, n)
       } finally lock.release()
     } finally { pinned.unpersist(); pinnedKeys.unpersist(); () }
@@ -3701,7 +3666,8 @@ object TableIO {
     tableRootAbs.relativize(Paths.get(file).toAbsolutePath.normalize).toString
 
   /** Process-wide write audit: data files (and their bytes) moved into
-    * tables by `stageWrite` since JVM start. Bench snapshots the
+    * tables by `stageWrite`, plus merge-on-read delete files, since JVM
+    * start. Bench snapshots the
     * counters around each query to attribute bench-time variance to
     * write volume (the r11 verdict's q52 ask: files/bytes written must
     * reach the bench artifact so many-small-file sensitivity on slow
@@ -3710,15 +3676,6 @@ object TableIO {
   val filesWritten = new java.util.concurrent.atomic.AtomicLong(0L)
   val bytesWritten = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Move a staged write's parquet files into the table's data root
-    * (cheap same-filesystem atomic renames), preserving the staged
-    * directory layout and updating the write-audit counters. The ONE
-    * implementation of the staged-file walk — shared by
-    * `TableIO.stageWrite` and the DML replacement commit
-    * (GraftRowOpsTable), which previously duplicated it with drifting
-    * details (the DML copy skipped the audit counters, making DML
-    * rewrites invisible to the bench write audit).
-    */
   /** A PRIVATE per-write staging dir under the table directory
     * `tablePath`: dot-prefixed, so it is invisible to readers and to
     * `listDataFiles`; `removeOrphanFiles` reclaims one a dead writer
@@ -3740,6 +3697,13 @@ object TableIO {
         .iterator().asScala.foreach(p => Files.deleteIfExists(p))
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** Move a staged write's parquet files into the table's data root
+    * (cheap same-filesystem atomic renames), preserving the staged
+    * directory layout and updating the write-audit counters. The ONE
+    * implementation of the staged-file walk — shared by
+    * `TableIO.stageWrite` and the SQL row-level replacement commit
+    * (GraftRowOpsTable).
+    */
   private[io] def moveStagedFiles(staging: Path, dataRoot: Path): Seq[String] = {
     val staged = Using.resource(Files.walk(staging)) { s =>
       s.iterator().asScala

@@ -142,8 +142,10 @@ class BloomIndexSpec extends SparkSpec {
       "kept files keep their blooms after an append")
     // a FULL-REWRITE delete replaces every file -> the new files are
     // unindexed by design (a stale bloom on rewritten data would be
-    // unsound); rows are correct and re-indexing re-arms the skip
-    io.deleteWhere("default.w", col("k") === 123L)
+    // unsound); rows are correct and re-indexing re-arms the skip. The
+    // predicate is untranslatable on purpose: a translatable one would
+    // scope the delete and carry the untouched files with their blooms
+    io.deleteWhere("default.w", col("k") % 1000L === 123L)
     val stats3 = io.catalog.manifestStats("default.w", io.versions("default.w").last)
     assert(stats3.values.forall(_.get("k").forall(_.bloom.isEmpty)),
       "rewritten files must not inherit blooms")

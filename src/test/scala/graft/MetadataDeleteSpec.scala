@@ -47,6 +47,20 @@ class MetadataDeleteSpec extends SparkSpec {
       spark.sql("DELETE FROM gxmd.default.md_t WHERE id >= 0")
       val after2 = io.catalog.manifest(t, io.catalog.currentVersion(t).get)
       assert(after2.isEmpty && io.read(t).count() === 0)
+
+      // the programmatic DELETE runs the same executor: the covered
+      // file drops, the untouched one carries verbatim
+      val tp = "default.md_p"
+      val untouched = io.catalog.manifest(tp,
+        io.append((1L to 10L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1), tp))
+      io.append((11L to 20L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1), tp)
+      val beforeP = io.catalog.manifest(tp, io.catalog.currentVersion(tp).get)
+      assert(beforeP.size === 2)
+      io.deleteWhere(tp, org.apache.spark.sql.functions.col("id") > 10L)
+      val afterP = io.catalog.manifest(tp, io.catalog.currentVersion(tp).get)
+      assert(afterP === untouched,
+        s"io.deleteWhere must drop the covered file and carry the other: $beforeP -> $afterP")
+      assert(io.read(tp).count() === 10)
     }
   }
 

@@ -123,10 +123,14 @@ class PartitionedDmlSpec extends SparkSpec {
     val t = "default.del"
     io.append(Seq((1L, 2020), (2L, 2021)).toDF("id", "yr").repartition(col("yr")),
       t, Seq("yr"))
+    val before = io.catalog.manifest(t, io.catalog.currentVersion(t).get)
     spark.sql("DELETE FROM pd5.default.del WHERE yr = 2020")
     // partition-aligned delete = metadata-only (no new data files)
     val v = io.catalog.currentVersion(t).get
-    assert(io.catalog.manifest(t, v).forall(_.contains("yr=2021")))
+    val after = io.catalog.manifest(t, v)
+    assert(after.toSet.subsetOf(before.toSet),
+      s"metadata delete must write NO new files: before=$before after=$after")
+    assert(after.forall(_.contains("yr=2021")))
     assert(io.read(t).select("id", "yr").as[(Long, Int)].collect().toSet == Set((2L, 2021)))
   }
 }

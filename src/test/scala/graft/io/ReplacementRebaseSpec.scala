@@ -111,6 +111,34 @@ class ReplacementRebaseSpec extends SparkSpec {
       "the racing append's rows must survive the metadata-delete rebase")
   }
 
+  test("a scoped DELETE over a dirty base carries a trimmed entry and never rebases over a racer") {
+    val io = freshIo("graft_rb8_")
+    val t = "default.rb8"
+    io.append((0L until 10L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1), t) // file A
+    io.append((10L until 20L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1), t) // file B
+    io.deleteWhereMOR(t, col("id") === 15L) // v3: an entry dirty on B only
+    val base = io.catalog.currentVersion(t).get
+    // racer: another MOR delete on B lands at base+1
+    io.deleteWhereMOR(t, col("id") === 12L)
+    val racer = io.catalog.currentVersion(t).get
+    // the DELETE, pinned at the dirty base: it rewrites A and carries B
+    // with base's entry — a rebase would overwrite the racer's entry
+    intercept[ConcurrentCommitException] {
+      io.rewriteWhere(t, col("id") < 5L, Ref.Main, Seq.empty, dropCovered = true,
+        baseVersion = Some(base))(_.filter(col("id") >= 5L))
+    }
+    assert(io.catalog.currentVersion(t).get == racer, "the refused DELETE must not commit")
+    assert(io.catalog.pendingDeletes(t, racer).size == 2, "the racer's entries must survive")
+    assert(io.read(t).as[(Long, String)].collect().map(_._1).toSet ==
+      ((0L until 20L).toSet - 12L - 15L))
+    // re-run against the new head: lands, keeping both entries on B
+    io.deleteWhere(t, col("id") < 5L)
+    val v = io.catalog.currentVersion(t).get
+    assert(io.catalog.pendingDeletes(t, v).flatMap(_.dirtyFiles).distinct.size == 1)
+    assert(io.read(t).as[(Long, String)].collect().map(_._1).toSet ==
+      ((5L until 20L).toSet - 12L - 15L))
+  }
+
   // -- serializable conflict-detection filter (r19 advice): a
   // row-REMOVING command's rebase must refuse a racer-added file that
   // might hold predicate-matching rows; disjoint appends still rebase.
