@@ -240,7 +240,7 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     // BRANCH snapshot (VERSION AS OF '<branch>') is a read surface;
     // its row-level commands refuse with the recovery step.
     // Partitioned clean tables take the layout hop at commit: the
-    // staged replacement re-stages through TableIO.stageReplacement
+    // staged replacement re-stages through TableIO.stageWrite
     // into the table's Hive/hidden directory arithmetic (q162).
     val pspec = catalog.readMeta(name).partitionSpec.map(PartitionTransforms.parse)
     val merged = if (dirty) Some((version, ref)) else None
@@ -421,10 +421,7 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     // table's write lock so a concurrent set_write_order / ALTER can't
     // interleave and lose fields, and collapse the five meta reads
     // below into one catalog round-trip for the lock's duration
-    val lock = TableIO.writeLock(catalog.pathOf(name))
-    lock.acquire()
-    try catalog.cachedMeta { alterTableLocked(ident, name, changes) }
-    finally lock.release()
+    catalog.locked(name)(catalog.cachedMeta { alterTableLocked(ident, name, changes) })
   }
 
   private def alterTableLocked(ident: Identifier, name: String,
@@ -1123,7 +1120,7 @@ private[io] class GraftTable(
   * HOP — the rewrite plan's DSv2 parquet write lands flat in the
   * private staging (the v2 file write can't lay Hive directories),
   * and the commit re-writes those staged rows through TableIO's
-  * partitioned staging (`stageReplacement`: same withLayout /
+  * partitioned staging (`stageWrite`: same withLayout /
   * distribution / hidden-spec derivation as every append) before the
   * manifest commit. Cost: the REPLACED bytes are written twice —
   * bounded by the file-scoped rewrite, never table-sized — in
@@ -1445,8 +1442,8 @@ private[io] class GraftRowOpsTable(
                         else
                           // explicit schema: an all-deleted rewrite has
                           // nothing to infer from, and physical names
-                          // are already what stageReplacement expects
-                          io.stageReplacement(SparkSession.active.read
+                          // are already what stageWrite expects
+                          io.stageWrite(SparkSession.active.read
                             .schema(physInfo.schema()).parquet(flat: _*), tableName, partitionCols)
                       }
                     // Pinned commit at the planned base through TableIO's

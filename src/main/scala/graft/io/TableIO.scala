@@ -38,10 +38,11 @@ import scala.util.Using
   * the same version number fails loudly with
   * `ConcurrentCommitException` instead of silently winning last
   * (optimistic concurrency on the version file, as in Iceberg's
-  * HadoopTableOperations). On top of that primitive, `TableIO` appends
-  * RETRY the race (re-read base, recommit) and same-JVM writers to one
-  * table serialize over the write->commit section; overwrites stay
-  * fail-fast — see `TableIO.write`.
+  * HadoopTableOperations). On top of that primitive, ONE optimistic
+  * loop (`commitLoop`) retries the race for every writer that can,
+  * each by its own rebase rule, and same-JVM writers to one table
+  * serialize over the write->commit section; a blind overwrite
+  * commits at the head it reads at commit time — see `TableIO.write`.
   */
 final case class TableCatalog(warehouse: String) {
   def pathOf(name: String): String = {
@@ -302,6 +303,61 @@ final case class TableCatalog(warehouse: String) {
     v
   }
 
+  /** THE optimistic commit loop (Iceberg's retry with revalidation) —
+    * the only place a commit retries. Each attempt hands `ref`'s head
+    * to the writer's `rule`, which answers what to commit on top of it
+    * (None: nothing to commit, the head is returned) or throws to
+    * refuse; the answer commits PINNED at head + 1 with `props` riding
+    * along. A lost race re-reads the head and asks again — the rule
+    * then also gets the conflict, so a first attempt can skip the
+    * revalidation a rebase needs — at most
+    * [[TableCatalog.MaxCommitRetries]] times: livelock surfaces as the
+    * conflict, never a spin.
+    *
+    * The first attempt builds on `head0` when the writer planned
+    * against a version it read itself, else on the head read here.
+    * Exactly-once replay guard: a head read here may already hold THIS
+    * stream batch, committed by a recovered query instance (Structured
+    * Streaming replays at-least-once). So when `props` carry a
+    * `streamBatchId*` mark, that key's mark on `ref` is checked first,
+    * and a mark at or past this batch returns the head without
+    * committing. A pinned `head0` needs no check: a replay landing
+    * after it loses this loop the race. A commit without a mark never
+    * walks the chain for one.
+    */
+  private[io] def commitLoop(name: String, ref: Ref, props: Map[String, String],
+                             head0: Option[Int] = None)
+                            (rule: (Int, Option[ConcurrentCommitException]) => Option[TableCatalog.Commit])
+      : Int = {
+    val mark = props.collectFirst {
+      case (k, v) if k.startsWith(TableCatalog.StreamBatchProp) && v.toLongOption.isDefined =>
+        (k, v.toLong)
+    }
+    var pinned = head0
+    var lost = Option.empty[ConcurrentCommitException]
+    var retries = 0
+    while (true) {
+      val head = pinned.getOrElse {
+        if (mark.exists { case (k, id) => streamBatchMark(name, k, ref).exists(_ >= id) })
+          return currentVersion(name, ref).getOrElse(0)
+        currentVersion(name, ref).getOrElse(0)
+      }
+      rule(head, lost) match {
+        case None => return head
+        case Some(c) =>
+          try return commitSnapshotAt(name, c.files, head + 1, c.props ++ props, c.stats, ref)
+          catch {
+            case e: ConcurrentCommitException =>
+              retries += 1
+              if (retries > TableCatalog.MaxCommitRetries) throw e
+              lost = Some(e)
+              pinned = None
+          }
+      }
+    }
+    -1 // unreachable
+  }
+
   /** The fork-base prop of branch version `v` — carried forward by
     * every branch commit so the chain never disagrees about its fork
     * point.
@@ -477,24 +533,22 @@ final case class TableCatalog(warehouse: String) {
 
   /** Streaming-sink batch-id high-water mark (exactly-once guard for
     * replayed micro-batches — see graft.streaming.TableSink): the
-    * newest snapshot carrying a `streamBatchId` property. The mark is
+    * newest snapshot of `ref` carrying `propKey`. The key is the bare
+    * legacy one for single-query tables, or a per-sink key
+    * (`TableCatalog.streamBatchProp(sinkId)`): marks from a PREVIOUS
+    * query incarnation (fresh checkpoint => batch ids restart at 0)
+    * must not silently swallow the new query's batches. The mark is
     * INSIDE the manifest commit, so "rows appended" and "batch marked
     * done" are one atomic filesystem operation — there is no crash
     * window in which one happened without the other. Non-stream
     * commits interleave harmlessly (the scan walks past them to the
-    * newest stream commit), and `expireSnapshots` never drops the
-    * newest MARKED manifest, so maintenance interleaving can't erase
-    * the guard either — keepLast >= 1 genuinely suffices. A manifest
-    * expired between the version listing and its read is skipped, not
-    * an error (expiry may run concurrently with a stream's own
-    * commit). Tables last written by the pre-manifest-props layout
+    * newest marked commit), and `expireSnapshots` never drops the
+    * newest MARKED manifest per key, so maintenance interleaving can't
+    * erase the guard either — keepLast >= 1 genuinely suffices. A
+    * manifest expired between the version listing and its read is
+    * skipped, not an error (expiry may run concurrently with a stream's
+    * own commit). Tables last written by the pre-manifest-props layout
     * fall back to their `stream_batch.txt` sidecar.
-    */
-  /** Newest batch-id mark under `propKey` — the default key for
-    * legacy single-query tables, or a per-sink key
-    * (`TableCatalog.streamBatchProp(sinkId)`): marks from a PREVIOUS
-    * query incarnation (fresh checkpoint => batch ids restart at 0)
-    * must not silently swallow the new query's batches.
     */
   def streamBatchMark(name: String, propKey: String = TableCatalog.StreamBatchProp,
                       ref: Ref = Ref.Main): Option[Long] =
@@ -1107,6 +1161,19 @@ class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 object TableCatalog {
   /** Manifest property carrying the streaming sink's micro-batch id. */
   val StreamBatchProp = "streamBatchId"
+
+  /** Re-attempts [[TableCatalog.commitLoop]] makes after its first lost
+    * race before the conflict surfaces to the caller.
+    */
+  private val MaxCommitRetries = 20
+
+  /** What one attempt of [[TableCatalog.commitLoop]] commits: the whole
+    * file list, the props the writer's rule derived from the head (e.g.
+    * its deletes carry) and the per-file stats.
+    */
+  private[io] final case class Commit(files: Seq[String], props: Map[String, String],
+                                      stats: Map[String, Map[String, FileStats.ColStats]])
+
   /** Manifest prop on every branch snapshot: the MAIN version the
     * branch forked from — fastForward's divergence check.
     */
@@ -2049,9 +2116,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         newcomerConflicts, ref)
     }
 
-  /** The replacement COMMIT with Iceberg-style optimistic
-    * retry-with-revalidation (multi-writer semantics): the first
-    * attempt is PINNED at `baseVersion + 1`; when a racer landed in
+  /** The REPLACEMENT rule of the commit loop
+    * ([[TableCatalog.commitLoop]], Iceberg's retry with revalidation):
+    * the first attempt is PINNED at `baseVersion + 1` and commits the
+    * kept files plus the replacement files; when a racer landed in
     * between, the conflict is adjudicated by FILE OVERLAP —
     *
     *   - every file this rewrite REPLACED is still in the racer's
@@ -2067,12 +2135,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     *     lose rows — the caller re-runs against the new snapshot,
     *     Iceberg's serializable behavior).
     *
-    * A stream-marked replacement (the sketch/upsert sinks) re-checks
-    * its exactly-once mark inside the loop — losing the race to a
-    * recovered query instance replaying the SAME batch must stop,
-    * not double-apply. Bounded retries; callers hold the same-JVM
-    * table lock, so the loop only spins on cross-process racers.
-    *
     * `newcomerConflicts` is Iceberg's conflict-detection filter
     * (serializable isolation for row-REMOVING commands): when set, a
     * racer's NEW file that might hold rows the command's predicate
@@ -2080,8 +2142,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * rows landing between a DELETE/UPDATE's scan and its commit must
     * surface, not silently survive a "successful" DELETE (the same
     * check the SQL row-level commit performs too). None = row-preserving
-    * rewrite (compact family, applyDeletes, upsert's last-write-wins
-    * apply) — rebasing is order-equivalent, rebase freely.
+    * rewrite (compact family, upsert's last-write-wins apply) —
+    * rebasing is order-equivalent, rebase freely.
     *
     * Only main rebases ([[Ref.rebases]]): a branch replacement that
     * lost its pinned commit refuses with the conflict. And a replacement
@@ -2101,66 +2163,49 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
        catch { case scala.util.control.NonFatal(_) => Seq.empty[String] })
         .map(norm).toSet
     val replaced: Set[String] = baseSet -- keepFiles.map(norm)
-    val streamMark = props.collectFirst {
-      case (k, v) if k.startsWith(TableCatalog.StreamBatchProp) => (k, v)
-    }
-    val streamBatchId = streamMark.flatMap(_._2.toLongOption)
-    var keep = keepFiles
-    var base = baseVersion
-    var extraProps = Map.empty[String, String]
-    var attempt = 0
-    while (true) {
-      try {
-        return catalog.commitSnapshotAt(name, keep ++ newFiles, base + 1, extraProps ++ props,
-          commitStats(name, keep, newFiles, ref), ref)
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > 5 || !ref.rebases || props.contains(TableCatalog.DeletesProp)) throw e
-          // replay guard (see writeLocked): the racer may BE this batch
-          if (streamBatchId.exists(id =>
-              catalog.streamBatchMark(name, streamMark.get._1, ref).exists(_ >= id)))
-            return catalog.head(name, ref)
-          val cur = catalog.currentVersion(name, ref).getOrElse(throw e)
-          val curFiles = catalog.manifest(name, cur, ref)
-          val curSet = curFiles.map(norm).toSet
-          val overlapped = replaced.filterNot(curSet)
-          if (overlapped.nonEmpty)
+    catalog.commitLoop(name, ref, props, Some(baseVersion)) {
+      case (_, None) =>
+        Some(TableCatalog.Commit(keepFiles ++ newFiles, Map.empty,
+          commitStats(name, keepFiles, newFiles, ref)))
+      case (cur, Some(lost)) =>
+        if (!ref.rebases || props.contains(TableCatalog.DeletesProp)) throw lost
+        val curFiles = catalog.manifest(name, cur, ref)
+        val curSet = curFiles.map(norm).toSet
+        val overlapped = replaced.filterNot(curSet)
+        if (overlapped.nonEmpty)
+          throw new ConcurrentCommitException(
+            s"concurrent commit to $name: another writer removed or rewrote " +
+              s"${overlapped.size} of the files this rewrite replaced " +
+              s"(e.g. ${overlapped.head}) — rebasing would lose or resurrect rows; " +
+              "re-run the operation against the new snapshot")
+        val racerDeletes =
+          try catalog.pendingDeletes(name, cur, ref)
+          catch { case scala.util.control.NonFatal(_) =>
+            Seq.empty[TableCatalog.DeleteEntry] }
+        if (racerDeletes.exists(_.dirtyFiles.map(norm).exists(replaced)))
+          throw new ConcurrentCommitException(
+            s"concurrent commit to $name: a racing merge-on-read delete targets files " +
+              "this rewrite replaced — rebasing would resurrect its deleted rows; " +
+              "re-run the operation against the new snapshot")
+        // conflict-detection filter (serializable check for
+        // row-removing commands): a racer-ADDED file that might hold
+        // predicate-matching rows must not ride the rebase
+        newcomerConflicts.foreach { mayConflict =>
+          val conflicting = Timers.time("dml.conflictProbe")(
+            curFiles.filter(f => !baseSet(norm(f)) && mayConflict(f)))
+          if (conflicting.nonEmpty)
             throw new ConcurrentCommitException(
-              s"concurrent commit to $name: another writer removed or rewrote " +
-                s"${overlapped.size} of the files this rewrite replaced " +
-                s"(e.g. ${overlapped.head}) — rebasing would lose or resurrect rows; " +
-                "re-run the operation against the new snapshot")
-          val racerDeletes =
-            try catalog.pendingDeletes(name, cur, ref)
-            catch { case scala.util.control.NonFatal(_) =>
-              Seq.empty[TableCatalog.DeleteEntry] }
-          if (racerDeletes.exists(_.dirtyFiles.map(norm).exists(replaced)))
-            throw new ConcurrentCommitException(
-              s"concurrent commit to $name: a racing merge-on-read delete targets files " +
-                "this rewrite replaced — rebasing would resurrect its deleted rows; " +
-                "re-run the operation against the new snapshot")
-          // conflict-detection filter (serializable check for
-          // row-removing commands): a racer-ADDED file that might hold
-          // predicate-matching rows must not ride the rebase
-          newcomerConflicts.foreach { mayConflict =>
-            val conflicting = Timers.time("dml.conflictProbe")(
-              curFiles.filter(f => !baseSet(norm(f)) && mayConflict(f)))
-            if (conflicting.nonEmpty)
-              throw new ConcurrentCommitException(
-                s"concurrent commit to $name: a racing writer added ${conflicting.size} " +
-                  s"file(s) that may hold rows this command's predicate selects " +
-                  s"(e.g. ${conflicting.head}) — rebasing would let them silently " +
-                  "survive the DELETE/UPDATE; re-run against the new snapshot")
-          }
-          keep = curFiles.filterNot(f => replaced(norm(f)))
-          base = cur
-          // surviving racer deletes (disjoint from the replaced set by
-          // the check above) ride the rebased commit
-          extraProps = catalog.deletesCarry(name, cur, ref)
-      }
+              s"concurrent commit to $name: a racing writer added ${conflicting.size} " +
+                s"file(s) that may hold rows this command's predicate selects " +
+                s"(e.g. ${conflicting.head}) — rebasing would let them silently " +
+                "survive the DELETE/UPDATE; re-run against the new snapshot")
+        }
+        val keep = curFiles.filterNot(f => replaced(norm(f)))
+        // surviving racer deletes (disjoint from the replaced set by
+        // the check above) ride the rebased commit
+        Some(TableCatalog.Commit(keep ++ newFiles, catalog.deletesCarry(name, cur, ref),
+          commitStats(name, keep, newFiles, ref)))
     }
-    -1 // unreachable
   }
 
   /** METADATA-ONLY DELETE commit (Iceberg's metadata delete): the new
@@ -2303,20 +2348,19 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         s"upsert into $name: snapshot $v has pending position deletes — " +
           "run applyDeletes first")
       val files = catalog.manifest(name, v)
-      val manifestStats = catalog.statsOrEmpty(name, v)
-      FileStats.prime(manifestStats)
+      FileStats.prime(catalog.statsOrEmpty(name, v))
       // scoping (computed by the fused probe above) is by the FIRST
       // key column's value set — sound for compound keys: a file with
       // no first-key match holds no affected row.
       // an EMPTY batch touches nothing: In(key, []) reads as "might
       // match anything" to the stats layer, which would turn a routine
       // empty micro-batch into a full-table rewrite. No data moves at
-      // all: a metadata-only commit carries the file list forward with
-      // the (mark-bearing) props — writing an empty parquet file per
-      // idle micro-batch would otherwise grow the manifest forever.
+      // all: an append of no files carries the head forward with the
+      // (mark-bearing) props — writing an empty parquet file per idle
+      // micro-batch would otherwise grow the manifest forever.
       if (keyVals.exists(_.isEmpty)) {
         if (props.nonEmpty)
-          catalog.locked(name)(catalog.commitSnapshotAt(name, files, v + 1, props, manifestStats))
+          catalog.locked(name)(commitOnto(name, Ref.Main, Seq.empty, Map.empty, props, Some(v)))
         return
       }
       val (kept, candidates) = keyVals match {
@@ -2365,27 +2409,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   def overwrite(df: DataFrame, name: String, partitionCols: Seq[String] = Seq.empty,
                 props: Map[String, String] = Map.empty, ref: Ref = Ref.Main): Int =
     write(df, name, append = false, partitionCols, props, ref)
-
-  /** Version-PINNED overwrite for read-merge-overwrite cycles (the
-    * sketch sinks): commits at exactly `expectedVersion` via the
-    * exclusive manifest create, so a writer that read state at
-    * version `expectedVersion - 1` and lost the race to another
-    * merger surfaces as [[ConcurrentCommitException]] instead of
-    * silently dropping the racer's merge (lost update — the repo's
-    * "pin version-checked commits" rule; the same-JVM lock alone is
-    * not cross-process). Caller retries the WHOLE read-merge-commit.
-    * Staged files of a losing attempt are unreferenced and reclaimed
-    * by the next orphan sweep, same as any failed write.
-    */
-  private[graft] def overwriteAt(df: DataFrame, name: String, expectedVersion: Int,
-                                 partitionCols: Seq[String] = Seq.empty,
-                                 props: Map[String, String] = Map.empty): Unit =
-    catalog.locked(name) {
-      val newFiles = stageWrite(toPhysical(df, name), name, partitionCols)
-      catalog.commitSnapshotAt(name, newFiles, expectedVersion, props,
-        stats = commitStats(name, Seq.empty, newFiles))
-      ()
-    }
 
   // ---- Write-audit-publish (Iceberg's WAP pattern). An ingest job
   // appendStage()s its output, an audit job readStaged()s the
@@ -2437,7 +2460,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       try catalog.stagedStats(name, id)
       catch { case scala.util.control.NonFatal(_) =>
         Map.empty[String, Map[String, FileStats.ColStats]] }
-    val published = appendFiles(name, staged, stagedStats, Map.empty, ref)
+    val published = commitOnto(name, ref, staged, stagedStats, Map.empty)
     catalog.deleteStaged(name, id)
     published
   }
@@ -2610,9 +2633,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     // writer racing the build makes this throw ConcurrentCommitException
     // (retry the call) instead of silently committing a file list that
     // drops the concurrent writer's files.
-    val lock = TableIO.writeLock(catalog.pathOf(name))
-    lock.acquire()
-    try {
+    catalog.locked(name) {
       val v = catalog.head(name)
       val files = catalog.manifest(name, v)
       val conf = spark.sessionState.newHadoopConf()
@@ -2627,43 +2648,45 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       val statsByFile = files.map(f => f -> baseStats(f)).toMap
       val missing = files.filter(f =>
         statsByFile(f).get(phys).exists(_.bloom.isEmpty))
-      if (missing.isEmpty) return 0
-      // one sizing for every per-file sketch (merge requires it): the
-      // largest file's row count, so smaller files over-deliver on fpp
-      val maxRows = missing.map(f =>
-        statsByFile(f).get(phys).map(_.rowCount)
-          .getOrElse(FileStats.rowCount(f, conf))).max.max(1L)
-      // graft_bloom_agg is session-registered by GraftExtensions; going
-      // through the SQL name keeps this free of catalyst internals
-      val agg = org.apache.spark.sql.functions.expr(
-        s"graft_bloom_agg(_graft_key, ${maxRows}L, $fpp)")
-      def normalize(p: String): String =
-        try {
-          val u = new java.net.URI(p)
-          if (u.getScheme == null) Paths.get(p).toAbsolutePath.normalize.toString
-          else Paths.get(u.getPath).toAbsolutePath.normalize.toString
-        } catch { case scala.util.control.NonFatal(_) => p }
-      val built = spark.read.parquet(missing: _*)
-        .select(input_file_name().as("_graft_file"),
-          col(phys).cast("string").as("_graft_key"))
-        .groupBy("_graft_file").agg(agg.as("_graft_bloom"))
-        .collect()
-        .map(r => normalize(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
-      val augmented = files.map { f =>
-        val cols = statsByFile(f)
-        val withBloom = built.get(normalize(f)) match {
-          case Some(b) if cols.contains(phys) =>
-            cols.updated(phys, cols(phys).copy(bloom = Some(b)))
-          case _ => cols
-        }
-        f -> withBloom
-      }.toMap
-      val props = catalog.manifestProps(name, v) +
-        (s"graft.bloom.$phys.fpp" -> fpp.toString)
-      catalog.commitSnapshotAt(name, files, v + 1, props, augmented)
-      FileStats.prime(augmented) // same-JVM readers see the index immediately
-      missing.size
-    } finally lock.release()
+      if (missing.isEmpty) 0
+      else {
+        // one sizing for every per-file sketch (merge requires it): the
+        // largest file's row count, so smaller files over-deliver on fpp
+        val maxRows = missing.map(f =>
+          statsByFile(f).get(phys).map(_.rowCount)
+            .getOrElse(FileStats.rowCount(f, conf))).max.max(1L)
+        // graft_bloom_agg is session-registered by GraftExtensions; going
+        // through the SQL name keeps this free of catalyst internals
+        val agg = org.apache.spark.sql.functions.expr(
+          s"graft_bloom_agg(_graft_key, ${maxRows}L, $fpp)")
+        def normalize(p: String): String =
+          try {
+            val u = new java.net.URI(p)
+            if (u.getScheme == null) Paths.get(p).toAbsolutePath.normalize.toString
+            else Paths.get(u.getPath).toAbsolutePath.normalize.toString
+          } catch { case scala.util.control.NonFatal(_) => p }
+        val built = spark.read.parquet(missing: _*)
+          .select(input_file_name().as("_graft_file"),
+            col(phys).cast("string").as("_graft_key"))
+          .groupBy("_graft_file").agg(agg.as("_graft_bloom"))
+          .collect()
+          .map(r => normalize(r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
+        val augmented = files.map { f =>
+          val cols = statsByFile(f)
+          val withBloom = built.get(normalize(f)) match {
+            case Some(b) if cols.contains(phys) =>
+              cols.updated(phys, cols(phys).copy(bloom = Some(b)))
+            case _ => cols
+          }
+          f -> withBloom
+        }.toMap
+        val props = catalog.manifestProps(name, v) +
+          (s"graft.bloom.$phys.fpp" -> fpp.toString)
+        catalog.commitSnapshotAt(name, files, v + 1, props, augmented)
+        FileStats.prime(augmented) // same-JVM readers see the index immediately
+        missing.size
+      }
+    }
   }
 
   /** Small-file compaction of `ref`'s head: rewrite it to one file
@@ -2886,64 +2909,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     }
   }
 
-  /** Commit a merge-on-read write on top of `ref`'s head `head0` with
-    * OPTIMISTIC CROSS-PROCESS REBASE (main and branch chains alike — a
-    * branch snapshot carries the same `graft.deletes` prop, branch
-    * reads merge it, and [[TableCatalog.fastForward]] publishes it to
-    * main with the files). The write path holds the same-JVM table
-    * lock, but a writer in another process can land a commit between
-    * head resolution and our pinned commit — without a retry the
-    * loser errors out even when nothing actually conflicts (Iceberg
-    * retries metadata-only commits; so do we). The MOR commit shape —
-    * keep every current file, add `newFiles`, stack `newRaw` entries
-    * onto the head's deletes carry — rebases safely onto any head that
-    * still CONTAINS every file the entries scope (`scopedKeys`,
-    * table-root-relative): position pairs reference immutable files,
-    * and an equality entry's dirty list pins exactly the files it
-    * kills in, so a racer's appended files stay out of scope — their
-    * rows are newer than this batch and survive it (snapshot
-    * isolation, Iceberg's default for row-delta commits). A head
-    * missing a scoped file means a rewrite/applyDeletes landed and the
-    * recorded positions are dead — rethrow for the caller to rerun
-    * against fresh state. Bounded attempts: livelock surfaces as the
-    * conflict, never a spin.
-    */
-  private def commitMorRebasing(name: String, ref: Ref, head0: Int,
-      newFiles: Seq[String], newRaw: Option[String],
-      scopedKeys: Seq[String],
-      newStats: Map[String, Map[String, FileStats.ColStats]],
-      extraProps: Map[String, String]): Int = {
-    val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-    def relKey(f: String): String =
-      root.relativize(Paths.get(f).toAbsolutePath.normalize).toString
-    val scoped = scopedKeys.toSet
-    var head = head0
-    var attempts = 0
-    while (true) {
-      val files = catalog.manifest(name, head, ref)
-      if (attempts > 0 && !scoped.subsetOf(files.map(relKey).toSet))
-        throw new ConcurrentCommitException(
-          s"MOR commit to ${ref.describe(name)} lost its base: a concurrent rewrite " +
-            "removed file(s) the delete entries scope — rerun the operation " +
-            "against the current snapshot")
-      val priorRaw = catalog.deletesCarry(name, head, ref).get(TableCatalog.DeletesProp)
-      val deletesProp = newRaw match {
-        case Some(nr) =>
-          Map(TableCatalog.DeletesProp -> priorRaw.fold(nr)(p => TableCatalog.joinDeletesRaw(p, nr)))
-        case None => priorRaw.map(TableCatalog.DeletesProp -> _).toMap
-      }
-      try return catalog.commitSnapshotAt(name, files ++ newFiles, head + 1,
-        deletesProp ++ extraProps, catalog.statsOrEmpty(name, head, ref) ++ newStats, ref)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 5) throw e
-          head = catalog.head(name, ref) // re-read the fresh head
-      }
-    }
-    -1 // unreachable
-  }
-
   /** Merge-on-read row-level DELETE: record the positions of rows
     * matching `condition` (a null-valued predicate keeps the row, per
     * SQL) as a position-delete file and commit it with the UNCHANGED
@@ -2999,10 +2964,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       (nHits, dirty, writeDeleteSet(name, hits, nHits, "gd_file", dirty))
     } finally { hits.unpersist(); () }
     // pinned at head+1; a cross-process racer rebases through
-    // commitMorRebasing (prior entries carry in their RAW relative
-    // prop form there, byte-stable across stacked MOR deletes)
-    val nv = commitMorRebasing(name, ref, v, Seq.empty,
-      Some(TableCatalog.encodeDeletes(newEntries)), dirtyKeys, Map.empty, Map.empty)
+    // commitOnto (prior entries carry in their RAW relative prop form
+    // there, byte-stable across stacked MOR deletes)
+    val nv = commitOnto(name, ref, Seq.empty, Map.empty, Map.empty, Some(v),
+      Some(TableCatalog.encodeDeletes(newEntries)), dirtyKeys)
     (nv, n)
   }
 
@@ -3016,42 +2981,23 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     */
   def applyDeletes(name: String, partitionCols: Seq[String] = Seq.empty,
                    ref: Ref = Ref.Main): (Int, Long) = {
-    val lock = TableIO.writeLock(catalog.pathOf(name))
-    lock.acquire()
-    try {
-      // a rewrite cannot blind-rebase (the merge ran against the pinned
-      // snapshot's files and entries), but it CAN rerun: on a
-      // cross-process conflict the whole read-merge-commit repeats
-      // against the fresh head — entries/files re-read, the losing
-      // attempt's staged files become age-guarded GC food
-      var attempts = 0
-      while (true) {
-        val v = catalog.head(name, ref)
-        val entries = catalog.pendingDeletes(name, v, ref)
-        if (entries.isEmpty) return (v, 0L)
-        val files = catalog.manifest(name, v, ref)
+    var rewritten = 0L
+    // the cleared prop is what flips readers back to the pure-scan
+    // plan; the now-unreferenced delete files become age-guarded GC food
+    val nv = commitRebuilt(name, ref, Map(TableCatalog.OpProp -> TableCatalog.OpRewrite),
+        if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)) { v =>
+      require(v > 0, ref.missing(name))
+      val entries = catalog.pendingDeletes(name, v, ref)
+      if (entries.isEmpty) None
+      else {
         def norm(p: String): String = Paths.get(p).toAbsolutePath.normalize.toString
         val dirtySet = entries.flatMap(_.dirtyFiles).map(norm).toSet
-        val (dirty, clean) = files.partition(f => dirtySet(norm(f)))
-        val merged = mergeDeletes(name, dirty, entries)
-        val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
-        val newFiles = stageWrite(toPhysical(merged, name), name, pcols)
-        // pinned at v+1 like every version-checked commit; the cleared
-        // prop is what flips readers back to the pure-scan plan. The
-        // now-unreferenced delete files become age-guarded GC food.
-        try {
-          val nv = catalog.commitSnapshotAt(name, clean ++ newFiles, v + 1,
-            Map(TableCatalog.OpProp -> TableCatalog.OpRewrite),
-            commitStats(name, clean, newFiles, ref), ref)
-          return (nv, dirty.size.toLong)
-        } catch {
-          case e: ConcurrentCommitException =>
-            attempts += 1
-            if (attempts >= 3) throw e
-        }
+        val (dirty, clean) = catalog.manifest(name, v, ref).partition(f => dirtySet(norm(f)))
+        rewritten = dirty.size.toLong
+        Some((clean, mergeDeletes(name, dirty, entries)))
       }
-      (-1, -1L) // unreachable
-    } finally lock.release()
+    }
+    (nv, rewritten)
   }
 
   /** Merge-on-read row-level UPDATE: ONE commit carrying (a) a
@@ -3064,58 +3010,59 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   def updateWhereMOR(name: String, condition: org.apache.spark.sql.Column,
                      assignments: Map[String, org.apache.spark.sql.Column],
                      partitionCols: Seq[String] = Seq.empty,
-                     ref: Ref = Ref.Main): (Int, Long) = {
+                     ref: Ref = Ref.Main): (Int, Long) =
+    catalog.locked(name)(updateWhereMORLocked(name, condition, assignments, partitionCols, ref))
+
+  private def updateWhereMORLocked(name: String, condition: org.apache.spark.sql.Column,
+                                   assignments: Map[String, org.apache.spark.sql.Column],
+                                   partitionCols: Seq[String], ref: Ref): (Int, Long) = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val lock = TableIO.writeLock(catalog.pathOf(name))
-    lock.acquire()
+    catalog.forkLocked(name, ref)
+    val v = catalog.head(name, ref)
+    val files = catalog.manifest(name, v, ref)
+    if (files.isEmpty) return (v, 0L)
+    val cols = readFiles(name, files).columns
+    assignments.keys.foreach(k =>
+      require(cols.contains(k), s"no such column in $name: $k"))
+    require(!cols.contains(TableIO.PosFileCol) && !cols.contains(TableIO.PosIdxCol),
+      s"$name: columns ${TableIO.PosFileCol}/${TableIO.PosIdxCol} are reserved")
+    val candidates = scopeFor(name, v, ref, condition).touched
+    if (candidates.isEmpty) return (v, 0L)
+    val prior = catalog.pendingDeletes(name, v, ref)
+    val scanned = readFiles(name, candidates, withPos = true)
+    val live = if (prior.isEmpty) scanned else applyDeleteEntries(scanned, name, prior)
+    val matched = live.filter(coalesce(condition, lit(false)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      catalog.forkLocked(name, ref)
-      val v = catalog.head(name, ref)
-      val files = catalog.manifest(name, v, ref)
-      if (files.isEmpty) return (v, 0L)
-      val cols = readFiles(name, files).columns
-      assignments.keys.foreach(k =>
-        require(cols.contains(k), s"no such column in $name: $k"))
-      require(!cols.contains(TableIO.PosFileCol) && !cols.contains(TableIO.PosIdxCol),
-        s"$name: columns ${TableIO.PosFileCol}/${TableIO.PosIdxCol} are reserved")
-      val candidates = scopeFor(name, v, ref, condition).touched
-      if (candidates.isEmpty) return (v, 0L)
-      val prior = catalog.pendingDeletes(name, v, ref)
-      val scanned = readFiles(name, candidates, withPos = true)
-      val live = if (prior.isEmpty) scanned else applyDeleteEntries(scanned, name, prior)
-      val matched = live.filter(coalesce(condition, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val positions = matched.select(col(TableIO.PosFileCol).as("gd_file"),
-          col(TableIO.PosIdxCol).as("gd_pos"))
-        // count + dirty keys from the cached match FIRST (the shard
-        // decision keys on ACTUAL hits, like deleteWhereMOR's write);
-        // a no-match update commits nothing and writes nothing
-        val agg = positions
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
-            org.apache.spark.sql.functions.collect_set(col("gd_file")).as("dirty")).head()
-        val n = agg.getLong(0)
-        if (n == 0) return (v, 0L)
-        val dirtyKeys = agg.getSeq[String](1).sorted
-        val newEntries = writeDeleteSet(name, positions, n, "gd_file", dirtyKeys)
-        // the replacement rows: matched rows with assignments applied.
-        // n is known (the shard-decision aggregate above): sub-shard
-        // replacement sets take the single-file fast path
-        val bare = matched.drop(TableIO.PosFileCol, TableIO.PosIdxCol)
-        val updated = bare.select(bare.columns.toSeq.map(c =>
-          assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-        val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
-        val newFiles =
-          if (n > morShardRows) stageWrite(toPhysical(updated, name), name, pcols)
-          else stageWrite(toPhysical(updated.coalesce(1), name), name, pcols,
-            singleTask = true)
-        val conf = spark.sessionState.newHadoopConf()
-        val nv = commitMorRebasing(name, ref, v, newFiles,
-          Some(TableCatalog.encodeDeletes(newEntries)), dirtyKeys,
-          catalog.statsForCommit(name, Seq.empty, newFiles, conf), Map.empty)
-        (nv, n)
-      } finally { matched.unpersist(); () }
-    } finally lock.release()
+      val positions = matched.select(col(TableIO.PosFileCol).as("gd_file"),
+        col(TableIO.PosIdxCol).as("gd_pos"))
+      // count + dirty keys from the cached match FIRST (the shard
+      // decision keys on ACTUAL hits, like deleteWhereMOR's write);
+      // a no-match update commits nothing and writes nothing
+      val agg = positions
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
+          org.apache.spark.sql.functions.collect_set(col("gd_file")).as("dirty")).head()
+      val n = agg.getLong(0)
+      if (n == 0) return (v, 0L)
+      val dirtyKeys = agg.getSeq[String](1).sorted
+      val newEntries = writeDeleteSet(name, positions, n, "gd_file", dirtyKeys)
+      // the replacement rows: matched rows with assignments applied.
+      // n is known (the shard-decision aggregate above): sub-shard
+      // replacement sets take the single-file fast path
+      val bare = matched.drop(TableIO.PosFileCol, TableIO.PosIdxCol)
+      val updated = bare.select(bare.columns.toSeq.map(c =>
+        assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+      val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
+      val newFiles =
+        if (n > morShardRows) stageWrite(toPhysical(updated, name), name, pcols)
+        else stageWrite(toPhysical(updated.coalesce(1), name), name, pcols,
+          singleTask = true)
+      val conf = spark.sessionState.newHadoopConf()
+      val nv = commitOnto(name, ref, newFiles,
+        catalog.statsForCommit(name, Seq.empty, newFiles, conf), Map.empty, Some(v),
+        Some(TableCatalog.encodeDeletes(newEntries)), dirtyKeys)
+      (nv, n)
+    } finally { matched.unpersist(); () }
   }
 
   /** Merge-on-read UPSERT via an EQUALITY delete (Iceberg's
@@ -3215,71 +3162,65 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         // table creation: deletes against nothing are no-ops
         return (append(pinned, name, partitionCols, props), n)
       }
-      val lock = TableIO.writeLock(catalog.pathOf(name))
-      lock.acquire()
-      try {
+      catalog.locked(name) {
         catalog.forkLocked(name, ref)
         val v = catalog.head(name, ref)
-        val files = catalog.manifest(name, v, ref)
         if (n == 0) {
-          // idle batch: metadata-only mark commit (same as upsert)
-          if (props.nonEmpty) {
-            val nv = commitMorRebasing(name, ref, v, Seq.empty, None,
-              Seq.empty, Map.empty, props)
-            return (nv, 0L)
+          // idle batch: an append of no files carrying the mark (as upsert's)
+          (if (props.nonEmpty) commitOnto(name, ref, Seq.empty, Map.empty, props, Some(v)) else v,
+            0L)
+        } else {
+          val files = catalog.manifest(name, v, ref)
+          // scope the equality delete to files that might hold the keys
+          // (by the first key, like upsert's rewrite scoping)
+          FileStats.prime(catalog.statsOrEmpty(name, v, ref))
+          val keyVals: Option[Array[Any]] =
+            try {
+              val ks = pinnedKeys.select(keyCols.head).distinct().limit(maxScopedKeys + 1).collect()
+              if (ks.length > maxScopedKeys) None else Some(ks.map(_.get(0)))
+            } catch { case scala.util.control.NonFatal(_) => None }
+          val dirty = keyVals match {
+            case None => files
+            case Some(vals) =>
+              val filter = Seq(org.apache.spark.sql.sources.In(keyCols.head, vals))
+              val scope = fileScopeOf(name, files, pinnedKeys.schema)
+              Timers.time("dml.pruneProbe")(files.filter(scope.mightMatch(_, filter)))
           }
-          return (v, 0L)
+          val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
+          // a pure-delete batch appends nothing — no empty-file junk.
+          // Below the shard bound, coalesce the (cached — its partition
+          // layout would otherwise defeat AQE coalescing) batch to one
+          // write task: a CDC batch is O(batch) by design, and a 32-
+          // partition cached micro-batch would stage 32 KB-sized files
+          // per commit — paying 32 footer-stat reads and manifest
+          // entries for one batch's worth of rows.
+          val newFiles =
+            if (nUpserts == 0) Seq.empty[String]
+            else if (n > morShardRows) stageWrite(toPhysical(pinned, name), name, pcols)
+            // sub-shard batch: one write task AND the single-file fast
+            // path (no commit protocol) — the per-micro-batch floor
+            else stageWrite(toPhysical(pinned.coalesce(1), name), name, pcols,
+              singleTask = true)
+          // stats prove no file holds the keys: pure append (no entry)
+          val (entriesRaw, dirtyRel) =
+            if (dirty.isEmpty) (None, Seq.empty[String])
+            else {
+              // equality keys ride under PHYSICAL column names (rename-proof)
+              val renames = catalog.renames(name)
+              val physKeys = keyCols.map(k => renames.getOrElse(k, k))
+              val keyRows = toPhysical(pinnedKeys.select(keyCols.map(col): _*).distinct(), name)
+              val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
+              val rel = dirty.map(f => TableIO.fileKeyOf(root, f)).sorted
+              // a CDC batch is O(batch) by design; above the shard bound
+              // the key write parallelizes by key instead of one task
+              val entries = writeDeleteSet(name, keyRows, n, physKeys.head, rel, physKeys)
+              (Some(TableCatalog.encodeDeletes(entries)), rel)
+            }
+          val nv = commitOnto(name, ref, newFiles, catalog.statsForCommit(name, Seq.empty,
+            newFiles, spark.sessionState.newHadoopConf()), props, Some(v), entriesRaw, dirtyRel)
+          (nv, n)
         }
-        // scope the equality delete to files that might hold the keys
-        // (by the first key, like upsert's rewrite scoping)
-        FileStats.prime(catalog.statsOrEmpty(name, v, ref))
-        val keyVals: Option[Array[Any]] =
-          try {
-            val ks = pinnedKeys.select(keyCols.head).distinct().limit(maxScopedKeys + 1).collect()
-            if (ks.length > maxScopedKeys) None else Some(ks.map(_.get(0)))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        val dirty = keyVals match {
-          case None => files
-          case Some(vals) =>
-            val filter = Seq(org.apache.spark.sql.sources.In(keyCols.head, vals))
-            val scope = fileScopeOf(name, files, pinnedKeys.schema)
-            Timers.time("dml.pruneProbe")(files.filter(scope.mightMatch(_, filter)))
-        }
-        val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
-        // a pure-delete batch appends nothing — no empty-file junk.
-        // Below the shard bound, coalesce the (cached — its partition
-        // layout would otherwise defeat AQE coalescing) batch to one
-        // write task: a CDC batch is O(batch) by design, and a 32-
-        // partition cached micro-batch would stage 32 KB-sized files
-        // per commit — paying 32 footer-stat reads and manifest
-        // entries for one batch's worth of rows.
-        val newFiles =
-          if (nUpserts == 0) Seq.empty[String]
-          else if (n > morShardRows) stageWrite(toPhysical(pinned, name), name, pcols)
-          // sub-shard batch: one write task AND the single-file fast
-          // path (no commit protocol) — the per-micro-batch floor
-          else stageWrite(toPhysical(pinned.coalesce(1), name), name, pcols,
-            singleTask = true)
-        // stats prove no file holds the keys: pure append (no entry)
-        val (entriesRaw, dirtyRel) =
-          if (dirty.isEmpty) (None, Seq.empty[String])
-          else {
-            // equality keys ride under PHYSICAL column names (rename-proof)
-            val renames = catalog.renames(name)
-            val physKeys = keyCols.map(k => renames.getOrElse(k, k))
-            val keyRows = toPhysical(pinnedKeys.select(keyCols.map(col): _*).distinct(), name)
-            val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-            val rel = dirty.map(f => TableIO.fileKeyOf(root, f)).sorted
-            // a CDC batch is O(batch) by design; above the shard bound
-            // the key write parallelizes by key instead of one task
-            val entries = writeDeleteSet(name, keyRows, n, physKeys.head, rel, physKeys)
-            (Some(TableCatalog.encodeDeletes(entries)), rel)
-          }
-        val nv = commitMorRebasing(name, ref, v, newFiles, entriesRaw,
-          dirtyRel, catalog.statsForCommit(name, Seq.empty, newFiles,
-            spark.sessionState.newHadoopConf()), props)
-        (nv, n)
-      } finally lock.release()
+      }
     } finally { pinned.unpersist(); pinnedKeys.unpersist(); () }
   }
 
@@ -3357,19 +3298,15 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * collide across writers. A failure before the move leaves only a
     * dot-prefixed staging dir (invisible to readers and to
     * `listDataFiles`); `removeOrphanFiles` can reclaim it.
+    *
+    * `df` carries PHYSICAL column names. Package-visible for the SQL
+    * row-level DML layout hop (GraftRowOpsTable), which stages its
+    * replacement rows under the table's partitioned layout; callers
+    * must already hold the table's write lock and own the manifest
+    * commit.
     */
-  /** The row-level DML layout hop (GraftRowOpsTable): stage an
-    * already-physical-named replacement frame under the table's
-    * partitioned layout — same withLayout / distribution path as
-    * every append. Package-visible, not public: callers must already
-    * hold the table's write lock and own the manifest commit.
-    */
-  private[io] def stageReplacement(df: DataFrame, name: String,
-                                   partitionCols: Seq[String]): Seq[String] =
-    stageWrite(df, name, partitionCols)
-
-  private def stageWrite(df: DataFrame, name: String, partitionCols: Seq[String],
-                         singleTask: Boolean = false): Seq[String] = {
+  private[io] def stageWrite(df: DataFrame, name: String, partitionCols: Seq[String],
+                             singleTask: Boolean = false): Seq[String] = {
     val (laid0, layoutCols) = withLayout(df, name, partitionCols)
     // WRITE DISTRIBUTION MODE (Iceberg's write.distribution-mode =
     // hash): cluster the batch by its layout columns so each partition
@@ -3423,13 +3360,12 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     // (GraftRowOpsTable) — stages privately and claims exactly the
     // files it moved, so no writer can ever capture another's in-flight
     // files. Appends are safe across PROCESSES end-to-end (private
-    // staging + the optimistic version-race retry below, proven by
-    // CrossProcessSpec); DML is fail-fast instead: it validates its
-    // base version and commits AT base+1 through the hard-link-
-    // exclusive manifest create, so any racing commit surfaces as
-    // ConcurrentCommitException. The same-JVM per-table lock remains
-    // as a serialization optimization (saves wasted optimistic
-    // retries), not a correctness requirement.
+    // staging + the commit loop's append rule, proven by
+    // CrossProcessSpec); DML pins the base it read and commits through
+    // the loop's replacement rule, so a racing commit either rebases
+    // under validation or surfaces as ConcurrentCommitException. The
+    // same-JVM per-table lock remains as a serialization optimization
+    // (saves wasted optimistic retries), not a correctness requirement.
     // cachedMeta: the helpers below (applyWriteOrder, toPhysical,
     // withLayout) each read table meta — one catalog round-trip per
     // commit, not four (r17 verdict item 1)
@@ -3499,10 +3435,6 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       .sortWithinPartitions(cols.map(org.apache.spark.sql.functions.col): _*)
   }
 
-  /** Declare (or clear, with Seq.empty) the table's write sort order;
-    * persisted in table meta, honored by every subsequent append and
-    * overwrite. SQL surface: CALL system.set_write_order(table, cols).
-    */
   /** Declare (or clear, with "none") the table's write distribution
     * mode; persisted in table meta, honored by every subsequent
     * partitioned append/overwrite/rewrite. SQL surface:
@@ -3554,6 +3486,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       catalog.writeMeta(name, meta.copy(schemaJson = Some(updated.json)))
     }
 
+  /** Declare (or clear, with Seq.empty) the table's write sort order;
+    * persisted in table meta, honored by every subsequent append and
+    * overwrite. SQL surface: CALL system.set_write_order(table, cols).
+    */
   def setWriteSortOrder(name: String, cols: Seq[String]): Unit = {
     // locked read-modify-write: a concurrent ALTER TABLE or another
     // set_write_order must not have its meta fields clobbered by this
@@ -3573,65 +3509,85 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     else catalog.forkLocked(name, ref)
     val newFiles = stageWrite(toPhysical(df, name), name, partitionCols)
     val newStats = commitStats(name, Seq.empty, newFiles)
-    // overwrite keeps fail-fast single-writer semantics: retrying a
-    // logical replace after a concurrent commit would silently discard
-    // the racer's rows (lost update)
-    if (append) appendFiles(name, newFiles, newStats, props, ref)
+    // a blind overwrite replaces whatever the head it reads at commit
+    // time holds and never retries: a racer landing between that read
+    // and the link surfaces as ConcurrentCommitException
+    if (append) commitOnto(name, ref, newFiles, newStats, props)
     else catalog.commitSnapshot(name, newFiles, props, newStats, ref)
   }
 
-  /** Optimistic-concurrency APPEND commit (Iceberg's commit loop) of
-    * already-written `newFiles` onto `ref`'s head: losing the version
-    * race costs one manifest re-read, never a data rewrite. The base
-    * file list and the version number come from the SAME read —
-    * re-deriving one of them later would commit a stale file list over
-    * the racer's snapshot and lose its files. Returns the committed
-    * version.
+  /** The APPEND rule of the commit loop ([[TableCatalog.commitLoop]]):
+    * keep every file of `ref`'s head with its stats and its pending
+    * deletes carry (dropping the carry would silently resurrect the
+    * deleted rows), then add `newFiles`. Losing the race costs one
+    * manifest re-read, never a data rewrite. Appends, WAP publish and
+    * idle stream batches (no files, only the mark) take it as is; a
+    * branch head must exist, main's is created by the first append.
+    *
+    * Merge-on-read writes (Iceberg's row delta) stack `newRaw` delete
+    * entries onto the head's carry — main and branch chains alike: a
+    * branch snapshot carries the same `graft.deletes` prop, branch reads
+    * merge it, and [[TableCatalog.fastForward]] publishes it to main
+    * with the files. They pin the head they planned against (`head0`)
+    * and rebase onto any head that still CONTAINS every file the
+    * entries scope (`scopedKeys`, table-root-relative): position pairs
+    * reference immutable files, and an equality entry's dirty list pins
+    * exactly the files it kills in, so a racer's appended files stay
+    * out of scope — their rows are newer than this batch and survive it
+    * (snapshot isolation, Iceberg's default for row-delta commits). A
+    * head missing a scoped file means a rewrite/applyDeletes landed and
+    * the recorded positions are dead — refuse, for the caller to rerun
+    * against fresh state. Returns the committed version (the head, when
+    * a replayed stream batch is recognized as already in).
     */
-  private def appendFiles(name: String, newFiles: Seq[String],
-                          newStats: Map[String, Map[String, FileStats.ColStats]],
-                          props: Map[String, String], ref: Ref): Int = {
-    // the mark may ride under the bare legacy key or a per-sink key —
-    // re-guard against whichever key THIS append carries
-    val streamMark = props.collectFirst {
-      case (k, v) if k.startsWith(TableCatalog.StreamBatchProp) => (k, v)
-    }
-    val streamBatchId = streamMark.flatMap(_._2.toLongOption)
-    val streamPropKey = streamMark.map(_._1).getOrElse(TableCatalog.StreamBatchProp)
-    var attempt = 0
-    while (true) {
-      // Exactly-once guard INSIDE the loop: a stream-marked append
-      // that loses the version race may have lost it to the SAME
-      // batch committed by a recovered query instance (Structured
-      // Streaming's at-least-once replay). Retrying blindly would
-      // commit the batch twice; if the chain already carries a mark at
-      // or past this batch, the rows are in — stop without committing.
-      if (streamBatchId.exists(id =>
-          catalog.streamBatchMark(name, streamPropKey, ref).exists(_ >= id)))
-        return catalog.head(name, ref)
-      val base = catalog.currentVersion(name, ref).getOrElse {
+  private[io] def commitOnto(name: String, ref: Ref, newFiles: Seq[String],
+                             newStats: Map[String, Map[String, FileStats.ColStats]],
+                             props: Map[String, String], head0: Option[Int] = None,
+                             newRaw: Option[String] = None,
+                             scopedKeys: Seq[String] = Seq.empty): Int = {
+    val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
+    val scoped = scopedKeys.toSet
+    catalog.commitLoop(name, ref, props, head0) { (head, lost) =>
+      if (head == 0) {
         require(ref == Ref.Main, ref.missing(name))
-        0
-      }
-      val prev = if (base == 0) Seq.empty else catalog.manifest(name, base, ref)
-      val carried = if (base == 0) Map.empty[String, Map[String, FileStats.ColStats]]
-                    else catalog.statsOrEmpty(name, base, ref)
-      // an append keeps every base data file, so the base's PENDING
-      // position deletes (if any) must ride along — dropping the prop
-      // would silently resurrect the deleted rows
-      val morCarry =
-        if (base == 0) Map.empty[String, String] else catalog.deletesCarry(name, base, ref)
-      try {
-        return catalog.commitSnapshotAt(name, prev ++ newFiles, base + 1, morCarry ++ props,
-          carried.view.filterKeys(prev.toSet).toMap ++ newStats, ref)
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > 20) throw e // livelock guard; caller decides
+        Some(TableCatalog.Commit(newFiles, Map.empty, newStats))
+      } else {
+        val files = catalog.manifest(name, head, ref)
+        if (lost.isDefined && !scoped.subsetOf(files.map(TableIO.fileKeyOf(root, _)).toSet))
+          throw new ConcurrentCommitException(
+            s"MOR commit to ${ref.describe(name)} lost its base: a concurrent rewrite " +
+              "removed file(s) the delete entries scope — rerun the operation " +
+              "against the current snapshot")
+        val carry = catalog.deletesCarry(name, head, ref)
+        val deletes = newRaw.fold(carry) { nr =>
+          Map(TableCatalog.DeletesProp ->
+            carry.get(TableCatalog.DeletesProp).fold(nr)(TableCatalog.joinDeletesRaw(_, nr)))
+        }
+        Some(TableCatalog.Commit(files ++ newFiles, deletes,
+          catalog.statsOrEmpty(name, head, ref) ++ newStats))
       }
     }
-    -1 // unreachable
   }
+
+  /** The RERUN rule of the commit loop ([[TableCatalog.commitLoop]])
+    * for commits whose content derives from the head they land on —
+    * applyDeletes' merge, the sketch sinks' read-merge-overwrite.
+    * Nothing there can blind-rebase, but it CAN rerun: every attempt
+    * re-reads and rebuilds at the fresh head. `build` answers the files
+    * to keep and the frame to stage over them under `partitionCols`
+    * (None: nothing to commit). Under the table's write lock for the
+    * whole loop; a losing attempt's staged files become age-guarded GC
+    * food.
+    */
+  private[graft] def commitRebuilt(name: String, ref: Ref, props: Map[String, String],
+                                   partitionCols: => Seq[String] = Seq.empty)
+                                  (build: Int => Option[(Seq[String], DataFrame)]): Int =
+    catalog.locked(name)(catalog.commitLoop(name, ref, props) { (head, _) =>
+      build(head).map { case (keep, df) =>
+        val newFiles = stageWrite(toPhysical(df, name), name, partitionCols)
+        TableCatalog.Commit(keep ++ newFiles, Map.empty, commitStats(name, keep, newFiles, ref))
+      }
+    })
 }
 
 object TableIO {

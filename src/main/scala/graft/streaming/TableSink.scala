@@ -79,49 +79,36 @@ object TableSink {
   }
 
   /** The shared sketch-merge core: union the batch sketch with the
-    * current state (if any), re-aggregate per key with `agg`
+    * state at the head (if any), re-aggregate per key with `agg`
     * (max-monoid or additive), overwrite with `props` riding the
     * commit. The read-merge-overwrite pair is torn-read safe because
-    * snapshots are immutable (the read pins the old manifest's files,
-    * which the overwrite never touches) — but NOT lost-update safe on
-    * its own: two mergers reading the same state version would each
+    * snapshots are immutable (the read pins the head's files, which
+    * the overwrite never touches) — but NOT lost-update safe on its
+    * own: two mergers reading the same state version would each
     * overwrite with only their own batch folded in, silently losing
-    * one side's registers/counts. So the commit is PINNED at the
-    * version observed by the state read (+1); a racer surfaces as
-    * ConcurrentCommitException and the whole read-merge-commit is
-    * retried against the racer's output (bounded optimistic loop, the
-    * table-layer rule for version-checked commits).
+    * one side's registers/counts. So it runs as a RERUN commit
+    * ([[graft.io.TableIO.commitRebuilt]]): pinned at the head the
+    * state was read from, and a racer reruns the whole
+    * read-merge-commit against the racer's output. A marked (additive)
+    * merge that loses the race to the SAME batch committed by a
+    * recovered query instance stops there instead of folding the
+    * batch in twice.
     */
   private def mergeSketch(io: TableIO, table: String, sk: DataFrame,
                           keyCols: Seq[String], stateCol: String,
                           agg: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                          props: Map[String, String],
-                          alreadyMerged: () => Boolean = () => false): Unit = {
+                          props: Map[String, String]): Unit = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    var done = false
-    while (!done) {
-      // Replay guard INSIDE the loop (mirrors the append path): a
-      // sum-merge that loses the version race may have lost it to the
-      // SAME batch committed by a recovered query instance — blind
-      // retry would fold the batch in twice. Re-checked per attempt.
-      if (alreadyMerged()) return
-      val base = io.catalog.currentVersion(table).getOrElse(0)
+    io.commitRebuilt(table, Ref.Main, props) { base =>
       val merged =
         if (base > 0)
-          io.read(table).unionByName(sk)
+          io.readVersion(table, base).unionByName(sk)
             .groupBy(keyCols.map(col): _*)
             .agg(agg(col(stateCol)).as(stateCol))
         else sk
-      try {
-        io.overwriteAt(merged, table, base + 1, props = props)
-        done = true
-      } catch {
-        case e: graft.io.ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > 20) throw e // livelock guard; caller decides
-      }
+      Some((Seq.empty, merged))
     }
+    ()
   }
 
   /** Wire a streaming DataFrame into a table: every micro-batch is one
@@ -145,20 +132,20 @@ object TableSink {
     }
   }
 
-  /** Complete-mode sink for streaming AGGREGATIONS: every micro-batch
-    * carries the full up-to-date result, so the sink OVERWRITES the
-    * table per batch (snapshot-atomic — readers always see one whole
-    * result, never a mix). Overwrite is naturally idempotent under
-    * replay, so no batch-id mark is needed. This is the
-    * materialized-view shape: the table always holds the complete
-    * aggregate of everything the stream has seen; the append sink
-    * above is the ingest/ledger shape.
-    *
-    * Scale note: complete mode re-emits the whole aggregate per batch,
-    * so it fits results bounded by GROUP-BY cardinality (a windowed
-    * rollup — windows × types), not per-event output; for those, use
-    * the append sink with a watermark.
+  /** A batch's winner per key: the row with the greatest `orderCols`
+    * tuple (callers pass a TOTAL order, or the winner under ties is
+    * undefined) — the within-batch last-write-wins reduction of the
+    * upsert and CDC sinks.
     */
+  private def latestPerKey(batch: DataFrame, keyCols: Seq[String],
+                           orderCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols.map(col(_).desc): _*)
+    batch.withColumn("__graft_rn", row_number().over(w))
+      .filter(col("__graft_rn") === 1).drop("__graft_rn")
+  }
+
   /** Commit one micro-batch as an UPSERT: the batch reduces to its
     * last-write-wins winner per key (greatest `orderCols` tuple;
     * callers pass a TOTAL order — e.g. ts + a unique id — or the
@@ -172,17 +159,11 @@ object TableSink {
                         keyCols: Seq[String], orderCols: Seq[String],
                         partitionCols: Seq[String] = Seq.empty,
                         sinkId: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, row_number}
     val propKey = TableCatalog.streamBatchProp(sinkId)
     val mark = io.catalog.streamBatchMark(table, propKey)
     if (mark.exists(_ >= batchId)) false
     else {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(orderCols.map(col(_).desc): _*)
-      val winners = batch.withColumn("__graft_rn", row_number().over(w))
-        .filter(col("__graft_rn") === 1).drop("__graft_rn")
-      io.upsert(table, winners, keyCols, partitionCols,
+      io.upsert(table, latestPerKey(batch, keyCols, orderCols), keyCols, partitionCols,
         props = Map(propKey -> batchId.toString))
       true
     }
@@ -220,19 +201,13 @@ object TableSink {
                            partitionCols: Seq[String] = Seq.empty,
                            sinkId: Option[String] = None,
                            ref: Ref = Ref.Main): Boolean = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, row_number}
     val propKey = TableCatalog.streamBatchProp(sinkId)
     // the mark rides `ref`'s manifests, so the replay guard reads that
     // chain (a main-side mark would let a recovered query double-commit
     // the batch onto a branch)
     if (io.catalog.streamBatchMark(table, propKey, ref).exists(_ >= batchId)) false
     else {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(orderCols.map(col(_).desc): _*)
-      val winners = batch.withColumn("__graft_rn", row_number().over(w))
-        .filter(col("__graft_rn") === 1).drop("__graft_rn")
-      io.upsertMOR(table, winners, keyCols, partitionCols,
+      io.upsertMOR(table, latestPerKey(batch, keyCols, orderCols), keyCols, partitionCols,
         props = Map(propKey -> batchId.toString), ref = ref)
       true
     }
@@ -269,17 +244,11 @@ object TableSink {
                         partitionCols: Seq[String] = Seq.empty,
                         sinkId: Option[String] = None,
                         ref: Ref = Ref.Main): Boolean = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, row_number}
     val propKey = TableCatalog.streamBatchProp(sinkId)
     if (io.catalog.streamBatchMark(table, propKey, ref).exists(_ >= batchId)) false
     else {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(orderCols.map(col(_).desc): _*)
-      val winners = batch.withColumn("__graft_rn", row_number().over(w))
-        .filter(col("__graft_rn") === 1).drop("__graft_rn")
-      io.cdcApplyMOR(table, winners, keyCols, opCol, deleteOp, partitionCols,
-        props = Map(propKey -> batchId.toString), ref = ref)
+      io.cdcApplyMOR(table, latestPerKey(batch, keyCols, orderCols), keyCols, opCol, deleteOp,
+        partitionCols, props = Map(propKey -> batchId.toString), ref = ref)
       true
     }
   }
@@ -336,12 +305,10 @@ object TableSink {
                                 toSketch: DataFrame => DataFrame,
                                 keyCols: Seq[String], stateCol: String,
                                 propKey: String): Boolean = {
-    def merged() = io.catalog.streamBatchMark(table, propKey).exists(_ >= batchId)
-    if (merged()) false
+    if (io.catalog.streamBatchMark(table, propKey).exists(_ >= batchId)) false
     else {
       mergeSketch(io, table, toSketch(batch), keyCols, stateCol,
-        org.apache.spark.sql.functions.sum, Map(propKey -> batchId.toString),
-        alreadyMerged = () => merged())
+        org.apache.spark.sql.functions.sum, Map(propKey -> batchId.toString))
       true
     }
   }
@@ -367,6 +334,20 @@ object TableSink {
     }
   }
 
+  /** Complete-mode sink for streaming AGGREGATIONS: every micro-batch
+    * carries the full up-to-date result, so the sink OVERWRITES the
+    * table per batch (snapshot-atomic — readers always see one whole
+    * result, never a mix). Overwrite is naturally idempotent under
+    * replay, so no batch-id mark is needed. This is the
+    * materialized-view shape: the table always holds the complete
+    * aggregate of everything the stream has seen; the append sink
+    * above is the ingest/ledger shape.
+    *
+    * Scale note: complete mode re-emits the whole aggregate per batch,
+    * so it fits results bounded by GROUP-BY cardinality (a windowed
+    * rollup — windows × types), not per-event output; for those, use
+    * the append sink with a watermark.
+    */
   def completeStream(stream: DataFrame, io: TableIO, table: String, checkpoint: String,
                      availableNow: Boolean = false): StreamingQuery =
     startForeachBatch(stream, checkpoint, availableNow, outputMode = Some("complete")) {

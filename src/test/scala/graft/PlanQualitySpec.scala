@@ -86,6 +86,11 @@ class PlanQualitySpec extends SparkSpec {
     val p = plan(graft.text.TextAnalysis.topTokens(Tables.documents(spark, sfDir), k = 10))
     assert(p.contains("TakeOrderedAndProject"), s"vocab top-k must not materialize a full sort:\n$p")
     assert(!p.contains("doc_id"), s"aggregate key must not include doc_id (full-token-stream shuffle):\n$p")
+    // the q30 tokenizer hoist: one regex tokenize, not one per use of
+    // the `tokens` alias (e.g. CollapseProject inlining it back into
+    // the Generate would re-duplicate it)
+    val finalPlan = p.split("== Initial Plan ==").head
+    assert("split\\(".r.findAllIn(finalPlan).length == 1, s"q30 plan must tokenize exactly once:\n$p")
   }
 
   test("ANN ranking is a bounded aggregate, not a per-query window sort") {

@@ -397,22 +397,28 @@ class TableMetaSpec extends graft.SparkSpec {
     }
   }
 
-  test("overwriteAt pins a read-merge-overwrite: a racer's commit surfaces, never a lost update") {
+  test("a read-merge-overwrite reruns over a racer's commit: never a lost update") {
+    import org.apache.spark.sql.functions.col
     val io = freshIO()
     val t = "default.pinned"
     io.overwrite(Seq((1L, 10L)).toDF("k", "cnt"), t) // v1
-    val read = io.catalog.currentVersion(t).get // merger reads state here
-    // racer (another merger / another process) lands its merge first
-    io.overwrite(Seq((1L, 25L)).toDF("k", "cnt"), t) // v2
-    // our merge, computed against v1, must NOT silently clobber v2
-    intercept[graft.io.ConcurrentCommitException] {
-      io.overwriteAt(Seq((1L, 17L)).toDF("k", "cnt"), t, read + 1)
+    // the racer's state file, written under the table but not committed
+    val racerFiles =
+      io.catalog.stagedManifest(t, io.appendStaged(Seq((1L, 25L)).toDF("k", "cnt"), t))
+    // our merge adds 17 to the state it reads; a racer (another process,
+    // outside this JVM's write lock) lands its state between our read
+    // and our commit — the pinned commit must lose, and the merge rerun
+    // against the racer's state instead of silently clobbering it
+    val bases = scala.collection.mutable.Buffer.empty[Int]
+    io.commitRebuilt(t, Ref.Main, Map.empty) { base =>
+      bases += base
+      val state = io.readVersion(t, base)
+      if (bases.size == 1) io.catalog.commitSnapshotAt(t, racerFiles, base + 1) // racer: v2
+      Some((Seq.empty, state.select(col("k"), (col("cnt") + 17L).as("cnt"))))
     }
-    assert(io.read(t).as[(Long, Long)].collect().toSeq == Seq(1L -> 25L),
-      "racer's state must survive the refused commit")
-    // the retried merge (re-read at v2) commits cleanly at v3
-    io.overwriteAt(Seq((1L, 42L)).toDF("k", "cnt"), t, io.catalog.currentVersion(t).get + 1)
-    assert(io.read(t).as[(Long, Long)].collect().toSeq == Seq(1L -> 42L))
+    assert(bases == Seq(1, 2), "the lost commit must rerun at the racer's head")
+    assert(io.read(t).as[(Long, Long)].collect().toSeq == Seq(1L -> 42L),
+      "the racer's state survives, with our merge folded in")
   }
 
   test("commits persist per-file column stats in the manifest; reads prune from them without footers") {

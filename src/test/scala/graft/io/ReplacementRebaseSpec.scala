@@ -139,6 +139,30 @@ class ReplacementRebaseSpec extends SparkSpec {
       ((5L until 20L).toSet - 12L - 15L))
   }
 
+  test("a MOR batch that lost the race to its own replay commits nothing (exactly-once)") {
+    val io = freshIo("graft_rb9_")
+    val t = "default.rb9"
+    io.append((0L until 4L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1), t) // v1
+    val stale = io.catalog.currentVersion(t).get
+    val mark = Map(TableCatalog.streamBatchProp(Some("rb9")) -> "7")
+    // a recovered query instance commits batch 7 first: key 1 replaced
+    io.upsertMOR(t, Seq((1L, "b1")).toDF("id", "s"), Seq("id"), props = mark)
+    val head = io.catalog.currentVersion(t).get
+    // this instance's MOR commit of the SAME batch — its own copy of the
+    // batch's data file and the same equality entry — pinned at the
+    // stale head it planned against
+    val batchFile = (io.catalog.manifest(t, head).toSet -- io.catalog.manifest(t, stale)).head
+    val ownCopy = batchFile.stripSuffix(".parquet") + "-own.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(batchFile), java.nio.file.Paths.get(ownCopy))
+    val entry = io.catalog.manifestProps(t, head)(TableCatalog.DeletesProp)
+    val scoped = TableCatalog.decodeDeletes(entry).flatMap(_.dirtyFiles)
+    val v = io.commitOnto(t, Ref.Main, Seq(ownCopy), Map.empty, mark, Some(stale),
+      Some(entry), scoped)
+    assert(v == head && io.catalog.currentVersion(t).get == head, "no version may be added")
+    assert(io.read(t).as[(Long, String)].collect().sortBy(_._1).toSeq ==
+      Seq(0L -> "a0", 1L -> "b1", 2L -> "a2", 3L -> "a3"), "no key may be duplicated")
+  }
+
   // -- serializable conflict-detection filter (r19 advice): a
   // row-REMOVING command's rebase must refuse a racer-added file that
   // might hold predicate-matching rows; disjoint appends still rebase.
