@@ -56,6 +56,7 @@ object Bench {
       .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(SessionFactory.localFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/scheduler so the first timed query doesn't absorb

@@ -19,6 +19,16 @@ object SessionFactory {
   /** Default parallelism for local runs; harness uses local[32]. */
   def localCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
+  /** `file://` through [[graft.io.NoForkLocalFileSystem]]: every Hadoop
+    * local write (commit-protocol jobs, the single-file fast path,
+    * `_SUCCESS`, stream sink staging) sets permissions in-process
+    * instead of forking `chmod`. Assumes a local POSIX file system and
+    * no libhadoop; other file systems are untouched. The tests'
+    * session registers the same map.
+    */
+  val localFsConf: Map[String, String] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[graft.io.NoForkLocalFileSystem].getName)
+
   def build(appName: String = "graft", master: Option[String] = Some(s"local[$localCores]")): SparkSession = {
     val b = SparkSession
       .builder()
@@ -36,6 +46,7 @@ object SessionFactory {
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(localFsConf)
     val withMaster = master.fold(b)(b.master)
     val spark = withMaster.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -72,6 +72,10 @@ object IngestionJob {
     // (IngestionJob.scala:39-43); one count action is the honest price
     // of refusing to commit an empty table version
     JobEnv.require_(!cleaned.isEmpty, s"no valid records under $inputDir — not committing")
+    // hash write distribution, the default of Iceberg's Spark writer
+    // for a partitioned table: one file per partition, written by
+    // parallel tasks instead of one task writing every partition
+    io.setWriteDistribution(Target, "hash")
     io.append(cleaned, Target, partitionCols = Seq("ship_year", "ship_month"))
   }
 

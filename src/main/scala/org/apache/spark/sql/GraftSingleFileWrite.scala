@@ -11,9 +11,13 @@ import org.apache.spark.util.SerializableConfiguration
   * `df.write.parquet(dir)` on a ONE-partition micro-batch still pays
   * the whole Hadoop commit protocol: committer setup (`_temporary`
   * tree), a task-attempt directory, task commit rename, job commit
-  * listing + rename, `_SUCCESS` — a ~100+ ms fixed floor per commit
-  * that dominates small CDC / streaming batches (Timers measured
-  * `stageWrite.writeJob` ≈ 140 ms on 1-file commits). This helper
+  * listing + rename, `_SUCCESS` — a fixed floor per commit that
+  * dominates small CDC / streaming batches. A one-row
+  * `TableIO.append` through it, manifest commit included (perfbench
+  * `floor.one_file_commit_ms`, 4-core VM), measured 91–99 ms with
+  * permissions set in-process (graft.io.NoForkLocalFileSystem) and
+  * 108–184 ms while every file, `.crc` and directory forked `chmod`.
+  * This helper
   * runs ONE executor task that opens Spark's own parquet
   * `OutputWriter` (same `ParquetWriteSupport` encoding as every normal
   * write — decimals, timestamps, field IDs all identical) directly at

@@ -13,6 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(SessionFactory.localFsConf)
     .getOrCreate()
 }
 
