@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved same-JVM A/B for a runtime conf knob (guide §1 + the
   * r21 bench-notes lesson: this box's ambient swings ±40% within
   * hours, so cross-pass comparisons are noise — the only trustworthy
@@ -13,44 +11,21 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.AB q99_span_dedup_corpus q74_winnow_pairs"
   *
   * A/B values are set through spark.conf (runtime), so the knob under
-  * test must be read per-call from the session conf. Cold-cache
-  * discipline matches Bench (blocking unpersist between runs).
+  * test must be read per-call from the session conf. Session, warm-up
+  * and cold-cache timed runs are Bench's own.
   */
 object AB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "5").toInt.max(1)
     val key = sys.env.getOrElse("SPARK_GRAFT_AB_KEY", "spark.graft.scatter.targetPartitionBytes")
     val aVal = sys.env.getOrElse("SPARK_GRAFT_AB_A", "1")
     val bVal = sys.env.getOrElse("SPARK_GRAFT_AB_B", "65536")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    def coldCache(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    def timeOnce(name: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      val r =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => println(s"[$name] FAILED: $e"); None }
-      coldCache()
-      r
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) Double.NaN
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    val spark = SessionFactory.build("graft-ab")
+    Bench.warmUp(spark)
+    def timeOnce(name: String): Option[Double] =
+      Bench.timeOnce(spark, sfDir, SparkEntry.queries(name)).map(_._1)
+    import Bench.median
 
     val names = if (args.nonEmpty) args.toSeq else Seq("q99_span_dedup_corpus")
     names.foreach { name =>

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Median-of-N benchmark. Single-run timings at sf0.1/local[32] swing
     * ±50% per query (GC, codegen compilation, page cache), so each query
@@ -46,22 +46,17 @@ object Bench {
     * timing; a query whose every run fails is excluded from
     * queries/total and named in the "failed" list instead of skewing the
     * numbers with a sentinel.
+    *
+    * Layer split: a [[LayerRecorder]] records every timed run into
+    * the runs file's `queries_layers` line (one record per successful
+    * run, in `queries_runs` order); stdout carries none of it. The
+    * session is `SessionFactory.build`'s (`SPARK_GRAFT_CPUS`, default 32).
     */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(SessionFactory.localFsConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM/scheduler so the first timed query doesn't absorb
-    // first-job overhead (codegen compiler init, scheduler spin-up)
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = SessionFactory.build("graft-bench")
+    warmUp(spark)
     def cpuCanary(iters: Long): Double = {
       val t0 = System.nanoTime()
       var acc = 0L
@@ -109,42 +104,6 @@ object Bench {
     val canaryIo = ioCanary()
     val canaryFsync = fsyncCanary()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    // Per-run write audit (files/bytes staged into tables) rides along
-    // with the timing — write-heavy queries (q52's partitioned append)
-    // are storage-sensitive, and the r11 verdict requires their write
-    // volume in the artifact so driver-box inflation is attributable.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long, Long)] = {
-      val f0 = graft.io.TableIO.filesWritten.get()
-      val b0 = graft.io.TableIO.bytesWritten.get()
-      val t0 = System.nanoTime()
-      val res =
-        try {
-          fn(spark, sfDir).count()
-          Some(((System.nanoTime() - t0) / 1e9,
-            graft.io.TableIO.filesWritten.get() - f0,
-            graft.io.TableIO.bytesWritten.get() - b0))
-        }
-        catch { case _: Throwable => None }
-      // Cold-cache policy: every run starts with an empty cache.
-      // Operators that persist intermediates (q12/q13/q40) would
-      // otherwise accumulate a fresh MEMORY_AND_DISK cache per run in
-      // this shared JVM and skew every later query's measurement.
-      // BLOCKING: the default async unpersist lets freed blocks linger
-      // while the NEXT timed run is already allocating — measured as
-      // one-fast-then-slow repeat runs in r8. Catalog.clearCache() has
-      // no blocking flag, so drop to the RDD layer.
-      // (SPARK_GRAFT_ASYNC_CLEAR=1 restores the r8 async behavior for
-      // A/B diagnosis of exactly this class of regression.)
-      spark.catalog.clearCache()
-      if (!sys.env.get("SPARK_GRAFT_ASYNC_CLEAR").contains("1"))
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      res
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    def r4(v: Double): Double = math.rint(v * 1e4) / 1e4
     // Each element: (name, per-run (cpu canary, fsync canary, timing)
     // triples). The per-run FSYNC probe (8 ops, ~8 ms quiet) exists
     // because the r14 driver pass proved the CPU probe blind to
@@ -152,13 +111,17 @@ object Bench {
     // 2.5-4x in stable-looking medians while every CPU canary read
     // idle — only the pass-boundary fsync canaries (4x slower) caught
     // it, too coarse to attribute per query.
+    val layers = new LayerRecorder(spark)
     val sampled = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-        name -> Seq.fill(runs)((cpuCanary(RunCanaryIters), fsyncCanary(ops = 8), timeOnce(fn)))
+        name -> Seq.fill(runs)((cpuCanary(RunCanaryIters), fsyncCanary(ops = 8),
+          timeOnce(spark, sfDir, fn, layers.record(name)(_))))
       }
     val canaryCpuEnd = cpuCanary(FullCanaryIters)
     val canaryFsyncEnd = fsyncCanary()
+    val okLayers = sampled.flatMap { case (_, rs) => rs.map(_._3.isDefined) }
+      .zip(layers.finish()).collect { case (true, l) => l }
     val timings = sampled.map { case (name, rs) =>
       name -> rs.collect { case (_, _, Some(t)) => r4(t._1) }
     }
@@ -246,13 +209,8 @@ object Bench {
       case (k, v) if histMin.get(k.split('_').head)
         .exists(h => v > 2.0 * h && v - h > 0.5) => k
     }.sorted
-    val reruns: Seq[(String, Double)] =
-      if (rerunCandidates.isEmpty) Seq.empty
-      else {
-        val byName = SparkEntry.queries
-        rerunCandidates.flatMap(k =>
-          byName.get(k).flatMap(fn => timeOnce(fn).map(t => k -> r4(t._1))))
-      }
+    val reruns = rerunCandidates.flatMap(k => SparkEntry.queries.get(k)
+      .flatMap(fn => timeOnce(spark, sfDir, fn).map(t => k -> r4(t._1))))
     // Floor flag (r17 verdict gap): contended_hist compares MEDIANS at
     // 3x and let a 2.6x FLOOR shift (q119 r17: best-of-3 3.52 s vs
     // all-rounds 1.24 s) pass silently. A query whose BEST run this
@@ -277,6 +235,9 @@ object Bench {
       .mkString("""{"metric":"queries_writes","queries_writes":{""", ",", "}}")
     val medLine = s"""{"metric":"queries_median","queries_median":${fmt(med)},"runs":$runs}"""
     val minLine = s"""{"metric":"queries_min","queries_min":${fmt(mins)},"failed":${fmtList(failed)},"runs":$runs}"""
+    val layersLine = ok.map { case (k, _) =>
+      jsonString(k) + ":" + okLayers.filter(_.label == k).map(_.json).mkString("[", ",", "]")
+    }.mkString("""{"metric":"queries_layers","queries_layers":{""", ",", "}}")
     // The harness keeps only the tail of stdout, so the per-run arrays
     // the r8/r11 verdicts asked for never survived as an artifact.
     // Persist them to a file (committed by the builder) as well as
@@ -285,7 +246,7 @@ object Bench {
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(runsFile),
-        s"$runsLine\n$writesLine\n$medLine\n$minLine\n".getBytes("UTF-8"))
+        s"$runsLine\n$writesLine\n$medLine\n$minLine\n$layersLine\n".getBytes("UTF-8"))
     } catch {
       // bench output must not die on an unwritable cwd, but a missing
       // artifact has to be explained, not silent (r12 advice)
@@ -313,4 +274,71 @@ object Bench {
     println(headline)
     spark.stop()
   }
+
+  /** Warms the JVM and scheduler so the first timed query doesn't
+    * absorb first-job overhead (codegen compiler init, scheduler
+    * spin-up).
+    */
+  private[graft] def warmUp(spark: SparkSession): Unit =
+    spark.range(1000000).selectExpr("sum(id)").collect()
+
+  /** One cold-cache timed run: `count()` of `fn`'s frame, as (seconds,
+    * files written, bytes written), or None if it throws. `around`
+    * wraps exactly the timed count (the layer recorder's window).
+    *
+    * The per-run write audit (files/bytes staged into tables) rides
+    * along with the timing — write-heavy queries (q52's partitioned
+    * append) are storage-sensitive, so their write volume goes into
+    * the artifact and a slow disk's inflation stays attributable.
+    */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame,
+      around: (=> Long) => Long = n => n): Option[(Double, Long, Long)] = {
+    val f0 = graft.io.TableIO.filesWritten.get()
+    val b0 = graft.io.TableIO.bytesWritten.get()
+    val t0 = System.nanoTime()
+    val res =
+      try {
+        around(fn(spark, sfDir).count())
+        Some(((System.nanoTime() - t0) / 1e9,
+          graft.io.TableIO.filesWritten.get() - f0,
+          graft.io.TableIO.bytesWritten.get() - b0))
+      }
+      catch { case e: Throwable => System.err.println(s"[bench] run failed: $e"); None }
+    // Cold-cache policy: every run starts with an empty cache.
+    // Operators that persist intermediates (q12/q13/q40) would
+    // otherwise accumulate a fresh MEMORY_AND_DISK cache per run in
+    // this shared JVM and skew every later query's measurement.
+    // BLOCKING: the default async unpersist lets freed blocks linger
+    // while the NEXT timed run is already allocating — measured as
+    // one-fast-then-slow repeat runs in r8. Catalog.clearCache() has
+    // no blocking flag, so drop to the RDD layer.
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    res
+  }
+
+  /** Median; NaN for an empty sample. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) Double.NaN
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  private[graft] def r4(v: Double): Double = math.rint(v * 1e4) / 1e4
+
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in oracle SQL or a stage name would
+    * otherwise make a reader's json.load fail.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

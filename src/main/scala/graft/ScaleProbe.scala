@@ -190,22 +190,15 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val simDir = args.headOption.getOrElse("/tmp/graft_sf1sim")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.build("graft-scale-probe")
     // keep graft's own phase-timing INFO lines visible under the WARN root
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft", org.apache.logging.log4j.Level.INFO)
     if (sys.env.contains("SPARK_GRAFT_JOBLOG"))
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.INFO)
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM/scheduler warmup
+    Bench.warmUp(spark)
     // the marker records WHICH fixture variant (and generator revision)
     // was built — switching SPARK_GRAFT_SIM_MODE or changing buildSim
     // must rebuild, not silently reuse stale data. Bump FixtureRev on
@@ -221,21 +214,13 @@ object ScaleProbe {
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "sf0.1,sf1sim").split(',').toSet
-    def r4(v: Double): Double = math.rint(v * 1e4) / 1e4
-    def probe(dir: String, scale: String): Unit = ProbeQueries
-      .filter(n => only.forall(_.contains(n)))
-      .filter(_ => scales.contains(scale))
-      .foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = Seq.fill(runs) {
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        r4(dt)
-      }
-      println(s"""{"probe":"$name","scale":"$scale","runs":${times.mkString("[", ",", "]")}}""")
+    def wanted(name: String, scale: String): Boolean =
+      scales.contains(scale) && only.forall(_.contains(name))
+    def report(name: String, scale: String, secs: Seq[Double]): Unit = println(
+      s"""{"probe":"$name","scale":"$scale","runs":${secs.map(Bench.r4).mkString("[", ",", "]")}}""")
+    def timed[T](f: => T): (T, Double) = { val t0 = System.nanoTime(); (f, (System.nanoTime() - t0) / 1e9) }
+    def probe(dir: String, scale: String): Unit = ProbeQueries.filter(wanted(_, scale)).foreach { name =>
+      report(name, scale, Seq.fill(runs)(Bench.timeOnce(spark, dir, SparkEntry.queries(name))).flatten.map(_._1))
     }
     probe(srcDir, "sf0.1")
     probe(simDir, "sf1sim")
@@ -244,9 +229,7 @@ object ScaleProbe {
     // layout the batch's key range maps to ~1 tile at either scale, so
     // the upsert cost should track the BATCH, not the table — the
     // claim that makes TableIO.upsert a CDC-apply primitive at 100 TB.
-    def upsertProbe(dir: String, scale: String): Unit = {
-      if (!scales.contains(scale)) return
-      if (!only.forall(_.contains("upsert_fixed_batch"))) return
+    def upsertProbe(dir: String, scale: String): Unit = if (wanted("upsert_fixed_batch", scale)) {
       val io = graft.io.TableIO(spark,
         java.nio.file.Files.createTempDirectory("graft_upsp_").toString)
       val orders = graft.tables.Tables.orders(spark, dir)
@@ -255,12 +238,8 @@ object ScaleProbe {
       io.compactSorted("default.ups", Seq("o_orderkey"), targetFiles = 32)
       val batch = orders.filter(col("o_orderkey") < 100)
         .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
-      val times = Seq.fill(runs) {
-        val t0 = System.nanoTime()
-        io.upsert("default.ups", batch, Seq("o_orderkey"))
-        r4((System.nanoTime() - t0) / 1e9)
-      }
-      println(s"""{"probe":"upsert_fixed_batch","scale":"$scale","runs":${times.mkString("[", ",", "]")}}""")
+      report("upsert_fixed_batch", scale,
+        Seq.fill(runs)(timed(io.upsert("default.ups", batch, Seq("o_orderkey")))._2))
     }
     upsertProbe(srcDir, "sf0.1")
     upsertProbe(simDir, "sf1sim")
@@ -274,9 +253,7 @@ object ScaleProbe {
     // table. Run i uses band [i*2000, i*2000+2000) so every run
     // exercises the dirty path (a reused band would find its rows
     // already deleted and take the clean-table path instead).
-    def dirtyDmlProbe(dir: String, scale: String): Unit = {
-      if (!scales.contains(scale)) return
-      if (!only.forall(_.contains("dirty_dml_fixed_band"))) return
+    def dirtyDmlProbe(dir: String, scale: String): Unit = if (wanted("dirty_dml_fixed_band", scale)) {
       val wh = java.nio.file.Files.createTempDirectory("graft_ddp_").toString
       val io = graft.io.TableIO(spark, wh)
       val t = "default.dd"
@@ -288,20 +265,20 @@ object ScaleProbe {
       val cat = "gddp" + scale.replace(".", "_")
       spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.io.GraftCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      val times = (0 until runs).map { i =>
+      report("dirty_dml_fixed_band", scale, (0 until runs).map { i =>
         val lo = i.toLong * 2000
-        val t0 = System.nanoTime()
-        val (_, nDel) = io.deleteWhereMOR(t,
-          col("okey") >= lo && col("okey") < lo + 2000 && col("okey") % 7 === 3)
-        spark.sql(s"UPDATE $cat.$t SET price = price + 1 " +
-          s"WHERE okey >= $lo AND okey < ${lo + 1000}")
-        val dt = r4((System.nanoTime() - t0) / 1e9)
+        val ((_, nDel), dt) = timed {
+          val del = io.deleteWhereMOR(t,
+            col("okey") >= lo && col("okey") < lo + 2000 && col("okey") % 7 === 3)
+          spark.sql(s"UPDATE $cat.$t SET price = price + 1 " +
+            s"WHERE okey >= $lo AND okey < ${lo + 1000}")
+          del
+        }
         require(nDel > 0, s"dirty-DML probe band $i matched nothing")
         require(io.catalog.pendingDeletes(t,
           io.catalog.currentVersion(t).get).isEmpty, "UPDATE left the band dirty")
         dt
-      }
-      println(s"""{"probe":"dirty_dml_fixed_band","scale":"$scale","runs":${times.mkString("[", ",", "]")}}""")
+      })
     }
     dirtyDmlProbe(srcDir, "sf0.1")
     dirtyDmlProbe(simDir, "sf1sim")
@@ -311,17 +288,11 @@ object ScaleProbe {
     // registers -> estimate pipeline, whose post-scan shuffle is
     // bounded at groups x 1024 rows at any input size — the probe
     // should scale with the SCAN, nothing else.
-    def hllProbe(dir: String, scale: String): Unit = {
-      if (!scales.contains(scale)) return
-      if (!only.forall(_.contains("hll_estimate_only"))) return
-      val times = Seq.fill(runs) {
-        val t0 = System.nanoTime()
-        graft.functions.HyperLogLog.estimate(
-          graft.tables.Tables.lineitem(spark, dir),
-          "CAST(l_orderkey AS STRING)", Seq("l_returnflag")).count()
-        r4((System.nanoTime() - t0) / 1e9)
-      }
-      println(s"""{"probe":"hll_estimate_only","scale":"$scale","runs":${times.mkString("[", ",", "]")}}""")
+    def hllProbe(dir: String, scale: String): Unit = if (wanted("hll_estimate_only", scale)) {
+      val estimate = (s: SparkSession, d: String) => graft.functions.HyperLogLog.estimate(
+        graft.tables.Tables.lineitem(s, d), "CAST(l_orderkey AS STRING)", Seq("l_returnflag"))
+      report("hll_estimate_only", scale,
+        Seq.fill(runs)(Bench.timeOnce(spark, dir, estimate)).flatten.map(_._1))
     }
     hllProbe(srcDir, "sf0.1")
     hllProbe(simDir, "sf1sim")

@@ -41,15 +41,7 @@ object StreamScaleProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val simDir = args.headOption.getOrElse("/tmp/graft_sf1sim")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.build("graft-stream-scale-probe")
 
     val scales = Seq("sf0.1" -> srcDir, "sf1sim" -> simDir)
       .filter { case (_, d) => Files.exists(Paths.get(d, "events.parquet")) }

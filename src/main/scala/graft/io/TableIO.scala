@@ -3340,7 +3340,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         // the private staging dir — no commit-protocol fixed cost.
         // The staging-dir + atomic-move contract below is unchanged.
         // (Own timer label so the committed-path floor and the fast
-        // path are separately attributable in Profile output.)
+        // path are separately attributable in each run's layer split.)
         Timers.time("stageWrite.writeJobFast")(
           org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
             laid, staging.toString, Some("zstd")))

@@ -7,7 +7,8 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * manifest IO, stats reads, DML planning probes) — the time the
   * per-job Spark listener metrics cannot see (guide §7.3: "driver
   * gap"). Near-zero overhead (two nanoTime reads + a LongAdder per
-  * labelled block); always on, read by `graft.Profile` and tests.
+  * labelled block); always on, read per run by `graft.Bench`'s
+  * `LayerRecorder`, by perfbench's traced run and by tests.
   */
 object Timers {
   private val totals = new ConcurrentHashMap[String, LongAdder]()
@@ -30,6 +31,4 @@ object Timers {
       .map { case (k, v) => (k, v.sum() / 1e9, counts.get(k).sum()) }
       .sortBy(-_._2)
   }
-
-  def reset(): Unit = { totals.clear(); counts.clear() }
 }

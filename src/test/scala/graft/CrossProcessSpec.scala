@@ -37,7 +37,7 @@ object CrossProcessAppendWorker {
 /** Worker `main` for the MOR cross-process race: N sequential
   * `deleteWhereMOR` calls, one id per commit, from this worker's own
   * id range. Any version conflict with the other JVM's commits must be
-  * resolved by the optimistic rebase in `commitMorRebasing` — both
+  * resolved by the optimistic rebase in `commitOnto` — both
   * writers' entries stack, no delete lost, no error surfaced.
   */
 object CrossProcessMorWorker {
