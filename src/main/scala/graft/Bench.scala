@@ -328,17 +328,9 @@ object Bench {
 
   private[graft] def r4(v: Double): Double = math.rint(v * 1e4) / 1e4
 
-  /** JSON string literal: escapes backslash, quote and ALL control
-    * chars (<0x20) — a tab or CR in oracle SQL or a stage name would
-    * otherwise make a reader's json.load fail.
+  /** JSON string literal through the shared metadata codec: every
+    * control char (<0x20) is escaped — a tab or CR in oracle SQL or a
+    * stage name would otherwise make a reader's json.load fail.
     */
-  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private[graft] def jsonString(s: String): String = graft.io.Codec.mapper.writeValueAsString(s)
 }

@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * row-level operations and plan-time file skipping to the files a
   * predicate can possibly touch (Iceberg's manifest-stats decision).
   * Stats are PERSISTED INTO THE MANIFEST at commit time
-  * (`TableIO.commitStats` -> `encodeEntries`) and primed into the
+  * (`TableIO.commitStats` -> `Codec.StatRecord`) and primed into the
   * cache when a table is loaded, so planning is O(manifest); the
   * parquet footer read below is the fallback for pre-stats manifests
   * and skipped column types.
@@ -78,79 +78,6 @@ object FileStats {
           })
         }.toMap)
     }
-
-  /** Serialize one file's column stats for embedding in a manifest
-    * commit. One string per column: `idx|kind|nulls|rows|min|max|colB64`
-    * with kind i = integral (decimal), f = fractional (double
-    * round-trip), s = bytes (base64, unsigned order), n = all-null.
-    * Columns whose stat types aren't encodable are SKIPPED — their
-    * absence falls back to a footer read, never a wrong prune.
-    */
-  def encodeEntries(fileIdx: Int, stats: Map[String, ColStats]): Seq[String] = {
-    val b64 = java.util.Base64.getEncoder
-    def enc(v: Any): Option[(String, String)] = v match {
-      case n @ (_: java.lang.Integer | _: java.lang.Long | _: java.lang.Short | _: java.lang.Byte) =>
-        Some("i" -> n.toString)
-      case n: java.lang.Float => Some("f" -> n.doubleValue().toString)
-      case n: java.lang.Double => Some("f" -> n.toString)
-      case d: java.math.BigDecimal => Some("D" -> d.toPlainString)
-      case b: Binary => Some("s" -> b64.encodeToString(b.getBytes))
-      case _ => None
-    }
-    stats.toSeq.sortBy(_._1).flatMap { case (colName, cs) =>
-      val col = b64.encodeToString(colName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // bloom rides as its OWN "b" entry next to the base stat entry:
-      // pre-bloom decoders drop unknown kinds (conservative), and the
-      // base entry stays bit-identical with or without an index
-      val bloomEntry = cs.bloom.toSeq.map(b =>
-        s"$fileIdx|b|0|${cs.rowCount}|${b64.encodeToString(b)}||$col")
-      if (cs.min == null && cs.max == null)
-        s"$fileIdx|n|${cs.nullCount}|${cs.rowCount}|||$col" +: bloomEntry
-      else (enc(cs.min), enc(cs.max)) match {
-        case (Some((k1, mn)), Some((k2, mx))) if k1 == k2 =>
-          s"$fileIdx|$k1|${cs.nullCount}|${cs.rowCount}|$mn|$mx|$col" +: bloomEntry
-        case _ => Nil // no base stats entry -> bloom dropped too (see decode)
-      }
-    }
-  }
-
-  /** Inverse of `encodeEntries`: entries grouped by file index.
-    * Malformed entries are dropped (conservative absence).
-    */
-  def decodeEntries(entries: Seq[String]): Map[Int, Map[String, ColStats]] = {
-    val b64 = java.util.Base64.getDecoder
-    val parsed = entries.flatMap { e =>
-      try e.split("\\|", -1) match {
-        case Array(idx, kind, nulls, rows, mn, mx, colB64) =>
-          val col = new String(b64.decode(colB64), java.nio.charset.StandardCharsets.UTF_8)
-          def dec(s: String): Any = kind match {
-            case "i" => java.lang.Long.valueOf(s)
-            case "f" => java.lang.Double.valueOf(s)
-            case "D" => new java.math.BigDecimal(s)
-            case "s" => Binary.fromConstantByteArray(b64.decode(s))
-          }
-          val cs = kind match {
-            case "n" => ColStats(null, null, nulls.toLong, rows.toLong)
-            case "b" => // bloom-only marker; merged into the base entry below
-              ColStats(null, null, 0L, rows.toLong, Some(b64.decode(mn)))
-            case _ => ColStats(dec(mn), dec(mx), nulls.toLong, rows.toLong)
-          }
-          Some((idx.toInt, col, kind == "b", cs))
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-    val base = parsed.filterNot(_._3)
-      .groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._4).toMap).toMap
-    // a bloom without a base stats entry is DROPPED: mightMatch's range
-    // step reads min/max, and a synthesized all-null base would prune
-    // files wrongly. encodeEntries only emits blooms beside a base.
-    parsed.filter(_._3).foldLeft(base) { case (acc, (idx, col, _, bcs)) =>
-      acc.get(idx).flatMap(_.get(col)) match {
-        case Some(cs) => acc.updated(idx, acc(idx).updated(col, cs.copy(bloom = bcs.bloom)))
-        case None => acc
-      }
-    }
-  }
 
   /** Drop cache entries for files physically deleted by GC
     * (`removeOrphanFiles`) so a long-lived driver doesn't accumulate

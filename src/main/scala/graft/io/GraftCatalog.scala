@@ -177,15 +177,15 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
     val dirty = mergeDirty &&
       (try catalog.pendingDeletes(name, version, ref).nonEmpty
        catch { case scala.util.control.NonFatal(_) => false })
-    val files =
-      try catalog.manifest(name, version, ref)
+    val snap =
+      try catalog.snapshot(name, version, ref)
       catch { case _: java.nio.file.NoSuchFileException => throw new NoSuchTableException(ident) }
+    val files = snap.files
     val label = ref.snapshotLabel(version)
     // seed the stats cache from the manifest so plan-time file
     // skipping (StatsPruningScanBuilder, DML scoping) never opens a
     // footer — stats were persisted with the commit
-    try FileStats.prime(catalog.statsOrEmpty(name, version, ref))
-    catch { case scala.util.control.NonFatal(_) => () }
+    FileStats.prime(snap.statsByFile)
     // A declared schema (CTAS or ALTER TABLE) wins when present —
     // that's what lets ADD COLUMN surface a column the existing data
     // files don't carry yet (parquet null-fills missing columns).
@@ -1750,7 +1750,7 @@ private[io] class StatsPruningScanBuilder(
     import org.apache.spark.sql.types._
     // footer-sourced stats carry the parquet physical boxes (Integer,
     // Float); MANIFEST-decoded stats widen integrals to Long and
-    // floats to Double (FileStats.encodeEntries' "i"/"f" kinds) —
+    // floats to Double (Codec.StatRecord's "i"/"f" kinds) —
     // accept both and narrow by the declared type. The narrowing is
     // exact: the value originated in a column of that type.
     def internal(v: Any): Any = (v, dt) match {

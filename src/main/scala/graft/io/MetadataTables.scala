@@ -123,9 +123,9 @@ private[io] object MetadataTables {
         .add("bloom_indexed", org.apache.spark.sql.types.BooleanType, nullable = false)
       // ONE version read (see the partitions branch): files and stats
       // from the same snapshot
-      val cver = cat.currentVersion(table)
-      val curFiles = cver.toSeq.flatMap(v => cat.manifest(table, v))
-      val allStats = cver.map(cat.statsOrEmpty(table, _)).getOrElse(Map.empty)
+      val cur = cat.currentVersion(table).map(cat.snapshot(table, _)).getOrElse(Codec.Manifest())
+      val curFiles = cur.files
+      val allStats = cur.statsByFile
       def numeric(v: Any): Option[Double] = v match {
         case null => None
         // manifest decode yields Long/Double/BigDecimal; the extra
@@ -223,9 +223,9 @@ private[io] object MetadataTables {
         try {
           val ref = Ref.Branch(b)
           cat.currentVersion(table, ref).map { head =>
-            val files = cat.manifest(table, head, ref)
-            val fork = cat.manifestProps(table, head, ref)
-              .get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption)
+            val snap = cat.snapshot(table, head, ref)
+            val files = snap.files
+            val fork = snap.props.get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption)
             val mtimeMicros = Files.getLastModifiedTime(
               cat.manifestFile(table, head, ref)).toMillis * 1000L
             new GenericInternalRow(Array[Any](

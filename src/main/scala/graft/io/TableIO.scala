@@ -2,6 +2,8 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.databind.annotation.{JsonDeserialize, JsonSerialize}
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -24,8 +26,8 @@ import scala.util.Using
   * qualified ("default.nyc_taxi_fact"); the namespace becomes a
   * subdirectory.
   *
-  * Manifest JSON escapes quotes/backslashes/control chars on write and
-  * is decoded by a real string scanner on read, so arbitrary file
+  * Every metadata document (manifests, meta.json, tags.json) is a
+  * Jackson-bound record coded through [[Codec]], so arbitrary file
   * paths round-trip. Paths are stored relative to the table directory
   * so a table rename (directory move) keeps every snapshot readable. Maintenance mirrors Iceberg's: `expireSnapshots`
   * bounds manifest history and `removeOrphanFiles` reclaims data files
@@ -85,16 +87,21 @@ final case class TableCatalog(warehouse: String) {
     * by pre-rename-fix manifests) still resolve as-is.
     */
   def manifest(name: String, version: Int, ref: Ref = Ref.Main): Seq[String] =
-    filesAt(name, manifestFile(name, version, ref))
+    snapshot(name, version, ref).files
 
-  /** File list of any manifest document (version or staged) — paths
-    * resolve against the table root (stored relative).
+  /** Manifest `version` of `ref`'s chain, decoded once: the file list,
+    * props and stats accessors below are views over it.
     */
-  private def filesAt(name: String, f: Path): Seq[String] = {
+  private[io] def snapshot(name: String, version: Int, ref: Ref = Ref.Main): Codec.Manifest =
+    manifestAt(name, manifestFile(name, version, ref))
+
+  /** Any manifest document (version, branch or staged), with its
+    * paths resolved against the table root (stored relative).
+    */
+  private def manifestAt(name: String, f: Path): Codec.Manifest = {
+    val doc = Codec.read[Codec.Manifest](f)
     val base = tableRoot(name)
-    TableCatalog.parseStringArrayAt(Files.readString(f), "files").map { p =>
-      if (Paths.get(p).isAbsolute) p else base.resolve(p).toString
-    }
+    doc.copy(files = doc.files.map(p => if (Paths.get(p).isAbsolute) p else base.resolve(p).toString))
   }
 
   def commitSnapshot(name: String, files: Seq[String],
@@ -112,7 +119,7 @@ final case class TableCatalog(warehouse: String) {
     */
   def manifestStats(name: String, version: Int, ref: Ref = Ref.Main)
       : Map[String, Map[String, FileStats.ColStats]] =
-    statsAt(name, manifestFile(name, version, ref))
+    snapshot(name, version, ref).statsByFile
 
   /** [[manifestStats]], degrading to no stats when the manifest is
     * unreadable — consumers fall back to a footer read, never a wrong
@@ -122,25 +129,6 @@ final case class TableCatalog(warehouse: String) {
       : Map[String, Map[String, FileStats.ColStats]] =
     try manifestStats(name, version, ref)
     catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** Per-file stats of any manifest document (version or staged) —
-    * keyed by resolved file path; entries index into the document's
-    * own files array.
-    */
-  private def statsAt(name: String, f: Path): Map[String, Map[String, FileStats.ColStats]] = {
-    val json = Files.readString(f)
-    val entries = TableCatalog.parseStringArrayAt(json, "stats")
-    if (entries.isEmpty) Map.empty
-    else {
-      val base = tableRoot(name)
-      val files = TableCatalog.parseStringArrayAt(json, "files").map { p =>
-        if (Paths.get(p).isAbsolute) p else base.resolve(p).toString
-      }
-      FileStats.decodeEntries(entries).collect {
-        case (idx, cols) if idx >= 0 && idx < files.size => files(idx) -> cols
-      }
-    }
-  }
 
   /** Stats map for a commit that keeps `kept` files and adds
     * `newFiles`: kept files carry their stats forward from `ref`'s
@@ -179,12 +167,7 @@ final case class TableCatalog(warehouse: String) {
     * describes rides inside the manifest, never in a second file.
     */
   def manifestProps(name: String, version: Int, ref: Ref = Ref.Main): Map[String, String] =
-    propsAt(manifestFile(name, version, ref))
-
-  /** Props of any manifest document (version, staged, or branch). */
-  private def propsAt(f: Path): Map[String, String] =
-    TableCatalog.parseStringArrayAt(Files.readString(f), "props")
-      .grouped(2).collect { case Seq(k, v) => k -> v }.toMap
+    snapshot(name, version, ref).props
 
   /** PENDING merge-on-read position deletes of snapshot `version`,
     * paths resolved absolute against the table root. Empty = clean
@@ -210,9 +193,9 @@ final case class TableCatalog(warehouse: String) {
     * rows would silently resurrect.
     */
   private[io] def deletesCarry(name: String, version: Int, ref: Ref = Ref.Main): Map[String, String] =
-    (try manifestProps(name, version, ref)
-     catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-      .view.filterKeys(_ == TableCatalog.DeletesProp).toMap
+    TableCatalog.deletesCarry(
+      try manifestProps(name, version, ref)
+      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
 
   /** Manifest document for a (deduped) file list + props + stats —
     * shared by version commits and STAGED (write-audit-publish)
@@ -220,34 +203,17 @@ final case class TableCatalog(warehouse: String) {
     */
   private def manifestJson(name: String, files: Seq[String],
                            props: Map[String, String],
-                           stats: Map[String, Map[String, FileStats.ColStats]]): String = {
+                           stats: Map[String, Map[String, FileStats.ColStats]]): Array[Byte] = {
     val base = tableRoot(name)
-    val stored = files.map { f =>
-      val p = Paths.get(f).toAbsolutePath.normalize
+    val abs = files.map(f => Paths.get(f).toAbsolutePath.normalize)
+    val stored = abs.zip(files).map { case (p, f) =>
       if (p.startsWith(base)) base.relativize(p).toString else f
     }
-    val filesJson = stored.map(f => "\"" + TableCatalog.escape(f) + "\"")
-      .mkString("\"files\": [", ", ", "]")
-    val propsJson =
-      if (props.isEmpty) ""
-      else props.toSeq.sortBy(_._1).flatMap { case (k, v) => Seq(k, v) }
-        .map(s => "\"" + TableCatalog.escape(s) + "\"")
-        .mkString(", \"props\": [", ", ", "]")
-    // stats are keyed by file INDEX into the files array (paths are
-    // stored relative; the index is stable either way); the index map
-    // is built once — an indexOf per entry would be O(files^2) on the
-    // 100k-file manifests this layer targets
-    val indexOfFile = files.map(f => Paths.get(f).toAbsolutePath.normalize.toString)
-      .zipWithIndex.toMap
-    val statsEntries = stats.toSeq.flatMap { case (f, cols) =>
-      indexOfFile.get(Paths.get(f).toAbsolutePath.normalize.toString)
-        .map(FileStats.encodeEntries(_, cols)).getOrElse(Nil)
-    }.sorted
-    val statsJson =
-      if (statsEntries.isEmpty) ""
-      else statsEntries.map(s => "\"" + TableCatalog.escape(s) + "\"")
-        .mkString(", \"stats\": [", ", ", "]")
-    s"{$filesJson$propsJson$statsJson}"
+    // stats align with the files array by position (paths are stored
+    // relative; the position is stable either way)
+    val byPath = stats.map { case (f, cols) => Paths.get(f).toAbsolutePath.normalize -> cols }
+    val colstats = abs.map(p => byPath.get(p).fold(Map.empty[String, Codec.StatRecord])(Codec.StatRecord.of))
+    Codec.encode(Codec.Manifest(stored, props, if (colstats.exists(_.nonEmpty)) colstats else Seq.empty))
   }
 
   /** Commit at a WRITER-COMPUTED version of `ref`'s chain — the
@@ -274,32 +240,10 @@ final case class TableCatalog(warehouse: String) {
     // (duplicated rows) — possible when an optimistic retry re-bases on
     // a manifest that already absorbed this writer's files
     val files = filesIn.distinct
-    val meta = metaPath(name)
-    Files.createDirectories(meta)
     val json = Timers.time("commit.manifestJson")(manifestJson(name, files, fullProps, stats))
-    // tmp name must be writer-unique: two racers sharing one tmp name
-    // could interleave write/link so the winner links the LOSER's
-    // content — the whole point of the exclusive link is defeated
-    val tmp = meta.resolve(s".${ref.fileName(v)}-${java.util.UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, json)
-    val target = manifestFile(name, v, ref)
-    def lost() = {
-      Files.deleteIfExists(tmp)
-      new ConcurrentCommitException(
+    if (!Codec.createExclusive(manifestFile(name, v, ref), json))
+      throw new ConcurrentCommitException(
         s"concurrent commit to ${ref.describe(name)}: version $v already exists (another writer won)")
-    }
-    // hard-link, not move: atomic AND exclusive — the target appears
-    // fully formed (it aliases the completed tmp file), and a second
-    // writer racing to the same version fails instead of clobbering
-    try Files.createLink(target, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => throw lost()
-      case _: UnsupportedOperationException =>
-        // filesystem without hard links: best-effort check + atomic move
-        if (Files.exists(target)) throw lost()
-        Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.deleteIfExists(tmp)
     v
   }
 
@@ -366,56 +310,9 @@ final case class TableCatalog(warehouse: String) {
     try manifestProps(name, v, b).getOrElse(TableCatalog.BranchBaseProp, "0")
     catch { case scala.util.control.NonFatal(_) => "0" }
 
-  /** Declared table metadata — ONE document (`meta.json`), so a
-    * multi-piece change (ALTER TABLE touching schema + renames +
-    * dropped list together) commits or doesn't as a unit: three
-    * separate files would let a crash land between writes and leave,
-    * e.g., a renamed logical column with no physical mapping (reads
-    * as null, next write forks a second physical column — permanent).
-    * Fields:
-    *   - schema: declared schema JSON — present for SQL-created
-    *     tables (CTAS validates the write against it before any data
-    *     file exists); absent for path-written tables (schema-on-read)
-    *   - pcols: declared partition columns (absent = undeclared)
-    *   - renames: logical-name -> physical-name pairs. The PHYSICAL
-    *     name is the column's name at birth — the name every data
-    *     file stores, fixed forever (parquet resolves columns by name;
-    *     we deliberately don't replicate Iceberg's field-ID
-    *     indirection). RENAME COLUMN only changes the logical name;
-    *     readers alias physical -> logical, writers logical ->
-    *     physical. Identity entries are never stored.
-    *   - dropped: physical names dropped by ALTER TABLE — their bytes
-    *     are still present in live data files (DROP is metadata-only),
-    *     so re-adding a column under such a name would resurrect stale
-    *     values; `GraftCatalog.alterTable` consults this to reject it.
-    */
-  final case class TableMeta(schemaJson: Option[String] = None,
-                             partitionCols: Option[Seq[String]] = None,
-                             renames: Map[String, String] = Map.empty,
-                             dropped: Seq[String] = Seq.empty,
-                             // hidden partition transforms (pspec):
-                             // canonical spec strings, parsed by
-                             // PartitionTransforms.parse. When present,
-                             // pcols holds the DERIVED layout names.
-                             partitionSpec: Seq[String] = Seq.empty,
-                             // persisted WRITE SORT ORDER (Iceberg's
-                             // write.sort-order): appends/overwrites
-                             // land range-distributed + sorted on
-                             // these columns
-                             sortOrder: Seq[String] = Seq.empty,
-                             // WRITE DISTRIBUTION MODE (Iceberg's
-                             // write.distribution-mode): Some("hash")
-                             // clusters each batch by the layout
-                             // columns before the partitioned write —
-                             // one file per partition value per
-                             // commit, not (tasks x partitions)
-                             distribution: Option[String] = None,
-                             // CHECK constraints (Delta's ALTER TABLE
-                             // ADD CONSTRAINT ... CHECK): name -> SQL
-                             // predicate; every write path validates
-                             // rows in-pass and refuses on a FALSE
-                             // (NULL passes, SQL CHECK semantics)
-                             checks: Map[String, String] = Map.empty)
+  /** See [[TableCatalog.TableMeta]]. */
+  type TableMeta = TableCatalog.TableMeta
+  val TableMeta: TableCatalog.TableMeta.type = TableCatalog.TableMeta
 
   /** Scoped per-thread meta cache: one logical write reads table meta
     * several times on the driver thread (write order, renames ×2,
@@ -447,23 +344,7 @@ final case class TableCatalog(warehouse: String) {
   private def readMetaUncached(name: String): TableMeta = {
     val f = metaPath(name).resolve("meta.json")
     if (!Files.isRegularFile(f)) readLegacyMeta(name)
-    else {
-      val json = Files.readString(f)
-      TableMeta(
-        schemaJson = TableCatalog.parseStringAt(json, "schema"),
-        partitionCols =
-          if (TableCatalog.hasKey(json, "pcols"))
-            Some(TableCatalog.parseStringArrayAt(json, "pcols"))
-          else None,
-        renames = TableCatalog.parseStringArrayAt(json, "renames")
-          .grouped(2).collect { case Seq(l, p) => l -> p }.toMap,
-        dropped = TableCatalog.parseStringArrayAt(json, "dropped"),
-        partitionSpec = TableCatalog.parseStringArrayAt(json, "pspec"),
-        sortOrder = TableCatalog.parseStringArrayAt(json, "sort"),
-        distribution = TableCatalog.parseStringAt(json, "dist"),
-        checks = TableCatalog.parseStringArrayAt(json, "checks")
-          .grouped(2).collect { case Seq(n, p) => n -> p }.toMap)
-    }
+    else Codec.read[TableMeta](f)
   }
 
   /** Pre-meta.json tables stored each field in its own sidecar
@@ -475,44 +356,24 @@ final case class TableCatalog(warehouse: String) {
     */
   private def readLegacyMeta(name: String): TableMeta = {
     val meta = metaPath(name)
-    def sidecar(file: String): Option[String] = {
-      val f = meta.resolve(file)
-      if (Files.isRegularFile(f)) Some(Files.readString(f)) else None
-    }
+    def sidecar(file: String): Option[Path] =
+      Some(meta.resolve(file)).filter(Files.isRegularFile(_))
+    def doc(file: String): Option[Codec.Sidecar] = sidecar(file).map(Codec.read[Codec.Sidecar](_))
     TableMeta(
-      schemaJson = sidecar("schema.json"),
-      partitionCols = sidecar("pcols.json").map(TableCatalog.parseStringArray),
-      renames = sidecar("renames.json").map(TableCatalog.parseStringArray)
-        .getOrElse(Seq.empty)
+      schemaJson = sidecar("schema.json").map(Files.readString),
+      partitionCols = doc("pcols.json").map(_.cols),
+      renames = doc("renames.json").fold(Seq.empty[String])(_.pairs)
         .grouped(2).collect { case Seq(l, p) => l -> p }.toMap,
-      dropped = sidecar("dropped.json").map(TableCatalog.parseStringArray)
-        .getOrElse(Seq.empty))
+      dropped = doc("dropped.json").fold(Seq.empty[String])(_.cols))
   }
 
-  /** Single-file atomic metadata commit: serialize the whole document
-    * to a writer-unique tmp file, then ATOMIC_MOVE over `meta.json` —
+  /** Single-file atomic metadata commit ([[Codec.replaceAtomic]]):
     * readers see the old document or the new one, never a mix.
     */
   def writeMeta(name: String, meta: TableMeta): Unit = {
     val dir = metaPath(name)
-    Files.createDirectories(dir)
-    def arr(xs: Seq[String]) =
-      xs.map(s => "\"" + TableCatalog.escape(s) + "\"").mkString("[", ", ", "]")
-    val fields = Seq.newBuilder[String]
-    meta.schemaJson.foreach(s => fields += s""""schema": "${TableCatalog.escape(s)}"""")
-    meta.partitionCols.foreach(p => fields += s""""pcols": ${arr(p)}""")
-    if (meta.partitionSpec.nonEmpty) fields += s""""pspec": ${arr(meta.partitionSpec)}"""
-    if (meta.sortOrder.nonEmpty) fields += s""""sort": ${arr(meta.sortOrder)}"""
-    meta.distribution.foreach(d => fields += s""""dist": "${TableCatalog.escape(d)}"""")
-    if (meta.checks.nonEmpty)
-      fields += s""""checks": ${arr(meta.checks.toSeq.sortBy(_._1).flatMap { case (n, p) => Seq(n, p) })}"""
-    fields += s""""renames": ${arr(meta.renames.toSeq.sortBy(_._1).flatMap { case (l, p) => Seq(l, p) })}"""
-    fields += s""""dropped": ${arr(meta.dropped.distinct.sorted)}"""
-    val tmp = dir.resolve(s".meta-${java.util.UUID.randomUUID()}.json.tmp")
-    Files.writeString(tmp, fields.result().mkString("{", ", ", "}"))
-    Files.move(tmp, dir.resolve("meta.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Codec.replaceAtomic(dir.resolve("meta.json"),
+      Codec.encode(meta.copy(dropped = meta.dropped.distinct.sorted)))
     // The commit migrated any legacy sidecars into meta.json; remove
     // them so a later loss of meta.json can't silently resurrect stale
     // metadata through readLegacyMeta. (stream_batch.txt stays: it is
@@ -579,8 +440,7 @@ final case class TableCatalog(warehouse: String) {
   def tags(name: String): Map[String, Int] = {
     val f = metaPath(name).resolve("tags.json")
     if (!Files.isRegularFile(f)) Map.empty
-    else TableCatalog.parseStringArrayAt(Files.readString(f), "tags")
-      .grouped(2).collect { case Seq(t, v) => t -> v.toInt }.toMap
+    else Codec.read[Codec.Tags](f).tags.map { case (t, v) => t -> v.toInt }
   }
 
   def tagSnapshot(name: String, tag: String, version: Int): Unit = {
@@ -618,18 +478,9 @@ final case class TableCatalog(warehouse: String) {
     try body finally lock.release()
   }
 
-  private def writeTags(name: String, all: Map[String, Int]): Unit = {
-    val dir = metaPath(name)
-    Files.createDirectories(dir)
-    val arr = all.toSeq.sortBy(_._1)
-      .flatMap { case (t, v) => Seq(t, v.toString) }
-      .map(s => "\"" + TableCatalog.escape(s) + "\"").mkString("[", ", ", "]")
-    val tmp = dir.resolve(s".tags-${java.util.UUID.randomUUID()}.json.tmp")
-    Files.writeString(tmp, s"""{"tags": $arr}""")
-    Files.move(tmp, dir.resolve("tags.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeTags(name: String, all: Map[String, Int]): Unit =
+    Codec.replaceAtomic(metaPath(name).resolve("tags.json"),
+      Codec.encode(Codec.Tags(all.map { case (t, v) => t -> v.toString })))
 
   // ---- Branches (Iceberg-style writable refs). A branch is its own
   // manifest CHAIN (`branch-<name>-v<k>.json`) sharing the table's
@@ -740,12 +591,10 @@ final case class TableCatalog(warehouse: String) {
       require(base == 0 || pendingDeletes(name, base).isEmpty,
         s"cannot branch $name: snapshot $base has pending position deletes — " +
           "run applyDeletes first")
-      val files = if (base == 0) Seq.empty else manifest(name, base)
-      val stats = if (base == 0) Map.empty[String, Map[String, FileStats.ColStats]]
-                  else statsOrEmpty(name, base)
-      try commitSnapshotAt(name, files, 1,
+      val snap = if (base == 0) Codec.Manifest() else snapshot(name, base)
+      try commitSnapshotAt(name, snap.files, 1,
         Map(TableCatalog.BranchBaseProp -> base.toString,
-          TableCatalog.BranchForkIdProp -> java.util.UUID.randomUUID().toString), stats, b)
+          TableCatalog.BranchForkIdProp -> java.util.UUID.randomUUID().toString), snap.statsByFile, b)
       catch {
         case e: ConcurrentCommitException =>
           if (currentVersion(name, b).isEmpty) throw e
@@ -775,11 +624,10 @@ final case class TableCatalog(warehouse: String) {
   def fastForward(name: String, branch: String): Int = locked(name) {
     val b = Ref.Branch(branch)
     val bh = head(name, b)
-    val files = manifest(name, bh, b)
-    val stats = statsOrEmpty(name, bh, b)
-    val base =
-      try manifestProps(name, bh, b).get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption)
-      catch { case scala.util.control.NonFatal(_) => None }
+    val branchHead = snapshot(name, bh, b)
+    val files = branchHead.files
+    val stats = branchHead.statsByFile
+    val base = branchHead.props.get(TableCatalog.BranchBaseProp).flatMap(_.toIntOption)
     val cur = currentVersion(name).getOrElse(0)
     // No-lost-update condition, two ways to satisfy it: (a) main is
     // still at the recorded fork point (the normal case — fast-
@@ -814,7 +662,7 @@ final case class TableCatalog(warehouse: String) {
     // publishing a dirty branch head without the prop would
     // resurrect every branch-deleted row on main (spec-pinned in
     // MorBranchSpec); main's applyDeletes materializes as usual
-    val morCarry = deletesCarry(name, bh, b)
+    val morCarry = TableCatalog.deletesCarry(branchHead.props)
     val newV = commitSnapshotAt(name, files, cur + 1,
       morCarry + ("fastForwardFrom" -> branch), stats)
     // REBASE RECORD: commit a branch snapshot (same files) whose
@@ -880,10 +728,11 @@ final case class TableCatalog(warehouse: String) {
     // follows NO incremental shape (entries can vanish without a
     // consuming rewrite, or reappear over files re-added raw) — the
     // changelog switches to an exact merged-state diff on this marker
-    commitSnapshotAt(name, manifest(name, version, ref), live.max + 1,
-      props = deletesCarry(name, version, ref) +
+    val target = snapshot(name, version, ref)
+    commitSnapshotAt(name, target.files, live.max + 1,
+      props = TableCatalog.deletesCarry(target.props) +
         (TableCatalog.OpProp -> TableCatalog.OpRollback),
-      stats = statsOrEmpty(name, version, ref), ref = ref)
+      stats = target.statsByFile, ref = ref)
   }
 
   // ---- Write-audit-publish: STAGED snapshots (Iceberg's WAP).
@@ -904,11 +753,7 @@ final case class TableCatalog(warehouse: String) {
   def writeStaged(name: String, files: Seq[String],
                   stats: Map[String, Map[String, FileStats.ColStats]] = Map.empty): String = {
     val id = java.util.UUID.randomUUID().toString.take(12)
-    val meta = metaPath(name)
-    Files.createDirectories(meta)
-    val tmp = meta.resolve(s".staged-$id.json.tmp")
-    Files.writeString(tmp, manifestJson(name, files.distinct, Map.empty, stats))
-    Files.move(tmp, stagedFile(name, id), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Codec.replaceAtomic(stagedFile(name, id), manifestJson(name, files.distinct, Map.empty, stats))
     id
   }
 
@@ -924,11 +769,11 @@ final case class TableCatalog(warehouse: String) {
       }.sorted
   }
 
-  def stagedManifest(name: String, id: String): Seq[String] =
-    filesAt(name, stagedFile(name, id))
+  /** Staged snapshot `id`, decoded once. */
+  private[io] def stagedSnapshot(name: String, id: String): Codec.Manifest =
+    manifestAt(name, stagedFile(name, id))
 
-  def stagedStats(name: String, id: String): Map[String, Map[String, FileStats.ColStats]] =
-    statsAt(name, stagedFile(name, id))
+  def stagedManifest(name: String, id: String): Seq[String] = stagedSnapshot(name, id).files
 
   /** Drop a staged snapshot's manifest (its data files become orphans
     * for the age-guarded GC). Returns whether it existed.
@@ -1236,8 +1081,8 @@ object TableCatalog {
     def isEquality: Boolean = eqKeyCols.nonEmpty
   }
 
-  // control-char separators survive the manifest JSON escape (escape()
-  // encodes them as \\uXXXX) and can never appear in a path component
+  // control-char separators: the codec escapes them inside the JSON
+  // string, and they can never appear in a path component
   private final val DelFieldSep = '\u0001'
   private final val DelEntrySep = '\u0002'
 
@@ -1265,122 +1110,74 @@ object TableCatalog {
       DeleteEntry(parts(1), parts.drop(2), keys)
     }
 
+  /** The deletes prop of `props` as a carryable props map. */
+  private[io] def deletesCarry(props: Map[String, String]): Map[String, String] =
+    props.view.filterKeys(_ == DeletesProp).toMap
+
   /** Concatenate two already-encoded deletes-prop values. */
   private[io] def joinDeletesRaw(a: String, b: String): String =
     a + DelEntrySep + b
+
+  /** Declared table metadata — ONE document (`meta.json`), so a
+    * multi-piece change (ALTER TABLE touching schema + renames +
+    * dropped list together) commits or doesn't as a unit: three
+    * separate files would let a crash land between writes and leave,
+    * e.g., a renamed logical column with no physical mapping (reads
+    * as null, next write forks a second physical column — permanent).
+    * Fields:
+    *   - schema: declared schema JSON — present for SQL-created
+    *     tables (CTAS validates the write against it before any data
+    *     file exists); absent for path-written tables (schema-on-read)
+    *   - pcols: declared partition columns (absent = undeclared)
+    *   - renames: logical-name -> physical-name pairs. The PHYSICAL
+    *     name is the column's name at birth — the name every data
+    *     file stores, fixed forever (parquet resolves columns by name;
+    *     we deliberately don't replicate Iceberg's field-ID
+    *     indirection). RENAME COLUMN only changes the logical name;
+    *     readers alias physical -> logical, writers logical ->
+    *     physical. Identity entries are never stored.
+    *   - dropped: physical names dropped by ALTER TABLE — their bytes
+    *     are still present in live data files (DROP is metadata-only),
+    *     so re-adding a column under such a name would resurrect stale
+    *     values; `GraftCatalog.alterTable` consults this to reject it.
+    */
+  final case class TableMeta(@JsonProperty("schema") schemaJson: Option[String] = None,
+                             @JsonProperty("pcols") partitionCols: Option[Seq[String]] = None,
+                             @JsonSerialize(using = classOf[Codec.PairsOut])
+                             @JsonDeserialize(using = classOf[Codec.PairsIn])
+                             renames: Map[String, String] = Map.empty,
+                             dropped: Seq[String] = Seq.empty,
+                             // hidden partition transforms (pspec):
+                             // canonical spec strings, parsed by
+                             // PartitionTransforms.parse. When present,
+                             // pcols holds the DERIVED layout names.
+                             @JsonProperty("pspec") partitionSpec: Seq[String] = Seq.empty,
+                             // persisted WRITE SORT ORDER (Iceberg's
+                             // write.sort-order): appends/overwrites
+                             // land range-distributed + sorted on
+                             // these columns
+                             @JsonProperty("sort") sortOrder: Seq[String] = Seq.empty,
+                             // WRITE DISTRIBUTION MODE (Iceberg's
+                             // write.distribution-mode): Some("hash")
+                             // clusters each batch by the layout
+                             // columns before the partitioned write —
+                             // one file per partition value per
+                             // commit, not (tasks x partitions)
+                             @JsonProperty("dist") distribution: Option[String] = None,
+                             // CHECK constraints (Delta's ALTER TABLE
+                             // ADD CONSTRAINT ... CHECK): name -> SQL
+                             // predicate; every write path validates
+                             // rows in-pass and refuses on a FALSE
+                             // (NULL passes, SQL CHECK semantics)
+                             @JsonSerialize(using = classOf[Codec.PairsOut])
+                             @JsonDeserialize(using = classOf[Codec.PairsIn])
+                             checks: Map[String, String] = Map.empty)
 
   /** Manifest prop key for a sink's batch mark: the bare legacy key
     * when no sink identity is given, else `streamBatchId:<sinkId>`.
     */
   def streamBatchProp(sinkId: Option[String]): String =
     sinkId.fold(StreamBatchProp)(sid => s"$StreamBatchProp:$sid")
-
-  /** JSON string escape: backslash, quote, and all control chars. */
-  private[io] def escape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Decode every JSON string inside the document's first [...] array —
-    * a real scanner, not split(','), so escaped paths round-trip. Stops
-    * at the array's own closing bracket (first unquoted `]`), so a
-    * document may carry further fields after the array.
-    */
-  private[io] def parseStringArray(json: String): Seq[String] =
-    parseStringArrayFrom(json, json.indexOf('['))
-
-  /** Index of `"key"` used AS A KEY — the occurrence whose next
-    * non-space char is ':'. Array ELEMENTS are raw quoted strings too,
-    * but an element is always followed by ',' or ']', never ':', so a
-    * column literally named "dropped" stored as a value (e.g. inside
-    * the renames array) can't shadow the real "dropped" key. Quotes
-    * inside encoded strings are always escaped, so the closing quote
-    * we test after is a real delimiter. -1 when absent.
-    */
-  private def keyIndex(json: String, key: String): Int = {
-    val pat = "\"" + key + "\""
-    var at = json.indexOf(pat)
-    while (at >= 0) {
-      var j = at + pat.length
-      while (j < json.length && json.charAt(j).isWhitespace) j += 1
-      if (j < json.length && json.charAt(j) == ':') return at
-      at = json.indexOf(pat, at + 1)
-    }
-    -1
-  }
-
-  /** Whether the document carries `key` as a KEY (not a value). */
-  private[io] def hasKey(json: String, key: String): Boolean =
-    keyIndex(json, key) >= 0
-
-  /** Decode the string array under a NAMED key (`"key": [...]`); empty
-    * when the key is absent.
-    */
-  private[io] def parseStringArrayAt(json: String, key: String): Seq[String] = {
-    val at = keyIndex(json, key)
-    if (at < 0) Seq.empty
-    else parseStringArrayFrom(json, json.indexOf('[', at))
-  }
-
-  /** Decode the single string value under a NAMED key
-    * (`"key": "..."`); None when the key is absent.
-    */
-  private[io] def parseStringAt(json: String, key: String): Option[String] = {
-    val at = keyIndex(json, key)
-    if (at < 0) return None
-    var i = json.indexOf('"', at + key.length + 2)
-    if (i < 0) return None
-    val sb = new StringBuilder
-    i += 1
-    while (json.charAt(i) != '"') {
-      if (json.charAt(i) == '\\') {
-        i += 1
-        json.charAt(i) match {
-          case 'u' =>
-            sb.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar)
-            i += 4
-          case 'n' => sb.append('\n')
-          case 'r' => sb.append('\r')
-          case 't' => sb.append('\t')
-          case c   => sb.append(c)
-        }
-      } else sb.append(json.charAt(i))
-      i += 1
-    }
-    Some(sb.toString)
-  }
-
-  private def parseStringArrayFrom(json: String, open: Int): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    if (open < 0) return Seq.empty
-    var i = open + 1
-    while (i < json.length && json.charAt(i) != ']') {
-      if (json.charAt(i) == '"') {
-        val sb = new StringBuilder
-        i += 1
-        while (json.charAt(i) != '"') {
-          if (json.charAt(i) == '\\') {
-            i += 1
-            json.charAt(i) match {
-              case 'u' =>
-                sb.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar)
-                i += 4
-              case 'n' => sb.append('\n')
-              case 'r' => sb.append('\r')
-              case 't' => sb.append('\t')
-              case c   => sb.append(c) // covers \" \\ \/
-            }
-          } else sb.append(json.charAt(i))
-          i += 1
-        }
-        out += sb.toString
-      }
-      i += 1
-    }
-    out.result()
-  }
 }
 
 /** Table read/write API mirroring the reference's SDS Iceberg wrapper
@@ -1520,10 +1317,11 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
   private def scopeFor(name: String, v: Int, ref: Ref, cond: org.apache.spark.sql.Column,
                        filters: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
                        prove: Boolean = false): Scoped = {
-    val files = catalog.manifest(name, v, ref)
+    val snap = catalog.snapshot(name, v, ref)
+    val files = snap.files
     if (files.isEmpty) return new Scoped(Seq.empty, Seq.empty, Seq.empty, _ => true)
     Timers.time("dml.pruneProbe") {
-      FileStats.prime(catalog.statsOrEmpty(name, v, ref))
+      FileStats.prime(snap.statsByFile)
       val schema = readFiles(name, files).schema
       val (might, exact) = filters.fold(FilterTranslation.ofCondition(schema, cond))(fs => (fs, Some(fs)))
       val scope = fileScopeOf(name, files, schema)
@@ -1545,7 +1343,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     */
   def rowCount(name: String, ref: Ref = Ref.Main): Long = {
     val v = catalog.head(name, ref)
-    val stats = catalog.manifestStats(name, v, ref)
+    val snap = catalog.snapshot(name, v, ref)
+    val stats = snap.statsByFile
     lazy val conf = spark.sessionState.newHadoopConf()
     val pending = catalog.pendingDeletes(name, v, ref)
     // an EQUALITY delete's row count is key tuples, not rows killed
@@ -1553,7 +1352,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     // until applyDeletes materializes it, so count honestly (Iceberg
     // has the same limitation)
     if (pending.exists(_.isEquality)) return readVersion(name, v, ref).count()
-    val dataRows = catalog.manifest(name, v, ref).map { f =>
+    val dataRows = snap.files.map { f =>
       stats.get(f).flatMap(_.values.headOption.map(_.rowCount))
         .getOrElse(FileStats.rowCount(f, conf))
     }.sum
@@ -2348,8 +2147,9 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       require(catalog.pendingDeletes(name, v).isEmpty,
         s"upsert into $name: snapshot $v has pending position deletes — " +
           "run applyDeletes first")
-      val files = catalog.manifest(name, v)
-      FileStats.prime(catalog.statsOrEmpty(name, v))
+      val snap = catalog.snapshot(name, v)
+      val files = snap.files
+      FileStats.prime(snap.statsByFile)
       // scoping (computed by the fused probe above) is by the FIRST
       // key column's value set — sound for compound keys: a file with
       // no first-key match holds no affected row.
@@ -2452,16 +2252,12 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     */
   def publishStaged(name: String, id: String, ref: Ref = Ref.Main): Int = catalog.locked(name) {
     val staged =
-      try catalog.stagedManifest(name, id)
+      try catalog.stagedSnapshot(name, id)
       catch {
         case _: java.nio.file.NoSuchFileException => throw new IllegalArgumentException(
           s"publish of $name: staged snapshot $id does not exist (already published or discarded?)")
       }
-    val stagedStats =
-      try catalog.stagedStats(name, id)
-      catch { case scala.util.control.NonFatal(_) =>
-        Map.empty[String, Map[String, FileStats.ColStats]] }
-    val published = commitOnto(name, ref, staged, stagedStats, Map.empty)
+    val published = commitOnto(name, ref, staged.files, staged.statsByFile, Map.empty)
     catalog.deleteStaged(name, id)
     published
   }
@@ -2636,9 +2432,10 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     // drops the concurrent writer's files.
     catalog.locked(name) {
       val v = catalog.head(name)
-      val files = catalog.manifest(name, v)
+      val snap = catalog.snapshot(name, v)
+      val files = snap.files
       val conf = spark.sessionState.newHadoopConf()
-      val prev = catalog.statsOrEmpty(name, v)
+      val prev = snap.statsByFile
       // stats base per file: manifest-carried, else one footer read —
       // a bloom only attaches NEXT TO a base entry (decode contract)
       def baseStats(f: String): Map[String, FileStats.ColStats] =
@@ -2681,7 +2478,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           }
           f -> withBloom
         }.toMap
-        val props = catalog.manifestProps(name, v) +
+        val props = snap.props +
           (s"graft.bloom.$phys.fpp" -> fpp.toString)
         catalog.commitSnapshotAt(name, files, v + 1, props, augmented)
         FileStats.prime(augmented) // same-JVM readers see the index immediately
@@ -3171,10 +2968,11 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           (if (props.nonEmpty) commitOnto(name, ref, Seq.empty, Map.empty, props, Some(v)) else v,
             0L)
         } else {
-          val files = catalog.manifest(name, v, ref)
+          val snap = catalog.snapshot(name, v, ref)
+          val files = snap.files
           // scope the equality delete to files that might hold the keys
           // (by the first key, like upsert's rewrite scoping)
-          FileStats.prime(catalog.statsOrEmpty(name, v, ref))
+          FileStats.prime(snap.statsByFile)
           val keyVals: Option[Array[Any]] =
             try {
               val ks = pinnedKeys.select(keyCols.head).distinct().limit(maxScopedKeys + 1).collect()
@@ -3556,19 +3354,19 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         require(ref == Ref.Main, ref.missing(name))
         Some(TableCatalog.Commit(newFiles, Map.empty, newStats))
       } else {
-        val files = catalog.manifest(name, head, ref)
+        val snap = catalog.snapshot(name, head, ref)
+        val files = snap.files
         if (lost.isDefined && !scoped.subsetOf(files.map(TableIO.fileKeyOf(root, _)).toSet))
           throw new ConcurrentCommitException(
             s"MOR commit to ${ref.describe(name)} lost its base: a concurrent rewrite " +
               "removed file(s) the delete entries scope — rerun the operation " +
               "against the current snapshot")
-        val carry = catalog.deletesCarry(name, head, ref)
+        val carry = TableCatalog.deletesCarry(snap.props)
         val deletes = newRaw.fold(carry) { nr =>
           Map(TableCatalog.DeletesProp ->
             carry.get(TableCatalog.DeletesProp).fold(nr)(TableCatalog.joinDeletesRaw(_, nr)))
         }
-        Some(TableCatalog.Commit(files ++ newFiles, deletes,
-          catalog.statsOrEmpty(name, head, ref) ++ newStats))
+        Some(TableCatalog.Commit(files ++ newFiles, deletes, snap.statsByFile ++ newStats))
       }
     }
   }

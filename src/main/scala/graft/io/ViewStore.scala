@@ -5,6 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.databind.annotation.{JsonDeserialize, JsonSerialize}
+
 /** Persisted catalog VIEWS for the graft warehouse — the storage half
   * of the DSv2 `ViewCatalog` surface (Iceberg's view spec, Delta's
   * catalog views re-expressed over our directory warehouse).
@@ -27,18 +30,23 @@ import scala.util.Using
 object ViewStore {
 
   /** Everything the DSv2 `View` interface reports, round-tripped
-    * through one JSON document. `columnComments` aligns 1:1 with
-    * `columnAliases` ("" = no comment) — both empty = no alias list.
+    * through one JSON document ([[Codec]]). `columnComments` aligns
+    * 1:1 with `columnAliases` ("" = no comment) — both empty = no
+    * alias list. A document without `sql` is corrupt and fails to
+    * decode.
     */
   final case class ViewRecord(
-      sql: String,
-      schemaJson: String,
-      currentCatalog: String,
-      currentNamespace: Seq[String],
-      queryColumnNames: Seq[String],
-      columnAliases: Seq[String],
-      columnComments: Seq[String],
-      properties: Map[String, String])
+      @JsonProperty(value = "sql", required = true) sql: String,
+      @JsonProperty("schema") schemaJson: String = "",
+      @JsonProperty("cat") currentCatalog: String = "",
+      @JsonProperty("ns") currentNamespace: Seq[String] = Seq.empty,
+      @JsonProperty("qcols") queryColumnNames: Seq[String] = Seq.empty,
+      @JsonProperty("aliases") columnAliases: Seq[String] = Seq.empty,
+      @JsonProperty("acomments") columnComments: Seq[String] = Seq.empty,
+      @JsonProperty("props")
+      @JsonSerialize(using = classOf[Codec.PairsOut])
+      @JsonDeserialize(using = classOf[Codec.PairsIn])
+      properties: Map[String, String] = Map.empty)
 
   private val Suffix = ".view.json"
 
@@ -57,76 +65,24 @@ object ViewStore {
   def exists(warehouse: String, name: String): Boolean =
     Files.isRegularFile(viewPath(warehouse, name))
 
-  private def enc(rec: ViewRecord): String = {
-    def s(k: String, v: String) = "\"" + k + "\": \"" + TableCatalog.escape(v) + "\""
-    def arr(k: String, vs: Seq[String]) =
-      vs.map(v => "\"" + TableCatalog.escape(v) + "\"").mkString("\"" + k + "\": [", ", ", "]")
-    val props = rec.properties.toSeq.sortBy(_._1).flatMap { case (k, v) => Seq(k, v) }
-    Seq(
-      s("sql", rec.sql),
-      s("schema", rec.schemaJson),
-      s("cat", rec.currentCatalog),
-      arr("ns", rec.currentNamespace),
-      arr("qcols", rec.queryColumnNames),
-      arr("aliases", rec.columnAliases),
-      arr("acomments", rec.columnComments),
-      arr("props", props)
-    ).mkString("{", ", ", "}")
-  }
-
-  private def dec(json: String): ViewRecord =
-    ViewRecord(
-      sql = TableCatalog.parseStringAt(json, "sql").getOrElse(
-        throw new IllegalStateException("corrupt view document: no sql field")),
-      schemaJson = TableCatalog.parseStringAt(json, "schema").getOrElse(""),
-      currentCatalog = TableCatalog.parseStringAt(json, "cat").getOrElse(""),
-      currentNamespace = TableCatalog.parseStringArrayAt(json, "ns"),
-      queryColumnNames = TableCatalog.parseStringArrayAt(json, "qcols"),
-      columnAliases = TableCatalog.parseStringArrayAt(json, "aliases"),
-      columnComments = TableCatalog.parseStringArrayAt(json, "acomments"),
-      properties = TableCatalog.parseStringArrayAt(json, "props")
-        .grouped(2).collect { case Seq(k, v) => k -> v }.toMap)
-
   def load(warehouse: String, name: String): Option[ViewRecord] = {
     val p = viewPath(warehouse, name)
     if (!Files.isRegularFile(p)) None
-    else Some(dec(Files.readString(p)))
+    else Some(Codec.read[ViewRecord](p))
   }
 
-  /** Create-exclusive (hard-link, same primitive as snapshot commits):
-    * two racing CREATE VIEWs resolve to exactly one winner; the loser
+  /** Create-exclusive (same primitive as snapshot commits): two
+    * racing CREATE VIEWs resolve to exactly one winner; the loser
     * sees false and surfaces the standard already-exists error.
     */
-  def create(warehouse: String, name: String, rec: ViewRecord): Boolean = {
-    val target = viewPath(warehouse, name)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(
-      s".${target.getFileName}-${java.util.UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, enc(rec))
-    try {
-      try { Files.createLink(target, tmp); true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: UnsupportedOperationException =>
-          if (Files.exists(target)) false
-          else { Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE); true }
-      }
-    } finally { Files.deleteIfExists(tmp); () }
-  }
+  def create(warehouse: String, name: String, rec: ViewRecord): Boolean =
+    Codec.createExclusive(viewPath(warehouse, name), Codec.encode(rec))
 
   /** Atomic replace — readers racing the move see the old or the new
     * document, never a torn one.
     */
-  def replace(warehouse: String, name: String, rec: ViewRecord): Unit = {
-    val target = viewPath(warehouse, name)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(
-      s".${target.getFileName}-${java.util.UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, enc(rec))
-    Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def replace(warehouse: String, name: String, rec: ViewRecord): Unit =
+    Codec.replaceAtomic(viewPath(warehouse, name), Codec.encode(rec))
 
   def drop(warehouse: String, name: String): Boolean =
     Files.deleteIfExists(viewPath(warehouse, name))

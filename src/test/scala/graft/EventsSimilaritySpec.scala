@@ -427,6 +427,16 @@ class TableIOSpec extends SparkSpec {
   import spark.implicits._
   import graft.io.TableIO
 
+  /** One file's column stats through the manifest codec: encode, then
+    * decode from the JSON bytes.
+    */
+  private def manifestRoundTrip(st: Map[String, graft.io.FileStats.ColStats])
+      : Map[String, graft.io.FileStats.ColStats] = {
+    val doc = graft.io.Codec.Manifest(Seq("f"), Map.empty, Seq(graft.io.Codec.StatRecord.of(st)))
+    graft.io.Codec.mapper.readValue(graft.io.Codec.encode(doc), classOf[graft.io.Codec.Manifest])
+      .statsByFile.getOrElse("f", Map.empty)
+  }
+
   test("FileStats compares DECIMAL stats in the decimal domain (scaled, not unscaled)") {
     import org.apache.spark.sql.sources._
     val dir = java.nio.file.Files.createTempDirectory("graft_fdec_").toString
@@ -449,24 +459,23 @@ class TableIOSpec extends SparkSpec {
       "max is exactly 5.00 — strictly-greater is provably empty")
     assert(!graft.io.FileStats.mightMatch(st, Seq(EqualTo("price", new java.math.BigDecimal("0.50")))))
     // manifest round-trip preserves the decimal domain (kind D)
-    val enc = graft.io.FileStats.encodeEntries(0, st)
-    assert(enc.exists(_.split("\\|")(1) == "D"), s"decimal stats must persist: $enc")
-    val dec = graft.io.FileStats.decodeEntries(enc)(0)
+    assert(graft.io.Codec.StatRecord.of(st("price")).exists(_.kind == "D"),
+      s"decimal stats must persist: $st")
+    val dec = manifestRoundTrip(st)
+    assert(dec("price").min == new java.math.BigDecimal("1.00"), "scale survives")
     assert(graft.io.FileStats.mightMatch(dec, Seq(EqualTo("price", lit123))))
     assert(!graft.io.FileStats.mightMatch(dec, Seq(EqualTo("price", new java.math.BigDecimal("0.50")))))
   }
 
-  test("FileStats bloom entries round-trip the manifest codec; orphan blooms are dropped") {
+  test("FileStats bloom entries round-trip the manifest codec") {
     import org.apache.spark.sql.sources._
     val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.0001)
     (0 until 50).foreach(i => bf.putString(i.toString)) // build-side canonical form
     val bytes = graft.functions.BloomContains.serialize(bf)
     val st = Map("k" -> graft.io.FileStats.ColStats(
       java.lang.Long.valueOf(0L), java.lang.Long.valueOf(99L), 0L, 50L, Some(bytes)))
-    val enc = graft.io.FileStats.encodeEntries(0, st)
-    assert(enc.exists(_.split("\\|")(1) == "b"), s"bloom entry must persist: $enc")
-    val dec = graft.io.FileStats.decodeEntries(enc)(0)
-    assert(dec("k").bloom.isDefined)
+    val dec = manifestRoundTrip(st)
+    assert(dec("k").bloom.exists(_.sameElements(bytes)), "bloom must persist")
     // pruning semantics survive the round-trip: 7 present; 63 in the
     // [0, 99] range (so min/max keeps it) but NOT in the bloom
     assert(graft.io.FileStats.mightMatch(dec, Seq(EqualTo("k", 7L))))
@@ -474,10 +483,28 @@ class TableIOSpec extends SparkSpec {
       "range can't prune 63 — only the bloom can")
     // a non-canonical literal type is never bloom-pruned (conservative)
     assert(graft.io.FileStats.mightMatch(dec, Seq(EqualTo("k", 63.0d))))
-    // a bloom entry without its base stats entry must be dropped, not
-    // synthesized into a prunable all-null ColStats
-    val orphan = enc.filter(_.split("\\|")(1) == "b")
-    assert(graft.io.FileStats.decodeEntries(orphan).getOrElse(0, Map.empty).isEmpty)
+  }
+
+  test("typed manifest stats keep edge values exactly") {
+    import graft.io.FileStats.ColStats
+    val notUtf8 = Array[Byte](-1, -2, 0, -128, 65)
+    val st = Map(
+      "inf" -> ColStats(java.lang.Double.valueOf(Double.NegativeInfinity),
+        java.lang.Double.valueOf(Double.PositiveInfinity), 0L, 2L),
+      "zero" -> ColStats(java.lang.Double.valueOf(-0.0d), java.lang.Double.valueOf(0.0d), 0L, 2L),
+      "long" -> ColStats(java.lang.Long.valueOf(Long.MinValue), java.lang.Long.valueOf(Long.MaxValue), 1L, 3L),
+      "bin" -> ColStats(org.apache.parquet.io.api.Binary.fromConstantByteArray(Array[Byte](0)),
+        org.apache.parquet.io.api.Binary.fromConstantByteArray(notUtf8), 0L, 2L))
+    val dec = manifestRoundTrip(st)
+    assert(dec("inf").min == java.lang.Double.valueOf(Double.NegativeInfinity))
+    assert(dec("inf").max == java.lang.Double.valueOf(Double.PositiveInfinity))
+    // Double.equals tells -0.0 from 0.0: the sign survives
+    assert(dec("zero").min == java.lang.Double.valueOf(-0.0d))
+    assert(dec("zero").max == java.lang.Double.valueOf(0.0d))
+    assert(dec("long").min == java.lang.Long.valueOf(Long.MinValue))
+    assert(dec("long").max == java.lang.Long.valueOf(Long.MaxValue))
+    assert((dec("long").nullCount, dec("long").rowCount) == ((1L, 3L)))
+    assert(dec("bin").max.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes.sameElements(notUtf8))
   }
 
   test("FileStats pruning is conservative: never prunes a file containing a matching row") {
