@@ -20,8 +20,8 @@ object SessionFactory {
   def localCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** `file://` through [[graft.io.NoForkLocalFileSystem]]: every Hadoop
-    * local write (commit-protocol jobs, the single-file fast path,
-    * `_SUCCESS`, stream sink staging) sets permissions in-process
+    * local write (table data files, stream checkpoints and sink
+    * staging) sets permissions in-process
     * instead of forking `chmod`. Assumes a local POSIX file system and
     * no libhadoop; other file systems are untouched. The tests'
     * session registers the same map.

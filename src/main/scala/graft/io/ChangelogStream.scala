@@ -359,7 +359,10 @@ private[io] class ChangelogMicroBatchStream(
       if (Files.isDirectory(stageRoot))
         Using.resource(Files.list(stageRoot)) { s =>
           s.iterator().asScala
-            .filter(p => p.getFileName.toString.stripPrefix("v").toIntOption.exists(_ <= e))
+            .filter { p =>
+              val n = p.getFileName.toString
+              n.startsWith(".") || n.stripPrefix("v").toIntOption.exists(_ <= e)
+            }
             .toSeq
         }.foreach(TableIO.sweepDir)
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -426,26 +429,32 @@ private[io] class ChangelogMicroBatchStream(
         // batch plan is re-executed (foreachBatch re-plans the scan),
         // and a re-stage would mint new random file names while the
         // earlier planning's partitions still reference the old ones.
-        // A complete stage (writer's _SUCCESS marker) is
-        // authoritative; anything else (crash mid-write) is rewritten.
-        // Swept on batch commit.
+        // The stage is written into a fresh dot-prefixed dir and moved
+        // to `v$v` whole, so a present `v$v` is complete; a crash
+        // mid-write leaves only the dot dir, swept on batch commit.
         val vdir = stageRoot.resolve(s"v$v")
-        if (!Files.isRegularFile(vdir.resolve("_SUCCESS"))) {
-          // ONE diff job for both change types: a partitionBy write
-          // splits the step frame into _change_type=INSERT/DELETE
-          // subdirs in a single pass instead of recomputing the
-          // exceptAll/kill diff once per type
-          io.readChangelog(tableName, v - 1, Some(v), ref).drop("_change_version")
-            .write.mode("overwrite").partitionBy("_change_type")
-            .parquet(vdir.toString)
-        }
-        Seq("INSERT", "DELETE").foreach { tpe =>
-          val dir = vdir.resolve(s"_change_type=$tpe")
-          if (Files.isDirectory(dir)) // absent = zero rows of this type
-            Using.resource(Files.list(dir)) { l =>
-              l.iterator().asScala.map(_.toString)
-                .filter(_.endsWith(".parquet")).toSeq.sorted
-            }.foreach(f => tags += norm(f) -> (tpe -> v))
+        val staged =
+          if (Files.isDirectory(vdir))
+            Using.resource(Files.walk(vdir)) { w =>
+              w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+                .map(vdir.relativize(_).toString).toSeq
+            }
+          else {
+            val tmp = TableIO.newStagingDir(stageRoot.toString)
+            // ONE diff job for both change types: a partitioned write
+            // splits the step frame into _change_type=INSERT/DELETE
+            // subdirs in a single pass instead of recomputing the
+            // exceptAll/kill diff once per type
+            val names = org.apache.spark.sql.GraftStagedWrite.write(
+              io.readChangelog(tableName, v - 1, Some(v), ref).drop("_change_version"),
+              tmp.toString, Seq("_change_type"))
+            Files.move(tmp, vdir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            names
+          }
+        // `_change_type=<type>/part-...`: absent type = zero rows of it
+        staged.foreach { n =>
+          tags += norm(vdir.resolve(n).toString) ->
+            (n.takeWhile(_ != '/').stripPrefix("_change_type=") -> v)
         }
       }
       prev = cur

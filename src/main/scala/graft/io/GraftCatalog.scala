@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStagedWrite, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsDelete, SupportsNamespaces, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog => V2TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -35,8 +35,8 @@ import scala.jdk.CollectionConverters._
   * list as a parquet v2 table with `basePath` set, so partition
   * columns and pruning behave exactly as in path reads. SQL writes go
   * through the V1Write fallback (the standard DSv2 escape hatch for
-  * driver-committed sinks): the write itself is a fully distributed
-  * `df.write.parquet`, only the snapshot commit runs on the driver —
+  * driver-committed sinks): the write itself is TableIO's fully
+  * distributed staged write, only the snapshot commit runs on the driver —
   * identical semantics to the programmatic TableIO path, INSERT INTO
   * appending a snapshot and INSERT OVERWRITE committing a logical
   * replace (prior versions stay readable).
@@ -1110,15 +1110,18 @@ private[io] class GraftTable(
   * the table's [[FileScope]] driver-side, files it provably cannot
   * touch are excluded from the rewrite scan and carried into the new
   * manifest verbatim, and only the remaining files' rows flow through
-  * Spark's rewrite plan into the replacement write (the delegate's
-  * distributed DSv2 parquet write); the driver-side commit is TableIO's
-  * replacement commit over carried-over + replacement files. Old files
-  * are never touched, so prior versions time-travel like every other
-  * commit.
+  * Spark's rewrite plan into the replacement write: a distributed DSv2
+  * batch write over the table layer's one staged writer
+  * ([[GraftStagedWrite.batch]]) into a private staging dir, whose
+  * accepted tasks name the files they wrote in their commit messages.
+  * The driver-side commit publishes exactly those files and runs
+  * TableIO's replacement commit over carried-over + replacement files.
+  * Old files are never touched, so prior versions time-travel like
+  * every other commit.
   *
   * PARTITIONED tables (r19): the replacement write takes a LAYOUT
-  * HOP — the rewrite plan's DSv2 parquet write lands flat in the
-  * private staging (the v2 file write can't lay Hive directories),
+  * HOP — the rewrite plan's batch write lands flat in the private
+  * staging (a DSv2 write gets no partitioning from the planner),
   * and the commit re-writes those staged rows through TableIO's
   * partitioned staging (`stageWrite`: same withLayout /
   * distribution / hidden-spec derivation as every append) before the
@@ -1321,18 +1324,14 @@ private[io] class GraftRowOpsTable(
           scanStaging.foreach(TableIO.sweepDir)
           val stage = TableIO.newStagingDir(cat.pathOf(tableName))
           scanStaging = Some(stage)
-          val out = stage.resolve("merged")
           // a failed materialization must not leak its dir — the write
           // side's sweep can never reach this planning-side window (the
           // write is only constructed after planning succeeds). A plan
           // abandoned between here and write construction is the one
           // remaining leak shape; the age-guarded orphan GC reclaims it.
-          try {
-            physical.write.parquet(out.toString)
-            scala.util.Using.resource(java.nio.file.Files.list(out)) { s =>
-              s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-            }
-          } catch {
+          try GraftStagedWrite.write(physical, stage.toString, Seq.empty)
+            .map(stage.resolve(_).toString)
+          catch {
             case e: Throwable =>
               TableIO.sweepDir(stage)
               scanStaging = None
@@ -1358,21 +1357,12 @@ private[io] class GraftRowOpsTable(
                   java.util.Optional.empty()
               }
               // The rewrite writes into a PRIVATE per-write staging dir
-              // (same protocol as TableIO.stageWrite) and claims exactly
-              // the files it moves — never a directory-listing diff. A
-              // diff would claim a concurrent cross-process append's
-              // moved-but-uncommitted files: a multi-file batch could be
-              // captured HALF-moved, permanently recording a torn append
-              // in this snapshot (or phantom rows, if that writer then
-              // crashed before committing).
+              // through the table layer's one writer (GraftStagedWrite,
+              // as TableIO.stageWrite) and claims exactly the files its
+              // accepted tasks report — never a directory-listing diff,
+              // which would claim a concurrent cross-process append's
+              // moved-but-uncommitted files.
               val staging = TableIO.newStagingDir(cat.pathOf(tableName))
-              val writeTable = ParquetTable(
-                s"${delegate.name}#rewrite",
-                SparkSession.active,
-                winfo.options(),
-                Seq(staging.toString),
-                userSpecifiedSchema = Some(physInfo.schema()),
-                fallbackFileFormat = classOf[ParquetFileFormat])
               def sweepAll(): Unit = { TableIO.sweepDir(staging); scanStaging.foreach(TableIO.sweepDir) }
               // The per-table mutex serializes same-JVM writers over the
               // write->commit span (held from here through commit/abort;
@@ -1384,7 +1374,7 @@ private[io] class GraftRowOpsTable(
               // the life of the JVM.
               val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
               val dBatch =
-                try writeTable.newWriteBuilder(physInfo).build().toBatch
+                try GraftStagedWrite.batch(physInfo.schema(), staging.toString)
                 catch { case e: Throwable => releaseOnce(); sweepAll(); throw e }
               new BatchWrite {
                 override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
@@ -1425,27 +1415,18 @@ private[io] class GraftRowOpsTable(
                     // lands under its Hive/hidden-layout directory —
                     // incl. rows an UPDATE moved between partitions.
                     val io = new TableIO(SparkSession.active, cat)
-                    val dataRoot = java.nio.file.Paths.get(cat.dataPath(tableName))
-                    java.nio.file.Files.createDirectories(dataRoot)
+                    val staged = GraftStagedWrite.filesOf(messages)
                     val newFiles =
-                      if (partitionCols.isEmpty) TableIO.moveStagedFiles(staging, dataRoot)
-                      else {
-                        val flat = {
-                          val s = java.nio.file.Files.walk(staging)
-                          try s.iterator().asScala
-                            .filter(p => java.nio.file.Files.isRegularFile(p) &&
-                              p.toString.endsWith(".parquet"))
-                            .map(_.toString).toSeq
-                          finally s.close()
-                        }
-                        if (flat.isEmpty) Seq.empty
-                        else
-                          // explicit schema: an all-deleted rewrite has
-                          // nothing to infer from, and physical names
-                          // are already what stageWrite expects
-                          io.stageWrite(SparkSession.active.read
-                            .schema(physInfo.schema()).parquet(flat: _*), tableName, partitionCols)
-                      }
+                      if (partitionCols.isEmpty)
+                        TableIO.publish(staging, java.nio.file.Paths.get(cat.dataPath(tableName)), staged)
+                      else if (staged.isEmpty) Seq.empty
+                      else
+                        // explicit schema: an all-deleted rewrite has
+                        // nothing to infer from, and physical names
+                        // are already what stageWrite expects
+                        io.stageWrite(SparkSession.active.read.schema(physInfo.schema())
+                          .parquet(staged.map(staging.resolve(_).toString): _*),
+                          tableName, partitionCols)
                     // Pinned commit at the planned base through TableIO's
                     // replacement loop (Iceberg's retry for row-level
                     // commits, serializable flavor): a rebase is sound iff

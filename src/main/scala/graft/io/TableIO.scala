@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import com.fasterxml.jackson.annotation.JsonProperty
 import com.fasterxml.jackson.databind.annotation.{JsonDeserialize, JsonSerialize}
@@ -850,8 +850,8 @@ final case class TableCatalog(warehouse: String) {
       // before its move) sit OUTSIDE data/ so readers never see them,
       // but their bytes still need reclaiming. Liveness = the NEWEST
       // mtime in the staging TREE: a long-running write keeps touching
-      // files under .stage-X/_temporary while the top-level dir's own
-      // mtime stays at job start, so the top-level mtime alone would
+      // files under .stage-X/<partition dirs> while the top-level dir's
+      // own mtime stays at job start, so the top-level mtime alone would
       // sweep any job outliving the cutoff mid-write.
       val tableRoot = Paths.get(pathOf(name))
       if (Files.isDirectory(tableRoot)) {
@@ -2676,35 +2676,22 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * rows — under the table's `deletes/` dir, and return its entries:
     * one per parquet file, each scoped to `dirty` (table-root-relative
     * data-file keys). Small sets (the designed regime) write ONE file in
-    * one task through the single-file fast path (no commit protocol);
-    * above `spark.graft.mor.shardRows` the write repartitions by
-    * `shardCol` so a predicate matching millions of rows never
-    * serializes through a single task. Each file counts into the write
-    * audit ([[TableIO.filesWritten]]).
+    * one task; above `spark.graft.mor.shardRows` the write repartitions
+    * by `shardCol` so a predicate matching millions of rows never
+    * serializes through a single task. The write is the data files' own
+    * ([[TableIO.writeStaged]]), so each file counts into the write audit.
     */
   private def writeDeleteSet(name: String, rows: DataFrame, n: Long, shardCol: String,
                              dirty: Seq[String],
                              eqKeyCols: Seq[String] = Seq.empty): Seq[TableCatalog.DeleteEntry] = {
     val dir = Paths.get(catalog.pathOf(name), "deletes",
       java.util.UUID.randomUUID().toString.take(12))
-    if (n > morShardRows || !org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark))
-      (if (n > morShardRows) rows.repartition(col(shardCol)) else rows.coalesce(1))
-        .write.parquet(dir.toString)
-    else {
-      Files.createDirectories(dir)
-      org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
-        rows.coalesce(1), dir.toString, compression = None)
-    }
-    val files = Using.resource(Files.list(dir)) { s =>
-      s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-    }
+    val files = TableIO.writeStaged(
+      if (n > morShardRows) rows.repartition(col(shardCol)) else rows.coalesce(1),
+      catalog.pathOf(name), dir, Seq.empty)
     require(files.nonEmpty, s"delete write for $name produced no parquet under $dir")
     val root = Paths.get(catalog.pathOf(name)).toAbsolutePath.normalize
-    files.map { f =>
-      TableIO.filesWritten.incrementAndGet()
-      TableIO.bytesWritten.addAndGet(try Files.size(f) catch { case _: java.io.IOException => 0L })
-      TableCatalog.DeleteEntry(TableIO.fileKeyOf(root, f.toString), dirty, eqKeyCols)
-    }
+    files.map(f => TableCatalog.DeleteEntry(TableIO.fileKeyOf(root, f), dirty, eqKeyCols))
   }
 
   /** Merge-on-read row-level DELETE: record the positions of rows
@@ -2846,15 +2833,13 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       val newEntries = writeDeleteSet(name, positions, n, "gd_file", dirtyKeys)
       // the replacement rows: matched rows with assignments applied.
       // n is known (the shard-decision aggregate above): sub-shard
-      // replacement sets take the single-file fast path
+      // replacement sets write one file in one task
       val bare = matched.drop(TableIO.PosFileCol, TableIO.PosIdxCol)
       val updated = bare.select(bare.columns.toSeq.map(c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
       val pcols = if (partitionCols.nonEmpty) partitionCols else layoutPartitionCols(name, ref)
-      val newFiles =
-        if (n > morShardRows) stageWrite(toPhysical(updated, name), name, pcols)
-        else stageWrite(toPhysical(updated.coalesce(1), name), name, pcols,
-          singleTask = true)
+      val newFiles = stageWrite(
+        toPhysical(if (n > morShardRows) updated else updated.coalesce(1), name), name, pcols)
       val conf = spark.sessionState.newHadoopConf()
       val nv = commitOnto(name, ref, newFiles,
         catalog.statsForCommit(name, Seq.empty, newFiles, conf), Map.empty, Some(v),
@@ -2995,11 +2980,8 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           // entries for one batch's worth of rows.
           val newFiles =
             if (nUpserts == 0) Seq.empty[String]
-            else if (n > morShardRows) stageWrite(toPhysical(pinned, name), name, pcols)
-            // sub-shard batch: one write task AND the single-file fast
-            // path (no commit protocol) — the per-micro-batch floor
-            else stageWrite(toPhysical(pinned.coalesce(1), name), name, pcols,
-              singleTask = true)
+            else stageWrite(
+              toPhysical(if (n > morShardRows) pinned else pinned.coalesce(1), name), name, pcols)
           // stats prove no file holds the keys: pure append (no entry)
           val (entriesRaw, dirtyRel) =
             if (dirty.isEmpty) (None, Seq.empty[String])
@@ -3076,27 +3058,18 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     }
   }
 
-  /** Write `df` into a PRIVATE per-write staging directory under the
-    * table root, then move the finished parquet files into the data
-    * dir (same filesystem — a cheap atomic rename apiece, partition
-    * subdirs preserved), returning their final absolute paths.
-    *
-    * This is how Iceberg writers work — each writer reports its own
-    * file list — and it buys two things the old write-into-data-dir +
-    * directory-listing-diff approach could not:
-    *   1. CROSS-PROCESS safety: concurrent writers in separate JVMs
-    *      previously shared the parquet committer's `_temporary`
-    *      staging inside the data dir, so one writer's job commit
-    *      deleted the other's in-flight task attempts (proven by
-    *      CrossProcessSpec before this change). Private staging means
-    *      writers never touch each other's files.
-    *   2. O(written files) commits: no before/after walk of the whole
-    *      data dir — at large file counts the listing, not the write,
-    *      dominates commit latency.
-    * Spark part-file names embed the job UUID, so moved-in names never
-    * collide across writers. A failure before the move leaves only a
-    * dot-prefixed staging dir (invisible to readers and to
-    * `listDataFiles`); `removeOrphanFiles` can reclaim it.
+  /** Write `df` into the table's data dir and return the new files'
+    * absolute paths; nothing is live until the caller's manifest commit
+    * names them. The write goes through [[TableIO.writeStaged]]: tasks
+    * write into a PRIVATE per-write staging dir under the table root and
+    * report the files they wrote, and only the files of accepted task
+    * attempts move into the data dir (same filesystem, one atomic rename
+    * each, partition subdirs preserved). Writers never share a staging
+    * dir, so concurrent writers in separate JVMs never touch each
+    * other's files (CrossProcessSpec), and no commit lists or walks a
+    * directory to learn what it wrote. A write that fails before the
+    * move leaves only a dot-prefixed staging dir, invisible to readers
+    * and to `listDataFiles`, which `removeOrphanFiles` reclaims.
     *
     * `df` carries PHYSICAL column names. Package-visible for the SQL
     * row-level DML layout hop (GraftRowOpsTable), which stages its
@@ -3104,8 +3077,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * must already hold the table's write lock and own the manifest
     * commit.
     */
-  private[io] def stageWrite(df: DataFrame, name: String, partitionCols: Seq[String],
-                             singleTask: Boolean = false): Seq[String] = {
+  private[io] def stageWrite(df: DataFrame, name: String, partitionCols: Seq[String]): Seq[String] = {
     val (laid0, layoutCols) = withLayout(df, name, partitionCols)
     // WRITE DISTRIBUTION MODE (Iceberg's write.distribution-mode =
     // hash): cluster the batch by its layout columns so each partition
@@ -3114,46 +3086,12 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     // small-file source on partitioned 100 TB appends. Deferred when a
     // write SORT ORDER is declared (the range distribution already
     // owns the batch's layout); meta read is cached for the write.
-    val laid = {
-      val meta =
-        try catalog.readMeta(name)
-        catch { case scala.util.control.NonFatal(_) => catalog.TableMeta() }
+    val meta = catalog.readMeta(name)
+    val laid =
       if (layoutCols.nonEmpty && meta.distribution.contains("hash") && meta.sortOrder.isEmpty)
         laid0.repartition(layoutCols.map(col): _*)
       else laid0
-    }
-    val staging = TableIO.newStagingDir(catalog.pathOf(name))
-    try {
-      // zstd over the default snappy (guide §6: markedly better ratio
-      // at similar read speed — the right trade at 100 TB scan
-      // volume). It saves nothing on small writes: the per-file cost
-      // once credited to snappy codec init was the forked `chmod` that
-      // NoForkLocalFileSystem removes, and an 83-partition write of
-      // sf0.01 lineitem costs ~1-4 ms MORE per file in zstd than in
-      // snappy (4-core VM)
-      if (singleTask && layoutCols.isEmpty
-          && org.apache.spark.sql.GraftSingleFileWrite.sessionSafe(spark)) {
-        // sub-shard single-file fast path (r21 verdict item 3): one
-        // task writes Spark's own parquet OutputWriter directly into
-        // the private staging dir — no commit-protocol fixed cost.
-        // The staging-dir + atomic-move contract below is unchanged.
-        // (Own timer label so the committed-path floor and the fast
-        // path are separately attributable in each run's layer split.)
-        Timers.time("stageWrite.writeJobFast")(
-          org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(
-            laid, staging.toString, Some("zstd")))
-        ()
-      } else {
-        val w = laid.write.mode(SaveMode.Append).option("compression", "zstd")
-        val withParts = if (layoutCols.nonEmpty) w.partitionBy(layoutCols: _*) else w
-        Timers.time("stageWrite.writeJob")(withParts.parquet(staging.toString))
-      }
-      val dataRoot = Paths.get(catalog.dataPath(name))
-      Timers.time("stageWrite.move")(TableIO.moveStagedFiles(staging, dataRoot))
-    } finally {
-      // the staging tree holds no data files anymore (moved or failed)
-      TableIO.sweepDir(staging)
-    }
+    TableIO.writeStaged(laid, catalog.pathOf(name), Paths.get(catalog.dataPath(name)), layoutCols)
   }
 
   private def write(df: DataFrame, name: String, append: Boolean, partitionCols: Seq[String],
@@ -3186,9 +3124,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * error), never silently skips the check.
     */
   private def applyChecks(df: DataFrame, name: String): DataFrame = {
-    val meta =
-      try catalog.readMeta(name)
-      catch { case scala.util.control.NonFatal(_) => catalog.TableMeta() }
+    val meta = catalog.readMeta(name)
     val checked = meta.checks.toSeq.sortBy(_._1).foldLeft(df) { case (d, (cn, pred)) =>
       val msg = s"CHECK constraint $cn violated".replace("'", "")
       d.filter(org.apache.spark.sql.functions.expr(
@@ -3229,9 +3165,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
     * failing — the order is a layout optimization, never a gate.
     */
   private def applyWriteOrder(df: DataFrame, name: String): DataFrame = {
-    val cols =
-      try catalog.readMeta(name).sortOrder
-      catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
+    val cols = catalog.readMeta(name).sortOrder
     if (cols.isEmpty || !cols.forall(df.columns.contains)) df
     else df.repartitionByRange(cols.map(org.apache.spark.sql.functions.col): _*)
       .sortWithinPartitions(cols.map(org.apache.spark.sql.functions.col): _*)
@@ -3423,11 +3357,10 @@ object TableIO {
   private[io] def fileKeyOf(tableRootAbs: java.nio.file.Path, file: String): String =
     tableRootAbs.relativize(Paths.get(file).toAbsolutePath.normalize).toString
 
-  /** Process-wide write audit: data files (and their bytes) moved into
-    * tables by `stageWrite`, plus merge-on-read delete files, since JVM
-    * start. Bench snapshots the
-    * counters around each query to attribute bench-time variance to
-    * write volume (the r11 verdict's q52 ask: files/bytes written must
+  /** Process-wide write audit: data and merge-on-read delete files
+    * (and their bytes) [[publish]]ed into tables since JVM start. Bench
+    * snapshots the counters around each query to attribute bench-time
+    * variance to write volume (the r11 verdict's q52 ask: files/bytes written must
     * reach the bench artifact so many-small-file sensitivity on slow
     * storage is measurable, not inferred).
     */
@@ -3438,7 +3371,7 @@ object TableIO {
     * `tablePath`: dot-prefixed, so it is invisible to readers and to
     * `listDataFiles`; `removeOrphanFiles` reclaims one a dead writer
     * left behind. Writers move their finished files out of it
-    * ([[moveStagedFiles]]) and [[sweepDir]] it afterwards.
+    * ([[publish]]) and [[sweepDir]] it afterwards.
     */
   private[io] def newStagingDir(tablePath: String): Path = {
     val root = Paths.get(tablePath)
@@ -3455,32 +3388,36 @@ object TableIO {
         .iterator().asScala.foreach(p => Files.deleteIfExists(p))
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Move a staged write's parquet files into the table's data root
-    * (cheap same-filesystem atomic renames), preserving the staged
-    * directory layout and updating the write-audit counters. The ONE
-    * implementation of the staged-file walk — shared by
-    * `TableIO.stageWrite` and the SQL row-level replacement commit
-    * (GraftRowOpsTable).
+  /** The table layer's one data-file write: `df` goes through
+    * [[org.apache.spark.sql.GraftStagedWrite]] into a private staging
+    * dir under `tablePath`, the files it names are [[publish]]ed under
+    * `target`, and the staging dir (holding at most failed attempts'
+    * files by then) is swept. Returns the published absolute paths.
     */
-  private[io] def moveStagedFiles(staging: Path, dataRoot: Path): Seq[String] = {
-    val staged = Using.resource(Files.walk(staging)) { s =>
-      s.iterator().asScala
-        .filter(p => Files.isRegularFile(p))
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-        .toSeq
-    }
-    staged.map { p =>
-      val target = dataRoot.resolve(staging.relativize(p))
-      Files.createDirectories(target.getParent)
-      filesWritten.incrementAndGet()
-      bytesWritten.addAndGet(try Files.size(p) catch { case _: java.io.IOException => 0L })
-      Files.move(p, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      target.toAbsolutePath.normalize.toString
-    }.sorted
+  private[io] def writeStaged(df: DataFrame, tablePath: String, target: Path,
+                              partitionCols: Seq[String]): Seq[String] = {
+    val staging = newStagingDir(tablePath)
+    try {
+      val names = Timers.time("stageWrite.writeJob")(
+        org.apache.spark.sql.GraftStagedWrite.write(df, staging.toString, partitionCols))
+      Timers.time("stageWrite.move")(publish(staging, target, names))
+    } finally sweepDir(staging)
   }
+
+  /** Move the named files (relative to `staging`) under `target` —
+    * same-filesystem atomic renames, relative layout preserved — and
+    * count them into the write audit. Returns their absolute paths.
+    */
+  private[io] def publish(staging: Path, target: Path, names: Seq[String]): Seq[String] =
+    names.map { n =>
+      val from = staging.resolve(n)
+      val to = target.resolve(n)
+      Files.createDirectories(to.getParent)
+      filesWritten.incrementAndGet()
+      bytesWritten.addAndGet(Files.size(from))
+      Files.move(from, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      to.toAbsolutePath.normalize.toString
+    }
 
   /** Per-table (canonical path) write mutex shared by every TableIO
     * instance in the JVM — see `write`. A Semaphore, not a monitor:

@@ -3,6 +3,7 @@ package graft.io
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.SparkSession
 
@@ -89,32 +90,43 @@ object CrossProcessFlagAppendWorker {
   }
 }
 
-/** Worker `main` for the single-file publish retry: a `local[1,2]`
-  * session (one task retry allowed) writes one file through
-  * `GraftSingleFileWrite`, and a task-completion listener fails the
-  * FIRST attempt after its publish rename — the "task died after its
-  * output became visible" shape. The retry must find the visible file
-  * already published and succeed, not fail on the taken name.
+/** Worker `main` for the retried-attempt write: a `local[2,2]`
+  * session (one task retry allowed) appends 1,000 rows in 4 tasks to a
+  * table partitioned 5 ways, so every task writes 5 files. The FIRST
+  * attempt of task 0 fails after it wrote its files (a task-completion
+  * listener throws), first printing the `p=<k>/<name>` of each file it
+  * left in the table's staging dir; the retry writes them again under
+  * new names.
   */
-object SingleFileRetryWorker {
+object RetriedAttemptWorker {
   def main(args: Array[String]): Unit = {
-    val Array(dir) = args.take(1)
+    val Array(wh, table) = args.take(2)
     val spark = SparkSession.builder()
-      .master("local[1,2]")
-      .appName("graft-sfw-retry-worker")
+      .master("local[2,2]")
+      .appName("graft-retry-worker")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       import spark.implicits._
-      val df = (1 to 10).toDS().mapPartitions { it =>
+      val io = TableIO(spark, wh)
+      val root = io.catalog.pathOf(table)
+      val rows = spark.createDataset(spark.sparkContext.parallelize(
+        (0L until 1000L).map(i => (i, i % 5, s"r$i")), 4)).mapPartitions { it =>
         val tc = org.apache.spark.TaskContext.get()
-        System.err.println(s"graft-sfw-retry attempt ${tc.attemptNumber()}")
-        if (tc.attemptNumber() == 0)
-          tc.addTaskCompletionListener[Unit](_ =>
-            throw new IllegalStateException("injected failure after publish"))
+        System.err.println(s"graft-retry task ${tc.partitionId()} attempt ${tc.attemptNumber()}")
+        if (tc.partitionId() == 0 && tc.attemptNumber() == 0)
+          tc.addTaskCompletionListener[Unit] { _ =>
+            Using.resource(Files.walk(Paths.get(root))) { w =>
+              w.iterator().asScala.filter(f => f.toString.contains("/.stage-") &&
+                f.getFileName.toString.startsWith("part-00000-"))
+                .foreach(f => System.err.println(
+                  s"graft-retry failed-attempt file ${f.getParent.getFileName}/${f.getFileName}"))
+            }
+            throw new IllegalStateException("injected failure after the write")
+          }
         it
-      }.toDF("id")
-      org.apache.spark.sql.GraftSingleFileWrite.writeOneFile(df, dir, Some("zstd"))
+      }.toDF("id", "p", "s")
+      io.append(rows, table, Seq("p"))
     } finally spark.stop()
     sys.exit(0)
   }
@@ -531,25 +543,44 @@ class CrossProcessSpec extends graft.SparkSpec {
     vs.foreach(v => io.readVersion(t, v).count())
   }
 
-  test("single-file write: a retried task attempt after an earlier attempt published succeeds once") {
-    val dir = Files.createTempDirectory("graft_sfw_retry_")
+  test("multi-file write: a failed task attempt's files never reach the table, the retry's land once") {
+    val wh = Files.createTempDirectory("graft_retry_").toString
+    val t = "default.retried"
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val log = Files.createTempFile("graft_sfw_retry", ".log").toFile
+    val log = Files.createTempFile("graft_retry", ".log").toFile
     val cmd = (Seq(javaBin) ++ jvmOpens ++ Seq(
       "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"), "graft.io.SingleFileRetryWorker",
-      dir.toString)).asJava
+      "-cp", System.getProperty("java.class.path"), "graft.io.RetriedAttemptWorker",
+      wh, t)).asJava
     val p = new ProcessBuilder(cmd).redirectErrorStream(true).redirectOutput(log).start()
     assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS), s"worker timed out; log: $log")
     val lines = Files.readAllLines(log.toPath).asScala
     val tail = lines.takeRight(30).mkString("\n")
     assert(p.exitValue() == 0, s"retried write failed (exit ${p.exitValue()}); tail:\n$tail")
-    assert(lines.exists(_.contains("graft-sfw-retry attempt 1")),
+    assert(lines.exists(_.contains("graft-retry task 0 attempt 1")),
       s"the write never retried; tail:\n$tail")
-    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
-    val visible = names.filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-    assert(visible.size == 1, s"expected exactly one published file, got $names")
-    assert(!names.exists(_.startsWith(".inprogress-")), s"an attempt left its temp file: $names")
-    assert(spark.read.parquet(dir.resolve(visible.head).toString).count() == 10L)
+    val failed = lines.collect { case l if l.contains("graft-retry failed-attempt file ") =>
+      l.substring(l.indexOf("file ") + 5).trim
+    }.toSet
+    assert(failed.size == 5, s"the failed attempt should have written 5 files: $failed")
+
+    val io = TableIO(spark, wh)
+    // rows land exactly once
+    val ids = io.read(t).select("id").as[Long].collect().sorted
+    val exactlyOnce = ids.toSeq == (0L until 1000L)
+    assert(exactlyOnce, s"rows lost or duplicated: ${ids.length} rows, ${ids.distinct.length} distinct")
+    // the manifest names the 4 x 5 accepted files and none of the failed attempt's
+    val manifest = io.catalog.manifest(t, io.catalog.currentVersion(t).get)
+    assert(manifest.size == 20, manifest)
+    def partFile(f: String) = { val q = Paths.get(f); s"${q.getParent.getFileName}/${q.getFileName}" }
+    assert(!manifest.exists(f => failed(partFile(f))),
+      s"the manifest names a failed attempt's file: $manifest")
+    // every parquet file under data/ is in the manifest, and no staging dir remains
+    assert(io.catalog.listDataFiles(t).toSet == manifest.map(f =>
+      Paths.get(f).toAbsolutePath.normalize.toString).toSet)
+    val root = Paths.get(io.catalog.pathOf(t))
+    val stages = Files.list(root).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".stage-")).toSeq
+    assert(stages.isEmpty, s"staging dirs left behind: $stages")
   }
 }

@@ -80,6 +80,18 @@ class TableMetaSpec extends graft.SparkSpec {
     assert(back.renames == Map("x" -> "pcols"))
   }
 
+  test("an append to a table whose meta.json is corrupt refuses and adds no version") {
+    val io = freshIO()
+    val t = "default.corruptmeta"
+    io.append(Seq((1L, "a")).toDF("id", "s"), t)
+    io.setWriteSortOrder(t, Seq("id"))
+    val before = io.versions(t)
+    Files.writeString(io.catalog.metaPath(t).resolve("meta.json"), """{"sortOrder": [""")
+    intercept[Exception](io.append(Seq((2L, "b")).toDF("id", "s"), t))
+    assert(io.versions(t) == before, "a write under unreadable metadata committed")
+    assert(io.catalog.listDataFiles(t).size == 1, "the refused append left a data file behind")
+  }
+
   test("expireSnapshots retains the newest stream-marked manifest; releaseStreamMark forfeits the guard") {
     val io = freshIO()
     val t = "default.stream_guard"
