@@ -361,7 +361,7 @@ private[io] class ChangelogMicroBatchStream(
           s.iterator().asScala
             .filter { p =>
               val n = p.getFileName.toString
-              n.startsWith(".") || n.stripPrefix("v").toIntOption.exists(_ <= e)
+              n.startsWith(".") || n.drop(1).toIntOption.exists(_ <= e)
             }
             .toSeq
         }.foreach(TableIO.sweepDir)
@@ -429,10 +429,14 @@ private[io] class ChangelogMicroBatchStream(
         // batch plan is re-executed (foreachBatch re-plans the scan),
         // and a re-stage would mint new random file names while the
         // earlier planning's partitions still reference the old ones.
-        // The stage is written into a fresh dot-prefixed dir and moved
-        // to `v$v` whole, so a present `v$v` is complete; a crash
-        // mid-write leaves only the dot dir, swept on batch commit.
-        val vdir = stageRoot.resolve(s"v$v")
+        // The stage's named files are published into a fresh
+        // dot-prefixed dir, which then moves to `c$v` whole: a present
+        // `c$v` is complete and holds no failed or speculative task
+        // attempt's file (those stay in the writer's staging dir, swept
+        // with it). A crash mid-write leaves only dot dirs, and an
+        // earlier layout's Hadoop-committer `v$v` stage is never read;
+        // the batch commit sweeps both.
+        val vdir = stageRoot.resolve(s"c$v")
         val staged =
           if (Files.isDirectory(vdir))
             Using.resource(Files.walk(vdir)) { w =>
@@ -445,11 +449,11 @@ private[io] class ChangelogMicroBatchStream(
             // splits the step frame into _change_type=INSERT/DELETE
             // subdirs in a single pass instead of recomputing the
             // exceptAll/kill diff once per type
-            val names = org.apache.spark.sql.GraftStagedWrite.write(
+            val published = TableIO.writeStaged(
               io.readChangelog(tableName, v - 1, Some(v), ref).drop("_change_version"),
-              tmp.toString, Seq("_change_type"))
+              stageRoot.toString, tmp, Seq("_change_type"))
             Files.move(tmp, vdir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            names
+            published.map(f => tmp.toAbsolutePath.normalize.relativize(Paths.get(f)).toString)
           }
         // `_change_type=<type>/part-...`: absent type = zero rows of it
         staged.foreach { n =>

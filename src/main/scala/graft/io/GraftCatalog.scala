@@ -1373,7 +1373,7 @@ private[io] class GraftRowOpsTable(
               // owner) would block every later write to this table for
               // the life of the JVM.
               val releaseOnce = TableIO.acquireForCallbacks(cat.pathOf(tableName))
-              val dBatch =
+              val (dBatch, protocol) =
                 try GraftStagedWrite.batch(physInfo.schema(), staging.toString)
                 catch { case e: Throwable => releaseOnce(); sweepAll(); throw e }
               new BatchWrite {
@@ -1415,7 +1415,7 @@ private[io] class GraftRowOpsTable(
                     // lands under its Hive/hidden-layout directory —
                     // incl. rows an UPDATE moved between partitions.
                     val io = new TableIO(SparkSession.active, cat)
-                    val staged = GraftStagedWrite.filesOf(messages)
+                    val staged = protocol.committed
                     val newFiles =
                       if (partitionCols.isEmpty)
                         TableIO.publish(staging, java.nio.file.Paths.get(cat.dataPath(tableName)), staged)

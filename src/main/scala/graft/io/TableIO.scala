@@ -3357,8 +3357,8 @@ object TableIO {
   private[io] def fileKeyOf(tableRootAbs: java.nio.file.Path, file: String): String =
     tableRootAbs.relativize(Paths.get(file).toAbsolutePath.normalize).toString
 
-  /** Process-wide write audit: data and merge-on-read delete files
-    * (and their bytes) [[publish]]ed into tables since JVM start. Bench
+  /** Process-wide write audit: data, merge-on-read delete and stream
+    * change-stage files (and their bytes) [[publish]]ed since JVM start. Bench
     * snapshots the counters around each query to attribute bench-time
     * variance to write volume (the r11 verdict's q52 ask: files/bytes written must
     * reach the bench artifact so many-small-file sensitivity on slow

@@ -5,9 +5,8 @@ import org.apache.hadoop.mapreduce.{Job, JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
-import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormatWriter, PartitioningUtils, WriteJobDescription, WriteTaskResult}
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, PartitioningUtils, WriteJobDescription}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileBatchWrite
 import org.apache.spark.sql.types.StructType
@@ -57,10 +56,10 @@ object GraftStagedWrite {
   }
 
   /** A DSv2 batch write of `schema`-shaped rows into `dir` over the
-    * same protocol (unpartitioned); [[filesOf]] reads the written
-    * names back from the commit messages.
+    * same protocol (unpartitioned), with that protocol: after the
+    * write's `commit`, its `committed` names the written files.
     */
-  def batch(schema: StructType, dir: String): FileBatchWrite = {
+  def batch(schema: StructType, dir: String): (FileBatchWrite, StagedCommitProtocol) = {
     val spark = SparkSession.active
     val hadoopConf = spark.sessionState.newHadoopConf()
     val job = Job.getInstance(hadoopConf)
@@ -70,14 +69,9 @@ object GraftStagedWrite {
       java.util.UUID.randomUUID().toString, new SerializableConfiguration(job.getConfiguration),
       factory, columns, columns, Nil, None, dir, Map.empty,
       spark.sessionState.conf.maxRecordsPerFile, spark.sessionState.conf.sessionLocalTimeZone, Nil)
-    new FileBatchWrite(job, description, new StagedCommitProtocol(dir))
+    val protocol = new StagedCommitProtocol(dir)
+    (new FileBatchWrite(job, description, protocol), protocol)
   }
-
-  /** The relative file names the accepted attempts of a [[batch]]
-    * write reported, sorted.
-    */
-  def filesOf(messages: Array[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.flatMap(_.asInstanceOf[WriteTaskResult].commitMsg.obj.asInstanceOf[Seq[String]]).sorted
 }
 
 /** Commit protocol of [[GraftStagedWrite]]: tasks write final files

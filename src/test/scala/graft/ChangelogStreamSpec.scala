@@ -1,13 +1,86 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.{GraftCatalog, Ref, TableIO}
+
+/** `file://` that fails the first task attempt creating a file under a
+  * changelog stream's change stage, after that attempt wrote its
+  * files: a task-completion listener throws once the attempt's work is
+  * done. Fires once per JVM; every stage file created is logged with
+  * its task attempt.
+  */
+class FailFirstStageAttemptFs extends LocalFileSystem {
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val tc = TaskContext.get()
+    if (tc != null && f.toString.contains("/graft-cdf-stage/")) {
+      System.err.println(s"graft-cdf-retry stage file by task ${tc.partitionId()} attempt ${tc.attemptNumber()}")
+      if (tc.attemptNumber() == 0 && FailFirstStageAttemptFs.armed.compareAndSet(true, false))
+        tc.addTaskCompletionListener[Unit](_ =>
+          throw new IllegalStateException("injected failure after the change-stage write"))
+    }
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailFirstStageAttemptFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+}
+
+/** Worker `main` for the retried change-stage write: a `local[2,2]`
+  * session (one task retry allowed) whose `file://` is
+  * [[FailFirstStageAttemptFs]] drains a changelog stream over an
+  * append (v1) and a copy-on-write UPDATE (v2, a staged diff). Every
+  * micro-batch is collected twice, so the scan is planned twice; each
+  * planning's rows are printed as one line.
+  */
+object ChangeStageRetryWorker {
+  def main(args: Array[String]): Unit = {
+    val Array(wh, ckpt) = args.take(2)
+    val spark = SparkSession.builder()
+      .master("local[2,2]")
+      .appName("graft-cdf-retry-worker")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.hadoop.fs.file.impl", classOf[FailFirstStageAttemptFs].getName)
+      .config("spark.sql.catalog.gcdf", classOf[GraftCatalog].getName)
+      .config("spark.sql.catalog.gcdf.warehouse", wh)
+      .getOrCreate()
+    try {
+      import spark.implicits._
+      val io = TableIO(spark, wh)
+      val t = "default.src"
+      io.append((1L to 200L).map(i => (i, s"r$i")).toDF("id", "s").repartition(4), t) // v1
+      io.updateWhere(t, col("id") <= 100L, Map("s" -> org.apache.spark.sql.functions.lit("u"))) // v2
+      spark.readStream.table(s"gcdf.$t.changelog").writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          (1 to 2).foreach { k =>
+            val rows = batch.select("_change_type", "_change_version", "id", "s")
+              .as[(String, Int, Long, String)].collect().sorted
+            System.err.println(s"graft-cdf-retry batch $id planning $k: ${rows.mkString(";")}")
+          }
+        }
+        .start()
+        .awaitTermination()
+    } finally spark.stop()
+    sys.exit(0)
+  }
+}
 
 /** The `<table>.changelog` metadata table: batch CDC reads through SQL
   * and the streaming change-data-feed source — INSERT/DELETE rows per
@@ -494,5 +567,36 @@ class ChangelogStreamSpec extends SparkSpec {
         Files.createTempDirectory("graft_cdfbyt2_").toString)
       assert(rows.toSet === uncapped.toSet)
     }
+  }
+
+  test("a change stage whose first write attempt failed serves the same rows to every planning") {
+    val wh = Files.createTempDirectory("graft_cdfretry_").toString
+    val ckpt = Files.createTempDirectory("graft_cdfretryc_").toString
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val log = Files.createTempFile("graft_cdfretry", ".log").toFile
+    val cmd = (Seq(javaBin) ++ graft.io.CrossProcessSpec.jvmOpens ++ Seq(
+      "-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.ChangeStageRetryWorker",
+      wh, ckpt)).asJava
+    val p = new ProcessBuilder(cmd).redirectErrorStream(true).redirectOutput(log).start()
+    assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS), s"worker timed out; log: $log")
+    val lines = Files.readAllLines(log.toPath).asScala
+    val tail = lines.takeRight(30).mkString("\n")
+    assert(p.exitValue() == 0, s"worker failed (exit ${p.exitValue()}); tail:\n$tail")
+    assert(lines.exists(l => l.contains("graft-cdf-retry stage file by task") && l.endsWith("attempt 1")),
+      s"the change-stage write never retried; tail:\n$tail")
+    val Planning = """.*graft-cdf-retry batch (\d+) planning (\d): (.*)""".r
+    val plannings = lines.collect { case Planning(b, k, rows) => (b.toLong, k.toInt) -> rows }
+    val batches = plannings.map(_._1._1).distinct
+    assert(batches.nonEmpty, s"no batch ran; tail:\n$tail")
+    batches.foreach { b =>
+      val rows = plannings.collect { case ((`b`, _), r) => r }
+      val same = rows.size == 2 && rows(0) == rows(1)
+      assert(same, s"batch $b's two plannings differ")
+    }
+    val served = plannings.collect { case ((_, 1), r) => r }.flatMap(_.split(";")).filter(_.nonEmpty)
+    val expected = (1L to 200L).map(i => s"(INSERT,1,$i,r$i)") ++
+      (1L to 100L).flatMap(i => Seq(s"(DELETE,2,$i,r$i)", s"(INSERT,2,$i,u)"))
+    val exact = served.sorted == expected.sorted
+    assert(exact, s"served ${served.size} rows (${served.distinct.size} distinct), expected ${expected.size}")
   }
 }

@@ -143,27 +143,7 @@ object RetriedAttemptWorker {
   */
 class CrossProcessSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def jvmOpens: Seq[String] = {
-    // reproduce the parent JVM's --add-opens flags (Spark 4 on JDK 17
-    // needs them); they arrive either as "--add-opens=x" or as the
-    // two-token "--add-opens x" form
-    val args = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toList
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < args.length) {
-      val a = args(i)
-      if (a.startsWith("--add-opens") || a.startsWith("--add-exports")) {
-        out += a
-        if ((a == "--add-opens" || a == "--add-exports") && i + 1 < args.length) {
-          out += args(i + 1); i += 1
-        }
-      }
-      i += 1
-    }
-    out.result()
-  }
+  import CrossProcessSpec.jvmOpens
 
   test("two JVMs appending concurrently: every commit lands, versions contiguous, no file lost") {
     val wh = Files.createTempDirectory("graft_xproc_").toString
@@ -582,5 +562,31 @@ class CrossProcessSpec extends graft.SparkSpec {
     val stages = Files.list(root).iterator().asScala.map(_.getFileName.toString)
       .filter(_.startsWith(".stage-")).toSeq
     assert(stages.isEmpty, s"staging dirs left behind: $stages")
+  }
+}
+
+object CrossProcessSpec {
+  /** The running JVM's `--add-opens`/`--add-exports` flags, for a
+    * worker JVM it starts.
+    */
+  def jvmOpens: Seq[String] = {
+    // reproduce the parent JVM's --add-opens flags (Spark 4 on JDK 17
+    // needs them); they arrive either as "--add-opens=x" or as the
+    // two-token "--add-opens x" form
+    val args = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toList
+    val out = Seq.newBuilder[String]
+    var i = 0
+    while (i < args.length) {
+      val a = args(i)
+      if (a.startsWith("--add-opens") || a.startsWith("--add-exports")) {
+        out += a
+        if ((a == "--add-opens" || a == "--add-exports") && i + 1 < args.length) {
+          out += args(i + 1); i += 1
+        }
+      }
+      i += 1
+    }
+    out.result()
   }
 }
