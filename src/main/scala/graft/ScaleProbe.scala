@@ -250,8 +250,10 @@ object ScaleProbe {
     // predicates are stats-prunable and the layout is key-sorted, so
     // carried files dominate at either scale and the merged rewrite
     // touches ~the band's tile — cost should track the BAND, not the
-    // table. Run i uses band [i*2000, i*2000+2000) so every run
-    // exercises the dirty path (a reused band would find its rows
+    // table. Run i uses the i-th band of the orders key range, 2000
+    // keys wide or narrower when the range holds fewer than `runs` such
+    // bands, so every run's band holds rows at every scale and every
+    // run exercises the dirty path (a reused band would find its rows
     // already deleted and take the clean-table path instead).
     def dirtyDmlProbe(dir: String, scale: String): Unit = if (wanted("dirty_dml_fixed_band", scale)) {
       val wh = java.nio.file.Files.createTempDirectory("graft_ddp_").toString
@@ -265,14 +267,17 @@ object ScaleProbe {
       val cat = "gddp" + scale.replace(".", "_")
       spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.io.GraftCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val range = io.read(t).agg(min("okey"), max("okey")).head()
+      val width = math.min(2000L, (range.getLong(1) - range.getLong(0) + 1) / runs)
+      require(width >= 2, s"dirty-DML probe: orders keys too few for $runs bands")
       report("dirty_dml_fixed_band", scale, (0 until runs).map { i =>
-        val lo = i.toLong * 2000
+        val lo = range.getLong(0) + i * width
         val base = io.catalog.manifest(t, io.catalog.currentVersion(t).get).toSet
         val ((_, nDel), dt) = timed {
           val del = io.deleteWhereMOR(t,
-            col("okey") >= lo && col("okey") < lo + 2000 && col("okey") % 7 === 3)
+            col("okey") >= lo && col("okey") < lo + width && col("okey") % 7 === 3)
           spark.sql(s"UPDATE $cat.$t SET price = price + 1 " +
-            s"WHERE okey >= $lo AND okey < ${lo + 1000}")
+            s"WHERE okey >= $lo AND okey < ${lo + width / 2}")
           del
         }
         require(nDel > 0, s"dirty-DML probe band $i matched nothing")

@@ -3324,7 +3324,7 @@ object SparkEntry {
   private def eventsFileStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val evPath = s"$dir/events.parquet"
-    val schema = s.read.parquet(evPath).schema
+    val schema = Tables.read(s, dir, "events").schema
     val raw =
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(evPath)))
         s.readStream.schema(schema).parquet(evPath)

@@ -5,15 +5,13 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftManifestScan, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -484,10 +482,9 @@ private[io] class ChangelogMicroBatchStream(
     // it); NO basePath — see GraftMicroBatchStream: partition
     // discovery over mixed roots silently drops files
     val files = tagOf.keys.toSeq.sorted
-    val scanOptions = CaseInsensitiveStringMap.empty()
-    val scanTable = ParquetTable(s"$tableName#changelog@v$e", spark,
-      scanOptions, files, Some(dataSchema), classOf[ParquetFileFormat])
-    val sb = scanTable.newScanBuilder(scanOptions)
+    val scanTable = GraftManifestScan.table(s"$tableName#changelog@v$e",
+      spark, Map.empty, files, Some(dataSchema))
+    val sb = scanTable.newScanBuilder(CaseInsensitiveStringMap.empty())
     sb match {
       case p: SupportsPushDownRequiredColumns => p.pruneColumns(dataCols)
       case _ => ()

@@ -1,12 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, GraftStagedWrite, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftManifestScan, GraftStagedWrite, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsDelete, SupportsNamespaces, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog => V2TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -215,22 +214,17 @@ class GraftCatalog extends V2TableCatalog with SupportsNamespaces
         f.copy(nullable = true)
       })
     }
-    // Schema-on-read tables (no schema.json) must merge footers: the
-    // TableIO read surface passes mergeSchema=true, and without it the
-    // SQL surface would infer from one sampled footer and silently
-    // drop columns appended by schema drift — two read paths of the
-    // same snapshot disagreeing on the schema.
-    val options = new CaseInsensitiveStringMap(
-      (Map("basePath" -> catalog.dataPath(name)) ++
-        (if (declared.isEmpty) Map("mergeSchema" -> "true") else Map.empty)).asJava)
-    val delegate = ParquetTable(
-      s"$catalogName.$name@$label",
-      SparkSession.active,
-      options,
-      files,
-      userSpecifiedSchema = physicalSchema,
-      fallbackFileFormat = classOf[ParquetFileFormat]
-    )
+    // Schema-on-read tables (no schema.json) merge footers: without
+    // mergeSchema the SQL surface would infer from one sampled footer
+    // and silently drop columns appended by schema drift. The merge is
+    // TableIO's own (GraftManifestScan, on the driver, no Spark job),
+    // handed to the delegate as its schema, so both read surfaces of a
+    // snapshot share one schema rule and the delegate never infers —
+    // nor do the file-skipped and scoped tables built from it.
+    val delegate = GraftManifestScan.table(s"$catalogName.$name@$label", SparkSession.active,
+      Map("basePath" -> catalog.dataPath(name)) ++
+        (if (declared.isEmpty) Map("mergeSchema" -> "true") else Map.empty),
+      files, physicalSchema)
     val pcols = catalog.tablePartitionCols(name)
       .getOrElse(partitionColsFromPaths(name, files))
     // Row-level operations (SQL UPDATE / MERGE INTO / DELETE) run on
@@ -1268,21 +1262,20 @@ private[io] class GraftRowOpsTable(
               // staged files live OUTSIDE the data dir: the delegate's
               // basePath option would reject them (the table is
               // unpartitioned — no partition discovery to lose)
+              val delegateOptions = delegate.options.asCaseSensitiveMap.asScala.toMap
               val scanOptions =
-                if (dirtyChosen.isEmpty) delegate.options
-                else new CaseInsensitiveStringMap(
-                  (delegate.options.asScala.toMap - "basepath").asJava)
+                if (dirtyChosen.isEmpty) delegateOptions
+                else delegateOptions.filter(_._1.toLowerCase(java.util.Locale.ROOT) != "basepath")
               // a fully-pruned rewrite (predicate provably matches no
-              // file) has no footers to infer from: carry the
-              // delegate's already-inferred schema so the command
-              // no-ops instead of dying with UNABLE_TO_INFER_SCHEMA
-              val schemaForScoped = delegate.userSpecifiedSchema
-                .orElse(if (scanFiles.isEmpty) Some(delegate.schema) else None)
+              // file) has no paths to discover partitions from: carry
+              // the delegate's full schema, partition columns included,
+              // so the command no-ops over the table's own columns
+              val schemaForScoped =
+                if (scanFiles.isEmpty) Some(delegate.schema) else delegate.userSpecifiedSchema
               val scanTable =
                 if (scanFiles == allFiles) delegate
-                else ParquetTable(s"${delegate.name}#scoped", spark,
-                  scanOptions, scanFiles, schemaForScoped,
-                  classOf[ParquetFileFormat])
+                else GraftManifestScan.table(s"${delegate.name}#scoped", spark,
+                  scanOptions, scanFiles, schemaForScoped)
               val builder = scanTable.newScanBuilder(options)
               // hidden LAYOUT columns (gp_* dirs a hidden spec derives)
               // must not surface in the rewrite scan: the relation's
@@ -1545,15 +1538,14 @@ private[io] class StatsPruningScanBuilder(
     val keep = delegate.paths.filter(scope.mightMatch(_, v1))
     keptFiles = keep
     if (keep.size < delegate.paths.size) {
-      // a fully-pruned scan has no footers left to infer from — carry
-      // the already-inferred schema so it returns zero rows, not an
-      // UNABLE_TO_INFER_SCHEMA error
+      // a fully-pruned scan has no paths left to discover partitions
+      // from — carry the delegate's full schema, partition columns
+      // included, so it returns zero rows over the table's columns
       val schemaForSkipped =
-        if (keep.isEmpty) delegate.userSpecifiedSchema.orElse(Some(delegate.schema))
-        else delegate.userSpecifiedSchema
-      current = ParquetTable(s"${delegate.name}#skipped", SparkSession.active,
-        delegate.options, keep, schemaForSkipped,
-        classOf[ParquetFileFormat]).newScanBuilder(options)
+        if (keep.isEmpty) Some(delegate.schema) else delegate.userSpecifiedSchema
+      current = GraftManifestScan.table(s"${delegate.name}#skipped", SparkSession.active,
+        delegate.options.asCaseSensitiveMap.asScala.toMap, keep, schemaForSkipped)
+        .newScanBuilder(options)
       prunedColumns.foreach(s => current match {
         case p: SupportsPushDownRequiredColumns => p.pruneColumns(s)
         case _ => ()

@@ -2,11 +2,9 @@ package graft.io
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftManifestScan, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -358,11 +356,9 @@ private[io] class GraftMicroBatchStream(
     // every file; any inferred gp_* dirs are pruned below and their
     // values already ride the footers (hidden-layout columns are
     // derived; Hive-dir tables never reach here — batch-only)
-    val scanOptions = CaseInsensitiveStringMap.empty()
-    val scanTable = ParquetTable(s"$tableName#stream@v$e", SparkSession.active,
-      scanOptions, added, Some(physSchema),
-      classOf[ParquetFileFormat])
-    val sb = scanTable.newScanBuilder(scanOptions)
+    val scanTable = GraftManifestScan.table(s"$tableName#stream@v$e",
+      SparkSession.active, Map.empty, added, Some(physSchema))
+    val sb = scanTable.newScanBuilder(CaseInsensitiveStringMap.empty())
     // prune to exactly the stream's schema: hidden gp_* layout dirs
     // would otherwise be inferred as partition columns and APPENDED,
     // breaking the fixed streaming row shape (their values derive from

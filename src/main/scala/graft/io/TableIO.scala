@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftManifestScan, SparkSession}
 import org.apache.spark.sql.functions.col
 import com.fasterxml.jackson.annotation.JsonProperty
 import com.fasterxml.jackson.databind.annotation.{JsonDeserialize, JsonSerialize}
@@ -1475,6 +1475,13 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       .schema("gd_file STRING, gd_pos BIGINT")
       .parquet(pos.map(_.deleteFile).distinct: _*)
 
+  /** The key tuples of equality entry `e`, typed by its file's footer
+    * (read on the driver, no inference job).
+    */
+  private def eqDeleteKeys(e: TableCatalog.DeleteEntry): DataFrame =
+    GraftManifestScan.parquet(spark, Seq(e.deleteFile), Map.empty, None)
+      .select(e.eqKeyCols.map(col): _*)
+
   /** Join condition matching rows of `df` that equality entry `e`
     * kills: key-tuple equality against `keys` (equality keys ride
     * PHYSICAL column names — rename-proof, like data files; the probe
@@ -1508,7 +1515,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
       }
     val toLogical = catalog.renames(name).map(_.swap)
     eq.foldLeft(afterPos) { (cur, e) =>
-      val keys = spark.read.parquet(e.deleteFile).select(e.eqKeyCols.map(col): _*)
+      val keys = eqDeleteKeys(e)
       cur.join(broadcast(keys), eqKillCond(cur, keys, e, root, toLogical), "left_anti")
     }
   }
@@ -1548,7 +1555,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
           "left_semi"))
       }
     val eqKilled = eq.map { e =>
-      val keys = spark.read.parquet(e.deleteFile).select(e.eqKeyCols.map(col): _*)
+      val keys = eqDeleteKeys(e)
       live.join(broadcast(keys), eqKillCond(live, keys, e, root, toLogical), "left_semi")
     }
     (posKilled.toSeq ++ eqKilled).reduce(_.unionByName(_))
@@ -1850,7 +1857,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
         org.apache.spark.sql.types.StructType(declared.fields.map(f =>
           meta.renames.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
       }
-      val scanned = org.apache.spark.sql.GraftManifestScan.parquet(spark, files,
+      val scanned = GraftManifestScan.parquet(spark, files,
         Map("basePath" -> catalog.dataPath(name)) ++
           (if (physical.isEmpty) Map("mergeSchema" -> "true") else Map.empty),
         physical)
@@ -2463,7 +2470,7 @@ final class TableIO(spark: SparkSession, val catalog: TableCatalog) {
             if (u.getScheme == null) Paths.get(p).toAbsolutePath.normalize.toString
             else Paths.get(u.getPath).toAbsolutePath.normalize.toString
           } catch { case scala.util.control.NonFatal(_) => p }
-        val built = spark.read.parquet(missing: _*)
+        val built = GraftManifestScan.parquet(spark, missing, Map.empty, None)
           .select(input_file_name().as("_graft_file"),
             col(phys).cast("string").as("_graft_key"))
           .groupBy("_graft_file").agg(agg.as("_graft_bloom"))

@@ -1,16 +1,24 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftManifestScan, SparkSession}
 
 /** Readers for the harness testdata (TESTDATA.md): one parquet file per
-  * table under the scale-factor directory. Mirrors the reference's
-  * raw-parquet scan entry point (reference: IngestionJob.scala:32-34)
-  * including the mergeSchema option so heterogeneous file sets union
-  * their schemas across footers.
+  * table under the scale-factor directory, or a Spark-written directory
+  * of part files in its place. Mirrors the reference's raw-parquet scan
+  * entry point (reference: IngestionJob.scala:32-34) including its
+  * mergeSchema semantics, so heterogeneous file sets union their
+  * schemas across footers.
+  *
+  * The merge runs on the driver: [[read]] globs and lists the path the
+  * way `spark.read` does, once, and that listing serves both the footer
+  * merge — every footer read in a parallel stream and folded exactly as
+  * Spark's `mergeSchema` inference folds them (`GraftManifestScan`) —
+  * and the scan. No Spark job runs before an action, and the cost is
+  * one footer read per file.
   */
 object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$sfDir/$name.parquet")
+    GraftManifestScan.read(spark, s"$sfDir/$name.parquet", Map("mergeSchema" -> "true"))
 
   def region(spark: SparkSession, d: String): DataFrame     = read(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame     = read(spark, d, "nation")
